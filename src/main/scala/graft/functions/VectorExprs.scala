@@ -2,10 +2,14 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, TypeCheckResult}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, TernaryExpression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo,
+  TernaryExpression, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.SparkSessionExtensions
 
 /** Analysis-time input checks for the vector kernels. AbstractDataType
@@ -373,6 +377,220 @@ case class TopCells(v: Expression, centroids: Expression, nprobe: Expression)
     copy(v = newFirst, centroids = newSecond, nprobe = newThird)
 }
 
+/** A fitted model applied to one row's input array — the shared body of
+  * a [[ModelKernel]]'s interpreted and generated paths (the generated
+  * code calls `apply` on the referenced instance), so both paths compute
+  * the same bits by construction. */
+trait RowModel extends Serializable {
+  def apply(in: ArrayData): ArrayData
+}
+
+/** y_j = Σ_i x_i·W_j,i + b_j over i < min(|x|, |W_j|), summed left to
+  * right exactly like `graft_dot`; with `amp`, y_j = cos(Σ + b_j)·amp,
+  * as in `cos(graft_dot(x, W_j) + b_j) * amp`. */
+final class AffineModel(w: Array[Array[Double]], b: Array[Double],
+    amp: Option[Double]) extends RowModel {
+  private val hasAmp = amp.isDefined
+  private val a = amp.getOrElse(1.0)
+
+  def apply(x: ArrayData): ArrayData = {
+    val n = x.numElements()
+    val xs = new Array[Double](n)
+    var i = 0
+    while (i < n) { xs(i) = x.getDouble(i); i += 1 }
+    val out = new Array[Double](w.length)
+    var j = 0
+    while (j < w.length) {
+      val wj = w(j)
+      val m = math.min(n, wj.length)
+      var s = 0.0
+      i = 0
+      while (i < m) { s += xs(i) * wj(i); i += 1 }
+      out(j) = if (hasAmp) math.cos(s + b(j)) * a else s + b(j)
+      j += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+}
+
+/** Slot j counts the tokens equal to `vocab(j)`; null and
+  * out-of-vocabulary tokens count nowhere. One hash probe per token. */
+final class VocabIndex(vocab: Array[UTF8String]) extends RowModel {
+  private val index = new java.util.HashMap[UTF8String, Integer]()
+  vocab.indices.foreach(j => index.putIfAbsent(vocab(j), j))
+  def distinct: Boolean = index.size == vocab.length
+
+  def apply(tokens: ArrayData): ArrayData = {
+    val out = new Array[Double](vocab.length)
+    val n = tokens.numElements()
+    var i = 0
+    while (i < n) {
+      if (!tokens.isNullAt(i)) {
+        val slot = index.get(tokens.getUTF8String(i))
+        if (slot != null) out(slot.intValue) += 1.0
+      }
+      i += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+}
+
+/** Analysis-time reads of a model kernel's literal arguments: each is
+  * checked for type, foldability, NULL and NULL entries, and a failure
+  * names the argument (instead of an NPE from `eval(null)` in planning or
+  * a ClassCastException in an executor). */
+private[functions] object ModelArg {
+  def eval(fn: String, what: String, e: Expression, typeOk: Boolean,
+      typeName: String): Either[String, Any] =
+    if (!typeOk)
+      Left(s"$fn expects $what to be $typeName, got ${e.dataType.catalogString}")
+    else if (!e.foldable) Left(s"$fn expects $what to be a foldable literal")
+    else scala.util.Try(e.eval(null)) match {
+      case scala.util.Failure(ex) =>
+        Left(s"$fn $what failed to evaluate at analysis time: " +
+          s"${ex.getClass.getSimpleName}: ${ex.getMessage}")
+      case scala.util.Success(null) => Left(s"$fn $what must not be NULL")
+      case scala.util.Success(v) => Right(v)
+    }
+
+  private def array(fn: String, what: String, e: Expression, typeOk: Boolean,
+      typeName: String): Either[String, ArrayData] =
+    eval(fn, what, e, typeOk, typeName)
+      .flatMap(v => noNulls(fn, what, v.asInstanceOf[ArrayData]))
+
+  private def noNulls(fn: String, what: String,
+      a: ArrayData): Either[String, ArrayData] =
+    if ((0 until a.numElements()).exists(a.isNullAt))
+      Left(s"$fn $what must not contain NULL entries")
+    else Right(a)
+
+  def doubles(fn: String, what: String, e: Expression): Either[String, Array[Double]] =
+    array(fn, what, e, e.dataType match {
+      case ArrayType(DoubleType, _) => true
+      case _ => false
+    }, "array<double>").map(_.toDoubleArray())
+
+  def matrix(fn: String, what: String,
+      e: Expression): Either[String, Array[Array[Double]]] =
+    array(fn, what, e, e.dataType match {
+      case ArrayType(ArrayType(DoubleType, _), _) => true
+      case _ => false
+    }, "array<array<double>>").flatMap { a =>
+      val rows = (0 until a.numElements()).map(j => noNulls(fn, what, a.getArray(j)))
+      rows.collectFirst { case Left(msg) => msg }.toLeft(
+        rows.map(_.toOption.get.toDoubleArray()).toArray)
+    }
+
+  def strings(fn: String, what: String, e: Expression): Either[String, Array[UTF8String]] =
+    array(fn, what, e, e.dataType match {
+      case ArrayType(StringType, _) => true
+      case _ => false
+    }, "array<string>").map(a =>
+      Array.tabulate(a.numElements())(j => a.getUTF8String(j).clone()))
+}
+
+/** A kernel over one per-row input and literal model arguments. Only the
+  * input is evaluated per row (null input => null output). The model is
+  * read into primitive structures once per expression instance and handed
+  * to the generated code through `ctx.addReferenceObj`, so the generated
+  * code has one size whatever the model's size. */
+private[functions] trait ModelKernel extends Expression {
+  def input: Expression
+  protected def inputCheck: Option[String]
+  protected def loadModel: Either[String, RowModel]
+
+  @transient private lazy val loaded = loadModel
+  private def model: RowModel =
+    loaded.fold(msg => throw new IllegalStateException(msg), identity)
+
+  override def nullable: Boolean = input.nullable
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    VectorTypeChecks.result(inputCheck.orElse(loaded.swap.toOption))
+
+  override def eval(row: InternalRow): Any = {
+    val in = input.eval(row)
+    if (in == null) null else model(in.asInstanceOf[ArrayData])
+  }
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val in = input.genCode(ctx)
+    val ref = ctx.addReferenceObj("model", model, classOf[RowModel].getName)
+    ev.copy(code = code"""
+      |${in.code}
+      |boolean ${ev.isNull} = ${in.isNull};
+      |${CodeGenerator.javaType(dataType)} ${ev.value} = null;
+      |if (!${ev.isNull}) {
+      |  ${ev.value} = $ref.apply(${in.value});
+      |}""".stripMargin)
+  }
+}
+
+/** `graft_affine(x, W, b[, amp])` — a fitted linear map as ONE expression
+  * of constant generated-code size: y_j = Σ_i x_i·W_j,i + b_j, or
+  * cos(Σ_i x_i·W_j,i + b_j)·amp when `amp` is given (the random-features
+  * epilogue). `W` (array<array<double>>, one row per output), `b`
+  * (array<double>, one entry per row of W) and `amp` (double) must be
+  * literals. The sums are bit-identical to the per-output spelling
+  * `array(graft_dot(x, W_0) + b_0, ...)` (see [[AffineModel]]), whose
+  * plan, codegen and JIT cost grow with the model: a fused Project of
+  * ~50+ dots passes HotSpot's huge-method limit and runs interpreted. */
+case class Affine(x: Expression, w: Expression, b: Expression,
+    amp: Option[Expression]) extends ModelKernel {
+
+  override def input: Expression = x
+  override def children: Seq[Expression] = Seq(x, w, b) ++ amp
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+  override def prettyName: String = "graft_affine"
+
+  override protected def inputCheck: Option[String] =
+    VectorTypeChecks.arrayOfDouble(prettyName, "x", x.dataType)
+
+  override protected def loadModel: Either[String, RowModel] = for {
+    ws <- ModelArg.matrix(prettyName, "W", w)
+    bs <- ModelArg.doubles(prettyName, "b", b)
+    _ <- Either.cond(bs.length == ws.length, (),
+      s"$prettyName expects b to have one entry per row of W " +
+        s"(${ws.length}), got ${bs.length}")
+    a <- amp.map(e => ModelArg.eval(prettyName, "amp", e, e.dataType == DoubleType,
+      "double").map(v => Some(v.asInstanceOf[Double]))).getOrElse(Right(None))
+  } yield new AffineModel(ws, bs, a)
+
+  override protected def withNewChildrenInternal(
+      c: IndexedSeq[Expression]): Affine =
+    copy(x = c(0), w = c(1), b = c(2), amp = c.lift(3))
+}
+
+/** `graft_vocab_counts(tokens, vocab)` → array<double> of |vocab| term
+  * counts: slot j counts the tokens equal to `vocab[j]` (null and
+  * out-of-vocabulary tokens count nowhere). `vocab` must be a literal
+  * array<string> of distinct non-null entries; its hash index is built
+  * once per expression instance, and a row costs one pass over its
+  * tokens. Replaces the per-slot `size(filter(idx, _ === j))` over
+  * `element_at(vocabMap, token)` spelling: k lambda passes per row, each
+  * re-probing a k-entry map literal that only the optimizer folds. */
+case class VocabCounts(tokens: Expression, vocab: Expression) extends ModelKernel {
+
+  override def input: Expression = tokens
+  override def children: Seq[Expression] = Seq(tokens, vocab)
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+  override def prettyName: String = "graft_vocab_counts"
+
+  override protected def inputCheck: Option[String] = tokens.dataType match {
+    case ArrayType(StringType, _) => None
+    case other =>
+      Some(s"$prettyName expects tokens to be array<string>, got ${other.catalogString}")
+  }
+
+  override protected def loadModel: Either[String, RowModel] =
+    ModelArg.strings(prettyName, "vocab", vocab).map(new VocabIndex(_))
+      .filterOrElse(_.distinct, s"$prettyName vocab entries must be distinct")
+
+  override protected def withNewChildrenInternal(
+      c: IndexedSeq[Expression]): VocabCounts =
+    copy(tokens = c(0), vocab = c(1))
+}
+
 /** Public extension entry point: registers the vector kernels in the
   * session's function registry
   * (`.config("spark.sql.extensions", "graft.functions.GraftExtensions")`).
@@ -423,6 +641,16 @@ object GraftExtensions {
     (FunctionIdentifier("graft_top_cells"),
       new ExpressionInfo(classOf[TopCells].getName, "graft_top_cells"),
       (children: Seq[Expression]) => ternary(children, TopCells.apply)),
+    (FunctionIdentifier("graft_affine"),
+      new ExpressionInfo(classOf[Affine].getName, "graft_affine"),
+      (children: Seq[Expression]) => {
+        require(children.length == 3 || children.length == 4,
+          s"expected 3 or 4 arguments, got ${children.length}")
+        Affine(children(0), children(1), children(2), children.lift(3))
+      }),
+    (FunctionIdentifier("graft_vocab_counts"),
+      new ExpressionInfo(classOf[VocabCounts].getName, "graft_vocab_counts"),
+      (children: Seq[Expression]) => binary(children, VocabCounts.apply)),
     (FunctionIdentifier("graft_shingles"),
       new ExpressionInfo(classOf[ShingleArray].getName, "graft_shingles"),
       (children: Seq[Expression]) => binary(children, ShingleArray.apply)),

@@ -43,8 +43,9 @@ object LearningOps extends Serializable {
     * √(2/D)·cos(w_j·x + b_j) with w_j ~ N(0, gamma²)ᵈ and b_j ~
     * U[0, 2π), drawn once from `seed` on the driver (model-sized
     * literals, deterministic across runs/executors — the RandomSignNode
-    * discipline). The D dots ride the codegen'd graft_dot kernel; no
-    * UDF, no per-row allocation beyond the output array. */
+    * discipline). The D dots and the cos epilogue are one constant-size
+    * `graft_affine` kernel, so the Project whole-stage-fuses at any
+    * numFeatures; no UDF, no per-row allocation beyond the output array. */
   case class CosineRandomFeaturesNode(in: String, out: String, dim: Int,
       numFeatures: Int, gamma: Double = 1.0, seed: Long = 42L)
       extends Transformer {
@@ -54,17 +55,9 @@ object LearningOps extends Serializable {
         Array.fill(numFeatures)(rng.nextDouble() * 2 * math.Pi))
     }
     def apply(df: DataFrame): DataFrame = {
-      val amp = math.sqrt(2.0 / numFeatures)
-      // NB: this transform(_.cast) lambda is CodegenFallback, which keeps
-      // the D-dot Project OUT of whole-stage codegen fusion — and that is
-      // currently load-bearing: a fused Project with ~50+ dot expressions
-      // passes HotSpot's huge-method JIT limit and runs interpreted (the
-      // ZcaBench-measured cliff; ZCA capped its width at 32 for this).
-      // Do NOT respell it as the array-level Cast without either capping
-      // numFeatures or moving the D dots into one constant-size kernel
-      // (the graft_top_cells/CenteredDot pattern).
-      val raw = transform(col(in), _.cast("double"))
-      // In-plan dim guard (the Epoch.day pattern): graft_dot silently
+      graft.functions.GraftExtensions.ensureRegistered(df.sparkSession)
+      val raw = col(in).cast("array<double>")
+      // In-plan dim guard (the Epoch.day pattern): graft_affine silently
       // truncates to min(length) on mismatch, so a mis-sized input —
       // e.g. an upstream FFT pad change shifting the bin count — must
       // raise, not yield silently wrong random features. One O(1) size
@@ -72,10 +65,8 @@ object LearningOps extends Serializable {
       val v = when(size(raw) === dim, raw).otherwise(raise_error(concat(
         lit(s"graft: CosineRandomFeaturesNode($in) expects dim=$dim, got "),
         size(raw).cast("string"))))
-      df.withColumn(out, array(ws.zip(bs).map { case (w, b) =>
-        cos(call_function("graft_dot", v,
-          array(w.map(lit).toIndexedSeq: _*)) + b) * amp
-      }.toIndexedSeq: _*))
+      df.withColumn(out, call_function("graft_affine", v, typedlit(ws),
+        typedlit(bs), lit(math.sqrt(2.0 / numFeatures))))
     }
   }
 
@@ -953,9 +944,7 @@ object LearningOps extends Serializable {
         array(col(labelCol).cast("double")), k = 1, d = d,
         blocks = blocks, numIter = numIter, lambda = lambda, wc = wc)(0)
       Transformer { df =>
-        df.withColumn(out, call_function("graft_dot",
-          transform(col(featuresCol), _.cast("double")),
-          array(w.toIndexedSeq.map(lit): _*)))
+        df.withColumn(out, element_at(affine(df, featuresCol, Array(w), Array(0.0)), 1))
       }
     }
   }
@@ -986,21 +975,23 @@ object LearningOps extends Serializable {
     }
   }
 
-  /** Fitted k-target scorer: the k weight rows applied as one array of
-    * codegen'd graft_dot columns (shared by the block and exact multi
-    * solvers). Per-target offsets `b` carry a mean-centered intercept
-    * (ref LinearMapper's `bOpt`); a zero offset emits the bare dot so
-    * intercept-free fits keep their exact plan shape. */
+  /** Fitted k-target scorer: the k weight rows applied as one
+    * constant-size `graft_affine` kernel (shared by the block and exact
+    * multi solvers and, at k = 1, the single-target scorers). Per-target
+    * offsets `b` carry a mean-centered intercept (ref LinearMapper's
+    * `bOpt`); a zero offset adds +0.0, which leaves every dot's bits as
+    * they are (a left-to-right sum from +0.0 is never -0.0). */
   private[ml] def scoresTransformer(featuresCol: String, out: String,
       w: Array[Array[Double]], b: Array[Double]): Transformer =
-    Transformer { df =>
-      val x = transform(col(featuresCol), _.cast("double"))
-      df.withColumn(out, array(w.indices.map { c =>
-        val dot = call_function("graft_dot", x,
-          array(w(c).toIndexedSeq.map(lit): _*))
-        if (b(c) == 0.0) dot else dot + lit(b(c))
-      }.toIndexedSeq: _*))
-    }
+    Transformer { df => df.withColumn(out, affine(df, featuresCol, w, b)) }
+
+  /** `graft_affine(x, w, b)` over `featuresCol` read as array<double>. */
+  private[ml] def affine(df: DataFrame, featuresCol: String,
+      w: Array[Array[Double]], b: Array[Double]): Column = {
+    graft.functions.GraftExtensions.ensureRegistered(df.sparkSession)
+    call_function("graft_affine", col(featuresCol).cast("array<double>"),
+      typedlit(w), typedlit(b))
+  }
 
   private[ml] def scoresTransformer(featuresCol: String, out: String,
       w: Array[Array[Double]]): Transformer =

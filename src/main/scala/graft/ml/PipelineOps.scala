@@ -162,28 +162,21 @@ object workflow {
 
   /** ref: nodes.nlp.CommonSparseFeatures(K): fit = top-K vocabulary by
     * document frequency (orderBy.limit — no unpartitioned window); the
-    * fitted transformer maps a token-array column to a K-dim dense
-    * array<double> of term counts via explode + broadcast join + pivot-free
-    * regroup. */
+    * fitted transformer maps a token-array column to a |vocabulary|-dim
+    * dense array<double> of term counts (at most K slots; none when the
+    * corpus has no tokens) with the one-pass `graft_vocab_counts` kernel. */
   case class CommonSparseFeatures(in: String, out: String, k: Int) extends Estimator {
+    require(k >= 1, s"CommonSparseFeatures needs k >= 1, got $k")
     def fit(train: DataFrame): Transformer = {
-      val vocabRows = train
+      val vocab = train
         .select(explode(array_distinct(col(in))).as("__tok"))
+        .where(col("__tok").isNotNull)
         .groupBy(col("__tok")).agg(count(lit(1)).as("__df"))
         .orderBy(col("__df").desc, col("__tok")).limit(k)
-        .collect()
-      val vocab = vocabRows.map(_.getString(0)).zipWithIndex.toMap
-      val dim = vocab.size
+        .collect().map(_.getString(0)).toSeq
       Transformer { df =>
-        val vocabLit = map(vocab.toSeq.sortBy(_._2).flatMap { case (t, i) =>
-          Seq(lit(t), lit(i)) }: _*)
-        val idx = filter(
-          transform(col(in), tok => element_at(vocabLit, tok)),
-          x => x.isNotNull)
-        // dense count vector: for each vocab slot, count occurrences
-        df.withColumn(out,
-          transform(sequence(lit(0), lit(dim - 1)),
-            j => size(filter(idx, x => x === j)).cast("double")))
+        graft.functions.GraftExtensions.ensureRegistered(df.sparkSession)
+        df.withColumn(out, call_function("graft_vocab_counts", col(in), typedlit(vocab)))
       }
     }
   }
@@ -641,10 +634,8 @@ object workflow {
       val fc = featuresCol
       val oc = out
       Transformer { df =>
-        val dot = call_function("graft_dot",
-          transform(col(fc), _.cast("double")),
-          array(w.toIndexedSeq.map(lit): _*))
-        df.withColumn(oc, if (b == 0.0) dot else dot + lit(b))
+        df.withColumn(oc, element_at(
+          graft.ml.LearningOps.affine(df, fc, Array(w), Array(b)), 1))
       }
     }
   }

@@ -688,17 +688,13 @@ class LearningOpsSpec extends GraftSuite {
     // The ZcaBench-measured cliff: a whole-stage-fused Project carrying
     // ~50+ dot/sqdist expressions passes HotSpot's huge-method JIT limit
     // and the generated code runs INTERPRETED (~100× at production
-    // widths). CosineRandomFeaturesNode and KernelRidge's landmark map
-    // are pinned out of fusion by their CodegenFallback transform(_.cast)
-    // lambda; this assertion is the inverse of the kernel specs'
-    // codegen-marker checks, so a refactor that "optimizes" the cast into
-    // an array-level Cast fails HERE instead of reintroducing the cliff.
-    val crf = CosineRandomFeaturesNode("v", "rf", dim = 64, numFeatures = 64)
-    val crfPlan = crf(vecs).queryExecution.executedPlan.toString
-    val crfLine = crfPlan.linesIterator.find(_.contains("graft_dot")).get
-    assert(!crfLine.trim.startsWith("*("),
-      "CosineRandomFeaturesNode's D-dot Project must NOT whole-stage-fuse " +
-        s"(huge-method JIT cliff at numFeatures >= ~50):\n$crfPlan")
+    // widths). KernelRidge's landmark map is pinned out of fusion by its
+    // CodegenFallback transform(_.cast) lambda; this assertion is the
+    // inverse of the kernel specs' codegen-marker checks, so a refactor
+    // that "optimizes" the cast into an array-level Cast fails HERE
+    // instead of reintroducing the cliff. (CosineRandomFeaturesNode left
+    // this list when its D dots became one graft_affine kernel; see the
+    // next test.)
     val target = vecs.withColumn("y", lit(1.0))
     val krOut = KernelRidgeEst("v", "y", "p", gamma = 0.5, numLandmarks = 64)
       .fit(target)(target)
@@ -707,5 +703,24 @@ class LearningOpsSpec extends GraftSuite {
     assert(!krLine.trim.startsWith("*("),
       "KernelRidge's m-landmark feature map must NOT whole-stage-fuse " +
         s"(huge-method JIT cliff at numLandmarks >= ~50):\n$krPlan")
+  }
+
+  test("CosineRandomFeaturesNode fuses with one code size at any width") {
+    // graft_affine keeps the model out of the generated code, so the
+    // fused stage's largest method is the same at 64 and 1024 features
+    // (the per-output dot spelling grew it past the huge-method limit)
+    val input = spark.read.parquet(s"$sf/embeddings.parquet")
+      .select($"embedding".cast("array<double>").as("v"))
+    def maxMethodSize(numFeatures: Int): Int = {
+      val plan = CosineRandomFeaturesNode("v", "rf", dim = 64,
+        numFeatures = numFeatures)(input).queryExecution.executedPlan
+      val line = plan.toString.linesIterator.find(_.contains("graft_affine")).get
+      assert(line.trim.startsWith("*("),
+        s"the random-features Project must whole-stage-fuse:\n$plan")
+      org.apache.spark.sql.execution.debug.codegenStringSeq(plan)
+        .map(_._3.maxMethodCodeSize).max
+    }
+    val (narrow, wide) = (maxMethodSize(64), maxMethodSize(1024))
+    assert(narrow == wide, s"max method size grew with numFeatures: $narrow -> $wide")
   }
 }

@@ -30,6 +30,22 @@ class PipelineSpec extends GraftSuite {
     assert(scored.columns.contains("pred_scores"))
   }
 
+  test("CommonSparseFeatures emits one slot per vocabulary entry") {
+    // a corpus of empty token arrays has an empty vocabulary: its vectors
+    // are empty (the old sequence(0, dim - 1) spelling gave [0, -1], two
+    // slots), and a small corpus gets fewer than k slots
+    import spark.implicits._
+    val empty = Seq(Seq.empty[String], Seq.empty[String]).toDF("t")
+    val none = CommonSparseFeatures("t", "f", 5).fit(empty)(empty)
+    assert(none.select(size(col("f"))).collect().map(_.getInt(0)).toSeq == Seq(0, 0))
+    val small = Seq(Seq("b", "a", "b"), Seq("a", "c")).toDF("t")
+    val counts = CommonSparseFeatures("t", "f", 5).fit(small)(small)
+      .select(col("f")).collect().map(_.getSeq[Double](0)).toSeq
+    // vocabulary by document frequency, ties by token: a (2), b, c
+    assert(counts == Seq(Seq(1.0, 2.0, 0.0), Seq(1.0, 0.0, 1.0)))
+    intercept[IllegalArgumentException](CommonSparseFeatures("t", "f", 0))
+  }
+
   test("single-item serving: a fitted pipeline scores a 1-row frame (ref EP3)") {
     val featurize = Tokenize("text", "tokens")
       .andThen(CommonSparseFeatures("tokens", "features", 50), docs)
@@ -53,7 +69,7 @@ class PipelineSpec extends GraftSuite {
     assert(local.head.getAs[Double]("pred") == dfPred,
       "local NB serving must agree with the distributed path")
     // round 14 breadth envelope: the SAME fitted chain also COMPILES
-    // through LocalServer — tokenizer regex, the vocab-map UDF, and
+    // through LocalServer — tokenizer regex, the vocab-count kernel, and
     // MLlib NaiveBayesModel.transform's scoring UDFs all fold into one
     // codegen'd projection, so both flagship serving families (TIMIT
     // array-math in ServingSpec, Amazon MLlib-wrapped text here) sit

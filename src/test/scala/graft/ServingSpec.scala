@@ -14,7 +14,7 @@ import graft.ml.workflow.{ClassLabelIndicators, MaxClassifier, StandardScalerEst
   * capstone chain — the full frames → PaddedFFT → scaler → cosine random
   * features → solve → argmax pipeline — so the round trip and the local
   * path cover every fitted-node species at once: a UDF node, an
-  * array-stat node, a literal-weights featurizer, graft_dot scorers, and
+  * array-stat node, a literal-weights featurizer, graft_affine scorers, and
   * expression-only classifiers. */
 class ServingSpec extends GraftSuite {
 
@@ -225,6 +225,34 @@ class ServingSpec extends GraftSuite {
       assert(jobs.get() == 1,
         s"compile+serve launched ${jobs.get() - 1} Spark job(s); must be zero")
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("LocalServer serves a 1024-feature CRF scorer as batch does") {
+    // the wide dense chain whose per-output dot spelling passed the
+    // huge-method limit: one graft_affine featurizer and one graft_affine
+    // scorer, served bit-for-bit like the batch plan scores them
+    val rng = new scala.util.Random(3)
+    val data = (0 until 120).map { r =>
+      val label = r % 3
+      (r.toLong, label, Array.tabulate(16)(i =>
+        (if (i % 3 == label) 1.0 else 0.0) + rng.nextGaussian() * 0.3))
+    }.toDF("id", "label", "x")
+    val crf = CosineRandomFeaturesNode("x", "rf", dim = 16,
+      numFeatures = 1024, gamma = 0.3)
+    val scorer = graft.ml.workflow.LeastSquaresMultiEst("rf", "ind", "scores",
+      regParam = 1e-3).fit(ClassLabelIndicators("label", "ind", 3)(crf(data)))
+    val chain = crf.andThen(scorer).andThen(MaxClassifier("scores", "cls"))
+    def bits(xs: Seq[Double]) = xs.map(java.lang.Double.doubleToRawLongBits)
+    val batch = chain(data).select(col("id"), col("scores"), col("cls")).collect()
+      .map(r => r.getLong(0) -> (bits(r.getSeq[Double](1)), r.getLong(2))).toMap
+    val server = graft.ml.LocalServer.compile(chain, spark, data.schema)
+    val rows = data.orderBy(col("id")).collect()
+    rows.foreach { row =>
+      val served = server(row)
+      assert((bits(dArr(served, "scores")), served.getAs[Long]("cls")) ==
+        batch(row.getLong(0)), s"served != batch on id=${row.getLong(0)}")
+    }
+    assert(rows.length == 120 && batch.size == 120)
   }
 
   test("applyLocal round-trips through ModelIO and fails fast on non-local chains") {

@@ -188,4 +188,128 @@ class VectorExprsSpec extends GraftSuite {
     val dotLine = plan.linesIterator.find(_.contains("graft_dot")).get
     assert(dotLine.trim.startsWith("*("), s"expected codegen'd Project in:\n$plan")
   }
+
+  /** Raw bits of every element, so -0.0 vs +0.0 and NaN payloads count. */
+  private def bits(r: org.apache.spark.sql.Row, i: Int): Seq[Long] =
+    r.getSeq[Double](i).map(java.lang.Double.doubleToRawLongBits)
+
+  /** `body` under the interpreted evaluators: no whole-stage codegen and
+    * no per-expression codegen (SQLConf's internal NO_CODEGEN mode). */
+  private def interpreted[T](body: => T): T = {
+    val keys = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    val old = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
+    keys.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("graft_affine is bit-identical to the per-output graft_dot spelling") {
+    val rng = new scala.util.Random(11)
+    val w = Array.fill(13)(Array.fill(64)(rng.nextGaussian()))
+    val b = Array.fill(13)(rng.nextDouble() * 2 * math.Pi)
+    val amp = math.sqrt(2.0 / 13)
+    val dots = w.toIndexedSeq.map(r => call_function("graft_dot", $"v", lit(r)))
+    val cmp = vecs.select(
+      call_function("graft_affine", $"v", typedlit(w),
+        typedlit(new Array[Double](13))).as("kernel0"),
+      array(dots: _*).as("old0"),
+      call_function("graft_affine", $"v", typedlit(w), typedlit(b)).as("kernelB"),
+      array(dots.zip(b).map { case (d, bj) => d + bj }: _*).as("oldB"),
+      call_function("graft_affine", $"v", typedlit(w), typedlit(b), lit(amp))
+        .as("kernelCos"),
+      array(dots.zip(b).map { case (d, bj) => cos(d + bj) * amp }: _*).as("oldCos"))
+    val codegen = cmp.collect()
+    val noCodegen = interpreted(cmp.collect())
+    assert(codegen.nonEmpty)
+    codegen.zip(noCodegen).foreach { case (r, ri) =>
+      Seq(0, 2, 4).foreach { k =>
+        assert(bits(r, k) == bits(r, k + 1), s"kernel != old spelling in $r")
+        assert(bits(r, k) == bits(ri, k), "codegen and NO_CODEGEN disagree")
+      }
+    }
+    // known values; null input => null output
+    val df = Seq(Some(Array(1.0, 2.0, 3.0)), None).toDF("x")
+    val out = df.select(call_function("graft_affine", $"x",
+      typedlit(Array(Array(1.0, 0.0, 0.0), Array(0.0, 1.0, 1.0))),
+      typedlit(Array(0.5, -1.0)))).collect()
+    assert(out(0).getSeq[Double](0) == Seq(1.5, 4.0))
+    assert(out(1).isNullAt(0))
+    // constant-size generated code: fused at any number of outputs
+    val wide = typedlit(Array.fill(1024)(Array.fill(64)(rng.nextGaussian())))
+    val plan = spark.read.parquet(s"$sf/embeddings.parquet")
+      .select($"embedding".cast("array<double>").as("v"))
+      .select(call_function("graft_affine", $"v", wide,
+        typedlit(new Array[Double](1024))))
+      .queryExecution.executedPlan.toString
+    val line = plan.linesIterator.find(_.contains("graft_affine")).get
+    assert(line.trim.startsWith("*("), s"expected codegen'd Project in:\n$plan")
+  }
+
+  test("graft_vocab_counts equals the filter/element_at map spelling") {
+    val vocab = Seq("a", "b", "c d", "e", "zz")
+    val docs = Seq(
+      Seq("a", "a", "x", null, "e"),
+      Seq.empty[String],
+      Seq("c d", "c", "d", "b", "b", "b"),
+      Seq[String](null, null),
+      Seq("zz", "q", "zz", "a")).toDF("t")
+    val vocabMap = map(vocab.zipWithIndex.flatMap { case (t, i) =>
+      Seq(lit(t), lit(i)) }: _*)
+    val idx = filter(transform($"t", tok => element_at(vocabMap, tok)),
+      x => x.isNotNull)
+    val cmp = docs.select(
+      call_function("graft_vocab_counts", $"t", typedlit(vocab)).as("kernel"),
+      transform(sequence(lit(0), lit(vocab.size - 1)),
+        j => size(filter(idx, x => x === j)).cast("double")).as("old"))
+    val codegen = cmp.collect()
+    val noCodegen = interpreted(cmp.collect())
+    codegen.zip(noCodegen).foreach { case (r, ri) =>
+      assert(bits(r, 0) == bits(r, 1), s"kernel != old spelling in $r")
+      assert(bits(r, 0) == bits(ri, 0), "codegen and NO_CODEGEN disagree")
+    }
+    assert(codegen.map(_.getSeq[Double](0)).toSeq == Seq(
+      Seq(2.0, 0.0, 0.0, 1.0, 0.0), Seq.fill(5)(0.0), Seq(0.0, 3.0, 1.0, 0.0, 0.0),
+      Seq.fill(5)(0.0), Seq(1.0, 0.0, 0.0, 0.0, 2.0)))
+    // an empty vocabulary gives empty vectors; a null token array, null
+    val empty = Seq(Some(Seq("a")), None).toDF("t")
+      .select(call_function("graft_vocab_counts", $"t", typedlit(Seq.empty[String])),
+        call_function("graft_vocab_counts", $"t", typedlit(vocab)))
+      .collect()
+    assert(empty(0).getSeq[Double](0).isEmpty)
+    assert(empty(1).isNullAt(1))
+  }
+
+  test("model kernels reject non-literal or mistyped models at analysis") {
+    val df = Seq((Array(1.0, 2.0), Array(1.0f), Seq("a"))).toDF("d", "f", "t")
+    def fails(c: org.apache.spark.sql.Column, msg: String): Unit = {
+      val e = intercept[org.apache.spark.sql.AnalysisException](df.select(c).head())
+      assert(e.getMessage.contains(msg), e.getMessage)
+    }
+    val w = typedlit(Array(Array(1.0, 2.0)))
+    val b = typedlit(Array(0.0))
+    fails(call_function("graft_affine", $"d", array($"d"), b),
+      "graft_affine expects W to be a foldable literal")
+    fails(call_function("graft_affine", $"d", typedlit(Array(Array(1, 2))), b),
+      "graft_affine expects W to be array<array<double>>, got array<array<int>>")
+    fails(call_function("graft_affine", $"f", w, b),
+      "graft_affine expects x to be array<double>, got array<float>")
+    fails(call_function("graft_affine", $"d", w, $"d"),
+      "graft_affine expects b to be a foldable literal")
+    fails(call_function("graft_affine", $"d", w, typedlit(Array(0.0, 1.0))),
+      "graft_affine expects b to have one entry per row of W (1), got 2")
+    fails(call_function("graft_affine", $"d", w, b, lit(1)),
+      "graft_affine expects amp to be double, got int")
+    fails(call_function("graft_vocab_counts", $"t", $"t"),
+      "graft_vocab_counts expects vocab to be a foldable literal")
+    fails(call_function("graft_vocab_counts", $"d", typedlit(Seq("a"))),
+      "graft_vocab_counts expects tokens to be array<string>, got array<double>")
+    fails(call_function("graft_vocab_counts", $"t", typedlit(Seq("a", null))),
+      "graft_vocab_counts vocab must not contain NULL entries")
+    fails(call_function("graft_vocab_counts", $"t", typedlit(Seq("a", "a"))),
+      "graft_vocab_counts vocab entries must be distinct")
+  }
 }

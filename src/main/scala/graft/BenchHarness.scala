@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Shared plumbing for the focused micro-benchmark mains ([[ZcaBench]],
-  * [[IvfBench]]): one session builder, one seeded vector generator, one
+/** Shared plumbing for the focused micro-benchmark mains ([[IvfBench]],
+  * [[ReuseAudit]]): one session builder, one seeded vector generator, one
   * timer — so load-bearing subtleties (the generator's
   * coalesce-nullability contract below) live in exactly one place
   * instead of drifting between copies. */
@@ -48,10 +48,4 @@ private[graft] object BenchHarness {
     body
     (System.nanoTime() - t0) / 1e9
   }
-
-  /** Locale-proof fixed-point formatting for probe/bench output lines —
-    * the default-locale f"%.2f" renders comma decimals under e.g.
-    * LANG=de_DE, corrupting space/JSON-delimited timing columns. */
-  def fmt(v: Double, decimals: Int = 2): String =
-    s"%.${decimals}f".formatLocal(java.util.Locale.ROOT, v)
 }

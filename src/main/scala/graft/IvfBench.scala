@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 /** Focused IVF coarse-assignment micro-benchmark — times the
   * `graft_top_cells` kernel against the struct-per-centroid spelling it
   * replaced (`array_min(array(struct(graft_sqdist(v, c_i), i)...))`) at
-  * production centroid counts, so the kernel carries the same measured
-  * evidence as ZcaBench's width cap.
+  * production centroid counts, so the kernel carries measured evidence
+  * rather than a guess.
   *
   * `runMain graft.IvfBench [n] [dim] [nlist]` (defaults 400000 64 64)
   * prints one JSON line with seconds per spelling. Clean

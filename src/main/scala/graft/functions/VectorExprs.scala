@@ -180,67 +180,6 @@ case class SquaredL2Distance(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Σ (x_i − μ_i)·w_i — the ZCA/linear-map serving kernel: a CENTERED dot
-  * product as ONE codegen'd expression, so a d-wide whitening is d of
-  * these in a single Project with no higher-order function anywhere in
-  * the row loop. (The obvious spelling — `graft_dot(zip_with(x, μ, _-_),
-  * w)` — leaves the zip_with centering as CodegenFallback, re-evaluated
-  * once per OUTPUT dimension: measured 11× slower than the per-partition
-  * dgemm at d=32 before this kernel existed.) Summation is left-to-right
-  * over (x_i − μ_i)·w_i — bit-identical to the zip_with spelling and to
-  * the dgemm path's scalar replay, so swapping it in changes NO result
-  * bits. */
-case class CenteredDot(x: Expression, mu: Expression, w: Expression)
-    extends TernaryExpression {
-
-  override def first: Expression = x
-  override def second: Expression = mu
-  override def third: Expression = w
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_centered_dot"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    VectorTypeChecks.result(
-      VectorTypeChecks.arrayOfDouble(prettyName, "the vector", x.dataType),
-      VectorTypeChecks.arrayOfDouble(prettyName, "mu", mu.dataType),
-      VectorTypeChecks.arrayOfDouble(prettyName, "w", w.dataType))
-
-  override def nullSafeEval(a: Any, m: Any, b: Any): Any = {
-    val xs = a.asInstanceOf[ArrayData]
-    val mus = m.asInstanceOf[ArrayData]
-    val ws = b.asInstanceOf[ArrayData]
-    val n = math.min(xs.numElements(),
-      math.min(mus.numElements(), ws.numElements()))
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      s += (xs.getDouble(i) - mus.getDouble(i)) * ws.getDouble(i)
-      i += 1
-    }
-    s
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, m, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(),
-         |  java.lang.Math.min($m.numElements(), $b.numElements()));
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $s += ($a.getDouble($i) - $m.getDouble($i)) * $b.getDouble($i);
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): CenteredDot =
-    copy(x = newFirst, mu = newSecond, w = newThird)
-}
-
 /** The `nprobe` nearest centroid ids for a vector — the IVF coarse
   * quantizer's assignment/probe kernel in ONE expression of CONSTANT
   * generated-code size. The spelling it replaces —
@@ -248,9 +187,8 @@ case class CenteredDot(x: Expression, mu: Expression, w: Expression)
   * `slice(array_sort(...), 1, nprobe)` with one struct per centroid —
   * grows the fused whole-stage-codegen method linearly in `nlist` and
   * passes HotSpot's huge-method JIT limit at production centroid counts
-  * (the same cliff ZcaBench measured for the ZCA Project at d=64: the
-  * generated code runs interpreted, ~90× slower); this kernel is two
-  * nested loops whatever `nlist` is.
+  * (the generated code then runs interpreted, ~90× slower); this kernel
+  * is two nested loops whatever `nlist` is.
   *
   * Distances are Σ(v_i−c_i)² accumulated left-to-right — bit-identical
   * to `graft_sqdist` — and selection orders by (distance, centroid id)
@@ -385,28 +323,66 @@ trait RowModel extends Serializable {
   def apply(in: ArrayData): ArrayData
 }
 
-/** y_j = Σ_i x_i·W_j,i + b_j over i < min(|x|, |W_j|), summed left to
-  * right exactly like `graft_dot`; with `amp`, y_j = cos(Σ + b_j)·amp,
-  * as in `cos(graft_dot(x, W_j) + b_j) * amp`. */
+/** y_j = Σ_i x_i·W_j,i + b_j over i < min(|x|, width of W), summed left
+  * to right exactly like `graft_dot`; with `amp`, y_j = cos(Σ + b_j)·amp,
+  * as in `cos(graft_dot(x, W_j) + b_j) * amp`. With a centre μ the sum
+  * runs over (x_i − μ_i)·W_j,i, as in `graft_dot(zip_with(x, μ, _ − _),
+  * W_j)`, and a row whose width is not |μ| raises. W is rectangular.
+  *
+  * Four outputs share each pass over x: every output keeps its own
+  * accumulator, still summed left to right over i, so the unroll breaks
+  * the serial add chain without changing any output's bits. */
 final class AffineModel(w: Array[Array[Double]], b: Array[Double],
-    amp: Option[Double]) extends RowModel {
+    amp: Option[Double], mu: Option[Array[Double]]) extends RowModel {
   private val hasAmp = amp.isDefined
   private val a = amp.getOrElse(1.0)
+  private val width = if (w.isEmpty) 0 else w(0).length
+
+  private def finish(s: Double, j: Int): Double =
+    if (hasAmp) math.cos(s + b(j)) * a else s + b(j)
 
   def apply(x: ArrayData): ArrayData = {
     val n = x.numElements()
     val xs = new Array[Double](n)
     var i = 0
-    while (i < n) { xs(i) = x.getDouble(i); i += 1 }
+    mu match {
+      case Some(c) =>
+        if (n != c.length) throw new IllegalArgumentException(
+          s"graft_centered_affine expects x to have ${c.length} entries, got $n")
+        while (i < n) { xs(i) = x.getDouble(i) - c(i); i += 1 }
+      case None =>
+        while (i < n) { xs(i) = x.getDouble(i); i += 1 }
+    }
+    val m = math.min(n, width)
     val out = new Array[Double](w.length)
     var j = 0
+    while (j + 4 <= w.length) {
+      val w0 = w(j)
+      val w1 = w(j + 1)
+      val w2 = w(j + 2)
+      val w3 = w(j + 3)
+      var s0, s1, s2, s3 = 0.0
+      i = 0
+      while (i < m) {
+        val xi = xs(i)
+        s0 += xi * w0(i)
+        s1 += xi * w1(i)
+        s2 += xi * w2(i)
+        s3 += xi * w3(i)
+        i += 1
+      }
+      out(j) = finish(s0, j)
+      out(j + 1) = finish(s1, j + 1)
+      out(j + 2) = finish(s2, j + 2)
+      out(j + 3) = finish(s3, j + 3)
+      j += 4
+    }
     while (j < w.length) {
       val wj = w(j)
-      val m = math.min(n, wj.length)
       var s = 0.0
       i = 0
       while (i < m) { s += xs(i) * wj(i); i += 1 }
-      out(j) = if (hasAmp) math.cos(s + b(j)) * a else s + b(j)
+      out(j) = finish(s, j)
       j += 1
     }
     UnsafeArrayData.fromPrimitiveArray(out)
@@ -526,39 +502,60 @@ private[functions] trait ModelKernel extends Expression {
   }
 }
 
-/** `graft_affine(x, W, b[, amp])` — a fitted linear map as ONE expression
-  * of constant generated-code size: y_j = Σ_i x_i·W_j,i + b_j, or
-  * cos(Σ_i x_i·W_j,i + b_j)·amp when `amp` is given (the random-features
-  * epilogue). `W` (array<array<double>>, one row per output), `b`
-  * (array<double>, one entry per row of W) and `amp` (double) must be
-  * literals. The sums are bit-identical to the per-output spelling
-  * `array(graft_dot(x, W_0) + b_0, ...)` (see [[AffineModel]]), whose
-  * plan, codegen and JIT cost grow with the model: a fused Project of
-  * ~50+ dots passes HotSpot's huge-method limit and runs interpreted. */
-case class Affine(x: Expression, w: Expression, b: Expression,
-    amp: Option[Expression]) extends ModelKernel {
+/** `graft_affine(x, W, b[, amp])` and `graft_centered_affine(x, mu, W)`
+  * — a fitted linear map as ONE expression of constant generated-code
+  * size: y_j = Σ_i x_i·W_j,i + b_j, or cos(Σ_i x_i·W_j,i + b_j)·amp when
+  * `amp` is given (the random-features epilogue), or Σ_i (x_i − μ_i)·W_j,i
+  * with a centre (the ZCA/PCA projection). `W` (array<array<double>>,
+  * one row per output, all rows equally wide), `mu` (array<double>, one
+  * entry per column of W), `b` (array<double>, one entry per row of W)
+  * and `amp` (double) must be literals. The sums are bit-identical to
+  * the per-output spellings `array(graft_dot(x, W_0) + b_0, ...)` and
+  * `array(graft_dot(zip_with(x, μ, _ − _), W_0), ...)` (see
+  * [[AffineModel]]), whose plan, codegen and JIT cost grow with the
+  * model: a fused Project of ~50+ dots passes HotSpot's huge-method
+  * limit and runs interpreted. */
+case class Affine(x: Expression, mu: Option[Expression], w: Expression,
+    b: Option[Expression], amp: Option[Expression]) extends ModelKernel {
 
   override def input: Expression = x
-  override def children: Seq[Expression] = Seq(x, w, b) ++ amp
+  override def children: Seq[Expression] = Seq(x) ++ mu ++ Seq(w) ++ b ++ amp
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "graft_affine"
+  override def prettyName: String =
+    if (mu.isDefined) "graft_centered_affine" else "graft_affine"
+
+  // print the arguments as given, not the Options that carry them
+  override protected def stringArgs: Iterator[Any] = children.iterator
 
   override protected def inputCheck: Option[String] =
     VectorTypeChecks.arrayOfDouble(prettyName, "x", x.dataType)
 
   override protected def loadModel: Either[String, RowModel] = for {
     ws <- ModelArg.matrix(prettyName, "W", w)
-    bs <- ModelArg.doubles(prettyName, "b", b)
+    width = ws.headOption.fold(0)(_.length)
+    _ <- ws.indices.find(ws(_).length != width).map(j =>
+      s"$prettyName expects W to be rectangular: row $j has " +
+        s"${ws(j).length} entries, row 0 has $width").toLeft(())
+    c <- mu.map(e => ModelArg.doubles(prettyName, "mu", e).map(Some(_)))
+      .getOrElse(Right(None))
+    _ <- c.filter(cs => ws.nonEmpty && cs.length != width).map(cs =>
+      s"$prettyName expects mu to have one entry per column of W " +
+        s"($width), got ${cs.length}").toLeft(())
+    bs <- b.map(ModelArg.doubles(prettyName, "b", _))
+      .getOrElse(Right(new Array[Double](ws.length)))
     _ <- Either.cond(bs.length == ws.length, (),
       s"$prettyName expects b to have one entry per row of W " +
         s"(${ws.length}), got ${bs.length}")
     a <- amp.map(e => ModelArg.eval(prettyName, "amp", e, e.dataType == DoubleType,
       "double").map(v => Some(v.asInstanceOf[Double]))).getOrElse(Right(None))
-  } yield new AffineModel(ws, bs, a)
+  } yield new AffineModel(ws, bs, a, c)
 
   override protected def withNewChildrenInternal(
-      c: IndexedSeq[Expression]): Affine =
-    copy(x = c(0), w = c(1), b = c(2), amp = c.lift(3))
+      c: IndexedSeq[Expression]): Affine = {
+    val it = c.iterator
+    Affine(it.next(), mu.map(_ => it.next()), it.next(), b.map(_ => it.next()),
+      amp.map(_ => it.next()))
+  }
 }
 
 /** `graft_vocab_counts(tokens, vocab)` → array<double> of |vocab| term
@@ -635,9 +632,6 @@ object GraftExtensions {
     (FunctionIdentifier("graft_sqdist"),
       new ExpressionInfo(classOf[SquaredL2Distance].getName, "graft_sqdist"),
       (children: Seq[Expression]) => binary(children, SquaredL2Distance.apply)),
-    (FunctionIdentifier("graft_centered_dot"),
-      new ExpressionInfo(classOf[CenteredDot].getName, "graft_centered_dot"),
-      (children: Seq[Expression]) => ternary(children, CenteredDot.apply)),
     (FunctionIdentifier("graft_top_cells"),
       new ExpressionInfo(classOf[TopCells].getName, "graft_top_cells"),
       (children: Seq[Expression]) => ternary(children, TopCells.apply)),
@@ -646,8 +640,12 @@ object GraftExtensions {
       (children: Seq[Expression]) => {
         require(children.length == 3 || children.length == 4,
           s"expected 3 or 4 arguments, got ${children.length}")
-        Affine(children(0), children(1), children(2), children.lift(3))
+        Affine(children(0), None, children(1), Some(children(2)), children.lift(3))
       }),
+    (FunctionIdentifier("graft_centered_affine"),
+      new ExpressionInfo(classOf[Affine].getName, "graft_centered_affine"),
+      (children: Seq[Expression]) => ternary(children,
+        (x, mu, w) => Affine(x, Some(mu), w, None, None))),
     (FunctionIdentifier("graft_vocab_counts"),
       new ExpressionInfo(classOf[VocabCounts].getName, "graft_vocab_counts"),
       (children: Seq[Expression]) => binary(children, VocabCounts.apply)),

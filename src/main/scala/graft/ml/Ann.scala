@@ -44,8 +44,8 @@ object Ann {
     * spelling it replaces (`array_min(array(struct(graft_sqdist(v,c_i),
     * i)...))`) grows the fused whole-stage-codegen method linearly in
     * nlist and passes HotSpot's huge-method JIT limit at production
-    * centroid counts — the generated code then runs INTERPRETED (the
-    * ZcaBench-measured cliff: ~90× at the ZCA equivalent). The kernel's
+    * centroid counts — the generated code then runs INTERPRETED (~90×
+    * slower). The kernel's
     * generated code is constant-size whatever nlist is; distances and
     * (distance, id) tie-breaks are bit-identical to the old spelling. */
   private def assignExpr(v: Column, index: IvfIndex): Column =

@@ -1,6 +1,6 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.ml.functions.array_to_vector
 
@@ -32,16 +32,15 @@ object ImageFvPipeline {
         sequence(lit(0), (size(col("image")) / descDim).cast("int") - 1),
         i => slice(col("image"), i * descDim + 1, lit(descDim)))).as("desc"))
 
-  /** Project descriptors onto fitted PCA axes: out = (x − μ)·Aᵀ. The
-    * mean/axes are literal arrays (model-sized); the dots ride the
-    * codegen'd graft_dot kernel. */
+  /** Project descriptors onto fitted PCA axes: out = (x − μ)·Aᵀ as ONE
+    * constant-size `graft_centered_affine` column (the mean/axes are
+    * model-sized literals, read once per expression). A row whose width
+    * is not |μ| raises a named error. */
   def pcaProject(df: DataFrame, in: String, out: String,
       mean: Array[Double], axes: Array[Array[Double]]): DataFrame = {
-    val centered = zip_with(
-      transform(col(in), _.cast("double")), typedlit(mean.toSeq),
-      (x, m) => x - m)
-    df.withColumn(out, array(axes.map(a =>
-      call_function("graft_dot", centered, typedlit(a.toSeq))): _*))
+    graft.functions.GraftExtensions.ensureRegistered(df.sparkSession)
+    df.withColumn(out, call_function("graft_centered_affine",
+      col(in).cast("array<double>"), typedlit(mean), typedlit(axes)))
   }
 
   /** Fit the descriptor → Fisher-vector encoder on a training descriptor

@@ -34,6 +34,17 @@ object Dist {
       .orElse(sys.props.get("graft.force.distributed"))
       .exists(_ == "1")
 
+  /** Spark's `round(double)` then `cast("long")`, replicated exactly for
+    * driver arms (BigDecimal HALF_UP at scale 0 — the winsorize idiom);
+    * and `round(x, 6)` at scale 6. Every driver-arm replay that mirrors a
+    * distributed `round` must route through these. */
+  private[graft] def rnd0(x: Double): Long =
+    java.math.BigDecimal.valueOf(x)
+      .setScale(0, java.math.RoundingMode.HALF_UP).longValue
+  private[graft] def rnd6(x: Double): Double =
+    java.math.BigDecimal.valueOf(x)
+      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
+
   /** The shared size-dispatch seam (the discipline six round-17 driver
     * arms repeated by convention: checkpoint → count → ceiling test →
     * collect+local-core | distributed arm). Eagerly `localCheckpoint`s
@@ -55,17 +66,6 @@ object Dist {
     * `driverArm` a pure scheduling-overhead optimization under the
     * ceiling. Empty relations (n = 0) always route distributed: several
     * driver cores index into the collected array. */
-  /** Spark's `round(double)` then `cast("long")`, replicated exactly for
-    * driver arms (BigDecimal HALF_UP at scale 0 — the winsorize idiom);
-    * and `round(x, 6)` at scale 6. Every driver-arm replay that mirrors a
-    * distributed `round` must route through these. */
-  private[graft] def rnd0(x: Double): Long =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(0, java.math.RoundingMode.HALF_UP).longValue
-  private[graft] def rnd6(x: Double): Double =
-    java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
-
   def sizeDispatch(rel: DataFrame, ceiling: Long,
       measure: Long => Long = identity)(
       driverArm: (DataFrame, Long) => DataFrame)(

@@ -843,7 +843,7 @@ object Stats {
     * slopes collect to the driver as one primitive array — sort, take
     * the middle two — skipping the value-count shuffle, its checkpoint,
     * and the two prefix scans (measured 2× on the suite fixture:
-    * ~1.3-1.7 s vs ~3.0-3.3 s same-session; graft.TheilProbe). Past the
+    * ~1.3-1.7 s vs ~3.0-3.3 s same-session). Past the
     * cap (a multi-decade calendar) the SAME query runs the distributed
     * rank-selection arm; both arms share the one pair expression and a
     * both-arms agreement test pins them to the same row.

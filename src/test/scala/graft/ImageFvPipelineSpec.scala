@@ -18,14 +18,12 @@ import graft.ml.workflow.{ClassLabelIndicators, MaxClassifier}
   * 3-class synthetic task must clear a floor far above chance. */
 class ImageFvPipelineSpec extends GraftSuite {
 
-  test("ImageNetSiftLcsFV shape: SIFT+LCS -> TSQR-PCA -> GMM -> batched FV -> gather -> solve -> argmax") {
+  /** Synthetic 8x8x3 images, 3 classes: channel intensity tracks the
+    * class (means differ by 50 levels) under +/-12 deterministic noise,
+    * so LCS cell statistics separate classes but not trivially. */
+  private def images(n: Int) = {
     import spark.implicits._
-
-    // --- synthetic 8x8x3 images, 3 classes: channel intensity tracks the
-    // class (means differ by 50 levels) under +/-12 deterministic noise,
-    // so LCS cell statistics separate classes but not trivially
-    val n = 150
-    val imgs = spark.createDataset((0 until n).map { r =>
+    spark.createDataset((0 until n).map { r =>
       val label = r % 3
       val px = Array.tabulate(8 * 8 * 3) { q =>
         val c = q % 3
@@ -34,6 +32,40 @@ class ImageFvPipelineSpec extends GraftSuite {
       }
       ImageOps.Img(r.toLong, 8, 8, 3, px)
     })
+  }
+
+  test("pcaProject is bit-identical to the zip_with + graft_dot spelling") {
+    import spark.implicits._
+    val descs = ImageFvPipeline.cellDescriptors(
+      ImageOps.lcs(images(30), cell = 2).toDF(), descDim = 6)
+    val (mu, axes, _) = graft.ml.LearningOps.tsqrPca(descs, "desc", 4)
+    val centered = zip_with(transform($"desc", _.cast("double")),
+      typedlit(mu.toSeq), (x, m) => x - m)
+    val old = array(axes.toIndexedSeq.map(a =>
+      call_function("graft_dot", centered, typedlit(a.toSeq))): _*)
+    val rows = ImageFvPipeline.pcaProject(descs, "desc", "p", mu, axes)
+      .select($"p", old.as("old")).collect()
+    assert(rows.length == 30 * 16)
+    rows.foreach { r =>
+      val bits = (i: Int) => r.getSeq[Double](i).map(java.lang.Double.doubleToRawLongBits)
+      assert(bits(0) == bits(1), s"kernel projection != old spelling in $r")
+    }
+    // a descriptor whose width differs from mu raises a named error; the
+    // old spelling padded it with nulls and projected it silently
+    val short = descs.limit(1).select(slice($"desc", 1, 5).as("desc"))
+    val e = intercept[Exception] {
+      ImageFvPipeline.pcaProject(short, "desc", "p", mu, axes).select("p").collect()
+    }
+    val msgs = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).mkString(" ")
+    assert(msgs.contains("graft_centered_affine expects x to have 6 entries, got 5"), msgs)
+  }
+
+  test("ImageNetSiftLcsFV shape: SIFT+LCS -> TSQR-PCA -> GMM -> batched FV -> gather -> solve -> argmax") {
+    import spark.implicits._
+
+    val n = 150
+    val imgs = images(n)
     val labels = spark.createDataFrame(
       (0 until n).map(r => (r.toLong, r % 3))).toDF("id", "label")
 

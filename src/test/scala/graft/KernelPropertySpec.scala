@@ -232,8 +232,8 @@ class KernelPropertySpec extends GraftSuite {
     } yield (d, n, mu, w, xs)
 
   test("ZCA expr spelling equals the dense (x-mu)'W product over random shapes, zero-job") {
-    // fuzz the d graft_dot Projects (the serving spelling) against a
-    // driver-side dense replay over random widths/means/matrices —
+    // fuzz the graft_centered_affine Project (the serving spelling)
+    // against a driver-side dense replay over random widths/means/matrices —
     // evaluated via applyLocal with requireLocal on, so every sampled
     // width ALSO pins the LocalRelation collapse (an index slip in the
     // column-major wj slice or a collapse-defeating expression would

@@ -82,11 +82,10 @@ class LearningOpsSpec extends GraftSuite {
       s"whitened variance off identity: ${stats.getAs[Double]("worst_vr")}")
   }
 
-  test("ZCA expr and gemm transforms both replay the scalar (x-mu)'W per row at 1e-12") {
-    // pin BOTH width-dispatched applies against an independent scalar
-    // replay of the same fitted (mu, W): recompute W from the
-    // driver-side covariance the same way the estimator does, then
-    // compare rows — and against each other
+  test("ZCA transform replays the scalar (x-mu)'W per row at 1e-12") {
+    // pin the apply against an independent scalar replay of the same
+    // fitted (mu, W): recompute W from the driver-side covariance the
+    // same way the estimator does, then compare rows
     import breeze.linalg.{DenseMatrix => BDM, DenseVector => BDV}
     val d = 16
     val small = vecs.where($"vec_id" < 400)
@@ -98,9 +97,8 @@ class LearningOpsSpec extends GraftSuite {
       .select($"vec_id", $"v", $"w").collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray,
         r.getSeq[Double](2).toArray)).sortBy(_._1)
-    val byExpr = collectOut(zcaExprTransformer("v", "w", muF, wF, d))
-    val byGemm = collectOut(zcaGemmTransformer("v", "w", muF, wF, d))
-    val xs = byExpr.map(_._2)
+    val byKernel = collectOut(zcaExprTransformer("v", "w", muF, wF, d))
+    val xs = byKernel.map(_._2)
     val n = xs.length
     val mu = BDV.tabulate(d)(j => xs.map(_(j)).sum / n)
     val cov = BDM.tabulate(d, d) { (a, b) =>
@@ -114,24 +112,12 @@ class LearningOpsSpec extends GraftSuite {
         val expect = (BDV(x) - mu).t * wm
         (0 until d).map(j => math.abs(got(j) - expect(j))).max
       }.max
-    val worstExpr = worstVsReplay(byExpr)
-    val worstGemm = worstVsReplay(byGemm)
-    assert(worstExpr < 1e-12,
-      s"graft_dot whitening must replay the scalar product: $worstExpr")
-    assert(worstGemm < 1e-12,
-      s"gemm-batched whitening must replay the scalar product: $worstGemm")
-    val worstCross = byExpr.zip(byGemm).map { case ((_, _, a), (_, _, b)) =>
-      (0 until d).map(j => math.abs(a(j) - b(j))).max
-    }.max
-    assert(worstCross < 1e-9,
-      s"the two width-dispatched applies must agree: $worstCross")
-    // the appended column keeps every original column intact and in
-    // order; past maxServeWidth the fitted node IS the gemm spelling
+    val worst = worstVsReplay(byKernel)
+    assert(worst < 1e-12,
+      s"kernel whitening must replay the scalar product: $worst")
+    // the appended column keeps every original column intact and in order
     val cols = ZCAWhitenerEst("v", "w2").fit(small)(small).columns.toSeq
     assert(cols == Seq("vec_id", "v", "w2"))
-    val colsWide = ZCAWhitenerEst("v", "w2", maxServeWidth = 4)
-      .fit(small)(small).columns.toSeq
-    assert(colsWide == Seq("vec_id", "v", "w2"))
   }
 
   test("ZCA apply supports in-place (out == in) and any numeric element type") {
@@ -148,15 +134,6 @@ class LearningOpsSpec extends GraftSuite {
       .where(exists(zip_with($"a", $"b", (x, y) => abs(x - y) > 1e-12), x => x))
       .count()
     assert(mismatches == 0, "in-place output must equal append-mode output")
-    // the gemm spelling keeps the same in-place semantics
-    val inPlaceGemm = ZCAWhitenerEst("v", "v", maxServeWidth = 0)
-      .fit(small)(small)
-    assert(inPlaceGemm.columns.toSeq == Seq("vec_id", "v"))
-    val gemmMismatch = inPlaceGemm.select($"vec_id", $"v".as("a"))
-      .join(append.select($"vec_id", $"w".as("b")), "vec_id")
-      .where(exists(zip_with($"a", $"b", (x, y) => abs(x - y) > 1e-9), x => x))
-      .count()
-    assert(gemmMismatch == 0, "gemm in-place output must match expr append output")
     // fit() casts ANY numeric array to double, so apply must not be
     // stricter: an integer feature array whitens end to end
     val ints = small.select($"vec_id",
@@ -171,10 +148,9 @@ class LearningOpsSpec extends GraftSuite {
     val small = vecs.where($"vec_id" < 80)
       .select($"vec_id", slice($"v", 1, d).as("v"))
     val (muF, wF, _) = fitZcaModel(small, "v", 1e-5)
-    // BOTH width-dispatched applies must die with a graft-named error
-    // naming the column on a null input — the gemm path's Number
-    // unboxing and the expr path's graft_dot would otherwise give a
-    // context-free executor NPE / a silently-null output row
+    // the apply must die with a graft-named error naming the column on
+    // a null input — the kernel would otherwise give a silently-null
+    // output row or read a null element as 0.0
     val nullArray = small.select($"vec_id",
       when($"vec_id" === 7L, lit(null)).otherwise($"v").as("v"))
     val nullElem = small.select($"vec_id",
@@ -186,25 +162,22 @@ class LearningOpsSpec extends GraftSuite {
       while (e != null) { sb ++= String.valueOf(e.getMessage); e = e.getCause }
       sb.toString
     }
-    for (path <- Seq(zcaExprTransformer("v", "w", muF, wF, d),
-        zcaGemmTransformer("v", "w", muF, wF, d))) {
-      // collect the output column: a bare count() would let Catalyst
-      // prune the expr-path projection away and never hit the guard
-      val e1 = intercept[Exception] { path(nullArray).select("w").collect() }
-      assert(messageChain(e1).contains(
-        "graft: ZCAWhitener(v) got a null array"),
-        s"wanted the named null-array error, got: ${messageChain(e1)}")
-      val e2 = intercept[Exception] { path(nullElem).select("w").collect() }
-      assert(messageChain(e2).contains(
-        "graft: ZCAWhitener(v) got a null element at index 2"),
-        s"wanted the named null-element error, got: ${messageChain(e2)}")
-    }
-    // the expr path also names a wrong-width row (the gemm path throws
-    // a bounds error there; both refuse rather than compute garbage)
+    val path = zcaExprTransformer("v", "w", muF, wF, d)
+    // collect the output column: a bare count() would let Catalyst
+    // prune the projection away and never hit the guard
+    val e1 = intercept[Exception] { path(nullArray).select("w").collect() }
+    assert(messageChain(e1).contains(
+      "graft: ZCAWhitener(v) got a null array"),
+      s"wanted the named null-array error, got: ${messageChain(e1)}")
+    val e2 = intercept[Exception] { path(nullElem).select("w").collect() }
+    assert(messageChain(e2).contains(
+      "graft: ZCAWhitener(v) got a null element at index 2"),
+      s"wanted the named null-element error, got: ${messageChain(e2)}")
+    // a wrong-width row is named too, rather than computing garbage
     val shortRow = small.select($"vec_id",
       when($"vec_id" === 7L, slice($"v", 1, 3)).otherwise($"v").as("v"))
     val e3 = intercept[Exception] {
-      zcaExprTransformer("v", "w", muF, wF, d)(shortRow).select("w").collect()
+      path(shortRow).select("w").collect()
     }
     assert(messageChain(e3).contains(
       "graft: ZCAWhitener(v) expects width 6, got 3"),
@@ -226,26 +199,24 @@ class LearningOpsSpec extends GraftSuite {
     assert(sv.drop(2).forall(_ < 1e-6), s"sv = ${sv.toSeq}")
   }
 
-  test("fitted ZCA survives ModelIO save -> load (both spellings stay library-scoped)") {
-    // both width-dispatched transforms capture plain arrays in
-    // library-defined lambdas — java-serializable, no Broadcast/session
-    // state, so a saved fitted chain reloads under the allowlist filter
+  test("fitted ZCA survives ModelIO save -> load") {
+    // the transform captures plain arrays in a library-defined lambda —
+    // java-serializable, no Broadcast/session state, so a saved fitted
+    // chain reloads under the allowlist filter
     val d = 8
     val small = vecs.where($"vec_id" < 100)
       .select($"vec_id", slice($"v", 1, d).as("v"))
-    for (cap <- Seq(128, 0)) { // expr spelling, then gemm spelling
-      val fit = ZCAWhitenerEst("v", "w", maxServeWidth = cap).fit(small)
-      val path = java.nio.file.Files.createTempFile("graft-zca", ".bin")
-        .toString
-      graft.ml.ModelIO.save(fit, path)
-      val loaded = graft.ml.ModelIO.load(path)
-      val want = fit(small).select($"vec_id", $"w").collect()
-        .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-      val got = loaded(small).select($"vec_id", $"w").collect()
-        .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-      assert(got == want, s"loaded ZCA (cap=$cap) must whiten identically")
-      java.nio.file.Files.delete(java.nio.file.Paths.get(path))
-    }
+    val fit = ZCAWhitenerEst("v", "w").fit(small)
+    val path = java.nio.file.Files.createTempFile("graft-zca", ".bin")
+      .toString
+    graft.ml.ModelIO.save(fit, path)
+    val loaded = graft.ml.ModelIO.load(path)
+    val want = fit(small).select($"vec_id", $"w").collect()
+      .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+    val got = loaded(small).select($"vec_id", $"w").collect()
+      .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+    assert(got == want, "loaded ZCA must whiten identically")
+    java.nio.file.Files.delete(java.nio.file.Paths.get(path))
   }
 
   test("BlockLeastSquaresEst approaches the exact least-squares fit") {
@@ -621,80 +592,17 @@ class LearningOpsSpec extends GraftSuite {
       s"guard message missing from: $msgs")
   }
 
-  test("defaultZcaServeWidth derives from this JVM's huge-method limit, floored at the measured 32") {
-    val w = graft.ml.LearningOps.defaultZcaServeWidth
-    assert(w >= 32 && w <= 256, s"cap out of the sanctioned band: $w")
-    val readable = try {
-      java.lang.management.ManagementFactory.newPlatformMXBeanProxy(
-        java.lang.management.ManagementFactory.getPlatformMBeanServer,
-        "com.sun.management:type=HotSpotDiagnostic",
-        classOf[com.sun.management.HotSpotDiagnosticMXBean])
-        .getVMOption("HugeMethodLimit")
-      true
-    } catch { case _: Throwable => false }
-    // every product HotSpot compiles HugeMethodLimit to a constant (the
-    // flag is develop-only), so the derived cap must land EXACTLY on the
-    // ZcaBench-measured 32 there
-    if (!readable) assert(w == 32,
-      s"unreadable limit must fall back to the measured 32, got $w")
-  }
-
-  test("zcaProbedServeWidth measures THIS JVM's real cliff (probe mode)") {
-    // The flag-gated product-JVM micro-probe: times the actual fused
-    // zcaExprTransformer at 32/64/128/256 and keeps the widest under the
-    // cliff ratio. On this dev JVM ZcaBench measured the d=64 cliff
-    // directly (~168× per element), so the probe must agree and return
-    // exactly the measured-safe 32 — a wider answer means the probe
-    // stopped seeing the interpretation penalty it exists to measure.
-    val w = graft.ml.LearningOps.zcaProbedServeWidth(spark)
-    assert(Set(32, 64, 128, 256).contains(w), s"probed width off-grid: $w")
-    // The exact ==32 pin holds only where the cliff itself holds: a JVM
-    // running -XX:-DontCompileHugeMethods (or a tuned HugeMethodLimit)
-    // JIT-compiles the fused method and the probe LEGITIMATELY returns a
-    // wider width — that is the probe working, not failing (advisor r19
-    // #1). Gate the pin on the flags confirming stock cliff config;
-    // where they are unreadable (every product HotSpot: develop-only
-    // flags compiled to their defaults) the stock cliff is guaranteed
-    // by construction and the pin applies.
-    def vmFlag(name: String): Option[String] = try {
-      Some(java.lang.management.ManagementFactory.newPlatformMXBeanProxy(
-        java.lang.management.ManagementFactory.getPlatformMBeanServer,
-        "com.sun.management:type=HotSpotDiagnostic",
-        classOf[com.sun.management.HotSpotDiagnosticMXBean])
-        .getVMOption(name).getValue)
-    } catch { case _: Throwable => None }
-    val stockCliff =
-      vmFlag("HugeMethodLimit").forall(_ == "8000") &&
-        vmFlag("DontCompileHugeMethods").forall(_ == "true")
-    // cached per JVM: the second call must not re-time (checked BEFORE
-    // the pin branch so the cache contract is covered on every JVM)
-    val t0 = System.nanoTime()
-    assert(graft.ml.LearningOps.zcaProbedServeWidth(spark) == w)
-    assert((System.nanoTime() - t0) / 1e9 < 0.1, "probe result not cached")
-    if (stockCliff)
-      assert(w == 32,
-        s"this JVM's d=64 cliff is ZcaBench-measured; probe returned $w")
-    else
-      // a w >= 32 assert here would be vacuous (the grid check above
-      // already guarantees it); there is no honest invariant for a tuned
-      // JIT (the cliff may sit anywhere or nowhere), so the exact pin is
-      // EXPLICITLY waived rather than silently passed
-      cancel(s"non-stock JIT config (HugeMethodLimit/DontCompileHugeMethods " +
-        s"tuned) — exact ==32 pin waived; probed width $w is on-grid and " +
-        "the cache contract above was checked")
-  }
-
   test("wide-projection sites stay OUT of whole-stage fusion (JIT-cliff guard)") {
-    // The ZcaBench-measured cliff: a whole-stage-fused Project carrying
+    // The huge-method JIT cliff: a whole-stage-fused Project carrying
     // ~50+ dot/sqdist expressions passes HotSpot's huge-method JIT limit
     // and the generated code runs INTERPRETED (~100× at production
     // widths). KernelRidge's landmark map is pinned out of fusion by its
     // CodegenFallback transform(_.cast) lambda; this assertion is the
     // inverse of the kernel specs' codegen-marker checks, so a refactor
     // that "optimizes" the cast into an array-level Cast fails HERE
-    // instead of reintroducing the cliff. (CosineRandomFeaturesNode left
-    // this list when its D dots became one graft_affine kernel; see the
-    // next test.)
+    // instead of reintroducing the cliff. (CosineRandomFeaturesNode and
+    // ZCA left this list when their per-output dots became one
+    // graft_affine / graft_centered_affine kernel; see the next test.)
     val target = vecs.withColumn("y", lit(1.0))
     val krOut = KernelRidgeEst("v", "y", "p", gamma = 0.5, numLandmarks = 64)
       .fit(target)(target)
@@ -722,5 +630,29 @@ class LearningOpsSpec extends GraftSuite {
     }
     val (narrow, wide) = (maxMethodSize(64), maxMethodSize(1024))
     assert(narrow == wide, s"max method size grew with numFeatures: $narrow -> $wide")
+    // ZCA: one graft_centered_affine column, fused at d = 8 and d = 256.
+    // The input is non-null with non-null elements, so only the
+    // codegen'd width guard sits in front of the kernel
+    def zcaMaxMethodSize(d: Int): Int = {
+      import org.apache.spark.sql.types._
+      val v = spark.createDataFrame(
+        spark.sparkContext.parallelize((0 until 32).map(r =>
+          org.apache.spark.sql.Row(Array.tabulate(d)(j => math.sin(r * 31 + j * 17))))),
+        StructType(Seq(StructField("v", ArrayType(DoubleType, containsNull = false),
+          nullable = false))))
+      val eye = Array.tabulate(d * d)(k => if (k % (d + 1) == 0) 1.0 else 0.0)
+      val plan = zcaExprTransformer("v", "w", new Array[Double](d), eye, d)(v)
+        .queryExecution.executedPlan
+      val line = plan.toString.linesIterator
+        .find(_.contains("graft_centered_affine")).get
+      assert(line.trim.startsWith("*("), s"the ZCA Project must whole-stage-fuse:\n$plan")
+      org.apache.spark.sql.execution.debug.codegenStringSeq(plan)
+        .map(_._3.maxMethodCodeSize).max
+    }
+    // d itself is the width guard's one inlined int literal, pushed with
+    // bipush (2 bytes) at 8 and sipush (3 bytes) at 256; past that byte
+    // the code must not grow with d
+    val (zcaNarrow, zcaWide) = (zcaMaxMethodSize(8), zcaMaxMethodSize(256))
+    assert(zcaWide - zcaNarrow <= 1, s"ZCA max method size grew with d: $zcaNarrow -> $zcaWide")
   }
 }

@@ -124,38 +124,49 @@ class ServingSpec extends GraftSuite {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  test("fitted ZCA serves zero-job and agrees with the gemm spelling at 1e-9") {
+  test("fitted ZCA serves zero-job at d = 8 and 256 and replays (x-mu)'W") {
     import graft.ml.LearningOps
-    val d = 8
-    val data = spark.createDataset((0 until 120).map { r =>
+    def data(d: Int) = spark.createDataset((0 until 120).map { r =>
       (r.toLong, Array.tabulate(d)(j =>
-        math.sin(r * 0.37 + j) + 0.1 * j * ((r % 7) - 3)))
+        math.sin(r * 0.37 + j) + 0.1 * (j % 11) * ((r % 7) - 3)))
     }).toDF("id", "v")
-    val (mu, w, dd) = LearningOps.fitZcaModel(data, "v", 1e-5)
-    assert(dd == d)
-    def rf = CosineRandomFeaturesNode("w", "rf",
-      dim = d, numFeatures = 12, gamma = 0.2)
-    // the serving chain: expr-spelled whiten -> linear featurizer; the
-    // ground truth: the SAME model through the per-partition gemm
-    // spelling, applied distributed
-    val chain = LearningOps.zcaExprTransformer("v", "w", mu, w, d).andThen(rf)
-    val gemmChain = LearningOps.zcaGemmTransformer("v", "w", mu, w, d)
-      .andThen(rf)
-    def collectRf(df: org.apache.spark.sql.DataFrame) =
-      df.select($"id", $"rf").collect()
-        .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
-    val want = collectRf(gemmChain(data))
-    val viaExpr = collectRf(chain(data))
-    val worst = want.keys.map { id =>
-      viaExpr(id).zip(want(id)).map { case (a, b) => math.abs(a - b) }.max
-    }.max
-    assert(worst < 1e-9,
-      s"expr whiten -> features must track the gemm path: $worst")
+    // ground truth: a test-side scalar replay of y_j = Σ_i (x_i − μ_i)·W_ij
+    // over the fitted model (W column-major)
+    def replay(x: Array[Double], mu: Array[Double], w: Array[Double]) = {
+      val d = mu.length
+      Array.tabulate(d)(j => (0 until d).map(i => (x(i) - mu(i)) * w(j * d + i)).sum)
+    }
+    def maxDiff(a: Iterable[Double], b: Iterable[Double]) =
+      a.iterator.zip(b.iterator).map { case (p, q) => math.abs(p - q) }.max
 
-    // zero-job serving: the whole whiten -> featurize chain collapses
-    // under ConvertToLocalRelation (d graft_dot Projects, no RDD seam)
-    val input = data.select($"id", $"v")
+    // the serving chain at d = 8: whiten -> random features; its ground
+    // truth is the replayed whitening through the same featurizer
+    val d = 8
+    val small = data(d)
+    val (mu, w, dd) = LearningOps.fitZcaModel(small, "v", 1e-5)
+    assert(dd == d)
+    val rf = CosineRandomFeaturesNode("w", "rf", dim = d, numFeatures = 12, gamma = 0.2)
+    val chain = LearningOps.zcaExprTransformer("v", "w", mu, w, d).andThen(rf)
+    val replayed = rf(small.as[(Long, Array[Double])]
+      .map { case (id, x) => (id, replay(x, mu, w)) }.toDF("id", "w"))
+      .select($"id", $"rf").collect()
+      .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+    val batch = chain(small).select($"id", $"rf").collect()
+      .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+    val worst = replayed.keys.map(id => maxDiff(batch(id), replayed(id))).max
+    assert(worst < 1e-9, s"whiten -> features must track the scalar replay: $worst")
+
+    // a d = 256 whitener: a width where d per-output expressions would
+    // pass the huge-method limit
+    val wideD = 256
+    val wide = data(wideD)
+    val (muW, wW, _) = LearningOps.fitZcaModel(wide, "v", 1e-5)
+    val wideT = LearningOps.zcaExprTransformer("v", "w", muW, wW, wideD)
+
+    // zero-job serving: both chains collapse under ConvertToLocalRelation
+    val input = small.select($"id", $"v")
     val servingRows = input.orderBy($"id").collect().take(10)
+    val wideRows = wide.orderBy($"id").collect().take(5)
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit =
@@ -166,12 +177,19 @@ class ServingSpec extends GraftSuite {
       servingRows.foreach { row =>
         val served = chain.applyLocal(spark, input.schema, Seq(row))
         assert(served.size == 1)
-        val got = served.head.getAs[scala.collection.Seq[Double]]("rf")
-        val exp = want(row.getLong(0))
-        val diff = got.iterator.zip(exp.iterator)
-          .map { case (a, b) => math.abs(a - b) }.max
+        val diff = maxDiff(served.head.getAs[scala.collection.Seq[Double]]("rf"),
+          replayed(row.getLong(0)))
         assert(diff < 1e-9,
-          s"served ZCA chain diverged from the gemm path on id=${row.getLong(0)}: $diff")
+          s"served ZCA chain diverged from the replay on id=${row.getLong(0)}: $diff")
+      }
+      wideRows.foreach { row =>
+        val served = wideT.applyLocal(spark, wide.schema, Seq(row))
+        assert(served.size == 1)
+        val x = row.getSeq[Double](1).toArray
+        val diff = maxDiff(served.head.getAs[scala.collection.Seq[Double]]("w"),
+          replay(x, muW, wW))
+        assert(diff < 1e-9,
+          s"served d = 256 whitener diverged from the replay on id=${row.getLong(0)}: $diff")
       }
       spark.sparkContext.parallelize(Seq(1), 1).count()
       val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000

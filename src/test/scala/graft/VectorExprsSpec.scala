@@ -49,41 +49,6 @@ class VectorExprsSpec extends GraftSuite {
     assert(r.getDouble(2) == 27.0)
   }
 
-  test("graft_centered_dot is bit-identical to graft_dot over the zip_with centering") {
-    // the ZCA serving kernel: one ternary expression vs the two-step
-    // spelling it replaced (which left the centering as CodegenFallback)
-    val mu = array((1 to 64).map(i => lit(math.sin(i * 0.17))): _*)
-    val w = array((1 to 64).map(i => lit(i * 0.01 - 0.32)): _*)
-    val cmp = vecs.select(
-      call_function("graft_centered_dot", $"v", mu, w).as("native"),
-      call_function("graft_dot",
-        zip_with($"v", mu, (x, m) => x - m), w).as("hof"))
-    assert(cmp.where($"native" =!= $"hof").count() == 0)
-    // known values: (1-1)*10 + (2-1)*20 + (3-2)*30 = 50
-    val df = Seq((Array(1.0, 2.0, 3.0), Array(1.0, 1.0, 2.0),
-      Array(10.0, 20.0, 30.0))).toDF("x", "m", "w")
-    val r = df.select(call_function("graft_centered_dot",
-      $"x", $"m", $"w")).head()
-    assert(r.getDouble(0) == 50.0)
-    // null input => null output (ternary null-safety)
-    val withNull = Seq((Option.empty[Array[Double]],
-      Some(Array(1.0)), Some(Array(2.0)))).toDF("x", "m", "w")
-    assert(withNull.select(call_function("graft_centered_dot",
-      $"x", $"m", $"w")).head().isNullAt(0))
-    // the projection must carry the whole-stage codegen marker. NB: the
-    // input is cast via the array-level Cast, not transform(_.cast) —
-    // CollapseProject inlines a single-use transform lambda into this
-    // Project and its CodegenFallback kicks the whole projection out of
-    // whole-stage codegen (the zcaExprTransformer uses the same Cast
-    // spelling for exactly this reason)
-    val plan = spark.read.parquet(s"$sf/embeddings.parquet")
-      .select($"embedding".cast("array<double>").as("v"))
-      .select(call_function("graft_centered_dot", $"v", mu, w))
-      .queryExecution.executedPlan.toString
-    val line = plan.linesIterator.find(_.contains("graft_centered_dot")).get
-    assert(line.trim.startsWith("*("), s"expected codegen'd Project in:\n$plan")
-  }
-
   test("graft_top_cells equals the struct/array_sort spelling it replaced") {
     // the IVF assignment/probe kernel vs the per-centroid struct
     // spelling whose fused method grows linearly in nlist (the JIT
@@ -165,10 +130,11 @@ class VectorExprsSpec extends GraftSuite {
       "graft_top_cells expects centroids to be array<array<double>>"),
       e4.getMessage)
     val e5 = intercept[org.apache.spark.sql.AnalysisException] {
-      df.select(call_function("graft_centered_dot", $"d", $"f", $"d")).head()
+      df.select(call_function("graft_centered_affine", $"d", typedlit(Array(1.0f)),
+        typedlit(Array(Array(1.0))))).head()
     }
     assert(e5.getMessage.contains(
-      "graft_centered_dot expects mu to be array<double>"), e5.getMessage)
+      "graft_centered_affine expects mu to be array<double>"), e5.getMessage)
     // the sanctioned spelling — an explicit cast — still works
     assert(df.select(call_function("graft_dot",
       $"f".cast("array<double>"), $"d")).head().getDouble(0) == 5.0)
@@ -238,6 +204,25 @@ class VectorExprsSpec extends GraftSuite {
       typedlit(Array(0.5, -1.0)))).collect()
     assert(out(0).getSeq[Double](0) == Seq(1.5, 4.0))
     assert(out(1).isNullAt(0))
+    // four outputs share each pass over x: every remainder of the
+    // output count mod 4 takes the unroll's tail, and a 7-wide input
+    // is not a multiple of four either
+    val x7 = vecs.select(slice($"v", 1, 7).as("v"))
+    for ((input, k) <- Seq(vecs -> 1, vecs -> 2, vecs -> 6, x7 -> 3, x7 -> 5, x7 -> 8)) {
+      val width = if (input eq x7) 7 else 64
+      val wk = Array.fill(k)(Array.fill(width)(rng.nextGaussian()))
+      val sel = input.select(
+        call_function("graft_affine", $"v", typedlit(wk),
+          typedlit(new Array[Double](k))).as("kernel"),
+        array(wk.toIndexedSeq.map(r => call_function("graft_dot", $"v", lit(r))): _*)
+          .as("old"))
+      val got = sel.collect()
+      val gotInterpreted = interpreted(sel.collect())
+      got.zip(gotInterpreted).foreach { case (r, ri) =>
+        assert(bits(r, 0) == bits(r, 1), s"kernel != old spelling at k=$k in $r")
+        assert(bits(r, 0) == bits(ri, 0), s"codegen and NO_CODEGEN disagree at k=$k")
+      }
+    }
     // constant-size generated code: fused at any number of outputs
     val wide = typedlit(Array.fill(1024)(Array.fill(64)(rng.nextGaussian())))
     val plan = spark.read.parquet(s"$sf/embeddings.parquet")
@@ -246,6 +231,52 @@ class VectorExprsSpec extends GraftSuite {
         typedlit(new Array[Double](1024))))
       .queryExecution.executedPlan.toString
     val line = plan.linesIterator.find(_.contains("graft_affine")).get
+    assert(line.trim.startsWith("*("), s"expected codegen'd Project in:\n$plan")
+  }
+
+  test("graft_centered_affine is bit-identical to the zip_with + graft_dot spelling") {
+    // the ZCA/PCA projection kernel vs the per-output spelling it
+    // replaced, whose zip_with centering was CodegenFallback re-run per
+    // output; 13 outputs leave a tail after the four-output unroll
+    val rng = new scala.util.Random(5)
+    val mu = Array.tabulate(64)(i => math.sin(i * 0.17))
+    val w = Array.fill(13)(Array.fill(64)(rng.nextGaussian()))
+    val centered = zip_with($"v", lit(mu), (x, m) => x - m)
+    val cmp = vecs.select(
+      call_function("graft_centered_affine", $"v", lit(mu), typedlit(w)).as("kernel"),
+      array(w.toIndexedSeq.map(r => call_function("graft_dot", centered, lit(r))): _*)
+        .as("old"))
+    val codegen = cmp.collect()
+    val noCodegen = interpreted(cmp.collect())
+    assert(codegen.nonEmpty)
+    codegen.zip(noCodegen).foreach { case (r, ri) =>
+      assert(bits(r, 0) == bits(r, 1), s"kernel != old spelling in $r")
+      assert(bits(r, 0) == bits(ri, 0), "codegen and NO_CODEGEN disagree")
+    }
+    // known values: (1-1)*10 + (2-1)*20 + (3-2)*30 = 50 and
+    // (1-1)*1 + (2-1)*0 + (3-2)*(-1) = -1; null input => null output
+    val df = Seq(Some(Array(1.0, 2.0, 3.0)), None).toDF("x")
+    val known = typedlit(Array(Array(10.0, 20.0, 30.0), Array(1.0, 0.0, -1.0)))
+    val out = df.select(call_function("graft_centered_affine", $"x",
+      lit(Array(1.0, 1.0, 2.0)), known)).collect()
+    assert(out(0).getSeq[Double](0) == Seq(50.0, -1.0))
+    assert(out(1).isNullAt(0))
+    // a row whose width is not |mu| raises instead of projecting garbage
+    val short = Seq(Array(1.0, 2.0)).toDF("x").select(call_function(
+      "graft_centered_affine", $"x", lit(Array(1.0, 1.0, 2.0)), known))
+    val e = intercept[Exception](short.collect())
+    val msgs = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).mkString(" ")
+    assert(msgs.contains("graft_centered_affine expects x to have 3 entries, got 2"),
+      msgs)
+    // the projection carries the whole-stage codegen marker at a width
+    // where d per-output expressions would pass the huge-method limit
+    val wide = typedlit(Array.fill(256)(Array.fill(64)(rng.nextGaussian())))
+    val plan = spark.read.parquet(s"$sf/embeddings.parquet")
+      .select($"embedding".cast("array<double>").as("v"))
+      .select(call_function("graft_centered_affine", $"v", lit(mu), wide))
+      .queryExecution.executedPlan.toString
+    val line = plan.linesIterator.find(_.contains("graft_centered_affine")).get
     assert(line.trim.startsWith("*("), s"expected codegen'd Project in:\n$plan")
   }
 
@@ -303,6 +334,24 @@ class VectorExprsSpec extends GraftSuite {
       "graft_affine expects b to have one entry per row of W (1), got 2")
     fails(call_function("graft_affine", $"d", w, b, lit(1)),
       "graft_affine expects amp to be double, got int")
+    val ragged = typedlit(Array(Array(1.0, 2.0), Array(1.0)))
+    fails(call_function("graft_affine", $"d", ragged, typedlit(Array(0.0, 0.0))),
+      "graft_affine expects W to be rectangular: row 1 has 1 entries, row 0 has 2")
+    val mu = typedlit(Array(0.0, 0.0))
+    fails(call_function("graft_centered_affine", $"d", $"d", w),
+      "graft_centered_affine expects mu to be a foldable literal")
+    fails(call_function("graft_centered_affine", $"d", mu, array($"d")),
+      "graft_centered_affine expects W to be a foldable literal")
+    fails(call_function("graft_centered_affine", $"d",
+      array(lit(0.0), lit(null).cast("double")), w),
+      "graft_centered_affine mu must not contain NULL entries")
+    fails(call_function("graft_centered_affine", $"d", mu,
+      array(array(lit(1.0), lit(null).cast("double")))),
+      "graft_centered_affine W must not contain NULL entries")
+    fails(call_function("graft_centered_affine", $"d", typedlit(Array(0.0)), w),
+      "graft_centered_affine expects mu to have one entry per column of W (2), got 1")
+    fails(call_function("graft_centered_affine", $"d", mu, ragged),
+      "graft_centered_affine expects W to be rectangular: row 1 has 1 entries, row 0 has 2")
     fails(call_function("graft_vocab_counts", $"t", $"t"),
       "graft_vocab_counts expects vocab to be a foldable literal")
     fails(call_function("graft_vocab_counts", $"d", typedlit(Seq("a"))),

@@ -1,81 +1,32 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
+  /** Host-band anchor (see the sweep below). */
+  private val Anchor = "q_agg_pricing_summary"
+  /** A query slower than this gets one same-sweep retry. */
+  private val RetryBarSec = 4.0
+  /** Ratio to its committed prior at which a query counts as a mover
+    * (retried, and listed in the drift ledger). */
+  private val MoverRatio = 1.5
+  /** At most this many movers are retried per sweep. */
+  private val MoverCap = 50
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm the session once (JIT/codegen infrastructure + parquet footers)
-    // so the first timed query doesn't absorb ~3s of one-time JVM setup;
-    // queries then run in a seeded per-sweep shuffled order (see below).
-    spark.range(1000).selectExpr("sum(id)").count()
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "events", "documents", "embeddings").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count()
-      catch { case _: Throwable => }
-    }
-    // Also warm the shingle pair core — the single heaviest codegen family
-    // (graft_shingles explode → digest → collect_set posting lists →
-    // graft_pairs marker aggregation → size join-backs). Its ~8s one-time
-    // Janino+JIT compile otherwise lands on whichever of its five consumer
-    // queries happens to run first alphabetically, mis-attributing a
-    // session-global cost to one query. Nothing is cached: every timed
-    // query still re-executes its full pipeline; only compiled classes and
-    // JIT state carry over — exactly the amortization a long-running
-    // cluster job gets.
-    try graft.ops.Similarity.shinglePairStats(spark, sfDir).count()
-    catch { case _: Throwable => }
-    // NEGATIVE RESULT (round 20), recorded so the next session doesn't
-    // re-try it: a synthetic graft_bpe warm here (20k generated words
-    // through the real kernel) did NOT flatten q_bpe_apply's first-run
-    // cost — measured 1.51 s first / 0.28 s second WITH the warm vs
-    // 1.30/0.26 without (isolated fresh-session triple: 2.31/0.49/0.49).
-    // The ~1.2-1.8 s is a query-specific first-run cost (its own stage
-    // compile + corpus-shaped JIT), amortized only by whichever
-    // BPE-family predecessor the seeded order happens to run first —
-    // an attribution wobble the drift ledger carries per-query
-    // (adjudication in qBpeApply's Scaladoc), not a warmable session
-    // cost like the shingle family's shared sub-pipeline above.
-    // Numeric env knobs parse through ONE guarded helper: a typo'd value
-    // must warn and fall back, never throw a raw NumberFormatException
-    // AFTER the ~190s timed sweep has already run (the advisor-r19-#3
-    // fix, generalized from the seed to every numeric knob).
-    def envNum(name: String, default: Double): Double =
-      sys.env.get(name).map { s =>
-        try s.trim.toDouble
-        catch { case _: NumberFormatException =>
-          System.err.println(s"[bench] WARN: $name=$s is not numeric — " +
-            s"using default $default")
-          default
-        }
-      }.getOrElse(default)
-    // Time one query, then block-manager hygiene: several operators pin
-    // blocks for the duration of ONE query (localCheckpointed graph /
-    // index relations, cached intermediates). Over a 270-query sequential
-    // sweep those blocks otherwise accumulate for the whole run — round 7
-    // measured the late-alphabet queries 1.7× slower under that pressure
-    // while isolated probes stayed fast. Release everything the finished
-    // query left behind; the next query builds its own state from scratch
-    // anyway (nothing is shared across queries by design). ONE shared
-    // body for the sweep and the retry pass, so "same conditions" holds
-    // by construction.
+    val cpus = Harness.envCpus
+    val spark = Harness.session(cpus)
+    Harness.warm(spark, sfDir)
+    // ONE shared timed body for the anchor, the sweep and the retry
+    // pass, so "same conditions" holds by construction. A query that
+    // throws is named in `failed` and its time stays out of every sum;
+    // the run exits 1 once the artifacts are written.
+    val failed = scala.collection.mutable.SortedSet.empty[String]
     def timeOne(name: String): Double = {
-      val t0 = System.nanoTime()
-      try { SparkEntry.queries(name)(spark, sfDir).count() }
-      catch { case _: Throwable => -1L }
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      dt
+      val run = Harness.timed(spark)(SparkEntry.queries(name)(spark, sfDir).count())
+      run.failure.foreach { e =>
+        failed += name
+        System.err.println(s"[bench] $name failed: $e")
+      }
+      run.seconds
     }
     // The previously committed sweep's per-query timings (read BEFORE this
     // run overwrites BENCH.json): baseline for the top-mover retry below.
@@ -146,41 +97,21 @@ object Bench {
     // committed reference anchor) instead of eyeballed. Q1-shape by
     // default: one full lineitem pass, no joins — a pure scan+agg host
     // proxy with no plan-choice variance.
-    // a typo'd anchor name would otherwise inject a bogus ~0 s entry
-    // into the artifact's queries map (timeOne swallows the lookup
-    // failure) and silently skew n_queries/band — fall back loudly
-    val anchorName = {
-      val a = sys.env.getOrElse("SPARK_GRAFT_ANCHOR", "q_agg_pricing_summary")
-      if (SparkEntry.queries.contains(a)) a
-      else {
-        System.err.println(s"[bench] WARN: SPARK_GRAFT_ANCHOR=$a is not a " +
-          "declared query — using q_agg_pricing_summary")
-        "q_agg_pricing_summary"
-      }
-    }
     // one untimed warm run first: the timed start anchor must measure
     // the HOST, not the anchor's own one-time plan/codegen cost (the
     // first instrumented sweep read start=1.21 s vs end=0.40 s for
     // exactly this reason)
-    timeOne(anchorName)
-    val anchorStart = timeOne(anchorName)
+    timeOne(Anchor)
+    val anchorStart = timeOne(Anchor)
     // The anchor query does NOT run again inside the timed sweep: its
     // warm + anchor runs leave it fully warmed (plan codegen, parquet
     // footers), so an in-sweep re-run would record a systematically
     // lower time than every other query's first-run time (advisor r19
-    // #2). For the DEFAULT anchor its `queries` entry is the anchorStart
-    // sample — a warmed run, noted as a one-round discontinuity in
-    // SURVEY §8 (round 20), and consistent sweep-over-sweep from r20 on
-    // (warmed prior vs warmed current). A NON-default anchor is an
-    // A/B-probe configuration: committing ITS warmed sample would poison
-    // the next default sweep's mover/drift/band comparisons (prior ≈
-    // warmed third run vs a cold first run reads as a 3-6× phantom
-    // mover), so under a custom anchor the query is dropped from the
-    // sweep AND from the queries map — anchorJson still carries its
-    // timed pair, and the committed per-query baseline stays default-
-    // protocol times only.
-    val defaultAnchor = anchorName == "q_agg_pricing_summary"
-    val sweepOrder = sweepOrder0.filterNot(_ == anchorName)
+    // #2). Its `queries` entry is the anchorStart sample — a warmed run,
+    // noted as a one-round discontinuity in SURVEY §8 (round 20), and
+    // consistent sweep-over-sweep from r20 on (warmed prior vs warmed
+    // current).
+    val sweepOrder = sweepOrder0.filterNot(_ == Anchor)
     val sweepT0 = System.nanoTime()
     // "at" holds IN-SWEEP queries only, uniformly: seconds since sweep
     // start, recorded at query END. The anchor ran before sweepT0, so a
@@ -192,35 +123,32 @@ object Bench {
         val dt = timeOne(name)
         atBuf += name -> (System.nanoTime() - sweepT0) / 1e9
         name -> dt
-      }.toMap ++
-      (if (defaultAnchor) Map(anchorName -> anchorStart) else Map.empty)
+      }.toMap + (Anchor -> anchorStart) -- failed
     // Noise immunization: any query landing over the retry bar gets ONE
     // re-timing at sweep end under the same between-query cleanup, and
     // BOTH numbers are recorded. Three rounds of adjudicating single-query
     // host-noise spikes (documented 1.25–1.4× band, one 4.7× outlier)
     // showed a same-sweep second sample settles structural-vs-wobble at
     // source: a structural cost repeats, a wobble doesn't.
-    val retryBar = envNum("SPARK_GRAFT_RETRY_SEC", 4.0)
-    val slow = results.toSeq.filter(_._2 > retryBar).map(_._1)
+    val slow = results.toSeq.filter(_._2 > RetryBarSec).map(_._1)
     // ALSO retry EVERY round-over-round mover regardless of absolute
     // time: a 2.9x jump that stays under the bar (q_min_cost_supplier,
     // 1.38s -> 3.96s across r11/r12 sweeps) previously escaped with no
-    // adjudication datum. Ratio >= 2x vs the committed sweep, current
-    // time >= 0.5s (sub-half-second wobble carries no signal). The list
-    // was top-5-capped through round 15, but a noisy host patch produces
-    // movers in bulk — the r15 sweep had SEVEN and left two uncorrected
-    // in the artifact — so the cap defeated the mechanism exactly when
-    // it was needed; now uncapped (a retry costs one extra query run,
-    // and a genuinely regressed build SHOULD pay to re-time itself).
-    // Default 1.5, ALIGNED with the drift-ledger bar below: at 2.0 the
-    // r18 sweep left nine 1.51–2.0x host-drifted queries uncorrected
+    // adjudication datum. Ratio >= MoverRatio vs the committed sweep,
+    // current time >= 0.5s (sub-half-second wobble carries no signal).
+    // The list was top-5-capped through round 15, but a noisy host patch
+    // produces movers in bulk — the r15 sweep had SEVEN and left two
+    // uncorrected in the artifact — so the cap defeated the mechanism
+    // exactly when it was needed; now uncapped (a retry costs one extra
+    // query run, and a genuinely regressed build SHOULD pay to re-time
+    // itself). MoverRatio is 1.5, also the drift-ledger bar below: at 2.0
+    // the r18 sweep left nine 1.51–2.0x host-drifted queries uncorrected
     // (~5–6 s of phantom inflation inside value_corrected); a retry
     // costs one extra query run, so correcting the full drift band is
     // the cheap side of the trade.
-    val moverRatio = envNum("SPARK_GRAFT_MOVER_RATIO", 1.5)
     val allMovers = results.toSeq
       .filter { case (n, t) =>
-        t >= 0.5 && priorTimes.get(n).exists(p => p > 0 && t / p >= moverRatio)
+        t >= 0.5 && priorTimes.get(n).exists(p => p > 0 && t / p >= MoverRatio)
       }
       .map(_._1)
     // Backstops on the uncapped retry list: when MOST of the suite moved
@@ -228,31 +156,25 @@ object Bench {
     // and re-timing everything would double the sweep to confirm what
     // the bulk movement already proves — skip the mover retries and flag
     // the sweep env_shifted instead. Below that, a generous ceiling
-    // (default 50, SPARK_GRAFT_MOVER_CAP) keeps the worst movers
-    // adjudicated while bounding sweep time; dropped names are recorded.
-    val moverCap = envNum("SPARK_GRAFT_MOVER_CAP", 50.0).toInt
+    // (MoverCap) keeps the worst movers adjudicated while bounding sweep
+    // time; dropped names are recorded.
     val envShifted = allMovers.size > results.size / 2
     val rankedMovers =
       if (envShifted) Seq.empty
       else allMovers.sortBy(n => -(results(n) / priorTimes(n)))
-    val movers = rankedMovers.take(moverCap)
-    val moversDropped = rankedMovers.drop(moverCap)
+    val movers = rankedMovers.take(MoverCap)
+    val moversDropped = rankedMovers.drop(MoverCap)
     val retries = (slow ++ movers).distinct.sorted
-      .map(name => name -> timeOne(name)).toMap
+      .map(name => name -> timeOne(name)).toMap -- failed
     // close the host-band bracket AFTER the retries so the anchor pair
     // spans everything the artifact's numbers were measured under
-    val anchorEnd = timeOne(anchorName)
-    // Sub-threshold drift ledger: every query at >= 1.5x its committed
-    // prior — even when no retry fires — so a slow multi-round creep
-    // (three 1.4x steps never trip the 2x mover bar) is an artifact
-    // read, not an archaeology dig across old BENCH_r files.
-    val driftBar = envNum("SPARK_GRAFT_DRIFT_RATIO", 1.5)
-    val drift = results.toSeq
-      .filter { case (n, t) =>
-        t >= 0.5 && priorTimes.get(n).exists(p => p > 0 && t / p >= driftBar)
-      }
-      .sortBy(_._1)
-      .map { case (n, t) =>
+    val anchorEnd = timeOne(Anchor)
+    // Drift ledger: every mover — even when no retry fires (env-shifted
+    // or capped) — with its prior, time and ratio, so a multi-round creep
+    // is an artifact read, not an archaeology dig across old BENCH_r files.
+    val drift = allMovers.sorted
+      .map { n =>
+        val t = results(n)
         "\"" + n + "\":[" + priorTimes(n) + "," + t + "," +
           "%.2f".formatLocal(java.util.Locale.ROOT, t / priorTimes(n)) + "]"
       }.mkString("{", ",", "}")
@@ -299,7 +221,7 @@ object Bench {
     val atQs = atBuf.map { case (k, v) => "\"" + k + "\":" + ms(v) }
       .mkString("{", ",", "}")
     val anchorJson =
-      s"""{"name":"$anchorName","start":${ms(anchorStart)},"end":${ms(anchorEnd)}}"""
+      s"""{"name":"$Anchor","start":${ms(anchorStart)},"end":${ms(anchorEnd)}}"""
     // The robust host-band indicator: the MEDIAN per-query ratio against
     // the committed prior sweep, over queries big enough to carry signal
     // (prior > 0.15 s). The single-anchor pair under-reads a band that
@@ -335,8 +257,9 @@ object Bench {
     // median only moves when most of the suite moved); when no prior
     // exists the band is unknowable and the field mirrors corrected.
     val normalized = band.map(corrected / _).getOrElse(corrected)
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val fileLine =
-      s"""{"metric":"total","value":$total,"value_corrected":$corrected,"value_normalized":$normalized,"unit":"sec","queries":$fullQs,"retry":$retryQs,"drift":$drift$moverMeta,"order_seed":$orderSeedJson,"anchor":$anchorJson,"band_vs_prior":$bandJson,"at":$atQs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"value_corrected":$corrected,"value_normalized":$normalized,"unit":"sec","queries":$fullQs,"retry":$retryQs,"drift":$drift$moverMeta,"order_seed":$orderSeedJson,"anchor":$anchorJson,"band_vs_prior":$bandJson,"at":$atQs,"sf":"$sfDir","cpus":$cpus,"failed":$failedJson}"""
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("BENCH.json"),
       fileLine.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -376,7 +299,14 @@ object Bench {
         s"(value_corrected carries their host inflation; " +
         s"value_normalized ${ms(normalized)} is the honest total): " +
         moversDropped.sorted.mkString(", "))
-    println(s"""{"metric":"total","value":${ms(total)},"value_corrected":${ms(corrected)},"value_normalized":${ms(normalized)},"unit":"sec","n_queries":${results.size},"sf":"$sfDir","full":"BENCH.json","order_seed":$orderSeedJson,"anchor":$anchorJson,"band_vs_prior":$bandJson,"retry":$retryMs,"queries":{$budgetQs}}""")
+    println(s"""{"metric":"total","value":${ms(total)},"value_corrected":${ms(corrected)},"value_normalized":${ms(normalized)},"unit":"sec","n_queries":${results.size},"n_failed":${failed.size},"cpus":$cpus,"sf":"$sfDir","full":"BENCH.json","order_seed":$orderSeedJson,"anchor":$anchorJson,"band_vs_prior":$bandJson,"retry":$retryMs,"queries":{$budgetQs}}""")
     spark.stop()
+    // loud failure, after the artifacts: a query that threw is not a
+    // fast query
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] ${failed.size} queries failed: " +
+        failed.mkString(", "))
+      sys.exit(1)
+    }
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Focused IVF coarse-assignment micro-benchmark — times the
@@ -10,7 +11,7 @@ import org.apache.spark.sql.functions._
   *
   * `runMain graft.IvfBench [n] [dim] [nlist]` (defaults 400000 64 64)
   * prints one JSON line with seconds per spelling. Clean
-  * (containsNull=false) [[BenchHarness.seededVectors]] inputs, so both
+  * (containsNull=false) [[seededVectors]] inputs, so both
   * projections are eligible for whole-stage codegen fusion — the regime
   * where the struct spelling's fused method grows linearly in nlist and
   * falls off HotSpot's huge-method JIT limit while the kernel's
@@ -30,8 +31,8 @@ object IvfBench {
     val n = args.lift(0).map(_.toInt).getOrElse(400000)
     val dim = args.lift(1).map(_.toInt).getOrElse(64)
     val nlist = args.lift(2).map(_.toInt).getOrElse(64)
-    val spark = BenchHarness.session()
-    val base = BenchHarness.seededVectors(spark, n, dim)
+    val spark = Harness.session()
+    val base = seededVectors(spark, n, dim)
     val rng = new scala.util.Random(42)
     val cents = Array.fill(nlist)(Array.fill(dim)(rng.nextGaussian()))
     val centsLit = array(cents.toIndexedSeq.map(c => lit(c)): _*)
@@ -45,9 +46,27 @@ object IvfBench {
       base.select(sum(c.cast("long"))).head()
     force(kernelExpr) // warm codegen/JIT once each
     force(structExpr)
-    val tKernel = BenchHarness.time(force(kernelExpr))
-    val tStruct = BenchHarness.time(force(structExpr))
+    val tKernel = Harness.timed(spark)(force(kernelExpr)).orThrow
+    val tStruct = Harness.timed(spark)(force(structExpr)).orThrow
     println(s"""{"bench":"ivf_assign","n":$n,"dim":$dim,"nlist":$nlist,"kernel_sec":$tKernel,"struct_sec":$tStruct}""")
     spark.stop()
+  }
+
+  /** n rows of a seeded d-wide array<double> column `v` (plus `id`),
+    * checkpointed and materialized so callers time their transform, not
+    * the generator. array(...) of provably-non-null doubles ⇒
+    * containsNull=false, so expression spellings are measured on the
+    * clean common case (only codegen'd guards, eligible for whole-stage
+    * fusion). The coalesce is load-bearing: Catalyst declares sin()
+    * nullable, which would mark the array containsNull=true and force
+    * interpreted null-element guards into every row. */
+  private def seededVectors(spark: SparkSession, n: Int, d: Int): DataFrame = {
+    val df = spark.range(n).select(col("id"),
+      array((0 until d).map(j =>
+        coalesce(sin(col("id") * 31 + lit(j) * 17), lit(0.0))): _*)
+        .as("v"))
+      .localCheckpoint()
+    df.count()
+    df
   }
 }

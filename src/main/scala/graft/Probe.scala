@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Bench-condition probe — the builder-side instrument for perf claims.
   *
@@ -16,51 +15,28 @@ import org.apache.spark.sql.SparkSession
   * Usage: `runMain graft.Probe [--explain] q_ann_pq q_cm_heavy_hitters`
   * (no args = time every query; --explain prints each target's formatted
   * physical plan after timing it). Env: SPARK_GRAFT_SF_DIR (default
-  * sf0.1), SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_PREFIX_STRIDE
+  * sf0.1), SPARK_GRAFT_CPUS (default 4), SPARK_GRAFT_PREFIX_STRIDE
   * (prefix sampling stride; default 5, 0 disables the prefix). */
 object Probe {
   def main(rawArgs: Array[String]): Unit = {
     val explain = rawArgs.contains("--explain")
     val args = rawArgs.filterNot(_ == "--explain")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val stride = sys.env.getOrElse("SPARK_GRAFT_PREFIX_STRIDE", "5").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000).selectExpr("sum(id)").count()
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "events", "documents", "embeddings").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count()
-      catch { case _: Throwable => }
-    }
-    try graft.ops.Similarity.shinglePairStats(spark, sfDir).count()
-    catch { case _: Throwable => }
-    // (a synthetic graft_bpe warm was tried here and measured
-    // ineffective — negative-result note in Bench.scala's warm block)
-    val all = SparkEntry.queries.toSeq.sortBy(_._1)
-    val byName = all.toMap
-    val targets = if (args.nonEmpty) args.toIndexedSeq else all.map(_._1)
+    val spark = Harness.session()
+    Harness.warm(spark, sfDir)
+    val byName = SparkEntry.queries
+    val all = byName.keys.toSeq.sorted
+    val targets = if (args.nonEmpty) args.toIndexedSeq else all
     def runOne(name: String): Double = {
-      val t0 = System.nanoTime()
-      try byName(name)(spark, sfDir).count()
-      catch { case e: Throwable =>
+      val run = Harness.timed(spark)(byName(name)(spark, sfDir).count())
+      run.failure.foreach { e =>
         System.err.println(s"[probe] $name failed: ${e.getMessage}")
       }
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      dt
+      run.seconds
     }
     if (stride > 0) {
-      val prefix = all.map(_._1).zipWithIndex
+      val prefix = all.zipWithIndex
         .collect { case (n, i) if i % stride == 0 && !targets.contains(n) => n }
       println(s"[probe] prefix: ${prefix.size} queries (stride $stride)")
       prefix.foreach(runOne)

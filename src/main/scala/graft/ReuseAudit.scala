@@ -14,7 +14,7 @@ package graft
 object ReuseAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = BenchHarness.session()
+    val spark = Harness.session()
     val targets = if (args.nonEmpty) args.toSeq
       else SparkEntry.queries.keys.toSeq.sorted
     targets.foreach { name =>
@@ -22,12 +22,8 @@ object ReuseAudit {
       // execute THIS DataFrame's own QueryExecution (count() would build
       // a different one and leave df's adaptive plan un-finalized)
       df.collect()
-      // AdaptiveSparkPlan.toString appends the pre-execution tree under
-      // "== Initial Plan ==" — audit only the final section above it
-      val plan = df.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==").head
-      val scans = "Location: [^\n]*/(\\w+)\\.parquet".r
-        .findAllMatchIn(plan).map(_.group(1)).toList
+      val plan = RuntimeScans.finalPlan(df.queryExecution.executedPlan.toString)
+      val scans = RuntimeScans.scannedTables(plan)
       val reusedEx = "ReusedExchange".r.findAllIn(plan).size
       val reusedSq = "ReusedSubquery".r.findAllIn(plan).size
       val byTable = scans.groupBy(identity).view.mapValues(_.size).toMap
@@ -40,9 +36,7 @@ object ReuseAudit {
         s"scans=${scans.size} $byTable reusedExchange=$reusedEx " +
         s"reusedSubquery=$reusedSq stages=${stageIds.distinct.size} " +
         s"dupStageIds=$dupStages")
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      Harness.cleanup(spark)
     }
     spark.stop()
   }

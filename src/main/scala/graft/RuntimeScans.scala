@@ -28,9 +28,8 @@ object RuntimeScans {
   /** Per-table parquet-scan totals across every QueryExecution fired
     * while `build` constructs a DataFrame and it is collected.
     *
-    * SIDE EFFECT (session-global, deliberate): the finally block clears
-    * the session-wide SQL cache and unpersists EVERY persistent RDD —
-    * the same between-measurement hygiene as Bench.timeOne, required for
+    * SIDE EFFECT (session-global, deliberate): the finally block runs
+    * [[Harness.cleanup]] — the between-measurement hygiene, required for
     * repeatable counts (a relation left cached by one measured query
     * would hide the next query's scans behind InMemoryTableScan). Do NOT
     * call this on a live session whose cached/persisted state you need;
@@ -41,31 +40,18 @@ object RuntimeScans {
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution,
           durationNs: Long): Unit =
-        plans.add(qe.executedPlan.toString.split("== Initial Plan ==").head)
+        plans.add(finalPlan(qe.executedPlan.toString))
       override def onFailure(funcName: String, qe: QueryExecution,
           exception: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
-    try {
-      build.collect()
-      var last = -1
-      var stable = 0
-      var waited = 0
-      while (stable < 3 && waited < 20000) {
-        Thread.sleep(200); waited += 200
-        val n = plans.size
-        if (n == last) stable += 1 else { stable = 0; last = n }
-      }
-    } finally {
+    try collectAndDrain(build)(plans.size)
+    finally {
       spark.listenerManager.unregister(listener)
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      Harness.cleanup(spark)
     }
-    val scanRe = """Location: [^\n]*/(\w+)\.parquet""".r
     import scala.jdk.CollectionConverters._
-    plans.asScala.toList
-      .flatMap(p => scanRe.findAllMatchIn(p).map(_.group(1)))
+    plans.asScala.toList.flatMap(scannedTables)
       .groupBy(identity).view.mapValues(_.size).toMap
   }
 
@@ -78,9 +64,8 @@ object RuntimeScans {
     * function of the query's structure (dispatch counts, checkpoint
     * builds, AQE final jobs) and a silent re-materialization shows up
     * as +1 job. Uses a SparkListenerInterface on the shared listener
-    * bus; the async bus is drained with the same stability wait as
-    * [[measure]]. Same session-global cache/persist cleanup contract
-    * as [[measure]]. */
+    * bus, drained like [[measure]]'s. Same session-global cache/persist
+    * cleanup contract as [[measure]]. */
   def countJobs(spark: SparkSession)(build: => DataFrame): Int = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -90,24 +75,39 @@ object RuntimeScans {
       }
     }
     spark.sparkContext.addSparkListener(listener)
-    try {
-      build.collect()
-      var last = -1
-      var stable = 0
-      var waited = 0
-      while (stable < 3 && waited < 20000) {
-        Thread.sleep(200); waited += 200
-        val n = jobs.get()
-        if (n == last) stable += 1 else { stable = 0; last = n }
-      }
-    } finally {
+    try collectAndDrain(build)(jobs.get())
+    finally {
       spark.sparkContext.removeSparkListener(listener)
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      Harness.cleanup(spark)
     }
     jobs.get()
   }
+
+  /** Collect `build`, then wait out the async listener bus: until
+    * `observed` is stable for 3 consecutive 200 ms checks (cap 20 s). */
+  private def collectAndDrain(build: => DataFrame)(observed: => Int): Unit = {
+    build.collect()
+    var last = -1
+    var stable = 0
+    var waited = 0
+    while (stable < 3 && waited < 20000) {
+      Thread.sleep(200); waited += 200
+      val n = observed
+      if (n == last) stable += 1 else { stable = 0; last = n }
+    }
+  }
+
+  /** The final section of an executed plan's text: AdaptiveSparkPlan
+    * appends the pre-execution tree under "== Initial Plan ==", which
+    * would count every scan twice. */
+  def finalPlan(plan: String): String = plan.split("== Initial Plan ==").head
+
+  /** The table of every parquet scan in a plan's text, one entry per
+    * scan, in plan order (tables are read from `<dir>/<table>.parquet`). */
+  def scannedTables(plan: String): List[String] =
+    ScanLocation.findAllMatchIn(plan).map(_.group(1)).toList
+
+  private val ScanLocation = """Location: [^\n]*/(\w+)\.parquet""".r
 
   // NEGATIVE RESULT, recorded so the next round doesn't re-try it: a
   // task-inputMetrics bytesRead listener was built to close the LAZY-
@@ -135,15 +135,7 @@ object RuntimeScans {
 object RuntimeScanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     val targets =
       if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     // jobs mode (SPARK_GRAFT_JOBS=1): print [[RuntimeScans.countJobs]]

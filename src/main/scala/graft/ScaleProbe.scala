@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Round-21 scale-escalation instrument (verdict item 7): the sf0.1
@@ -8,24 +8,17 @@ import org.apache.spark.sql.functions._
   * measurement-only 10× corpus under /tmp/sfbig (replicated partitions
   * with offset keys; document text perturbed per replica so the shingle
   * pipeline sees 10× genuine content instead of a quadratic
-  * cross-replica near-dup explosion) and A/Bs this round's touched
-  * queries old-vs-new INSIDE one JVM, noop-forced (guide §1.4). Nothing
-  * here is a declared query or feeds the oracle — it exists to put a
-  * number on shape claims the fixture renders noise-level. */
+  * cross-replica near-dup explosion) and times q_pagerank and
+  * q_dup_rate_by_source on it (construction + noop write, through
+  * [[Harness.timed]]). Nothing here is a declared query or feeds the
+  * oracle — it exists to put a number on shape claims the fixture
+  * renders noise-level; an old-vs-new A/B runs this main in two
+  * checkouts. */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sf01 = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val big = sys.env.getOrElse("SPARK_GRAFT_BIG_DIR", "/tmp/sfbig")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     import spark.implicits._
 
     val reps = 10
@@ -56,48 +49,18 @@ object ScaleProbe {
         .withColumn("text", array_join(
           transform(split($"text", " "), t => concat(t, lit(s"r$i"))), " ")))
 
-    def t(label: String)(df: DataFrame): Unit = {
-      val t0 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
-      println(f"[scale] $label%-36s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+    def t(label: String)(df: => DataFrame): Unit = {
+      val run = Harness.timed(spark)(
+        df.write.format("noop").mode("overwrite").save())
+      println(f"[scale] $label%-36s ${run.seconds}%8.2f s" +
+        run.failure.fold("")(e => s"  FAILED: ${e.getMessage}"))
     }
 
     val rounds = sys.env.getOrElse("SPARK_GRAFT_SCALE_ROUNDS", "2").toInt
     for (r <- 1 to rounds) {
-      println(s"[scale] --- round $r at 10x (both pagerank arms grade to DISTRIBUTED here)")
-      // OLD pagerank path (kept in-tree for tests): dispatch on the
-      // mirrored+windowed relation
-      t("pagerank OLD (mirrored dispatch)")({
-        val nodes = graft.tables.Tables.supplier(spark, big)
-          .select($"s_suppkey".as("node"))
-        graft.ops.Analytics.pagerank3(nodes,
-          graft.ops.Analytics.qPagerankEdgesForTests(spark, big))
-          .select($"node".as("suppkey"), $"rank_ppm")
-          .orderBy($"rank_ppm".desc, $"suppkey")
-      })
-      t("pagerank NEW (half-edge dispatch)")(
-        graft.ops.Analytics.qPagerank(spark, big))
-      // OLD dup_rate spelling: total counted over the raw pair relation
-      t("dup_rate OLD (total over pairs)")({
-        val src = graft.tables.Tables.documents(spark, big)
-          .select($"doc_id", $"source")
-        val pairs = graft.ops.Similarity.shingleJaccardPairs(spark, big)
-          .join(src.select($"doc_id".as("doc_a"), $"source".as("source_a")), "doc_a")
-          .join(src.select($"doc_id".as("doc_b"), $"source".as("source_b")), "doc_b")
-          .select(least($"source_a", $"source_b").as("src_lo"),
-            greatest($"source_a", $"source_b").as("src_hi"))
-        val total = pairs.agg(count(lit(1)).as("n_total"))
-        pairs.groupBy($"src_lo", $"src_hi")
-          .agg(count(lit(1)).as("n_pairs"))
-          .crossJoin(broadcast(total))
-          .select($"src_lo", $"src_hi", $"n_pairs",
-            round($"n_pairs".cast("double") / $"n_total", 4).as("pair_share"))
-          .orderBy($"src_lo", $"src_hi")
-      })
-      t("dup_rate NEW (total over cells)")(
+      println(s"[scale] --- round $r at 10x")
+      t("pagerank")(graft.ops.Analytics.qPagerank(spark, big))
+      t("dup_rate_by_source")(
         graft.ops.Similarity.qDupRateBySource(spark, big))
     }
     spark.stop()

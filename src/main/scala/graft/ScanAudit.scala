@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Whole-surface scan-pruning audit: for EVERY declared query, walk the
   * physical plan's parquet scans and compare each scan's ReadSchema
   * width against the table's full width — a scan reading all columns of
@@ -19,21 +17,10 @@ import org.apache.spark.sql.SparkSession
 object ScanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val tables = Seq("region", "nation", "customer", "supplier", "part",
-      "orders", "lineitem", "events", "documents", "embeddings")
-    val fullWidth: Map[String, Int] = tables.map { t =>
+    val spark = Harness.session()
+    val fullWidth: Map[String, Int] = Harness.TableNames.map { t =>
       t -> spark.read.parquet(s"$sfDir/$t.parquet").schema.size
     }.toMap
-    val scanRe = ("""Location: [^\n]*/(\w+)\.parquet[^\n]*""").r
     val readRe = ("""ReadSchema: struct<([^\n]*)""").r
     val targets =
       if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
@@ -48,7 +35,7 @@ object ScanAudit {
         // silently misalign the pairing and attribute widths to the
         // wrong table, so unequal counts are a reported parse error for
         // this query, not a zip
-        val locs = scanRe.findAllMatchIn(plan).map(_.group(1)).toList
+        val locs = RuntimeScans.scannedTables(plan)
         val reads = readRe.findAllMatchIn(plan).map(_.group(1)).toList
         if (locs.size != reads.size) {
           println(s"SCAN $name PARSE-ERROR Location/ReadSchema count " +

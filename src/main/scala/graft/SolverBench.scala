@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Focused solver micro-benchmark — times the distributed block-CD /
@@ -32,14 +31,7 @@ object SolverBench {
     val k = args.lift(2).map(_.toInt).getOrElse(20)
     val blockSize = args.lift(3).map(_.toInt).getOrElse(64)
     val epochs = args.lift(4).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     // deterministic dense design: x_ij = sin(i*31 + j*17) via expressions
     val base = spark.range(n).select(col("id"),
       transform(sequence(lit(0), lit(d - 1)),
@@ -48,11 +40,7 @@ object SolverBench {
         c => sin(col("id") * 7 + c * 13)))
       .localCheckpoint() // time the solver, not the generator
     base.count()
-    def time(body: => Unit): Double = {
-      val t0 = System.nanoTime()
-      body
-      (System.nanoTime() - t0) / 1e9
-    }
+    def time(body: => Unit): Double = Harness.timed(spark)(body).orThrow
     val blocks = (0 until d).grouped(blockSize).toArray
     val tBcd = time {
       graft.ml.LearningOps.blockCdSolve(base, "v",

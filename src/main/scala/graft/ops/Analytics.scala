@@ -1847,7 +1847,7 @@ object Analytics {
     * driver arm collected) 2|E| windowed rows; the mirror and the degree
     * are recomputed from the half set by whichever arm needs them (the
     * driver arm derives degrees in one local pass, the distributed arm
-    * via [[mirrorWithOutdeg]] post-checkpoint — same exchange count as
+    * via [[pagerankHalf]]'s post-checkpoint mirror — same exchange count as
     * before, half the materialized/collected bytes, one full-relation
     * window+sort removed from the driver path). */
   private[graft] def qPagerankHalfEdges(spark: SparkSession,
@@ -1863,40 +1863,6 @@ object Analytics {
       .select($"e.x", $"e.y").distinct()
   }
 
-  /** Mirror an (x, y) half-edge relation into directed (src, dst, od)
-    * rows: both directions from one explode, outdeg riding each edge row
-    * via a src-partitioned window (one shuffle, no pairs⋈degree diamond;
-    * partition size is bounded by a node's degree ≤ |V|, never by the
-    * corpus). */
-  private def mirrorWithOutdeg(half: DataFrame): DataFrame = {
-    import half.sparkSession.implicits._
-    half
-      .select(explode(array(
-        struct($"x".as("src"), $"y".as("dst")),
-        struct($"y".as("src"), $"x".as("dst")))).as("p"))
-      .select($"p.src", $"p.dst")
-      .withColumn("od", count(lit(1)).over(Window.partitionBy($"src")))
-  }
-
-  /** [[qPagerank]]'s (src, dst, od) edge build — exposed so the
-    * PlanShapeSpec broadcast guard can drive the forced-distributed
-    * pagerank3 arm with the production edge relation. */
-  private[graft] def qPagerankEdgesForTests(spark: SparkSession,
-      sfDir: String): DataFrame =
-    mirrorWithOutdeg(qPagerankHalfEdges(spark, sfDir))
-
-  /** Three synchronous ppm-integer PageRank iterations over a prepared
-    * node table ("node") and (src, dst, od) edge relation — the algorithm
-    * core of [[qPagerank]], extracted so the ScalingSpec slope canary can
-    * drive it with a fixed-density synthetic graph (the co-purchase graph
-    * densifies with SF, which would measure the generator, not the plan).
-    * Checkpoints the edge diamond once; the rank/contribution tables are
-    * node-cardinality (dimension-sized) — broadcasting them keeps each
-    * iteration a map-side join over the checkpointed edges plus one
-    * dst-keyed aggregation; corpus-scale relations are never broadcast. */
-  private[graft] def pagerank3(nodes: DataFrame, edgesIn: DataFrame): DataFrame =
-    pagerank3(nodes, edgesIn, PagerankDriverMaxEdges)
-
   /** Edge ceiling for the driver arm: 2M (src, dst, od) tuples — the
     * triangle-count broadcast budget. The three synchronous iterations
     * are each a BROADCAST round trip (collect ranks to the driver, ship
@@ -1905,62 +1871,12 @@ object Analytics {
     * algebra, no per-iteration exchange. */
   private val PagerankDriverMaxEdges = 2000000L
 
-  /** [[pagerank3]] with the dispatch ceiling exposed (tests force the
-    * distributed arm with ceiling 0 and assert both arms agree). */
-  private[graft] def pagerank3(nodes: DataFrame, edgesIn: DataFrame,
-      driverMaxEdges: Long): DataFrame = {
-    val spark = nodes.sparkSession
-    import spark.implicits._
-    Dist.sizeDispatch(edgesIn, driverMaxEdges) { (edges, _) =>
-      val es = edges.select($"src", $"dst", $"od")
-        .as[(Long, Long, Long)].collect()
-      val ns = nodes.select($"node".cast("long")).as[Long].collect()
-      var r = scala.collection.mutable.LongMap.empty[Long]
-      ns.foreach(n => r(n) = 1000000L)
-      for (_ <- 1 to 3) {
-        val cs = scala.collection.mutable.LongMap.empty[Long]
-        es.foreach { case (src, dst, od) =>
-          // an src outside the node table contributes nothing — the
-          // distributed arm's inner join drops it the same way; the
-          // integer algebra matches `r * 85 DIV (100 * od)` exactly
-          // (all operands positive, so Java truncating division is
-          // identical to Spark's DIV)
-          r.get(src).foreach { rs =>
-            cs(dst) = cs.getOrElse(dst, 0L) + rs * 85L / (100L * od)
-          }
-        }
-        val nr = scala.collection.mutable.LongMap.empty[Long]
-        ns.foreach(n => nr(n) = 150000L + cs.getOrElse(n, 0L))
-        r = nr
-      }
-      spark.createDataset(ns.toSeq.map(n => (n, r(n))))
-        .toDF("node", "rank_ppm")
-    } { (edges, _) => pagerankIterations(nodes, edges) }
-  }
-
-  /** The three synchronous distributed iterations over a prepared
-    * (src, dst, od) edge relation — shared by [[pagerank3]]'s distributed
-    * arm and [[pagerankHalf]]'s (which mirrors its checkpointed half-edge
-    * set first). Each iteration broadcasts the node-cardinality rank
-    * table into a map-side join over the edges plus one dst-keyed
-    * aggregation. */
-  private def pagerankIterations(nodes: DataFrame, edges: DataFrame): DataFrame = {
-    import nodes.sparkSession.implicits._
-    var ranks = nodes.select($"node", lit(1000000L).as("r"))
-    for (_ <- 1 to 3) {
-      val contrib = edges
-        .join(broadcast(ranks), edges("src") === ranks("node"))
-        .select($"dst", expr("r * 85 DIV (100 * od)").as("c"))
-        .groupBy($"dst").agg(sum($"c").as("cs"))
-      ranks = nodes
-        .join(broadcast(contrib), nodes("node") === contrib("dst"), "left")
-        .select($"node", (lit(150000L) + coalesce($"cs", lit(0L))).as("r"))
-    }
-    ranks.select($"node", $"r".as("rank_ppm"))
-  }
-
-  /** [[pagerank3]] over an undirected (x, y) HALF-edge relation — the
-    * production [[qPagerank]] path since round 21. The size dispatch
+  /** Three synchronous ppm-integer PageRank iterations over a node table
+    * ("node") and an undirected (x, y) HALF-edge relation — the algorithm
+    * core of [[qPagerank]], taking its graph as arguments so the
+    * ScalingSpec slope canary can drive it with a fixed-density synthetic
+    * graph (the co-purchase graph densifies with SF, which would measure
+    * the generator, not the plan). The size dispatch
     * checkpoints/counts/collects the half set (half the rows of the
     * mirrored relation, and no outdeg window ahead of the checkpoint);
     * `measure = ×2` keeps the ceiling in directed-edge units, so the
@@ -1968,14 +1884,16 @@ object Analytics {
     * derives degrees in one local pass and applies each half edge in
     * both directions (od(src) divides each contribution exactly as the
     * mirrored relation's window od did — od(v) = distinct-neighbor count
-    * of v); the distributed arm mirrors the CHECKPOINTED half set via
-    * [[mirrorWithOutdeg]] and runs the shared [[pagerankIterations]],
-    * paying the same exchanges the former pre-dispatch pipeline paid. */
+    * of v); the distributed arm mirrors the CHECKPOINTED half set into
+    * directed (src, dst, od) rows and runs the iterations there, each
+    * broadcasting the node-cardinality rank table into a map-side join
+    * over the edges plus one dst-keyed aggregation — the same exchanges
+    * the former pre-dispatch pipeline paid. */
   private[graft] def pagerankHalf(nodes: DataFrame, halfIn: DataFrame,
       driverMaxEdges: Long = PagerankDriverMaxEdges): DataFrame = {
     val spark = nodes.sparkSession
     import spark.implicits._
-    Dist.sizeDispatch(halfIn, driverMaxEdges, measure = n => n * 2) { (half, _) =>
+    Dist.sizeDispatch(halfIn, driverMaxEdges, measure = (_, n) => n * 2) { (half, _) =>
       val hs = half.select($"x", $"y").as[(Long, Long)].collect()
       val ns = nodes.select($"node".cast("long")).as[Long].collect()
       val deg = scala.collection.mutable.LongMap.empty[Long]
@@ -2006,7 +1924,10 @@ object Analytics {
       spark.createDataset(ns.toSeq.map(n => (n, r(n))))
         .toDF("node", "rank_ppm")
     } { (half, _) =>
-      // the mirrored+outdeg relation is the diamond all three iterations
+      // both directions from one explode, outdeg riding each edge row via
+      // a src-partitioned window (one shuffle, no pairs⋈degree diamond;
+      // partition size is bounded by a node's degree ≤ |V|, never by the
+      // corpus). That relation is the diamond all three iterations
       // consume — without its own checkpoint the window+sort above the
       // half checkpoint replays per iteration join (exchange reuse stops
       // at the exchange, not at the Window above it): measured at the 10×
@@ -2014,7 +1935,24 @@ object Analytics {
       // Checkpointing restores the old distributed shape; the half
       // checkpoint the dispatch already paid is the cheap, window-free
       // side.
-      pagerankIterations(nodes, mirrorWithOutdeg(half).localCheckpoint(true))
+      val edges = half
+        .select(explode(array(
+          struct($"x".as("src"), $"y".as("dst")),
+          struct($"y".as("src"), $"x".as("dst")))).as("p"))
+        .select($"p.src", $"p.dst")
+        .withColumn("od", count(lit(1)).over(Window.partitionBy($"src")))
+        .localCheckpoint(true)
+      var ranks = nodes.select($"node", lit(1000000L).as("r"))
+      for (_ <- 1 to 3) {
+        val contrib = edges
+          .join(broadcast(ranks), edges("src") === ranks("node"))
+          .select($"dst", expr("r * 85 DIV (100 * od)").as("c"))
+          .groupBy($"dst").agg(sum($"c").as("cs"))
+        ranks = nodes
+          .join(broadcast(contrib), nodes("node") === contrib("dst"), "left")
+          .select($"node", (lit(150000L) + coalesce($"cs", lit(0L))).as("r"))
+      }
+      ranks.select($"node", $"r".as("rank_ppm"))
     }
   }
 
@@ -2589,7 +2527,7 @@ object Analytics {
     * fact-sized.
     *
     * Round-20 restructure (optimization round; guide §2.4, the
-    * [[qPagerankEdgesForTests]] discipline): the previous spelling kept
+    * [[qPagerankHalfEdges]] discipline): the previous spelling kept
     * flat DISTINCT (l_orderkey, p_brand) rows pre-`repartition`ed on the
     * self-join key, claiming the LogicalRDD keeps the hash partitioning.
     * The captured plan (plans/r20/q_pair_chisq_before.txt) disproves

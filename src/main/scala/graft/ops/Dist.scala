@@ -51,8 +51,8 @@ object Dist {
     * the dispatch relation — its (possibly expensive) producer
     * materializes exactly once and the count below becomes a cheap local
     * job that drives ONLY the dispatch — then runs `driverArm` iff
-    * 0 < measure(count) <= ceiling, else `distArm`. Both arms receive
-    * the CHECKPOINTED relation and its row count.
+    * 0 < measure(checkpoint, count) <= ceiling, else `distArm`. Both arms
+    * receive the CHECKPOINTED relation and its row count.
     *
     * Contract: `ceiling` bounds a relation that is
     * CARDINALITY-BOUNDED BY CONSTRUCTION (value-count grids, calendar
@@ -60,19 +60,23 @@ object Dist {
     * driver arm's collect is a bounded model-state pull, not a corpus
     * collect. `measure` maps the row count into ceiling space when the
     * driver arm's footprint is super-linear in rows (Theil–Sen tests
-    * pairs = n(n−1)/2). Tests pass ceiling 0 to FORCE the distributed
-    * arm — the one seam the derived plan guards drive their invariants
-    * through; `distArm` must therefore be correct at EVERY size, with
-    * `driverArm` a pure scheduling-overhead optimization under the
-    * ceiling. Empty relations (n = 0) always route distributed: several
-    * driver cores index into the collected array. */
+    * pairs = n(n−1)/2), or reads the driver arm's real work off the
+    * checkpoint when the row count does not bound it (Cramér's V walks
+    * the DENSE distinct-rows × distinct-columns grid, so a sparse
+    * diagonal table of n cells costs n², not n). Tests pass ceiling 0 to
+    * FORCE the distributed arm — the one seam the derived plan guards
+    * drive their invariants through; `distArm` must therefore be correct
+    * at EVERY size, with `driverArm` a pure scheduling-overhead
+    * optimization under the ceiling. Empty relations (n = 0) always
+    * route distributed: several driver cores index into the collected
+    * array. */
   def sizeDispatch(rel: DataFrame, ceiling: Long,
-      measure: Long => Long = identity)(
+      measure: (DataFrame, Long) => Long = (_, n) => n)(
       driverArm: (DataFrame, Long) => DataFrame)(
       distArm: (DataFrame, Long) => DataFrame): DataFrame = {
     val d = rel.localCheckpoint(true)
     val n = d.count()
-    val m = measure(n)
+    val m = measure(d, n)
     if (!forceDistributed && m > 0 && m <= ceiling) driverArm(d, n)
     else distArm(d, n)
   }

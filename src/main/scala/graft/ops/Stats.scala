@@ -891,7 +891,7 @@ object Stats {
     // ceiling space is PAIRS, not days (the driver arm collects the
     // O(days²) slope multiset), hence the measure function
     Dist.sizeDispatch(daily0, driverMaxPairs,
-        measure = nDays => nDays * (nDays - 1L) / 2L) { (daily, _) =>
+        measure = (_, nDays) => nDays * (nDays - 1L) / 2L) { (daily, _) =>
       val slopes = pairSlopes(daily, daily).as[Long].collect()
       java.util.Arrays.sort(slopes)
       val n = slopes.length

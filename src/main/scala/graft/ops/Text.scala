@@ -1444,7 +1444,9 @@ object Text {
   /** Cell ceiling for the contingency-grid driver arms ([[qMutualInformation]],
     * [[qCramersV]]): 2M (source, lang, count) tuples — category-bounded by
     * construction (|sources| × |langs|), never corpus-sized; past the cap
-    * the same query grades out to the distributed fan. */
+    * the same query grades out to the distributed fan. Cramér's V counts
+    * the dense |sources| × |langs| grid against it, the others the
+    * present cells they walk. */
   private val ContingencyDriverMaxCells = 2000000L
 
   // Spark-round replication for the driver arms: [[Dist.rnd0]]/[[Dist.rnd6]]
@@ -1593,7 +1595,11 @@ object Text {
     * broadcast stages; 2.6 s committed for a ≤200-cell grid). Identical
     * op order in the local replay (`Math.multiplyExact` for the ANSI
     * long products, BigDecimal HALF_UP rounds); the distributed fan is
-    * unchanged above the ceiling; still one corpus pass. */
+    * unchanged above the ceiling; still one corpus pass. The ceiling
+    * bounds the DENSE r×c grid the local χ² walks (absent cells still
+    * carry expected counts), read as distinct sources × distinct langs
+    * off the checkpointed cells: the present-cell count alone let a
+    * sparse diagonal table of n cells through to n² driver iterations. */
   private[graft] def cramersVFromPairs(pairs: DataFrame): DataFrame =
     cramersVFromPairs(pairs, ContingencyDriverMaxCells)
 
@@ -1602,7 +1608,11 @@ object Text {
     val spark = pairs.sparkSession
     import spark.implicits._
     val cells0 = pairs.groupBy($"source", $"lang").agg(count(lit(1)).as("c_sl"))
-    Dist.sizeDispatch(cells0, driverMaxCells) { (cells, _) =>
+    val denseCells = (cells: DataFrame, _: Long) => {
+      val rc = cells.agg(countDistinct($"source"), countDistinct($"lang")).head()
+      rc.getLong(0) * rc.getLong(1)
+    }
+    Dist.sizeDispatch(cells0, driverMaxCells, denseCells) { (cells, _) =>
       val cs = cells.as[(String, String, Long)].collect()
       val bySource = scala.collection.mutable.LinkedHashMap.empty[String, Long]
       val byLang = scala.collection.mutable.LinkedHashMap.empty[String, Long]

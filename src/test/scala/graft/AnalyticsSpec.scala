@@ -276,55 +276,70 @@ class AnalyticsSpec extends GraftSuite {
       s"rank mass $total outside [0.15N, N] for N=$nSupp")
     // a connected co-purchase graph must rank someone above the base
     assert(r.agg(max($"rank_ppm")).head.getLong(0) > 150000L)
-    // both dispatch arms produce identical ranks on a small ring graph
-    // with asymmetric out-degrees (exercises the contribution division
-    // and the no-inbound-edges base case)
-    import org.apache.spark.sql.functions.{col, lit}
+    // both dispatch arms produce identical ranks whatever the edge row
+    // order, on a small graph with unequal degrees, isolated nodes (the
+    // no-inbound-edges base case) and an endpoint outside the node table
+    import org.apache.spark.sql.functions.col
     val nodes = spark.range(6).select(col("id").as("node"))
-    val edges = Seq((0L, 1L, 2L), (0L, 2L, 2L), (1L, 2L, 1L),
-      (2L, 3L, 1L), (4L, 3L, 1L), (9L, 3L, 1L)) // src 9 outside nodes
-      .toDF("src", "dst", "od")
-    val a = rows(Analytics.pagerank3(nodes, edges,
+    val half = Seq((0L, 1L), (0L, 2L), (1L, 2L), (2L, 3L), (3L, 9L))
+      .toDF("x", "y")
+    val a = rows(Analytics.pagerankHalf(nodes, half,
       driverMaxEdges = Long.MaxValue).orderBy($"node"))
-    val b = rows(Analytics.pagerank3(nodes, edges.orderBy($"dst"),
+    val b = rows(Analytics.pagerankHalf(nodes, half.orderBy($"y".desc),
       driverMaxEdges = 0L).orderBy($"node"))
     assert(a == b, s"arms disagree: $a vs $b")
   }
 
-  test("pagerankHalf: both arms agree with each other and with pagerank3 on the production graph") {
+  /** The reference for [[Analytics.pagerankHalf]]: its three synchronous
+    * ppm-integer iterations replayed in plain Scala over the MIRRORED
+    * (src, dst, od) edge list, od = src's distinct-neighbor count. A src
+    * outside the node table contributes nothing, and a dst outside it
+    * receives nothing; `r * 85 DIV (100 * od)` on positive longs is
+    * Scala's truncating division. Returns (node, rank_ppm) by node. */
+  private def pagerankReplay(nodes: Seq[Long],
+      half: Seq[(Long, Long)]): Seq[(Long, Long)] = {
+    val mirrored = half.flatMap { case (x, y) => Seq((x, y), (y, x)) }
+    val od = mirrored.groupBy(_._1).view.mapValues(_.size.toLong).toMap
+    var r = nodes.map(_ -> 1000000L).toMap
+    for (_ <- 1 to 3) {
+      val cs = mirrored.collect { case (src, dst) if r.contains(src) =>
+        dst -> r(src) * 85L / (100L * od(src))
+      }.groupMapReduce(_._1)(_._2)(_ + _)
+      r = nodes.map(n => n -> (150000L + cs.getOrElse(n, 0L))).toMap
+    }
+    nodes.sorted.map(n => n -> r(n))
+  }
+
+  private def ranksOf(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+    rows(df.orderBy("node"))
+      .map(r => (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue))
+
+  test("pagerankHalf: both arms match a scalar mirrored-edge replay") {
     import spark.implicits._
     // the round-21 half-edge dispatch: driver arm (local degree pass +
     // both-direction application) and distributed arm (mirror + outdeg
-    // window over the checkpointed half set) must reproduce pagerank3
+    // window over the checkpointed half set) must reproduce the replay
     // over the mirrored relation exactly — same integer algebra, so
     // bit-identical ranks, including a half edge touching a node outside
     // the node table (only the in-table endpoint receives contributions)
     val nodes = spark.range(5).select(col("id").as("node"))
-    val half = Seq((0L, 1L), (0L, 2L), (1L, 2L), (2L, 3L), (3L, 7L))
-      .toDF("x", "y") // 7 outside nodes: its rank is dropped, its degree still divides
-    val viaDriver = rows(Analytics.pagerankHalf(nodes, half,
-      driverMaxEdges = Long.MaxValue).orderBy($"node"))
-    val viaDist = rows(Analytics.pagerankHalf(nodes, half.orderBy($"y"),
-      driverMaxEdges = 0L).orderBy($"node"))
-    assert(viaDriver == viaDist, s"half arms disagree: $viaDriver vs $viaDist")
-    // reference: the mirrored (src, dst, od) spelling fed to pagerank3
-    val mirrored = half.flatMap { r =>
-      Seq((r.getLong(0), r.getLong(1)), (r.getLong(1), r.getLong(0)))
-    }.toDF("src", "dst")
-    val deg = mirrored.groupBy($"src").agg(count(lit(1)).as("od"))
-    val edges = mirrored.join(deg, "src").select($"src", $"dst", $"od")
-    val viaP3 = rows(Analytics.pagerank3(nodes, edges,
-      driverMaxEdges = 0L).orderBy($"node"))
-    assert(viaDriver == viaP3, s"half vs mirrored disagree: $viaDriver vs $viaP3")
-    // production fixture: the half-edge path reproduces the mirrored path
-    val prodHalf = rows(Analytics.pagerankHalf(
-      graft.tables.Tables.supplier(spark, sf).select($"s_suppkey".as("node")),
-      Analytics.qPagerankHalfEdges(spark, sf)).orderBy($"node"))
-    val prodP3 = rows(Analytics.pagerank3(
-      graft.tables.Tables.supplier(spark, sf).select($"s_suppkey".as("node")),
-      Analytics.qPagerankEdgesForTests(spark, sf),
-      driverMaxEdges = Long.MaxValue).orderBy($"node"))
-    assert(prodHalf == prodP3, "production half-edge ranks drifted from the mirrored spelling")
+    val literal = Seq((0L, 1L), (0L, 2L), (1L, 2L), (2L, 3L), (3L, 7L))
+    val half = literal.toDF("x", "y") // 7 outside nodes: its rank is dropped, its degree still divides
+    val expected = pagerankReplay(0L until 5L, literal)
+    val viaDriver = ranksOf(Analytics.pagerankHalf(nodes, half,
+      driverMaxEdges = Long.MaxValue))
+    val viaDist = ranksOf(Analytics.pagerankHalf(nodes, half.orderBy($"y"),
+      driverMaxEdges = 0L))
+    assert(viaDriver == expected, s"driver arm vs replay: $viaDriver vs $expected")
+    assert(viaDist == expected, s"distributed arm vs replay: $viaDist vs $expected")
+    // production fixture: qPagerank's graph through the default dispatch
+    val prodNodes = graft.tables.Tables.supplier(spark, sf)
+      .select($"s_suppkey".cast("long").as("node"))
+    val prodHalf = Analytics.qPagerankHalfEdges(spark, sf)
+    val prodExpected = pagerankReplay(prodNodes.as[Long].collect().toSeq,
+      prodHalf.select($"x", $"y").as[(Long, Long)].collect().toSeq)
+    assert(ranksOf(Analytics.pagerankHalf(prodNodes, prodHalf)) == prodExpected,
+      "production half-edge ranks drifted from the scalar replay")
   }
 
   test("brandPairCounts pins the posexplode/slice pair expansion on literal baskets") {

@@ -27,23 +27,17 @@ class DeterminismSpec extends GraftSuite {
   private def canonical(df: DataFrame): Seq[String] =
     df.collect().toSeq.map(_.mkString("|")).sorted
 
-  /** The Bench between-query hygiene: several operators pin blocks
-    * (localCheckpointed graph/index relations, fitted-scope persists) for
-    * one query's duration; over a 274-query double sweep those blocks
-    * must not accumulate against the shared test session's heap. */
-  private def cleanup(): Unit = {
-    spark.sharedState.cacheManager.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
-  }
-
+  // Each run ends with the Bench between-query hygiene: several operators
+  // pin blocks (localCheckpointed graph/index relations, fitted-scope
+  // persists) for one query's duration; over a 274-query double sweep
+  // those blocks must not accumulate against the shared session's heap.
   private def checkStable(name: String): Unit = {
     val fn = SparkEntry.queries(name)
-    val a = try canonical(fn(spark, sf)) finally cleanup()
+    val a = try canonical(fn(spark, sf)) finally Harness.cleanup(spark)
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     try {
       spark.conf.set("spark.sql.shuffle.partitions", "13")
-      val b = try canonical(fn(spark, sf)) finally cleanup()
+      val b = try canonical(fn(spark, sf)) finally Harness.cleanup(spark)
       assert(a == b, {
         val onlyA = a.diff(b).take(3)
         val onlyB = b.diff(a).take(3)

@@ -17,9 +17,7 @@ class EmptyCorpusSpec extends GraftSuite {
 
   private lazy val emptyDir: String = {
     val dir = "/tmp/graft-empty-sf"
-    val tables = Seq("region", "nation", "customer", "supplier", "part",
-      "orders", "lineitem", "events", "documents", "embeddings")
-    tables.foreach { t =>
+    Harness.TableNames.foreach { t =>
       val schema = spark.read.parquet(s"$sf/$t.parquet").schema
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)

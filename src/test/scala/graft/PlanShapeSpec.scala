@@ -77,10 +77,10 @@ class PlanShapeSpec extends GraftSuite {
     // checkpointed edges plus keyed aggregations — a sort-merge join
     // would mean the node-sized rank table got shuffle-planned
     val plan = graft.ops.Analytics
-      .pagerank3(
+      .pagerankHalf(
         graft.tables.Tables.supplier(spark, sf)
           .select(org.apache.spark.sql.functions.col("s_suppkey").as("node")),
-        graft.ops.Analytics.qPagerankEdgesForTests(spark, sf),
+        graft.ops.Analytics.qPagerankHalfEdges(spark, sf),
         driverMaxEdges = 0L)
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), plan)
@@ -123,7 +123,6 @@ class PlanShapeSpec extends GraftSuite {
     // executions too and pins the adjudicated per-table runtime totals.
     val cartesian = scala.collection.mutable.ArrayBuffer.empty[String]
     val globalWin = scala.collection.mutable.ArrayBuffer.empty[String]
-    val scanRe = """Location: [^\n]*/(\w+)\.parquet""".r
     val overCap = scala.collection.mutable.Map.empty[String, String]
     SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
       val qe = SparkEntry.queries(name)(spark, sf).queryExecution
@@ -133,7 +132,7 @@ class PlanShapeSpec extends GraftSuite {
       if (qe.optimizedPlan.collectFirst {
         case w: LWindow if w.partitionSpec.isEmpty => w }.nonEmpty)
         globalWin += name
-      val perTable = scanRe.findAllMatchIn(planStr).map(_.group(1)).toSeq
+      val perTable = RuntimeScans.scannedTables(planStr)
         .groupBy(identity).view.mapValues(_.size).filter(_._2 > 3)
       if (perTable.nonEmpty)
         overCap(name) = perTable.map { case (t, n) => s"$t x$n" }.mkString(", ")
@@ -264,10 +263,8 @@ class PlanShapeSpec extends GraftSuite {
     // replaced consumed the fact join three times.
     val df = SparkEntry.queries("q_waiting_suppliers")(spark, sf)
     df.collect() // finalize THIS QueryExecution's adaptive plan
-    val whole = df.queryExecution.executedPlan.toString
-    // AQE's toString appends the pre-adaptive "== Initial Plan ==" section;
-    // count scans only in the final physical plan.
-    val plan = whole.split("== Initial Plan ==")(0)
+    // count scans only in the final physical plan, not AQE's initial one
+    val plan = RuntimeScans.finalPlan(df.queryExecution.executedPlan.toString)
     assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
       s"all joins stay on equi-keys:\n$plan")
     val factScans = plan.linesIterator.count(l =>

@@ -305,7 +305,7 @@ class ServingSpec extends GraftSuite {
     val fallback = cachingChain
       .applyLocal(spark, input.schema, Seq(row), requireLocal = false)
     assert(fallback.head.getAs[Long]("cls") == a.getAs[Long]("cls"))
-    spark.sharedState.cacheManager.clearCache()
+    Harness.cleanup(spark)
   }
 
   test("ModelIO load filter rejects caller-scoped classes unless opted in") {

@@ -5,24 +5,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Prop, Test => ScTest}
 
 /** Shared local SparkSession for all suites (one JVM-wide session keeps
-  * `sbt test` fast; suites must not mutate session conf). Mirrors the
-  * Verify/Bench builder settings, including the nanosAsLong flag the
-  * events table needs (Tables.scala). */
+  * `sbt test` fast; suites must not mutate session conf): the mains'
+  * [[Harness.session]] at a fixed 4 cores, so test partitioning and the
+  * pinned job counts do not follow the host. */
 object SparkTestBase {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Harness.session(4)
   val sf: String = "/root/testdata/sf0.001"
 }
 

@@ -530,6 +530,31 @@ class TextSpec extends GraftSuite {
     }
   }
 
+  test("Cramér's V dispatches on the dense grid, not the present cells") {
+    import spark.implicits._
+    // a 50-cell diagonal table is a 50 × 50 = 2500-cell dense grid: at a
+    // 100-cell ceiling it must grade out to the distributed arm (same
+    // jobs as ceiling 0, not those of the driver arm under Long.MaxValue)
+    val diagonal = (0 until 50).flatMap(i => Seq.fill(1 + i % 3)((s"s$i", s"l$i")))
+      .toDF("source", "lang")
+    def jobs(pairs: org.apache.spark.sql.DataFrame, ceiling: Long): Int =
+      RuntimeScans.countJobs(spark)(Text.cramersVFromPairs(pairs, ceiling))
+    val dist = jobs(diagonal, 0L)
+    assert(jobs(diagonal, Long.MaxValue) != dist,
+      "the arms must be told apart by their job counts")
+    assert(jobs(diagonal, 100L) == dist,
+      "a sparse diagonal table must not take the driver arm")
+    assert(rows(Text.cramersVFromPairs(diagonal, 100L)) ==
+      rows(Text.cramersVFromPairs(diagonal, Long.MaxValue)))
+    // the fixture's small source × lang grid still takes the driver arm
+    val fixture = graft.tables.Tables.documents(spark, sf)
+      .select($"source", $"lang")
+    val driver = jobs(fixture, Long.MaxValue)
+    assert(driver != jobs(fixture, 0L))
+    assert(RuntimeScans.countJobs(spark)(Text.cramersVFromPairs(fixture)) == driver,
+      "the fixture must still take the driver arm at the default ceiling")
+  }
+
   test("q_source_kl / q_jensen_shannon dispatch arms agree on the fixture") {
     // round 21: both ride the contingency-grid driver seam; the kill
     // switch forces the distributed fan — results must be bit-identical

@@ -10,6 +10,36 @@ object Bench {
   /** At most this many movers are retried per sweep. */
   private val MoverCap = 50
 
+  /** The prior sweep's per-query seconds from the text of a `BENCH.json`,
+    * or none when the prior was taken at another `sf`, or records a
+    * `cpus` other than this run's (a band or a mover against another
+    * scale or core count measures the change of setup, not of the code);
+    * a refused prior, or one whose `queries` do not parse, is named in a
+    * WARN on stderr. A prior that does not record `cpus` (files written
+    * before the field existed) is not checked on it. */
+  private[graft] def prior(json: String, sfDir: String,
+      cpus: Int): Map[String, Double] = {
+    def warn(msg: String): Map[String, Double] = {
+      Console.err.println(s"[bench] WARN: $msg; mover retries and " +
+        "band_vs_prior disabled this sweep")
+      Map.empty
+    }
+    val priorSf = """"sf":"([^"]*)"""".r.findFirstMatchIn(json).map(_.group(1))
+    val priorCpus = """"cpus":(\d+)""".r.findFirstMatchIn(json).map(_.group(1).toInt)
+    val times = """"queries":\{([^}]*)\}""".r.findFirstMatchIn(json).toSeq
+      .flatMap(q => """"([^"]+)":([-0-9.eE+]+)""".r.findAllMatchIn(q.group(1)))
+      .flatMap(m => m.group(2).toDoubleOption.map(m.group(1) -> _)).toMap
+    if (priorSf.exists(_ != sfDir))
+      warn(s"prior BENCH.json was taken at sf ${priorSf.get}, this run at $sfDir")
+    else if (priorCpus.exists(_ != cpus))
+      warn(s"prior BENCH.json was taken at cpus ${priorCpus.get}, this run at $cpus")
+    // a silent parse-to-empty on an existing BENCH.json would disable the
+    // mover retries with no trace — keep the instrument honest
+    else if (times.isEmpty)
+      warn("BENCH.json exists but no prior per-query times parsed (format drift?)")
+    else times
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = Harness.envCpus
@@ -30,25 +60,14 @@ object Bench {
     }
     // The previously committed sweep's per-query timings (read BEFORE this
     // run overwrites BENCH.json): baseline for the top-mover retry below.
-    val priorTimes: Map[String, Double] = try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("BENCH.json")),
-        java.nio.charset.StandardCharsets.UTF_8)
-      val qStart = txt.indexOf("\"queries\":{")
-      if (qStart < 0) Map.empty
-      else {
-        val body = txt.substring(qStart + 11, txt.indexOf('}', qStart))
-        """"([^"]+)":([-0-9.eE+]+)""".r.findAllMatchIn(body)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }
-    } catch { case _: Throwable => Map.empty }
-    // a silent parse-to-empty on an existing BENCH.json would disable the
-    // mover retries with no trace — keep the instrument honest
-    if (priorTimes.isEmpty &&
-        java.nio.file.Files.exists(java.nio.file.Paths.get("BENCH.json")))
-      System.err.println(
-        "[bench] WARN: BENCH.json exists but no prior per-query times " +
-          "parsed — mover retries disabled this sweep (format drift?)")
+    val priorFile = java.nio.file.Paths.get("BENCH.json")
+    val priorTimes: Map[String, Double] =
+      if (!java.nio.file.Files.exists(priorFile)) Map.empty
+      else prior(
+        try new String(java.nio.file.Files.readAllBytes(priorFile),
+          java.nio.charset.StandardCharsets.UTF_8)
+        catch { case _: java.io.IOException => "" },
+        sfDir, cpus)
     // Per-query wall-clock offsets (seconds since sweep start, recorded at
     // query END) ride in the artifact as "at": a transient host
     // degradation is provable as a contiguous TIME window from the
@@ -220,8 +239,10 @@ object Bench {
       else ""
     val atQs = atBuf.map { case (k, v) => "\"" + k + "\":" + ms(v) }
       .mkString("{", ",", "}")
+    // a failed anchor's seconds time an exception, not the host
     val anchorJson =
-      s"""{"name":"$Anchor","start":${ms(anchorStart)},"end":${ms(anchorEnd)}}"""
+      if (failed(Anchor)) s"""{"name":"$Anchor","start":null,"end":null}"""
+      else s"""{"name":"$Anchor","start":${ms(anchorStart)},"end":${ms(anchorEnd)}}"""
     // The robust host-band indicator: the MEDIAN per-query ratio against
     // the committed prior sweep, over queries big enough to carry signal
     // (prior > 0.15 s). The single-anchor pair under-reads a band that

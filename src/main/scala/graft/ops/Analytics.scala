@@ -1134,8 +1134,42 @@ object Analytics {
     * and the r18 pre-audit clean sweep (182.0 s tree, which already
     * carried the sizeDispatch refactor) had this query at 2.03 s vs its
     * r17 2.17 s. Host noise; no revert. */
-  def qWinsorize(spark: SparkSession, sfDir: String): DataFrame =
-    winsorize(spark, sfDir, OutlierDriverMaxValues)
+  def qWinsorize(spark: SparkSession, sfDir: String): DataFrame = {
+    import spark.implicits._
+    val vc0 = Tables.lineitem(spark, sfDir)
+      .select($"l_returnflag".as("flag"),
+        round($"l_extendedprice" * 100).as("price_c"))
+      .groupBy($"flag", $"price_c").agg(count(lit(1)).as("__c"))
+    // the same value-count relation (and ceiling) as the outlier filter
+    Dist.sizeDispatch(vc0, OutlierDriverMaxValues) { (vc, _) =>
+      val flat = vc.as[(String, Double, Long)].collect()
+      val out = byKeyValueAscending(flat).map { case (flag, pv) =>
+        val p05 = quantileOfValueCounts(pv, 0.05)
+        val p95 = quantileOfValueCounts(pv, 0.95)
+        var n = 0L
+        var sMc = 0L
+        var nClip = 0L
+        pv.foreach { case (v, c) =>
+          // same op order as the distributed clamp: round(greatest(p05,
+          // least(p95, v)) * 1e3) as long
+          val clamped = math.max(p05, math.min(p95, v))
+          val wMc = Dist.rnd0(clamped * 1e3)
+          n += c
+          sMc += wMc * c
+          if (v < p05 || v > p95) nClip += c
+        }
+        (flag, n, p05, p95, sMc, nClip)
+      }
+      spark.createDataset(out)
+        .toDF("flag", "n", "p05_c", "p95_c", "s_mc", "n_clipped")
+        .select($"flag".as("l_returnflag"), $"n",
+          round($"p05_c" / 100.0, 4).as("p05"),
+          round($"p95_c" / 100.0, 4).as("p95"),
+          round($"s_mc".cast("double") / $"n" / 1e5, 4).as("mean_winsorized"),
+          $"n_clipped")
+        .orderBy($"l_returnflag")
+    } { (vc, _) => winsorizeDistributed(vc) }
+  }
 
   /** Driver-side value-at-rank p-quantile over an ASCENDING (value,
     * count) array — [[quantileOfCounts]]'s exact algebra (0-based
@@ -1164,49 +1198,6 @@ object Analytics {
     }
     val vhiEff = if (hiSeen) vhi else vlo
     vlo + (h - math.floor(h)) * (vhiEff - vlo)
-  }
-
-  /** [[qWinsorize]] with the dispatch ceiling exposed (shared
-    * [[OutlierDriverMaxValues]] — the same value-count relation): tests
-    * force the distributed rank-selection arm with ceiling 0 and assert
-    * both arms agree. */
-  private[graft] def winsorize(spark: SparkSession, sfDir: String,
-      driverMaxValues: Long): DataFrame = {
-    import spark.implicits._
-    val vc0 = Tables.lineitem(spark, sfDir)
-      .select($"l_returnflag".as("flag"),
-        round($"l_extendedprice" * 100).as("price_c"))
-      .groupBy($"flag", $"price_c").agg(count(lit(1)).as("__c"))
-    Dist.sizeDispatch(vc0, driverMaxValues) { (vc, _) =>
-      val flat = vc.as[(String, Double, Long)].collect()
-      val out = byKeyValueAscending(flat).map { case (flag, pv) =>
-        val p05 = quantileOfValueCounts(pv, 0.05)
-        val p95 = quantileOfValueCounts(pv, 0.95)
-        var n = 0L
-        var sMc = 0L
-        var nClip = 0L
-        pv.foreach { case (v, c) =>
-          // same op order as the distributed clamp: round(greatest(p05,
-          // least(p95, v)) * 1e3) as long — Spark's Round on doubles is
-          // BigDecimal.valueOf(x).setScale(0, HALF_UP), replicated here
-          val clamped = math.max(p05, math.min(p95, v))
-          val wMc = java.math.BigDecimal.valueOf(clamped * 1e3)
-            .setScale(0, java.math.RoundingMode.HALF_UP).longValue
-          n += c
-          sMc += wMc * c
-          if (v < p05 || v > p95) nClip += c
-        }
-        (flag, n, p05, p95, sMc, nClip)
-      }
-      spark.createDataset(out)
-        .toDF("flag", "n", "p05_c", "p95_c", "s_mc", "n_clipped")
-        .select($"flag".as("l_returnflag"), $"n",
-          round($"p05_c" / 100.0, 4).as("p05"),
-          round($"p95_c" / 100.0, 4).as("p95"),
-          round($"s_mc".cast("double") / $"n" / 1e5, 4).as("mean_winsorized"),
-          $"n_clipped")
-        .orderBy($"l_returnflag")
-    } { (vc, _) => winsorizeDistributed(vc) }
   }
 
   private def winsorizeDistributed(vc: DataFrame): DataFrame = {
@@ -1294,19 +1285,7 @@ object Analytics {
     * 3.49/3.00 s — repeats at the sweep level in BOTH probe positions,
     * so the ~3 s is the structural cost of the value-count build plus
     * the bounded driver rank selection, not fixture overhead or block
-    * pressure. Structural; no revert. */
-  def qOutlierFilter(spark: SparkSession, sfDir: String): DataFrame =
-    outlierFilter(spark, sfDir, OutlierDriverMaxValues)
-
-  /** Value-row ceiling for the driver arm: 2M (flag, cents) value-count
-    * tuples ≈ low-hundreds of MB transient on the driver — the cents
-    * domain is price-formula-bounded but grows with the part count, so
-    * past the cap the SAME query grades out to the distributed
-    * rank-selection arm. */
-  private val OutlierDriverMaxValues = 2000000L
-
-  /** [[qOutlierFilter]] with the dispatch ceiling exposed so tests can
-    * force the distributed arm (ceiling 0) and assert both arms agree.
+    * pressure. Structural; no revert.
     *
     * Structure notes, both arms measured under bench conditions:
     * the DISTRIBUTED arm is the checkpointed multi-job spelling with
@@ -1323,16 +1302,21 @@ object Analytics {
     * shuffle-checkpoint chain entirely; its presentation projection
     * routes through the SAME Spark round() so the arms and the oracle
     * agree bit-for-bit. */
-  private[graft] def outlierFilter(spark: SparkSession, sfDir: String,
-      driverMaxValues: Long): DataFrame = {
+  def qOutlierFilter(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     outlierOfCounts(
       Tables.lineitem(spark, sfDir)
         .select($"l_returnflag".as("flag"),
           round($"l_extendedprice" * 100).as("price_c"))
-        .groupBy($"flag", $"price_c").agg(count(lit(1)).as("__c")),
-      driverMaxValues)
+        .groupBy($"flag", $"price_c").agg(count(lit(1)).as("__c")))
   }
+
+  /** Value-row ceiling for the driver arm: 2M (flag, cents) value-count
+    * tuples ≈ low-hundreds of MB transient on the driver — the cents
+    * domain is price-formula-bounded but grows with the part count, so
+    * past the cap the SAME query grades out to the distributed
+    * rank-selection arm. */
+  private val OutlierDriverMaxValues = 2000000L
 
   /** Driver-side value-at-rank median over an ASCENDING (value, count)
     * array — [[medianOfCounts]]'s exact algebra (1-based ranks
@@ -1382,15 +1366,14 @@ object Analytics {
     }.toSeq
   }
 
-  /** [[outlierFilter]]'s algorithm core over a prepared (flag, price_c,
+  /** [[qOutlierFilter]]'s algorithm core over a prepared (flag, price_c,
     * __c) value-count relation — extracted so synthetic both-arms tests
     * can drive it with adversarial tie/parity cases the fixture never
     * hits. */
-  private[graft] def outlierOfCounts(vc0: DataFrame,
-      driverMaxValues: Long): DataFrame = {
+  private[graft] def outlierOfCounts(vc0: DataFrame): DataFrame = {
     val spark = vc0.sparkSession
     import spark.implicits._
-    Dist.sizeDispatch(vc0, driverMaxValues) { (vc, _) =>
+    Dist.sizeDispatch(vc0, OutlierDriverMaxValues) { (vc, _) =>
       def medOf(pairs: Array[(Double, Long)]): Double =
         medianOfValueCounts(pairs)
       val flat = vc.as[(String, Double, Long)].collect()
@@ -1889,11 +1872,12 @@ object Analytics {
     * broadcasting the node-cardinality rank table into a map-side join
     * over the edges plus one dst-keyed aggregation — the same exchanges
     * the former pre-dispatch pipeline paid. */
-  private[graft] def pagerankHalf(nodes: DataFrame, halfIn: DataFrame,
-      driverMaxEdges: Long = PagerankDriverMaxEdges): DataFrame = {
+  private[graft] def pagerankHalf(nodes: DataFrame,
+      halfIn: DataFrame): DataFrame = {
     val spark = nodes.sparkSession
     import spark.implicits._
-    Dist.sizeDispatch(halfIn, driverMaxEdges, measure = (_, n) => n * 2) { (half, _) =>
+    Dist.sizeDispatch(halfIn, PagerankDriverMaxEdges,
+        measure = (_, n) => n * 2) { (half, _) =>
       val hs = half.select($"x", $"y").as[(Long, Long)].collect()
       val ns = nodes.select($"node".cast("long")).as[Long].collect()
       val deg = scala.collection.mutable.LongMap.empty[Long]
@@ -2116,13 +2100,7 @@ object Analytics {
     * (partition size = a node's degree). Iteration count is a fixed
     * constant. Nodes outside the thresholded graph keep their own id as a
     * singleton community. */
-  def qLabelProp(spark: SparkSession, sfDir: String): DataFrame =
-    labelProp(spark, sfDir, GraphDriverMaxEdges)
-
-  /** [[qLabelProp]] with the dispatch ceiling exposed (tests force the
-    * distributed arm with ceiling 0 and assert both arms agree). */
-  private[graft] def labelProp(spark: SparkSession, sfDir: String,
-      driverMaxEdges: Long): DataFrame = {
+  def qLabelProp(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val pairs0 = Tables.lineitem(spark, sfDir)
       .groupBy($"l_orderkey")
@@ -2137,7 +2115,7 @@ object Analytics {
         struct($"y".as("src"), $"x".as("dst")))).as("p"))
       .select($"p.src", $"p.dst")
     val nodes = Tables.supplier(spark, sfDir).select($"s_suppkey".as("node"))
-    Dist.sizeDispatch(edges0, driverMaxEdges) { (edges, _) =>
+    Dist.sizeDispatch(edges0, GraphDriverMaxEdges) { (edges, _) =>
       val es = edges.as[(Long, Long)].collect()
       val ns = nodes.as[Long].collect()
       var lab = scala.collection.mutable.LongMap.empty[Long]
@@ -2224,6 +2202,14 @@ object Analytics {
     * The spec asserts true convergence on a synthetic pendant graph. */
   private val KcorePeelRounds = 12
 
+  /** Shared edge ceiling for the iterative-graph driver arms (k-core
+    * peel, label propagation): 2M edge tuples — the triangle-count
+    * broadcast budget. Each distributed round is checkpoint + count (or
+    * broadcast + window) driver round trips; under the ceiling the whole
+    * loop runs on the collected edge array with the identical
+    * round/convergence semantics. */
+  private val GraphDriverMaxEdges = 2000000L
+
   /** K-core decomposition (k = 3) of the part co-purchase graph: nodes
     * are parts, edges join parts co-ordered in ≥ 2 orders, and the 3-core
     * is what survives repeatedly peeling nodes of degree < 3 — the
@@ -2240,21 +2226,7 @@ object Analytics {
     * OOMing the driver). The loop `localCheckpoint`s each round to cut
     * the 12-deep lineage and early-exits on edge-count fixpoint, so
     * converged graphs stop paying immediately. */
-  def qKcore(spark: SparkSession, sfDir: String): DataFrame =
-    kcore(spark, sfDir, GraphDriverMaxEdges)
-
-  /** Shared edge ceiling for the iterative-graph driver arms (k-core
-    * peel, label propagation): 2M edge tuples — the triangle-count
-    * broadcast budget. Each distributed round is checkpoint + count (or
-    * broadcast + window) driver round trips; under the ceiling the whole
-    * loop runs on the collected edge array with the identical
-    * round/convergence semantics. */
-  private val GraphDriverMaxEdges = 2000000L
-
-  /** [[qKcore]] with the dispatch ceiling exposed (tests force the
-    * distributed peel with ceiling 0 and assert both arms agree). */
-  private[graft] def kcore(spark: SparkSession, sfDir: String,
-      driverMaxEdges: Long): DataFrame = {
+  def qKcore(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val k = 3
     val edges0 = Tables.lineitem(spark, sfDir)
@@ -2264,7 +2236,7 @@ object Analytics {
       .groupBy($"e.x".as("x"), $"e.y".as("y"))
       .agg(count(lit(1)).as("c"))
       .where($"c" >= 2).select($"x", $"y")
-    Dist.sizeDispatch(edges0, driverMaxEdges) { (edges, _) =>
+    Dist.sizeDispatch(edges0, GraphDriverMaxEdges) { (edges, _) =>
       var alive = edges.as[(Long, Long)].collect()
       var n = alive.length
       var round = 0

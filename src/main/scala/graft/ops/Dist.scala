@@ -63,13 +63,14 @@ object Dist {
     * pairs = n(n−1)/2), or reads the driver arm's real work off the
     * checkpoint when the row count does not bound it (Cramér's V walks
     * the DENSE distinct-rows × distinct-columns grid, so a sparse
-    * diagonal table of n cells costs n², not n). Tests pass ceiling 0 to
-    * FORCE the distributed arm — the one seam the derived plan guards
-    * drive their invariants through; `distArm` must therefore be correct
-    * at EVERY size, with `driverArm` a pure scheduling-overhead
-    * optimization under the ceiling. Empty relations (n = 0) always
-    * route distributed: several driver cores index into the collected
-    * array. */
+    * diagonal table of n cells costs n², not n). Each site reads its
+    * own ceiling constant; tests FORCE the distributed arm through the
+    * kill switch above (the test suites' `forcedDistributed` helper), the
+    * one seam the arms-agree tests and the plan guards drive their
+    * invariants through; `distArm` must therefore be correct at EVERY
+    * size, with `driverArm` a pure scheduling-overhead optimization under
+    * the ceiling. Empty relations (n = 0) always route distributed:
+    * several driver cores index into the collected array. */
   def sizeDispatch(rel: DataFrame, ceiling: Long,
       measure: (DataFrame, Long) => Long = (_, n) => n)(
       driverArm: (DataFrame, Long) => DataFrame)(

@@ -853,8 +853,15 @@ object Stats {
     * probe conditions and the r20 full sweep read 1.86 s; the suite-max
     * entries are full-sweep block pressure on the bounded driver sort,
     * not fixture overhead. Structural; no revert. */
-  def qTheilSen(spark: SparkSession, sfDir: String): DataFrame =
-    theilSen(spark, sfDir, TheilSenDriverMaxPairs)
+  def qTheilSen(spark: SparkSession, sfDir: String): DataFrame = {
+    import spark.implicits._
+    theilSenOfDaily(
+      Tables.orders(spark, sfDir)
+        .select(
+          Epoch.day($"o_orderdate").as("day"),
+          expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)").as("rev_c"))
+        .groupBy($"day").agg(sum($"rev_c").as("rev_c")))
+  }
 
   /** Pair-count ceiling for the driver-median arm: 8M slopes × 8 B ≈
     * 64 MB of primitive longs — comfortably inside a default driver
@@ -862,26 +869,11 @@ object Stats {
     * days before grading out to the distributed arm). */
   private val TheilSenDriverMaxPairs = 8000000L
 
-  /** [[qTheilSen]] with the dispatch ceiling exposed so tests can force
-    * the distributed arm (ceiling 0) and assert both arms agree. */
-  private[graft] def theilSen(spark: SparkSession, sfDir: String,
-      driverMaxPairs: Long): DataFrame = {
-    import spark.implicits._
-    theilSenOfDaily(
-      Tables.orders(spark, sfDir)
-        .select(
-          Epoch.day($"o_orderdate").as("day"),
-          expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)").as("rev_c"))
-        .groupBy($"day").agg(sum($"rev_c").as("rev_c")),
-      driverMaxPairs)
-  }
-
-  /** [[theilSen]]'s algorithm core over a prepared (day, rev_c) daily
+  /** [[qTheilSen]]'s algorithm core over a prepared (day, rev_c) daily
     * relation — extracted so synthetic both-arms tests can drive it with
     * adversarial parity/tie cases (even/odd pair counts, tied slopes at
     * the median) the fixture calendar never hits. */
-  private[graft] def theilSenOfDaily(daily0: DataFrame,
-      driverMaxPairs: Long): DataFrame = {
+  private[graft] def theilSenOfDaily(daily0: DataFrame): DataFrame = {
     val spark = daily0.sparkSession
     import spark.implicits._
     def pairSlopes(a: DataFrame, b: DataFrame) =
@@ -890,7 +882,7 @@ object Stats {
           / (col("b.day") - col("a.day")).cast("double")).cast("long").as("s"))
     // ceiling space is PAIRS, not days (the driver arm collects the
     // O(days²) slope multiset), hence the measure function
-    Dist.sizeDispatch(daily0, driverMaxPairs,
+    Dist.sizeDispatch(daily0, TheilSenDriverMaxPairs,
         measure = (_, nDays) => nDays * (nDays - 1L) / 2L) { (daily, _) =>
       val slopes = pairSlopes(daily, daily).as[Long].collect()
       java.util.Arrays.sort(slopes)

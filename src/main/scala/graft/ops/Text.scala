@@ -1259,44 +1259,22 @@ object Text {
   def qSourceKl(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     // (source × lang)-bounded grid — one corpus pass at any scale (the
-    // sizeDispatch checkpoint is the former grid materialization;
-    // ReuseAudit had measured four runtime scans with no checkpoint).
-    // Round 21: same contingency-grid driver-arm dispatch as
-    // [[mutualInformationFromPairs]] (identical op order, ANSI-mirrored
-    // long products, HALF_UP rounds); the distributed fan below is
-    // unchanged above the ceiling.
-    val cells0 = Tables.documents(spark, sfDir)
-      .groupBy($"source", $"lang").agg(count(lit(1)).as("c_sl"))
-    Dist.sizeDispatch(cells0, ContingencyDriverMaxCells) { (cells, _) =>
-      val cs = cells.as[(String, String, Long)].collect()
-      val bySource = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-      val byLang = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-      var ct = 0L
-      cs.foreach { case (s, l, c) =>
-        bySource(s) = bySource.getOrElse(s, 0L) + c
-        byLang(l) = byLang.getOrElse(l, 0L) + c
-        ct += c
-      }
-      val klMicro = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-      cs.foreach { case (s, l, cSl) =>
-        val t = rnd0(cSl.toDouble / bySource(s) *
-          Math.log(Math.multiplyExact(cSl, ct).toDouble /
-            Math.multiplyExact(bySource(s), byLang(l)).toDouble) * 1e6)
-        klMicro(s) = klMicro.getOrElse(s, 0L) + t
-      }
+    // dispatch checkpoint is the grid materialization; ReuseAudit had
+    // measured four runtime scans with no checkpoint)
+    Contingency.dispatch[String, String](
+        Tables.documents(spark, sfDir).select($"source", $"lang"),
+        "c_sl", "c_s", "c_l") { g =>
+      val klMicro = g.cells.groupMapReduce(_._1) { case (s, l, cSl) =>
+        Dist.rnd0(cSl.toDouble / g.rows(s) *
+          Math.log(Math.multiplyExact(cSl, g.total).toDouble /
+            Math.multiplyExact(g.rows(s), g.cols(l)).toDouble) * 1e6)
+      }(_ + _)
       spark.createDataset(klMicro.toSeq.map { case (s, k) =>
         (s, k.toDouble / 1e6) })
         .toDF("source", "kl_nats")
         .orderBy($"source")
-    } { (cells, _) =>
-      val bySource = cells.groupBy($"source").agg(sum($"c_sl").as("c_s"))
-      val byLang = cells.groupBy($"lang").agg(sum($"c_sl").as("c_l"))
-      // coalesce: empty corpus reads as 0 (count semantics), not NULL
-      val total = cells.agg(coalesce(sum($"c_sl"), lit(0L)).as("ct"))
-      cells
-        .join(broadcast(bySource), "source")
-        .join(broadcast(byLang), "lang")
-        .crossJoin(broadcast(total))
+    } { d =>
+      d.joined
         .select($"source",
           round($"c_sl".cast("double") / $"c_s"
             * log(($"c_sl" * $"ct").cast("double") / ($"c_s" * $"c_l").cast("double"))
@@ -1338,56 +1316,36 @@ object Text {
   def qJensenShannon(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     // (source × 10-bin)-bounded grid — one corpus pass at any scale (the
-    // sizeDispatch checkpoint is the former grid materialization;
-    // ReuseAudit had measured two residual corpus scans under AQE reuse
-    // without it). Round 21: same contingency-grid driver-arm dispatch
-    // as [[mutualInformationFromPairs]] — the FULL sources×bins grid
-    // (absent cells as 0) replays locally with the identical op order;
-    // the distributed fan below is unchanged above the ceiling.
-    val cells0 = Tables.documents(spark, sfDir)
-      .groupBy($"source",
-        expr("least(CAST(length(text) AS BIGINT) DIV 200, 9L)").as("bin"))
-      .agg(count(lit(1)).as("c_sb"))
-    Dist.sizeDispatch(cells0, ContingencyDriverMaxCells) { (cells, _) =>
-      val cs = cells.as[(String, Long, Long)].collect()
-      val bySource = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-      val byBin = scala.collection.mutable.LinkedHashMap.empty[Long, Long]
-      var ct = 0L
-      cs.foreach { case (s, b, c) =>
-        bySource(s) = bySource.getOrElse(s, 0L) + c
-        byBin(b) = byBin.getOrElse(b, 0L) + c
-        ct += c
-      }
-      val present = cs.iterator.map(t => (t._1, t._2) -> t._3).toMap
-      val out = bySource.toSeq.map { case (s, cS) =>
+    // dispatch checkpoint is the grid materialization; ReuseAudit had
+    // measured two residual corpus scans under AQE reuse without it).
+    // Both arms walk the FULL sources × bins grid (absent cells as 0);
+    // the dispatch counts the present cells, at most 10× fewer.
+    Contingency.dispatch[String, Long](
+        Tables.documents(spark, sfDir).select($"source",
+          expr("least(CAST(length(text) AS BIGINT) DIV 200, 9L)").as("bin")),
+        "c_sb", "c_s", "c_b") { g =>
+      val out = g.rows.toSeq.map { case (s, cS) =>
         var jsMicro = 0L
-        byBin.foreach { case (b, cB) =>
-          val cSb = present.getOrElse((s, b), 0L)
+        g.cols.foreach { case (b, cB) =>
+          val cSb = g(s, b)
           val p = cSb.toDouble / cS
-          val q = cB.toDouble / ct
+          val q = cB.toDouble / g.total
           val term =
             (if (cSb > 0) 0.5 * p * Math.log(2.0 * p / (p + q)) else 0.0) +
               0.5 * q * Math.log(2.0 * q / (p + q))
-          jsMicro += rnd0(term * 1e6)
+          jsMicro += Dist.rnd0(term * 1e6)
         }
         (s, jsMicro.toDouble / 1e6)
       }
       spark.createDataset(out).toDF("source", "js_nats").orderBy($"source")
-    } { (cells, _) =>
-      val srcs = cells.groupBy($"source").agg(sum($"c_sb").as("c_s"))
-      val bins = cells.groupBy($"bin").agg(sum($"c_sb").as("c_b"))
-      val total = cells.agg(sum($"c_sb").as("ct"))
-      val grid = srcs.crossJoin(broadcast(bins))
-        .join(cells, Seq("source", "bin"), "left")
-        .na.fill(0L, Seq("c_sb"))
-        .crossJoin(broadcast(total))
+    } { d =>
       val p = $"c_sb".cast("double") / $"c_s"
       val q = $"c_b".cast("double") / $"ct"
       val term =
         when($"c_sb" > 0, lit(0.5) * p * log(lit(2.0) * p / (p + q)))
           .otherwise(lit(0.0)) +
           lit(0.5) * q * log(lit(2.0) * q / (p + q))
-      grid
+      d.dense
         .select($"source", round(term * 1e6).cast("long").as("js_micro"))
         .groupBy($"source")
         .agg((sum($"js_micro").cast("double") / 1e6).as("js_nats"))
@@ -1441,18 +1399,6 @@ object Text {
       Tables.documents(spark, sfDir).select($"source", $"lang"))
   }
 
-  /** Cell ceiling for the contingency-grid driver arms ([[qMutualInformation]],
-    * [[qCramersV]]): 2M (source, lang, count) tuples — category-bounded by
-    * construction (|sources| × |langs|), never corpus-sized; past the cap
-    * the same query grades out to the distributed fan. Cramér's V counts
-    * the dense |sources| × |langs| grid against it, the others the
-    * present cells they walk. */
-  private val ContingencyDriverMaxCells = 2000000L
-
-  // Spark-round replication for the driver arms: [[Dist.rnd0]]/[[Dist.rnd6]]
-  private def rnd0(x: Double): Long = Dist.rnd0(x)
-  private def rnd6(x: Double): Double = Dist.rnd6(x)
-
   /** MI core over a (source, lang) frame — factored out so the degenerate
     * single-category corpus (min marginal entropy exactly 0 → NMI must
     * degrade to 0, not divide by zero) is unit-testable.
@@ -1460,67 +1406,46 @@ object Text {
     * Round 21 (guide §1.2): the post-grid computation fans six tiny
     * aggregations over a ≤(r·c)-row relation through broadcast glue —
     * 17 Spark jobs of pure scheduling overhead at the fixture (floor
-    * profile, plans/r21/floor_profile.txt). The grid now rides the shared
-    * [[Dist.sizeDispatch]] seam: under the cell ceiling the marginals,
-    * entropies and MI replay in local math with the IDENTICAL op order
-    * (long marginal adds; `Math.multiplyExact` mirrors ANSI's throwing
-    * long product; BigDecimal HALF_UP mirrors Spark's round), above it
-    * the original distributed fan runs unchanged. Still one corpus pass
-    * (the dispatch checkpoint IS the former grid materialization —
-    * RuntimeScanSpec's documents=1 pin unchanged). */
-  private[graft] def mutualInformationFromPairs(pairs: DataFrame): DataFrame =
-    mutualInformationFromPairs(pairs, ContingencyDriverMaxCells)
-
-  private[graft] def mutualInformationFromPairs(pairs: DataFrame,
-      driverMaxCells: Long): DataFrame = {
+    * profile, plans/r21/floor_profile.txt). The grid now rides the
+    * [[Contingency]] kernel: under its cell ceiling the entropies and MI
+    * replay in local math with the IDENTICAL op order
+    * (`Math.multiplyExact` mirrors ANSI's throwing long product;
+    * [[Dist.rnd0]] mirrors Spark's round), above it the distributed fan
+    * runs. Still one corpus pass (the dispatch checkpoint IS the grid
+    * materialization — RuntimeScanSpec's documents=1 pin). */
+  private[graft] def mutualInformationFromPairs(pairs: DataFrame): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
-    val cells0 = pairs.groupBy($"source", $"lang").agg(count(lit(1)).as("c_sl"))
-    Dist.sizeDispatch(cells0, driverMaxCells) { (cells, _) =>
-      val cs = cells.as[(String, String, Long)].collect()
-      val bySource = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-      val byLang = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-      var ct = 0L
-      cs.foreach { case (s, l, c) =>
-        bySource(s) = bySource.getOrElse(s, 0L) + c
-        byLang(l) = byLang.getOrElse(l, 0L) + c
-        ct += c
-      }
+    Contingency.dispatch[String, String](pairs.select($"source", $"lang"),
+        "c_sl", "c_s", "c_l") { g =>
       var miNano = 0L
-      cs.foreach { case (s, l, cSl) =>
-        miNano += rnd0((cSl.toDouble / ct) *
-          Math.log(Math.multiplyExact(cSl, ct).toDouble /
-            Math.multiplyExact(bySource(s), byLang(l)).toDouble) * 1e9)
+      g.cells.foreach { case (s, l, cSl) =>
+        miNano += Dist.rnd0((cSl.toDouble / g.total) *
+          Math.log(Math.multiplyExact(cSl, g.total).toDouble /
+            Math.multiplyExact(g.rows(s), g.cols(l)).toDouble) * 1e9)
       }
       def entNano(marginals: Iterable[Long]): Long =
         marginals.iterator.map { c =>
-          rnd0(-(c.toDouble / ct) * Math.log(c.toDouble / ct) * 1e9)
+          Dist.rnd0(-(c.toDouble / g.total) * Math.log(c.toDouble / g.total) * 1e9)
         }.sum
-      val hs = entNano(bySource.values)
-      val hl = entNano(byLang.values)
+      val hs = entNano(g.rows.values)
+      val hl = entNano(g.cols.values)
       val nmi =
-        if (math.min(hs, hl) > 0) rnd6(miNano.toDouble / math.min(hs, hl))
+        if (math.min(hs, hl) > 0) Dist.rnd6(miNano.toDouble / math.min(hs, hl))
         else 0.0
       Seq((miNano.toDouble / 1e9, hs.toDouble / 1e9, hl.toDouble / 1e9, nmi))
         .toDF("mi_nats", "h_source", "h_lang", "nmi")
-    } { (cells, _) =>
-      val bySource = cells.groupBy($"source").agg(sum($"c_sl").as("c_s"))
-      val byLang = cells.groupBy($"lang").agg(sum($"c_sl").as("c_l"))
-      // coalesce: empty corpus reads as 0 (count semantics), not NULL
-      val total = cells.agg(coalesce(sum($"c_sl"), lit(0L)).as("ct"))
-      val mi = cells
-        .join(broadcast(bySource), "source")
-        .join(broadcast(byLang), "lang")
-        .crossJoin(broadcast(total))
+    } { d =>
+      val mi = d.joined
         .select(round(($"c_sl".cast("double") / $"ct")
           * log(($"c_sl" * $"ct").cast("double") / ($"c_s" * $"c_l").cast("double"))
           * 1e9).cast("long").as("mi_nano"))
         .agg(sum($"mi_nano").as("mi_nano"))
-      val hS = bySource.crossJoin(broadcast(total))
+      val hS = d.rows.crossJoin(broadcast(d.total))
         .select(round(-($"c_s".cast("double") / $"ct")
           * log($"c_s".cast("double") / $"ct") * 1e9).cast("long").as("h"))
         .agg(sum($"h").as("hs_nano"))
-      val hL = byLang.crossJoin(broadcast(total))
+      val hL = d.cols.crossJoin(broadcast(d.total))
         .select(round(-($"c_l".cast("double") / $"ct")
           * log($"c_l".cast("double") / $"ct") * 1e9).cast("long").as("h"))
         .agg(sum($"h").as("hl_nano"))
@@ -1588,73 +1513,46 @@ object Text {
     * degenerate 1×c table (min dimension 1 → V must degrade to 0, not
     * divide by zero) is unit-testable.
     *
-    * Round 21 (guide §1.2): same driver-arm dispatch as
+    * Round 21 (guide §1.2): same [[Contingency]] dispatch as
     * [[mutualInformationFromPairs]] — the full-grid χ² over a
     * category-bounded table was the worst overhead case in the family
     * (the r×c crossJoin grid, marginals, dims and total each materialize
     * broadcast stages; 2.6 s committed for a ≤200-cell grid). Identical
     * op order in the local replay (`Math.multiplyExact` for the ANSI
-    * long products, BigDecimal HALF_UP rounds); the distributed fan is
-    * unchanged above the ceiling; still one corpus pass. The ceiling
-    * bounds the DENSE r×c grid the local χ² walks (absent cells still
-    * carry expected counts), read as distinct sources × distinct langs
-    * off the checkpointed cells: the present-cell count alone let a
-    * sparse diagonal table of n cells through to n² driver iterations. */
-  private[graft] def cramersVFromPairs(pairs: DataFrame): DataFrame =
-    cramersVFromPairs(pairs, ContingencyDriverMaxCells)
-
-  private[graft] def cramersVFromPairs(pairs: DataFrame,
-      driverMaxCells: Long): DataFrame = {
+    * long products, [[Dist.rnd0]]/[[Dist.rnd6]] rounds); still one
+    * corpus pass. The local χ² walks the DENSE r×c grid (absent cells
+    * still carry expected counts), so it dispatches on the dense size
+    * (`dense = true`): the present-cell count alone let a sparse
+    * diagonal table of n cells through to n² driver iterations. */
+  private[graft] def cramersVFromPairs(pairs: DataFrame): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
-    val cells0 = pairs.groupBy($"source", $"lang").agg(count(lit(1)).as("c_sl"))
-    val denseCells = (cells: DataFrame, _: Long) => {
-      val rc = cells.agg(countDistinct($"source"), countDistinct($"lang")).head()
-      rc.getLong(0) * rc.getLong(1)
-    }
-    Dist.sizeDispatch(cells0, driverMaxCells, denseCells) { (cells, _) =>
-      val cs = cells.as[(String, String, Long)].collect()
-      val bySource = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-      val byLang = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-      var ct = 0L
-      cs.foreach { case (s, l, c) =>
-        bySource(s) = bySource.getOrElse(s, 0L) + c
-        byLang(l) = byLang.getOrElse(l, 0L) + c
-        ct += c
-      }
-      val present = cs.iterator.map(t => (t._1, t._2) -> t._3).toMap
+    Contingency.dispatch[String, String](pairs.select($"source", $"lang"),
+        "c_sl", "c_s", "c_l", dense = true) { g =>
       var chiMicro = 0L
-      bySource.foreach { case (s, cS) =>
-        byLang.foreach { case (l, cL) =>
-          val cSl = present.getOrElse((s, l), 0L)
-          val exp = Math.multiplyExact(cS, cL).toDouble / ct
-          chiMicro += rnd0(
+      g.rows.foreach { case (s, cS) =>
+        g.cols.foreach { case (l, cL) =>
+          val cSl = g(s, l)
+          val exp = Math.multiplyExact(cS, cL).toDouble / g.total
+          chiMicro += Dist.rnd0(
             (cSl.toDouble - exp) * (cSl.toDouble - exp) / exp * 1e6)
         }
       }
-      val r = bySource.size.toLong
-      val c = byLang.size.toLong
+      val r = g.rows.size.toLong
+      val c = g.cols.size.toLong
       val dof = (math.min(r, c) - 1) * (math.max(r, c) - 1)
       val v =
         if (math.min(r, c) > 1)
-          rnd6(Math.sqrt((chiMicro.toDouble / 1e6) /
-            Math.multiplyExact(ct, math.min(r, c) - 1).toDouble))
+          Dist.rnd6(Math.sqrt((chiMicro.toDouble / 1e6) /
+            Math.multiplyExact(g.total, math.min(r, c) - 1).toDouble))
         else 0.0
-      Seq((ct, chiMicro.toDouble / 1e6, dof, v))
+      Seq((g.total, chiMicro.toDouble / 1e6, dof, v))
         .toDF("n", "chi2", "dof", "cramers_v")
-    } { (cells, _) =>
-      val bySource = cells.groupBy($"source").agg(sum($"c_sl").as("c_s"))
-      val byLang = cells.groupBy($"lang").agg(sum($"c_sl").as("c_l"))
-      // coalesce: empty corpus reads as 0 (count semantics), not NULL
-      val total = cells.agg(coalesce(sum($"c_sl"), lit(0L)).as("ct"))
-      val dims = bySource.agg(count(lit(1)).as("r"))
-        .crossJoin(broadcast(byLang.agg(count(lit(1)).as("c"))))
-      val grid = bySource.crossJoin(broadcast(byLang))
-        .join(cells, Seq("source", "lang"), "left")
-        .na.fill(0L, Seq("c_sl"))
-        .crossJoin(broadcast(total))
+    } { d =>
+      val dims = d.rows.agg(count(lit(1)).as("r"))
+        .crossJoin(broadcast(d.cols.agg(count(lit(1)).as("c"))))
       val expCnt = ($"c_s" * $"c_l").cast("double") / $"ct"
-      grid
+      d.dense
         .select($"ct",
           round(($"c_sl".cast("double") - expCnt)
             * ($"c_sl".cast("double") - expCnt) / expCnt * 1e6)

@@ -169,9 +169,9 @@ class AnalyticsSpec extends GraftSuite {
       assert(row.getAs[Long]("n_outliers") == expected,
         s"$flag: ${row.getAs[Long]("n_outliers")} vs independent $expected")
     }
-    // both dispatch arms produce identical rows: ceiling 0 forces the
-    // distributed rank-selection arm the default (driver) arm replaced
-    val dist = rows(Analytics.outlierFilter(spark, sf, driverMaxValues = 0L))
+    // both dispatch arms produce identical rows: the kill switch forces
+    // the distributed rank-selection arm the default (driver) arm replaced
+    val dist = forcedDistributed(rows(Analytics.qOutlierFilter(spark, sf)))
     assert(dist == r, s"distributed arm $dist != driver arm $r")
   }
 
@@ -189,10 +189,9 @@ class AnalyticsSpec extends GraftSuite {
       Seq(("A", -10.0, 2L), ("A", 0.0, 2L), ("B", 7.0, 1L), ("B", 1000.0, 3L)),
       Seq(("A", 0.0, 1L), ("A", 1.0, 1L), ("A", 2.0, 1L), ("A", 50.0, 2L)))
     cases.foreach { vs =>
-      val a = rows(Analytics.outlierOfCounts(
-        vs.toDF("flag", "price_c", "__c"), driverMaxValues = Long.MaxValue))
-      val b = rows(Analytics.outlierOfCounts(
-        vs.toDF("flag", "price_c", "__c"), driverMaxValues = 0L))
+      val a = rows(Analytics.outlierOfCounts(vs.toDF("flag", "price_c", "__c")))
+      val b = forcedDistributed(
+        rows(Analytics.outlierOfCounts(vs.toDF("flag", "price_c", "__c"))))
       assert(a == b, s"arms disagree on $vs: $a vs $b")
     }
   }
@@ -256,9 +255,9 @@ class AnalyticsSpec extends GraftSuite {
       val frac = row.getAs[Long]("n_clipped").toDouble / row.getAs[Long]("n")
       assert(frac > 0.05 && frac < 0.15, s"clip fraction $frac")
     }
-    // both dispatch arms produce identical rows: ceiling 0 forces the
-    // distributed quantile/clamp arm the driver replay replaced
-    val dist = rows(Analytics.winsorize(spark, sf, driverMaxValues = 0L))
+    // both dispatch arms produce identical rows: the kill switch forces
+    // the distributed quantile/clamp arm the driver replay replaced
+    val dist = forcedDistributed(rows(Analytics.qWinsorize(spark, sf)))
     assert(dist == r, s"winsorize arms disagree: $dist vs $r")
   }
 
@@ -283,10 +282,9 @@ class AnalyticsSpec extends GraftSuite {
     val nodes = spark.range(6).select(col("id").as("node"))
     val half = Seq((0L, 1L), (0L, 2L), (1L, 2L), (2L, 3L), (3L, 9L))
       .toDF("x", "y")
-    val a = rows(Analytics.pagerankHalf(nodes, half,
-      driverMaxEdges = Long.MaxValue).orderBy($"node"))
-    val b = rows(Analytics.pagerankHalf(nodes, half.orderBy($"y".desc),
-      driverMaxEdges = 0L).orderBy($"node"))
+    val a = rows(Analytics.pagerankHalf(nodes, half).orderBy($"node"))
+    val b = forcedDistributed(rows(
+      Analytics.pagerankHalf(nodes, half.orderBy($"y".desc)).orderBy($"node")))
     assert(a == b, s"arms disagree: $a vs $b")
   }
 
@@ -326,10 +324,9 @@ class AnalyticsSpec extends GraftSuite {
     val literal = Seq((0L, 1L), (0L, 2L), (1L, 2L), (2L, 3L), (3L, 7L))
     val half = literal.toDF("x", "y") // 7 outside nodes: its rank is dropped, its degree still divides
     val expected = pagerankReplay(0L until 5L, literal)
-    val viaDriver = ranksOf(Analytics.pagerankHalf(nodes, half,
-      driverMaxEdges = Long.MaxValue))
-    val viaDist = ranksOf(Analytics.pagerankHalf(nodes, half.orderBy($"y"),
-      driverMaxEdges = 0L))
+    val viaDriver = ranksOf(Analytics.pagerankHalf(nodes, half))
+    val viaDist = forcedDistributed(
+      ranksOf(Analytics.pagerankHalf(nodes, half.orderBy($"y"))))
     assert(viaDriver == expected, s"driver arm vs replay: $viaDriver vs $expected")
     assert(viaDist == expected, s"distributed arm vs replay: $viaDist vs $expected")
     // production fixture: qPagerank's graph through the default dispatch
@@ -440,15 +437,15 @@ class AnalyticsSpec extends GraftSuite {
     val distinctCommunities = r.select($"community").distinct().count()
     assert(distinctCommunities < nodes.count(),
       "at least one multi-node community must form")
-    // both dispatch arms produce identical labels: ceiling 0 forces the
-    // distributed broadcast/window arm the driver loop replaced
-    val dist = rows(Analytics.labelProp(spark, sf, driverMaxEdges = 0L))
+    // both dispatch arms produce identical labels: the kill switch forces
+    // the distributed broadcast/window arm the driver loop replaced
+    val dist = forcedDistributed(rows(Analytics.qLabelProp(spark, sf)))
     assert(dist == rows(r), "label-prop arms disagree")
   }
 
   test("kcore arms agree: the distributed peel equals the driver peel") {
     val a = rows(Analytics.qKcore(spark, sf))
-    val b = rows(Analytics.kcore(spark, sf, driverMaxEdges = 0L))
+    val b = forcedDistributed(rows(Analytics.qKcore(spark, sf)))
     assert(a == b, s"kcore arms disagree: ${a.take(5)} vs ${b.take(5)}")
   }
 

@@ -31,4 +31,45 @@ class HarnessSpec extends GraftSuite {
     assert(input.selectExpr("sum(id)").head().getLong(0) == 1225L)
     Harness.cleanup(spark)
   }
+
+  /** [[Bench.prior]] on a prior file's text, with what it printed to
+    * stderr. */
+  private def priorOf(json: String, sf: String, cpus: Int)
+      : (Map[String, Double], String) = {
+    val err = new java.io.ByteArrayOutputStream
+    val times = Console.withErr(err)(Bench.prior(json, sf, cpus))
+    (times, err.toString("UTF-8"))
+  }
+
+  private val priorJson =
+    """{"metric":"total","value":1.5,"queries":{"q_a":0.5,"q_b":1.0},""" +
+      """"retry":{"q_b":0.9},"sf":"/data/sf0.1","cpus":4,"failed":[]}"""
+
+  test("Bench uses a prior taken at the same sf and cpus") {
+    val (times, err) = priorOf(priorJson, "/data/sf0.1", 4)
+    assert(times == Map("q_a" -> 0.5, "q_b" -> 1.0))
+    assert(err.isEmpty, err)
+  }
+
+  test("Bench refuses a prior taken at another sf, naming both") {
+    val (times, err) = priorOf(priorJson, "/data/sf0.01", 4)
+    assert(times.isEmpty)
+    assert(err.contains("WARN") && err.contains("/data/sf0.1") &&
+      err.contains("/data/sf0.01"), err)
+  }
+
+  test("Bench refuses a prior taken at another cpu count, naming both") {
+    val (times, err) = priorOf(priorJson, "/data/sf0.1", 8)
+    assert(times.isEmpty)
+    assert(err.contains("WARN") && err.contains("cpus 4") &&
+      err.contains("at 8"), err)
+  }
+
+  test("Bench uses a prior that does not record cpus") {
+    // the shape of BENCH.json files written before `cpus` existed
+    val (times, err) =
+      priorOf(priorJson.replace(""","cpus":4""", ""), "/data/sf0.1", 32)
+    assert(times == Map("q_a" -> 0.5, "q_b" -> 1.0))
+    assert(err.isEmpty, err)
+  }
 }

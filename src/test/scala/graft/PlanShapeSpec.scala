@@ -76,12 +76,11 @@ class PlanShapeSpec extends GraftSuite {
     // ceiling; its iterations must be map-side joins over the
     // checkpointed edges plus keyed aggregations — a sort-merge join
     // would mean the node-sized rank table got shuffle-planned
-    val plan = graft.ops.Analytics
+    val plan = forcedDistributed(graft.ops.Analytics
       .pagerankHalf(
         graft.tables.Tables.supplier(spark, sf)
           .select(org.apache.spark.sql.functions.col("s_suppkey").as("node")),
-        graft.ops.Analytics.qPagerankHalfEdges(spark, sf),
-        driverMaxEdges = 0L)
+        graft.ops.Analytics.qPagerankHalfEdges(spark, sf)))
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), plan)
     assert(!plan.contains("SortMergeJoin"), s"rank joins must broadcast:\n$plan")

@@ -171,11 +171,10 @@ class ScalingSpec extends GraftSuite {
       val half = spark.range(n)
         .select(col("id").as("x"), explode(sequence(lit(1), lit(d))).as("k"))
         .select(col("x"), ((col("x") + col("k")) % n).as("y"))
-      // ceiling 0 forces the DISTRIBUTED arm — the slope canary exists
-      // to watch the distributed plan, which the size dispatch would
-      // otherwise bypass at canary-sized graphs
-      val ranks = graft.ops.Analytics.pagerankHalf(nodes, half,
-        driverMaxEdges = 0L)
+      // the kill switch forces the DISTRIBUTED arm — the slope canary
+      // exists to watch the distributed plan, which the size dispatch
+      // would otherwise bypass at canary-sized graphs
+      val ranks = forcedDistributed(graft.ops.Analytics.pagerankHalf(nodes, half))
       // a 2d-regular graph is rank-uniform: every node ends at the same
       // ppm value — asserts the algorithm, not just the slope
       assert(ranks.select(col("rank_ppm")).distinct().count() == 1)

@@ -19,6 +19,21 @@ abstract class GraftSuite extends AnyFunSuite {
 
   def rows(df: DataFrame): Seq[Row] = df.collect().toSeq
 
+  /** Runs `body` with the `graft.force.distributed` kill switch on, so
+    * every [[graft.ops.Dist.sizeDispatch]] it constructs takes the
+    * distributed arm (the arm is chosen while the DataFrame is built, so
+    * `body` must build, not only collect); the previous setting is
+    * restored afterwards. */
+  def forcedDistributed[T](body: => T): T = {
+    val prev = sys.props.get("graft.force.distributed")
+    sys.props("graft.force.distributed") = "1"
+    try body
+    finally prev match {
+      case Some(v) => sys.props("graft.force.distributed") = v
+      case None => sys.props.remove("graft.force.distributed")
+    }
+  }
+
   /** Array-column accessor (Spark hands back mutable.ArraySeq). */
   def dArr(row: Row, name: String): IndexedSeq[Double] =
     row.getSeq[Double](row.fieldIndex(name)).toIndexedSeq

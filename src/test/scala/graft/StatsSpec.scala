@@ -267,10 +267,10 @@ class StatsSpec extends GraftSuite {
     assert(r.getLong(0) == n.toLong)
     assert(r.getLong(1) == slopes.distinct.size.toLong)
     assert(r.getDouble(2) == expected)
-    // both dispatch arms produce the identical row: ceiling 0 forces the
-    // distributed rank-selection arm the default (driver-median) arm
-    // replaced on the suite fixture
-    val dist = rows(Stats.theilSen(spark, sf, driverMaxPairs = 0L)).head
+    // both dispatch arms produce the identical row: the kill switch
+    // forces the distributed rank-selection arm the default
+    // (driver-median) arm replaced on the suite fixture
+    val dist = forcedDistributed(rows(Stats.qTheilSen(spark, sf))).head
     assert(dist == r, s"distributed arm $dist != driver arm $r")
   }
 
@@ -286,10 +286,8 @@ class StatsSpec extends GraftSuite {
       Seq((0L, 100L), (1L, -50L), (2L, 75L), (4L, -100L)),
       (0L until 9L).map(d => (d, d * d * 7L - 30L * d)))
     cases.foreach { ds =>
-      val a = rows(Stats.theilSenOfDaily(ds.toDF("day", "rev_c"),
-        driverMaxPairs = Long.MaxValue))
-      val b = rows(Stats.theilSenOfDaily(ds.toDF("day", "rev_c"),
-        driverMaxPairs = 0L))
+      val a = rows(Stats.theilSenOfDaily(ds.toDF("day", "rev_c")))
+      val b = forcedDistributed(rows(Stats.theilSenOfDaily(ds.toDF("day", "rev_c"))))
       assert(a == b, s"arms disagree on $ds: $a vs $b")
     }
   }
@@ -297,34 +295,26 @@ class StatsSpec extends GraftSuite {
   test("sizeDispatch kill switch forces the distributed arm at any ceiling") {
     import spark.implicits._
     val ds = Seq((0L, 10L), (1L, 20L), (3L, 5L), (4L, 40L))
-    def planOf() = Stats.theilSenOfDaily(ds.toDF("day", "rev_c"),
-      driverMaxPairs = Long.MaxValue).queryExecution.executedPlan.toString
+    def daily() = Stats.theilSenOfDaily(ds.toDF("day", "rev_c"))
+    def planOf(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.executedPlan.toString
     // default: the driver arm — a pure local projection, no join anywhere
-    val driverPlan = planOf()
+    val driverPlan = planOf(daily())
     assert(!driverPlan.contains("Join"),
       s"expected the driver-median arm (no joins):\n$driverPlan")
-    val prev = sys.props.get("graft.force.distributed")
-    try {
-      sys.props("graft.force.distributed") = "1"
-      // switch on: the SAME call routes the distributed rank-selection
-      // arm (its pair self-join shows in the plan), and the result row
-      // is identical — the operational escape hatch changes the plan,
-      // never the answer
-      val distPlan = planOf()
-      assert(distPlan.contains("Join"),
-        s"kill switch must route the distributed arm:\n$distPlan")
-      val dist = rows(Stats.theilSenOfDaily(ds.toDF("day", "rev_c"),
-        driverMaxPairs = Long.MaxValue))
-      sys.props.remove("graft.force.distributed")
-      val drv = rows(Stats.theilSenOfDaily(ds.toDF("day", "rev_c"),
-        driverMaxPairs = Long.MaxValue))
-      assert(dist == drv, s"arms disagree under the switch: $dist vs $drv")
-    } finally {
-      prev match {
-        case Some(v) => sys.props("graft.force.distributed") = v
-        case None => sys.props.remove("graft.force.distributed")
-      }
-    }
+    // switch on: the SAME call routes the distributed rank-selection
+    // arm (its pair self-join shows in the plan), and the result row
+    // is identical — the operational escape hatch changes the plan,
+    // never the answer
+    val distPlan = forcedDistributed(planOf(daily()))
+    assert(distPlan.contains("Join"),
+      s"kill switch must route the distributed arm:\n$distPlan")
+    val dist = forcedDistributed(rows(daily()))
+    // switch off again: back on the driver arm
+    val drv = rows(daily())
+    assert(!planOf(daily()).contains("Join"),
+      "the switch must not outlive forcedDistributed's scope")
+    assert(dist == drv, s"arms disagree under the switch: $dist vs $drv")
   }
 
   test("q_psi dispatch arms agree on the fixture") {
@@ -332,16 +322,8 @@ class StatsSpec extends GraftSuite {
     // seam; the kill switch forces the distributed withPrefix fan —
     // results must be bit-identical to the local decile/bin replay
     val driverSide = rows(Stats.qPsi(spark, sf))
-    val prev = sys.props.get("graft.force.distributed")
-    try {
-      sys.props("graft.force.distributed") = "1"
-      assert(rows(Stats.qPsi(spark, sf)) == driverSide, "psi arms disagree")
-    } finally {
-      prev match {
-        case Some(v) => sys.props("graft.force.distributed") = v
-        case None => sys.props.remove("graft.force.distributed")
-      }
-    }
+    assert(forcedDistributed(rows(Stats.qPsi(spark, sf))) == driverSide,
+      "psi arms disagree")
   }
 
   test("q_psi matches the exact decile-bin replay; PSI small on a random split") {

@@ -513,66 +513,77 @@ class TextSpec extends GraftSuite {
 
   test("MI and Cramér's V dispatch arms agree (fixture and degenerate frames)") {
     import spark.implicits._
-    // round 21: the contingency-grid driver arms replay the distributed
-    // fan's exact op order (ANSI-mirrored long products, HALF_UP rounds) —
-    // ceiling 0 forces the distributed arm; results must be bit-identical
-    val fixture = graft.tables.Tables.documents(spark, sf)
-      .select($"source", $"lang")
-    val degenerate = Seq(("s0", "en"), ("s0", "de"), ("s0", "en"))
-      .toDF("source", "lang")
-    for (pairs <- Seq(fixture, degenerate)) {
-      val miD = rows(Text.mutualInformationFromPairs(pairs, Long.MaxValue))
-      val miX = rows(Text.mutualInformationFromPairs(pairs, 0L))
-      assert(miD == miX, s"MI arms disagree: $miD vs $miX")
-      val cvD = rows(Text.cramersVFromPairs(pairs, Long.MaxValue))
-      val cvX = rows(Text.cramersVFromPairs(pairs, 0L))
-      assert(cvD == cvX, s"Cramér's V arms disagree: $cvD vs $cvX")
+    // the contingency kernel's driver arm replays the distributed fan's
+    // exact op order (ANSI-mirrored long products, HALF_UP rounds) — the
+    // kill switch forces the distributed arm; results must be
+    // bit-identical on the fixture and on adversarial shapes, and every
+    // non-empty shape must really take the driver arm by default (an
+    // empty table routes distributed either way)
+    def frame(ps: Seq[(String, String)]) = ps.toDF("source", "lang")
+    val shapes = Seq(
+      "fixture" -> graft.tables.Tables.documents(spark, sf)
+        .select($"source", $"lang"),
+      "single source" -> frame(Seq(("s0", "en"), ("s0", "de"), ("s0", "en"))),
+      "empty" -> frame(Seq.empty),
+      "single cell" -> frame(Seq(("s0", "en"))),
+      "sparse diagonal" -> frame(
+        (0 until 40).flatMap(i => Seq.fill(1 + i % 3)((s"s$i", s"l$i")))),
+      // 2000 of 2015 rows (99.3%) in one cell
+      "skewed" -> frame(Seq.fill(2000)(("s0", "en")) ++
+        (1 to 15).map(i => (s"s${i % 4}", s"l${i % 5}"))))
+    def arm(df: org.apache.spark.sql.DataFrame): String =
+      if (df.queryExecution.executedPlan.toString.contains("Join")) "distributed"
+      else "driver"
+    for ((shape, pairs) <- shapes;
+         (stat, f) <- Seq[(String, org.apache.spark.sql.DataFrame =>
+             org.apache.spark.sql.DataFrame)](
+           "MI" -> (Text.mutualInformationFromPairs(_)),
+           "Cramér's V" -> (Text.cramersVFromPairs(_)))) {
+      val byDefault = f(pairs)
+      val forced = forcedDistributed(f(pairs))
+      assert(arm(byDefault) == (if (shape == "empty") "distributed" else "driver"),
+        s"$stat on the $shape frame took the wrong arm by default")
+      assert(arm(forced) == "distributed",
+        s"$stat on the $shape frame: the kill switch must force the distributed arm")
+      val (d, x) = (rows(byDefault), rows(forced))
+      assert(d == x, s"$stat arms disagree on the $shape frame: $d vs $x")
     }
   }
 
   test("Cramér's V dispatches on the dense grid, not the present cells") {
     import spark.implicits._
-    // a 50-cell diagonal table is a 50 × 50 = 2500-cell dense grid: at a
-    // 100-cell ceiling it must grade out to the distributed arm (same
-    // jobs as ceiling 0, not those of the driver arm under Long.MaxValue)
-    val diagonal = (0 until 50).flatMap(i => Seq.fill(1 + i % 3)((s"s$i", s"l$i")))
-      .toDF("source", "lang")
-    def jobs(pairs: org.apache.spark.sql.DataFrame, ceiling: Long): Int =
-      RuntimeScans.countJobs(spark)(Text.cramersVFromPairs(pairs, ceiling))
-    val dist = jobs(diagonal, 0L)
-    assert(jobs(diagonal, Long.MaxValue) != dist,
-      "the arms must be told apart by their job counts")
-    assert(jobs(diagonal, 100L) == dist,
-      "a sparse diagonal table must not take the driver arm")
-    assert(rows(Text.cramersVFromPairs(diagonal, 100L)) ==
-      rows(Text.cramersVFromPairs(diagonal, Long.MaxValue)))
-    // the fixture's small source × lang grid still takes the driver arm
+    // at the production 2M-cell ceiling: an n-cell diagonal table is an
+    // n × n dense grid. n = 1414 is 1,999,396 dense cells (<= 2M) and
+    // takes the driver arm; n = 1415 is 2,002,225 (> 2M) with only 1415
+    // present cells and must grade out to the distributed arm
+    def diagonal(n: Int) = spark.range(n).select(
+      concat(lit("s"), $"id").as("source"), concat(lit("l"), $"id").as("lang"))
+    def jobs(pairs: org.apache.spark.sql.DataFrame): Int =
+      RuntimeScans.countJobs(spark)(Text.cramersVFromPairs(pairs))
+    val under = diagonal(1414)
+    assert(jobs(under) != forcedDistributed(jobs(under)),
+      "the 1414-cell diagonal must take the driver arm")
+    assert(rows(Text.cramersVFromPairs(under)) ==
+      forcedDistributed(rows(Text.cramersVFromPairs(under))))
+    val over = diagonal(1415)
+    assert(jobs(over) == forcedDistributed(jobs(over)),
+      "the 1415-cell diagonal must not take the driver arm")
+    // the fixture's small source × lang grid takes the driver arm
     val fixture = graft.tables.Tables.documents(spark, sf)
       .select($"source", $"lang")
-    val driver = jobs(fixture, Long.MaxValue)
-    assert(driver != jobs(fixture, 0L))
-    assert(RuntimeScans.countJobs(spark)(Text.cramersVFromPairs(fixture)) == driver,
-      "the fixture must still take the driver arm at the default ceiling")
+    assert(jobs(fixture) != forcedDistributed(jobs(fixture)),
+      "the fixture must take the driver arm at the default ceiling")
   }
 
   test("q_source_kl / q_jensen_shannon dispatch arms agree on the fixture") {
-    // round 21: both ride the contingency-grid driver seam; the kill
-    // switch forces the distributed fan — results must be bit-identical
+    // both ride the contingency kernel; the kill switch forces the
+    // distributed fan — results must be bit-identical
     val driverSide =
       (rows(Text.qSourceKl(spark, sf)), rows(Text.qJensenShannon(spark, sf)))
-    val prev = sys.props.get("graft.force.distributed")
-    try {
-      sys.props("graft.force.distributed") = "1"
-      assert(rows(Text.qSourceKl(spark, sf)) == driverSide._1,
-        "source_kl arms disagree")
-      assert(rows(Text.qJensenShannon(spark, sf)) == driverSide._2,
-        "jensen_shannon arms disagree")
-    } finally {
-      prev match {
-        case Some(v) => sys.props("graft.force.distributed") = v
-        case None => sys.props.remove("graft.force.distributed")
-      }
-    }
+    assert(forcedDistributed(rows(Text.qSourceKl(spark, sf))) == driverSide._1,
+      "source_kl arms disagree")
+    assert(forcedDistributed(rows(Text.qJensenShannon(spark, sf))) == driverSide._2,
+      "jensen_shannon arms disagree")
   }
 
   test("q_vocab_growth: monotone curve ending at the full bigram vocabulary") {

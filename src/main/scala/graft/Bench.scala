@@ -94,7 +94,7 @@ object Bench {
         try s.trim.toLong
         catch { case _: NumberFormatException =>
           System.err.println(s"[bench] WARN: SPARK_GRAFT_ORDER_SEED=$s " +
-            "is not a long — ignoring it and shuffling on a fresh seed")
+            "is not a long; ignoring it and shuffling on a fresh seed")
           System.nanoTime()
         }
       case None => System.nanoTime()
@@ -315,7 +315,7 @@ object Bench {
     // the normalized total and the dropped names, so a degraded-host
     // sweep is self-explaining without opening the JSON
     if (moversDropped.nonEmpty)
-      System.err.println(s"[bench] WARN: mover cap saturated — " +
+      System.err.println(s"[bench] WARN: mover cap saturated; " +
         s"${moversDropped.size} movers dropped unretried " +
         s"(value_corrected carries their host inflation; " +
         s"value_normalized ${ms(normalized)} is the honest total): " +

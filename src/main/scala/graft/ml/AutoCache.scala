@@ -1,7 +1,5 @@
 package graft.ml
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
@@ -69,13 +67,9 @@ object AutoCache {
   /** [[selectCacheSet]]'s full decision record — handles aligned with the
     * input order plus the evidence behind the knapsack: per-candidate
     * sizes and benefit-seconds (keyed by label, or the candidate index
-    * when unlabeled) and the scan-bandwidth calibration
-    * (measured-vs-assumed, [[scanCalibration]]) in its OWN field — never
-    * merged into the per-candidate maps (the SolverCostModel.CostReport
-    * discipline). */
+    * when unlabeled). */
   final case class CacheSelection(handles: Seq[CacheHandle],
-      sizes: Map[String, BigInt], benefitSeconds: Map[String, Double],
-      calibration: Map[String, Double])
+      sizes: Map[String, BigInt], benefitSeconds: Map[String, Double])
 
   /** Set-selection under ONE shared budget — the reference AutoCacheRule's
     * actual shape (it picks a cache SET across the whole pipeline DAG
@@ -98,42 +92,24 @@ object AutoCache {
     * ([[profiledSize]]), whose measured wall time IS its sampled
     * recompute cost.
     *
-    * `useMeasuredBandwidth = false` (the default) prices rescans at the
-    * declared [[ScanBwBytesPerSec]] — the SolverCostModel discipline:
-    * decisions must not wobble run to run on a loaded box. `true`
-    * substitutes this JVM's measured bandwidth ([[measuredScanBw]], one
-    * lazy measurement per JVM) into the SAME pricing — on the measured-
-    * 3×-slower disk this box has, a scan-shaped frame's recompute gets
-    * 3× more valuable to cache, which can (and should) flip the picked
-    * set against a compute-profiled rival. The flag only feeds the
-    * default pricing: an injected `profiler` owns pricing outright and
-    * receives the effective bandwidth as its second argument to honor
-    * or ignore.
-    *
     * Returns handles ALIGNED WITH THE INPUT ORDER; only selected frames
     * are persisted, and every handle's `release()` is unconditionally
     * safe (no-op for declined frames). */
   def selectCacheSet(candidates: Seq[Candidate],
       memBudgetBytes: Long = 2L << 30,
-      profiler: (DataFrame, Double) => (BigInt, Double) = estimatedSizeAndCost,
-      useMeasuredBandwidth: Boolean = false)
+      profiler: DataFrame => (BigInt, Double) = estimatedSizeAndCost)
       : Seq[CacheHandle] =
-    selectCore(candidates, memBudgetBytes, profiler, useMeasuredBandwidth)._1
+    selectCore(candidates, memBudgetBytes, profiler)._1
 
   /** [[selectCacheSet]] with the full [[CacheSelection]] decision record.
     * `profiler` is injectable (default: [[estimatedSizeAndCost]]) so the
     * knapsack ordering is testable with deterministic (size, seconds)
-    * pairs instead of wall-clock sleeps. Only THIS entry point pays the
-    * one-time scan-bandwidth measurement for the REPORT —
-    * [[selectCacheSet]] callers that discard the report trigger it only
-    * when they opt into `useMeasuredBandwidth`. */
+    * pairs instead of wall-clock sleeps. */
   def selectCacheSetReported(candidates: Seq[Candidate],
       memBudgetBytes: Long = 2L << 30,
-      profiler: (DataFrame, Double) => (BigInt, Double) = estimatedSizeAndCost,
-      useMeasuredBandwidth: Boolean = false)
+      profiler: DataFrame => (BigInt, Double) = estimatedSizeAndCost)
       : CacheSelection = {
-    val (handles, profiles) =
-      selectCore(candidates, memBudgetBytes, profiler, useMeasuredBandwidth)
+    val (handles, profiles) = selectCore(candidates, memBudgetBytes, profiler)
     // collision-proof report keys: labels verbatim while globally unique
     // against every OTHER key (generated or not); unlabeled candidates
     // get "#<index>"; any clash — repeated labels, or a literal label
@@ -153,34 +129,23 @@ object AutoCache {
         i -> k
       }.toMap
     }
-    val cal =
-      if (candidates.nonEmpty)
-        scanCalibration(candidates.head.df.sparkSession)
-      else Map.empty[String, Double]
     CacheSelection(handles,
       sizes = profiles.map { case (i, (s, _)) => keys(i) -> s },
       benefitSeconds = profiles.map { case (i, (_, sec)) =>
         keys(i) -> (candidates(i).uses - 1).toDouble * sec
-      },
-      calibration = cal)
+      })
   }
 
   private def selectCore(candidates: Seq[Candidate], memBudgetBytes: Long,
-      profiler: (DataFrame, Double) => (BigInt, Double),
-      useMeasuredBandwidth: Boolean)
+      profiler: DataFrame => (BigInt, Double))
       : (Seq[CacheHandle], Map[Int, (BigInt, Double)]) = {
-    // the measurement is one lazy JVM-wide pass; still, only pay it when
-    // something will actually be priced
-    lazy val effBw =
-      if (useMeasuredBandwidth) measuredScanBw(candidates.head.df.sparkSession)
-      else ScanBwBytesPerSec
     // profile ONLY the uses > 1 candidates: the rest are filtered out of
     // the greedy order and can never be selected, and profiling a
     // stat-less frame is a full distributed pass — paid for nothing on a
     // never-cacheable candidate
     val profiles: Map[Int, (BigInt, Double)] = candidates.indices
       .filter(i => candidates(i).uses > 1)
-      .map(i => i -> profiler(candidates(i).df, effBw)).toMap
+      .map(i => i -> profiler(candidates(i).df)).toMap
     val order = candidates.indices
       .filter(i => candidates(i).uses > 1)
       .sortBy { i =>
@@ -207,10 +172,8 @@ object AutoCache {
     * run `body` against the (selectively cached) frames in input order,
     * always release all handles. */
   def withCachedSet[T](candidates: Seq[Candidate],
-      memBudgetBytes: Long = 2L << 30,
-      useMeasuredBandwidth: Boolean = false)(body: Seq[DataFrame] => T): T = {
-    val hs = selectCacheSet(candidates, memBudgetBytes,
-      useMeasuredBandwidth = useMeasuredBandwidth)
+      memBudgetBytes: Long = 2L << 30)(body: Seq[DataFrame] => T): T = {
+    val hs = selectCacheSet(candidates, memBudgetBytes)
     try body(hs.map(_.df)) finally hs.foreach(_.release())
   }
 
@@ -246,86 +209,9 @@ object AutoCache {
   /** Modeled re-scan bandwidth for a frame whose recompute is
     * scan-shaped (trustworthy Catalyst stats = parquet + narrow ops):
     * local-disk parquet at ~1 GB/s. Only the RATIO against measured
-    * profile seconds matters for the knapsack ordering. The DECISION
-    * keeps this declared constant (the SolverCostModel discipline — a
-    * loaded box would wobble selections run to run), but every
-    * [[CacheSelection]] report carries the measured value
-    * ([[scanCalibration]]) so the constant is auditable evidence, not
-    * an article of faith. */
+    * profile seconds matters for the knapsack ordering; a declared
+    * constant keeps the selection the same run to run on a loaded box. */
   private[graft] val ScanBwBytesPerSec = 1e9
-
-  /** Measured-on-this-JVM scan bandwidth for measured-in-decision pricing
-    * ([[selectCacheSet]]'s `useMeasuredBandwidth`): the [[scanCalibration]]
-    * value, behind a test-only override so decision tests pin the
-    * measured/declared ratio deterministically instead of inheriting
-    * whatever this box's disk does under load. The override affects
-    * DECISIONS only — the [[CacheSelection]] calibration field always
-    * carries the genuinely measured evidence. */
-  private[graft] def measuredScanBw(
-      spark: org.apache.spark.sql.SparkSession): Double =
-    measuredBwOverrideForTests.getOrElse(
-      scanCalibration(spark)("cal_scan_bw_bytes_sec"))
-
-  @volatile private[graft] var measuredBwOverrideForTests: Option[Double] =
-    None
-
-  @volatile private var calSink = 0.0 // defeats dead-code elimination
-  @volatile private var scanCal: Map[String, Double] = null
-
-  /** Measured-on-this-JVM scan bandwidth, computed once lazily: writes
-    * ~48 MB of incompressible (hashed) longs to a temp-dir parquet,
-    * times full-column scans of it (best of 3 after one warm run), and
-    * reports disk-bytes/second against the declared constant. The temp
-    * files are deleted after the measurement. */
-  private[graft] def scanCalibration(
-      spark: org.apache.spark.sql.SparkSession): Map[String, Double] = {
-    var c = scanCal
-    if (c == null) synchronized {
-      if (scanCal == null) scanCal = measureScanBw(spark)
-      c = scanCal
-    }
-    c
-  }
-
-  private def measureScanBw(
-      spark: org.apache.spark.sql.SparkSession): Map[String, Double] = {
-    import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft-scan-cal")
-    try {
-      val path = dir.resolve("cal.parquet").toString
-      spark.range(0L, 2L << 20).select(
-        xxhash64(col("id")).as("a"),
-        xxhash64(col("id"), lit(1)).as("b"),
-        xxhash64(col("id"), lit(2)).as("c"))
-        .coalesce(4).write.mode("overwrite").parquet(path)
-      val walkSize = java.nio.file.Files.walk(dir)
-      val bytes =
-        try walkSize.iterator().asScala
-          .filter(p => java.nio.file.Files.isRegularFile(p))
-          .map(java.nio.file.Files.size(_): Long).sum
-        finally walkSize.close()
-      val df = spark.read.parquet(path)
-      var best = Double.MaxValue
-      var r = 0
-      while (r < 4) {
-        val t0 = System.nanoTime()
-        calSink += df.select(avg(hash(col("a"), col("b"), col("c"))))
-          .head().getDouble(0)
-        val dt = (System.nanoTime() - t0) / 1e9
-        if (r > 0) best = math.min(best, dt) // run 0 warms codegen/IO
-        r += 1
-      }
-      Map("cal_scan_bw_bytes_sec" -> bytes.toDouble / math.max(best, 1e-9),
-        "assumed_scan_bw_bytes_sec" -> ScanBwBytesPerSec)
-    } finally {
-      val walkDel = java.nio.file.Files.walk(dir)
-      try walkDel.sorted(
-        java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .iterator().asScala
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      finally walkDel.close()
-    }
-  }
 
   /** Does the optimized plan carry compute Catalyst cannot price — a
     * Scala UDF/UDAF or an object-mapping operator (mapPartitions etc.)?
@@ -349,23 +235,17 @@ object AutoCache {
 
   /** (size bytes, estimated recompute seconds) — the knapsack's two
     * inputs off ONE sizing decision: stats-backed frames price a
-    * re-scan at `scanBw` bytes/sec (declared or measured — the caller's
-    * [[selectCacheSet]] flag decides); stat-less frames — AND
+    * re-scan at [[ScanBwBytesPerSec]]; stat-less frames — AND
     * stats-backed frames carrying opaque compute ([[hasOpaqueCompute]]),
     * whose recompute cost a scan model cannot see — return the measured
     * wall time of the profiling pass (the reference's sampled per-node
     * compute profile), which no bandwidth constant touches. */
-  private[graft] def estimatedSizeAndCost(df: DataFrame, scanBw: Double)
-      : (BigInt, Double) =
+  private[graft] def estimatedSizeAndCost(df: DataFrame): (BigInt, Double) =
     planStats(df) match {
       case Some(size) if !hasOpaqueCompute(df) =>
-        (size, size.toDouble / scanBw)
+        (size, size.toDouble / ScanBwBytesPerSec)
       case _ => profiledSizeAndTime(df)
     }
-
-  /** Declared-constant convenience form (tests, ad-hoc sizing). */
-  private[graft] def estimatedSizeAndCost(df: DataFrame): (BigInt, Double) =
-    estimatedSizeAndCost(df, ScanBwBytesPerSec)
 
   private val SamplePerPartition = 8
 

@@ -532,12 +532,10 @@ object workflow {
   private def dispatchLeastSquares(train: DataFrame, featuresCol: String,
       rawLabels: Column, k: Int, regParam: Double, fitIntercept: Boolean,
       normalEqMaxDim: Int, blockSize: Int, numIter: Int,
-      workersOverride: Option[Int], solverOverride: Option[String])
-      : DispatchResult = {
+      solverOverride: Option[String]): DispatchResult = {
     val d = train.select(size(col(featuresCol))).head().getInt(0)
     val (n, density) = probeProblem(train, featuresCol, d)
-    val workers = workersOverride.getOrElse(
-      train.sparkSession.sparkContext.defaultParallelism)
+    val workers = train.sparkSession.sparkContext.defaultParallelism
     val (modelPick, costs) = graft.ml.SolverCostModel.choose(
       graft.ml.SolverCostModel.Problem(n, d, k, density, workers,
         normalEqMaxDim = normalEqMaxDim, blockSize = blockSize,
@@ -601,7 +599,7 @@ object workflow {
   private val RidgeFloor = 1e-9
 
   private[graft] final case class DispatchResult(solver: String,
-      costs: graft.ml.SolverCostModel.CostReport, density: Double,
+      costs: Map[String, Double], density: Double,
       weights: Array[Array[Double]], intercepts: Array[Double])
 
   /** Scalar-label solver dispatcher (see [[dispatchLeastSquares]] for
@@ -613,18 +611,16 @@ object workflow {
       regParam: Double = 0.0, fitIntercept: Boolean = false,
       normalEqMaxDim: Int = 2048,
       blockSize: Int = 32, numIter: Int = 3,
-      workersOverride: Option[Int] = None,
       solverOverride: Option[String] = None) extends Estimator {
     @volatile var chosenSolver: String = _
-    @volatile var costReport: graft.ml.SolverCostModel.CostReport = _
+    @volatile var costReport: Map[String, Double] = _
     @volatile var probedDensity: Double = _
     @volatile var fittedIntercept: Double = 0.0
 
     def fit(train: DataFrame): Transformer = {
       val r = dispatchLeastSquares(train, featuresCol,
         array(col(labelCol).cast("double")), k = 1, regParam,
-        fitIntercept, normalEqMaxDim, blockSize, numIter,
-        workersOverride, solverOverride)
+        fitIntercept, normalEqMaxDim, blockSize, numIter, solverOverride)
       chosenSolver = r.solver
       costReport = r.costs
       probedDensity = r.density
@@ -653,10 +649,9 @@ object workflow {
       out: String, regParam: Double = 0.0, fitIntercept: Boolean = false,
       normalEqMaxDim: Int = 2048,
       blockSize: Int = 32, numIter: Int = 3,
-      workersOverride: Option[Int] = None,
       solverOverride: Option[String] = None) extends Estimator {
     @volatile var chosenSolver: String = _
-    @volatile var costReport: graft.ml.SolverCostModel.CostReport = _
+    @volatile var costReport: Map[String, Double] = _
     @volatile var probedDensity: Double = _
     @volatile var fittedIntercepts: Array[Double] = _
 
@@ -664,8 +659,7 @@ object workflow {
       val k = train.select(size(col(labelsCol))).head().getInt(0)
       val r = dispatchLeastSquares(train, featuresCol,
         transform(col(labelsCol), _.cast("double")), k = k, regParam,
-        fitIntercept, normalEqMaxDim, blockSize, numIter,
-        workersOverride, solverOverride)
+        fitIntercept, normalEqMaxDim, blockSize, numIter, solverOverride)
       chosenSolver = r.solver
       costReport = r.costs
       probedDensity = r.density

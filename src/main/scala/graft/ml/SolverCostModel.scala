@@ -32,7 +32,11 @@ package graft.ml
   * [[ExactnessWindow]] of the cheapest wins the tie: the reference
   * prefers exact solutions when they cost about the same (exactness
   * order: normal > block-cd > l-bfgs). All constants are deliberately
-  * coarse hardware shapes; dispatch only needs the RATIOS right.
+  * coarse hardware shapes; dispatch only needs the RATIOS right. The
+  * decision reads the declared constants only, so it is the same on
+  * every JVM; `runMain graft.SolverBench regret` measures how far the
+  * pick lands from the fastest route on the machine it runs on
+  * (SOLVER_REGRET.json).
   */
 object SolverCostModel {
 
@@ -43,67 +47,18 @@ object SolverCostModel {
       k: Int, // simultaneous solve targets (1 for a scalar label)
       density: Double, // nnz fraction of the design, in (0, 1]
       workers: Int, // parallel slots the cluster offers
-      driverMemBytes: Long = 4L << 30, // budget for driver-side d×(d+k)
       normalEqMaxDim: Int = 2048, // hard width cap for the gram path
       blockSize: Int = 32, // block-cd column-block width
-      bcdEpochs: Int = 3, // block-cd full sweeps (solver default)
-      lbfgsIters: Int = 100) // MLlib LinearRegression default maxIter
+      bcdEpochs: Int = 3) // block-cd full sweeps (solver default)
 
+  /** Budget for the driver-side d×(d+k) gram of the normal route. */
+  private val DriverMemBytes = 4L << 30
+  /** L-BFGS iterations priced: MLlib LinearRegression's default maxIter. */
+  private val LbfgsIters = 100
   /** Per-worker dense compute rate (flops/s). */
   private val FlopSec = 1e10
   /** Per-worker memory bandwidth for a cached-data pass (bytes/s). */
   private val MemBwSec = 1e10
-
-  /** Documented tolerance for the measured-vs-assumed constants: the
-    * model only needs RATIOS right (the regime tests pin those), so a
-    * calibration within this factor of the declared constant confirms
-    * the declared value; outside it, update the constant. */
-  val CalibrationTolerance = 100.0
-
-  @volatile private var calSink = 0.0 // defeats dead-code elimination
-
-  /** Measured-on-this-JVM physical constants, computed once lazily
-    * (~100 ms): FlopSec from a timed Breeze gemm (the solvers' actual
-    * kernel shape — dev.ludovic BLAS underneath, same as the
-    * distributed gram passes) and MemBwSec from a timed contiguous
-    * array sweep. Dispatch keeps the DECLARED constants by default —
-    * regime ratios are what the tests pin, and a loaded box would
-    * otherwise wobble the decision run to run — but [[choose]] reports
-    * measured-vs-assumed alongside every cost report, and its
-    * `useMeasuredCalibration` flag substitutes the measured values into
-    * the pricing (the regime tests assert both dispatchers agree when
-    * the ratios sit inside the window). */
-  lazy val calibration: Map[String, Double] = {
-    import breeze.linalg.{DenseMatrix => BDM}
-    val n0 = 256
-    val a = BDM.tabulate(n0, n0)((i, j) => ((i * 31 + j * 17) % 97) / 97.0)
-    val b = BDM.tabulate(n0, n0)((i, j) => ((i * 13 + j * 29) % 89) / 89.0)
-    calSink += (a * b).apply(0, 0) // JIT warmup
-    var bestGemm = Double.MaxValue
-    var r = 0
-    while (r < 8) {
-      val t0 = System.nanoTime()
-      calSink += (a * b).apply(n0 - 1, n0 - 1)
-      bestGemm = math.min(bestGemm, (System.nanoTime() - t0) / 1e9)
-      r += 1
-    }
-    val flopSec = 2.0 * n0 * n0 * n0 / math.max(bestGemm, 1e-9)
-    val arr = Array.tabulate(4 << 20)(j => (j % 31).toDouble) // 32 MB
-    var bestSweep = Double.MaxValue
-    r = 0
-    while (r < 8) {
-      val t0 = System.nanoTime()
-      var s = 0.0
-      var j = 0
-      while (j < arr.length) { s += arr(j); j += 1 }
-      calSink += s
-      bestSweep = math.min(bestSweep, (System.nanoTime() - t0) / 1e9)
-      r += 1
-    }
-    val memBw = arr.length * 8.0 / math.max(bestSweep, 1e-9)
-    Map("cal_flop_sec" -> flopSec, "cal_mem_bw_sec" -> memBw,
-      "assumed_flop_sec" -> FlopSec, "assumed_mem_bw_sec" -> MemBwSec)
-  }
   /** Aggregation-tree network cost (s/byte at ~1 GB/s per link). */
   private val NetSecPerByte = 1e-8
   /** Fixed latency of one distributed barrier (scheduling + broadcast). */
@@ -117,13 +72,8 @@ object SolverCostModel {
   private def log2w(workers: Int): Double =
     math.log(workers.toDouble + 1.0) / math.log(2.0)
 
-  /** Estimated seconds per solver; infeasible paths cost +∞.
-    * `flopSec`/`memBwSec` default to the declared constants; [[choose]]
-    * substitutes the measured calibration behind its flag. */
-  def estimates(p: Problem, flopSec: Double = FlopSec,
-      memBwSec: Double = MemBwSec): Map[String, Double] = {
-    val FlopSec = flopSec
-    val MemBwSec = memBwSec
+  /** Estimated seconds per solver; infeasible paths cost +∞. */
+  def estimates(p: Problem): Map[String, Double] = {
     val n = p.n.toDouble.max(1.0)
     val d = p.d.toDouble
     val k = p.k.toDouble
@@ -132,7 +82,7 @@ object SolverCostModel {
     val lg = log2w(p.workers)
 
     val normal: Double =
-      if (p.d > p.normalEqMaxDim || 8.0 * d * (d + k) > p.driverMemBytes.toDouble)
+      if (p.d > p.normalEqMaxDim || 8.0 * d * (d + k) > DriverMemBytes.toDouble)
         Double.PositiveInfinity
       else
         n * d * (d + k) / (w * FlopSec) + // distributed gram + X'y
@@ -147,7 +97,7 @@ object SolverCostModel {
           n * d * 8.0 * rho / (w * MemBwSec) + // touch nnz (sparse rows)
           8.0 * d * k * lg * NetSecPerByte + // gradient aggregation
           PassLatSec
-      p.lbfgsIters * perIter
+      LbfgsIters * perIter
     }
 
     val blockCd: Double = {
@@ -165,48 +115,15 @@ object SolverCostModel {
     Map("normal" -> normal, "l-bfgs" -> lbfgs, "block-cd" -> blockCd)
   }
 
-  /** Per-route estimated costs and the calibration evidence, as SEPARATE
-    * fields: merging them into one Map let any consumer that iterates
-    * values (minBy, sum, a pretty-printed "route costs" table) silently
-    * pick up non-route entries. `apply` is route-only lookup, so
-    * `report("normal")` stays the per-route read it looks like. */
-  case class CostReport(routeCosts: Map[String, Double],
-      calibration: Map[String, Double]) {
-    def apply(route: String): Double = routeCosts(route)
-  }
-
-  /** The dispatch decision plus the full cost report (for observability —
-    * the estimator exposes both, the same way the chosen solver itself is
-    * exposed for tests).
-    *
-    * `useMeasuredCalibration` stays `false` BY DESIGN (round-17 decision,
-    * revisited against a default flip): wherever the flip is safe — the
-    * measured/declared ratios inside the exactness window, which every
-    * measured box so far has satisfied — the flagged and unflagged
-    * dispatchers pick identically, so the flip changes nothing; wherever
-    * it would change something, the decision would hang off a
-    * once-per-JVM microbenchmark taken on a possibly-loaded box, making
-    * the PHYSICAL SOLVER choice nondeterministic across JVM launches for
-    * the same problem. The declared ratios are what the regime tests
-    * pin; the measured evidence rides every [[CostReport]] so a caller
-    * who trusts their box can opt in per call with full information. */
-  def choose(p: Problem,
-      useMeasuredCalibration: Boolean = false): (String, CostReport) = {
-    // The flag substitutes this JVM's measured FlopSec/MemBwSec into the
-    // pricing; the default keeps the declared constants (decisions must
-    // not wobble run to run on a loaded box). On a box whose measured
-    // ratios sit inside the documented tolerance the two dispatchers
-    // agree — asserted by the regime tests.
-    val costs =
-      if (useMeasuredCalibration)
-        estimates(p, calibration("cal_flop_sec"), calibration("cal_mem_bw_sec"))
-      else estimates(p)
+  /** The dispatch decision plus the per-route cost report (for
+    * observability — the estimator exposes both, the same way the chosen
+    * solver itself is exposed for tests). */
+  def choose(p: Problem): (String, Map[String, Double]) = {
+    val costs = estimates(p)
     val cheapest = costs.values.min
     val winner = ExactnessOrder
       .find(s => costs(s) <= cheapest * ExactnessWindow)
       .getOrElse(costs.minBy(_._2)._1)
-    // measured-vs-assumed constants ride along in every report (the
-    // decision itself uses the declared constants — see [[calibration]])
-    (winner, CostReport(costs, calibration))
+    (winner, costs)
   }
 }

@@ -162,6 +162,10 @@ class PipelineSpec extends GraftSuite {
     val (sparseW, sparseCosts) = SolverCostModel.choose(SolverCostModel.Problem(
       n = 10000000L, d = 8192, k = 1, density = 0.02, workers = 256))
     assert(sparseW == "l-bfgs", s"sparse wide must take l-bfgs: $sparseCosts")
+    // the cost report holds exactly the routes, so a consumer iterating
+    // its values sees route costs only
+    assert(tallCosts.keySet == SolverCostModel.ExactnessOrder.toSet,
+      s"the cost report must hold exactly the routes: ${tallCosts.keySet}")
 
     // end-to-end: fit probes n/d/density itself and the decision (and the
     // whole cost report) is observable
@@ -243,59 +247,6 @@ class PipelineSpec extends GraftSuite {
     assert(wideM.chosenSolver == "block-cd", s"${wideM.costReport}")
     rmses(wideScored).foreach(e =>
       assert(e < 1e-3, s"dispatched multi block CD must recover all targets: $e"))
-  }
-
-  test("SolverCostModel calibration: measured constants back the declared ones") {
-    import graft.ml.SolverCostModel
-    val cal = SolverCostModel.calibration
-    val flopRatio = cal("cal_flop_sec") / cal("assumed_flop_sec")
-    val bwRatio = cal("cal_mem_bw_sec") / cal("assumed_mem_bw_sec")
-    info(f"measured flop/s = ${cal("cal_flop_sec")}%.3g " +
-      f"(assumed ${cal("assumed_flop_sec")}%.3g, ratio $flopRatio%.3f)")
-    info(f"measured mem bw = ${cal("cal_mem_bw_sec")}%.3g B/s " +
-      f"(assumed ${cal("assumed_mem_bw_sec")}%.3g, ratio $bwRatio%.3f)")
-    val tol = SolverCostModel.CalibrationTolerance
-    assert(flopRatio > 1.0 / tol && flopRatio < tol,
-      s"declared FlopSec is off by more than ${tol}x — update the constant")
-    assert(bwRatio > 1.0 / tol && bwRatio < tol,
-      s"declared MemBwSec is off by more than ${tol}x — update the constant")
-    // and every dispatch decision carries the evidence — in its own
-    // field, NOT mixed into the route-cost map (a consumer iterating
-    // routeCosts.values must see routes only)
-    val (_, report) = SolverCostModel.choose(SolverCostModel.Problem(
-      n = 1000000L, d = 64, k = 1, density = 1.0, workers = 32))
-    assert(report.calibration.contains("cal_flop_sec") &&
-      report.calibration.contains("cal_mem_bw_sec"))
-    assert(report.routeCosts.keySet == SolverCostModel.ExactnessOrder.toSet,
-      s"routeCosts must hold exactly the routes: ${report.routeCosts.keySet}")
-    // the measured constants can also drive the DECISION behind a flag;
-    // on a box whose measured/declared ratios sit inside the exactness
-    // window the flagged and unflagged dispatchers agree on every
-    // canonical regime (outside it — a badly loaded box — agreement is
-    // not expected and the check reports instead of failing)
-    val regimes = Seq(
-      SolverCostModel.Problem(n = 100000000L, d = 128, k = 1,
-        density = 1.0, workers = 256),
-      SolverCostModel.Problem(n = 10000000L, d = 8192, k = 1,
-        density = 1.0, workers = 256),
-      SolverCostModel.Problem(n = 10000000L, d = 8192, k = 1,
-        density = 0.02, workers = 256),
-      SolverCostModel.Problem(n = 100000000L, d = 512, k = 150,
-        density = 1.0, workers = 256))
-    val window = SolverCostModel.ExactnessWindow
-    // guard BOTH the absolute drifts and their relative shift: opposite-
-    // direction drifts inside the window (e.g. flop 0.3x, bw 3x) move the
-    // flop-vs-bandwidth PRICE ratio ~10x and can legitimately flip a
-    // regime — that is a skip, not a failure
-    if (Seq(flopRatio, bwRatio, flopRatio / bwRatio)
-        .forall(r => r > 1 / window && r < window))
-      regimes.foreach { p =>
-        assert(SolverCostModel.choose(p)._1 ==
-          SolverCostModel.choose(p, useMeasuredCalibration = true)._1,
-          s"flagged and unflagged dispatch must agree at $p")
-      }
-    else info(f"calibration outside the ${window}%.0fx agreement window " +
-      f"(flop $flopRatio%.2f, bw $bwRatio%.2f) — agreement check skipped")
   }
 
   test("every dispatched route optimizes the SAME ridge objective") {
@@ -522,8 +473,7 @@ class PipelineSpec extends GraftSuite {
     // flaky); the profiling PATH keeps its own integration test below
     val a = spark.sparkContext.parallelize(1 to 10, 2).toDF("x")
     val b = spark.sparkContext.parallelize(11 to 20, 2).toDF("x")
-    def profiler(df: org.apache.spark.sql.DataFrame, bw: Double)
-        : (BigInt, Double) =
+    def profiler(df: org.apache.spark.sql.DataFrame): (BigInt, Double) =
       if (df eq a) (BigInt(1000), 2.0) else (BigInt(10000), 0.5)
 
     // expensive-small beats cheap-large for the only slot (benefit is
@@ -547,8 +497,7 @@ class PipelineSpec extends GraftSuite {
 
     // a frame that does not fit is skipped WITHOUT blocking smaller
     // ones: b ranks first on benefit but only a fits the budget
-    def profiler3(df: org.apache.spark.sql.DataFrame, bw: Double)
-        : (BigInt, Double) =
+    def profiler3(df: org.apache.spark.sql.DataFrame): (BigInt, Double) =
       if (df eq a) (BigInt(1000), 2.0) else (BigInt(10000), 1e6)
     val hs3 = AutoCache.selectCacheSet(Seq(
       AutoCache.Candidate(b, uses = 5), AutoCache.Candidate(a, uses = 2)),
@@ -562,9 +511,7 @@ class PipelineSpec extends GraftSuite {
       Seq(AutoCache.Candidate(a, uses = 1)), Long.MaxValue, profiler)
     assert(hs4.map(_.cached) == Seq(false))
 
-    // the decision record: per-candidate evidence keyed by label, and
-    // the measured scan-bandwidth calibration in its OWN field (the
-    // CostReport discipline — never merged into the candidate maps)
+    // the decision record: per-candidate evidence keyed by label
     val sel = AutoCache.selectCacheSetReported(Seq(
       AutoCache.Candidate(a, uses = 3, label = "a"),
       AutoCache.Candidate(b, uses = 2, label = "b")),
@@ -572,105 +519,27 @@ class PipelineSpec extends GraftSuite {
     sel.handles.foreach(_.release())
     assert(sel.sizes == Map("a" -> BigInt(1000), "b" -> BigInt(10000)))
     assert(sel.benefitSeconds == Map("a" -> 4.0, "b" -> 0.5))
-    val measured = sel.calibration("cal_scan_bw_bytes_sec")
-    assert(measured > 0.0 && !measured.isInfinite,
-      s"calibration must carry a finite measured bandwidth: $measured")
-    assert(sel.calibration("assumed_scan_bw_bytes_sec") == 1e9)
-    info(f"measured scan bw = $measured%.3g B/s (assumed 1e9)")
   }
 
-  test("AutoCache measured-bandwidth flag is a no-op under a bw-ignoring profiler") {
-    import spark.implicits._
-    // an injected profiler OWNS pricing — it receives the effective
-    // bandwidth and this one ignores it, so flagged and unflagged runs
-    // must agree exactly (the SolverCostModel flagged/unflagged
-    // agreement discipline). Override pins the measured value so the
-    // flagged run never depends on this box's disk.
-    val a = spark.sparkContext.parallelize(1 to 10, 2).toDF("x")
-    val b = spark.sparkContext.parallelize(11 to 20, 2).toDF("x")
-    def fixed(df: org.apache.spark.sql.DataFrame, bw: Double)
-        : (BigInt, Double) =
-      if (df eq a) (BigInt(1000), 2.0) else (BigInt(10000), 0.5)
-    AutoCache.measuredBwOverrideForTests =
-      Some(AutoCache.ScanBwBytesPerSec / 3.0)
-    try {
-      def run(flag: Boolean) = {
-        val sel = AutoCache.selectCacheSetReported(Seq(
-          AutoCache.Candidate(a, uses = 2, label = "a"),
-          AutoCache.Candidate(b, uses = 2, label = "b")),
-          memBudgetBytes = 10000L, profiler = fixed,
-          useMeasuredBandwidth = flag)
-        val picked = sel.handles.map(_.cached)
-        sel.handles.foreach(_.release())
-        (picked, sel.sizes, sel.benefitSeconds)
-      }
-      assert(run(flag = false) == run(flag = true),
-        "flag must not perturb an injected profiler's decision or report")
-    } finally AutoCache.measuredBwOverrideForTests = None
-  }
-
-  test("AutoCache measured 3x-slower bandwidth flips the picked set") {
-    import spark.implicits._
-    // THE point of the flag: a scan-shaped frame's rescan is 3x more
-    // expensive at the measured bandwidth than the declared constant
-    // says, so against a compute-profiled rival priced between the two
-    // it loses the only slot unflagged and wins it flagged. The
-    // bw-aware profiler replicates the default pricing shape with
-    // deterministic numbers (a 2 MB rescan vs a fixed 4 ms compute
-    // profile) — no wall-clock in the ordering assertions.
-    val scanish = spark.sparkContext.parallelize(1 to 10, 2).toDF("x")
-    val rival = spark.sparkContext.parallelize(11 to 20, 2).toDF("x")
-    def pricing(df: org.apache.spark.sql.DataFrame, bw: Double)
-        : (BigInt, Double) =
-      if (df eq scanish) (BigInt(1000), 2e6 / bw)
-      else (BigInt(1000), 4e-3)
-    AutoCache.measuredBwOverrideForTests =
-      Some(AutoCache.ScanBwBytesPerSec / 3.0)
-    try {
-      def run(flag: Boolean) = {
-        val hs = AutoCache.selectCacheSet(Seq(
-          AutoCache.Candidate(scanish, uses = 2, label = "scan"),
-          AutoCache.Candidate(rival, uses = 2, label = "compute")),
-          memBudgetBytes = 1000L, profiler = pricing,
-          useMeasuredBandwidth = flag)
-        val picked = hs.map(_.cached)
-        hs.foreach(_.release())
-        picked
-      }
-      assert(run(flag = false) == Seq(false, true),
-        "declared 1 GB/s prices the rescan cheap -> the compute frame wins")
-      assert(run(flag = true) == Seq(true, false),
-        "measured 3x-slower disk makes the rescan dear -> the scan frame wins")
-    } finally AutoCache.measuredBwOverrideForTests = None
-  }
-
-  test("AutoCache flag reprices the DEFAULT scan pricing by exactly the ratio") {
-    // end-to-end plumbing through the default profiler: a parquet-backed
-    // frame has trusted Catalyst stats and no opaque compute, so its
-    // benefit is exactly (uses-1) * size/bw — flagged (override = bw/3)
-    // must report exactly 3x the unflagged benefit, same size
-    val dir = java.nio.file.Files.createTempDirectory("graft-ac-bwflag")
+  test("AutoCache default scan pricing reaches the report") {
+    // end-to-end through the default profiler: a parquet-backed frame has
+    // trusted Catalyst stats and no opaque compute, so its reported
+    // benefit is exactly (uses-1) * size / ScanBwBytesPerSec
+    val dir = java.nio.file.Files.createTempDirectory("graft-ac-scanbw")
     try {
       val path = dir.resolve("t.parquet").toString
       spark.range(500).selectExpr("id", "id * 2 AS y")
         .coalesce(1).write.mode("overwrite").parquet(path)
       val base = spark.read.parquet(path)
-      AutoCache.measuredBwOverrideForTests =
-        Some(AutoCache.ScanBwBytesPerSec / 3.0)
-      def run(flag: Boolean) = {
-        val sel = AutoCache.selectCacheSetReported(
-          Seq(AutoCache.Candidate(base, uses = 2, label = "s")),
-          memBudgetBytes = Long.MaxValue, useMeasuredBandwidth = flag)
-        sel.handles.foreach(_.release())
-        (sel.sizes("s"), sel.benefitSeconds("s"))
-      }
-      val (szOff, benOff) = run(flag = false)
-      val (szOn, benOn) = run(flag = true)
-      assert(szOn == szOff, "the flag reprices seconds, never bytes")
-      assert(math.abs(benOn - 3.0 * benOff) <= 1e-12 * benOn.abs.max(1e-300),
-        s"flagged benefit must be exactly 3x: $benOn vs 3 * $benOff")
+      val sel = AutoCache.selectCacheSetReported(
+        Seq(AutoCache.Candidate(base, uses = 2, label = "s")),
+        memBudgetBytes = Long.MaxValue)
+      sel.handles.foreach(_.release())
+      assert(sel.sizes("s") == AutoCache.estimatedSize(base))
+      assert(sel.benefitSeconds("s") ==
+        sel.sizes("s").toDouble / AutoCache.ScanBwBytesPerSec,
+        s"benefit must be the declared rescan price: ${sel.benefitSeconds}")
     } finally {
-      AutoCache.measuredBwOverrideForTests = None
       val walk = java.nio.file.Files.walk(dir)
       try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
         .iterator().asScala.foreach(p => java.nio.file.Files.deleteIfExists(p))
@@ -686,8 +555,8 @@ class PipelineSpec extends GraftSuite {
     // the report maps.
     val frames = (0 until 4).map(i =>
       spark.sparkContext.parallelize(Seq(i), 1).toDF("x"))
-    def fixed(df: org.apache.spark.sql.DataFrame, bw: Double)
-        : (BigInt, Double) = (BigInt(10), 1.0)
+    def fixed(df: org.apache.spark.sql.DataFrame): (BigInt, Double) =
+      (BigInt(10), 1.0)
     val sel = AutoCache.selectCacheSetReported(Seq(
       AutoCache.Candidate(frames(0), uses = 2, label = "a"),
       AutoCache.Candidate(frames(1), uses = 3, label = "a"),

@@ -204,7 +204,7 @@ object Dedup {
     *
     * Size-aware dispatch via the shared [[graft.ops.Dist.sizeDispatch]]
     * seam: the raw pair set is checkpointed and counted; when it fits
-    * comfortably on the driver (`localThreshold` edges — bounded by
+    * comfortably on the driver ([[LocalMaxEdges]] edges — bounded by
     * construction, NOT corpus-sized) the components are solved with
     * driver union-find in O(E·α) and zero further Spark jobs, because
     * label propagation's per-round scheduling overhead dwarfs the actual
@@ -219,14 +219,14 @@ object Dedup {
     * ~1.25× elevated same-run reference) normalize to ≈2.6 s. Host
     * band; no revert. */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-      maxIter: Int = 20, localThreshold: Long = 1000000L): DataFrame = {
+      maxIter: Int = 20): DataFrame = {
     // the shared size-dispatch seam checkpoints the RAW pair set first:
     // the (possibly expensive) pair producer materializes exactly once;
     // symmetrization below reads the checkpoint twice instead of
     // recomputing the upstream twice
     graft.ops.Dist.sizeDispatch(
       pairs.select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v")),
-      localThreshold)((p, _) => ccLocal(p)) { (p, _) =>
+      LocalMaxEdges)((p, _) => ccLocal(p)) { (p, _) =>
       val edges = p
         .union(p.select(col("v").as("u"), col("u").as("v")))
         .distinct()
@@ -260,6 +260,10 @@ object Dedup {
       labels.select(col("node"), col("label").as("component"))
     }
   }
+
+  /** [[connectedComponents]]' ceiling for the driver union-find, in raw
+    * pairs. */
+  private val LocalMaxEdges = 1000000L
 
   /** Driver union-find (union-by-min + path compression) for edge sets
     * under the dispatch threshold; takes the RAW (unsymmetrized) pairs —

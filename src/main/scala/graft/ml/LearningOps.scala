@@ -21,7 +21,7 @@ import graft.ml.workflow.{Estimator, Transformer}
   */
 object LearningOps extends Serializable {
 
-  private def withVec(df: DataFrame, in: String): DataFrame =
+  private[ml] def withVec(df: DataFrame, in: String): DataFrame =
     df.withColumn("__features", array_to_vector(transform(col(in), _.cast("double"))))
 
   /** ref: nodes.stats.RandomSignNode — multiply by a fixed Rademacher ±1

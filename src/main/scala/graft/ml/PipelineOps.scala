@@ -315,19 +315,16 @@ object workflow {
 
   // ------------------------------------------------------- MLlib estimators
 
-  private def withVec(df: DataFrame, in: String): DataFrame =
-    df.withColumn("__features", array_to_vector(transform(col(in), _.cast("double"))))
-
   private val toSparseVec = udf { (xs: Seq[Double]) =>
     org.apache.spark.ml.linalg.Vectors.dense(xs.toArray).toSparse
       : org.apache.spark.ml.linalg.Vector
   }
 
-  /** [[withVec]], but compacting to MLlib sparse vectors when the
+  /** [[LearningOps.withVec]], but compacting to MLlib sparse vectors when the
     * dispatcher knows the design is sparse — iterative gradient solvers
     * then pay nnz per pass instead of d. */
   private def withVecAuto(df: DataFrame, in: String, sparse: Boolean): DataFrame =
-    if (!sparse) withVec(df, in)
+    if (!sparse) LearningOps.withVec(df, in)
     else df.withColumn("__features",
       toSparseVec(transform(col(in), _.cast("double"))))
 
@@ -360,9 +357,9 @@ object workflow {
         .setFeaturesCol("__features").setLabelCol(labelCol)
         .setPredictionCol(out).setRawPredictionCol("__raw")
         .setProbabilityCol("__prob")
-        .fit(withVec(train, featuresCol))
+        .fit(LearningOps.withVec(train, featuresCol))
       Transformer { df =>
-        model.transform(withVec(df, featuresCol))
+        model.transform(LearningOps.withVec(df, featuresCol))
           .withColumn(s"${out}_scores", vector_to_array(col("__raw")))
           .drop("__features", "__raw", "__prob")
       }
@@ -378,9 +375,9 @@ object workflow {
         .setFeaturesCol("__features").setLabelCol(labelCol)
         .setPredictionCol(out).setRawPredictionCol("__raw")
         .setProbabilityCol("__prob")
-        .fit(withVec(train, featuresCol))
+        .fit(LearningOps.withVec(train, featuresCol))
       Transformer { df =>
-        model.transform(withVec(df, featuresCol)).drop("__features", "__raw", "__prob")
+        model.transform(LearningOps.withVec(df, featuresCol)).drop("__features", "__raw", "__prob")
       }
     }
   }
@@ -394,8 +391,8 @@ object workflow {
       val model = new org.apache.spark.ml.clustering.KMeans()
         .setK(k).setSeed(seed)
         .setFeaturesCol("__features").setPredictionCol(out)
-        .fit(withVec(train, featuresCol))
-      Transformer { df => model.transform(withVec(df, featuresCol)).drop("__features") }
+        .fit(LearningOps.withVec(train, featuresCol))
+      Transformer { df => model.transform(LearningOps.withVec(df, featuresCol)).drop("__features") }
     }
   }
 
@@ -407,9 +404,9 @@ object workflow {
       try {
         val model = new org.apache.spark.ml.feature.PCA()
           .setK(k).setInputCol("__features").setOutputCol("__pca")
-          .fit(withVec(train, featuresCol))
+          .fit(LearningOps.withVec(train, featuresCol))
         Transformer { df =>
-          model.transform(withVec(df, featuresCol))
+          model.transform(LearningOps.withVec(df, featuresCol))
             .withColumn(out, vector_to_array(col("__pca")))
             .drop("__features", "__pca")
         }
@@ -682,9 +679,9 @@ object workflow {
       val mh = new org.apache.spark.ml.feature.MinHashLSH()
         .setNumHashTables(numHashTables).setSeed(seed)
         .setInputCol("__features").setOutputCol("__hashes")
-      val model = mh.fit(withVec(train, featuresCol))
+      val model = mh.fit(LearningOps.withVec(train, featuresCol))
       Transformer { df =>
-        val v = withVec(df, featuresCol)
+        val v = LearningOps.withVec(df, featuresCol)
         model.approxSimilarityJoin(v, v, maxJaccardDist, "jaccard_dist")
           .select(
             col(s"datasetA.$idCol").as("id_a"),

@@ -983,7 +983,7 @@ object Analytics {
     * per-key total count) is appended for callers that interpolate.
     *
     * SIZE-DISPATCHED (same discipline as
-    * [[graft.ml.Dedup.connectedComponents]]): below `windowMaxRows`
+    * [[graft.ml.Dedup.connectedComponents]]): below [[WindowMaxRows]]
     * distinct (key, v) rows the one-window spelling wins — a running
     * count over each key's distinct values is one sort task per key, and
     * at bounded cardinality (integer cents, dates, scores) that task
@@ -993,12 +993,18 @@ object Analytics {
     * bounded regardless of scale. The dispatch count() is a cheap pass
     * over the count relation (callers checkpoint theirs). Both paths
     * select the identical exact value (asserted against each other in
-    * AnalyticsSpec). */
+    * AnalyticsSpec). Both are distributed spellings — there is no driver
+    * arm — so the choice stays off [[Dist.sizeDispatch]], whose
+    * `localCheckpoint` would materialize a second time relations that
+    * callers have already checkpointed. */
   private[graft] def ranksOfCounts(vc: DataFrame, key: String, v: String,
-      ranks: Seq[(String, Column => Column)],
-      windowMaxRows: Long = 4000000L): DataFrame =
-    if (vc.count() <= windowMaxRows) ranksOfCountsWindow(vc, key, v, ranks)
+      ranks: Seq[(String, Column => Column)]): DataFrame =
+    if (vc.count() <= WindowMaxRows) ranksOfCountsWindow(vc, key, v, ranks)
     else ranksOfCountsBucketed(vc, key, v, ranks)
+
+  /** [[ranksOfCounts]]' ceiling for the one-window spelling, in distinct
+    * (key, v) rows. */
+  private val WindowMaxRows = 4000000L
 
   /** One-window rank selection: per-key running count over distinct
     * values, conditional MIN picks each requested rank's value. One sort
@@ -1510,20 +1516,52 @@ object Analytics {
     * self-join), one weight aggregation on the undirected x<y half
     * counted twice, a LEFT join from the supplier dimension to pick up
     * isolates, and a degree-domain-bounded histogram aggregate. */
-  /** The ≥20-shared-orders supplier affinity graph as undirected (x<y)
-    * edges — shared by [[qDegreeDistribution]] and [[qLinkPredict]].
-    * Bounded per-order pair generation via the compiled `graft_pairs`
-    * kernel; one orderkey shuffle, one (x, y)-keyed weight aggregate. */
-  private def affinityEdges(spark: SparkSession, sfDir: String): DataFrame = {
+  /** The co-purchase graph over lineitem column `key` (`l_suppkey` or
+    * `l_partkey`) as undirected (x, y), x < y edges: the pairs of keys
+    * that share at least `minShared` orders. The one edge build of every
+    * graph query: per-order sorted key sets through the compiled
+    * `graft_pairs` kernel (one orderkey shuffle, fan-out bounded by the
+    * lineitems per order, never an all-pairs self-join), then one
+    * (x, y)-keyed count and the threshold. `minShared = 1` is the simple
+    * (DISTINCT) graph; the raw graph is quasi-complete at every tested
+    * SF, so the other callers sparsify it to real affinity edges. */
+  private[graft] def coPurchaseEdges(spark: SparkSession, sfDir: String,
+      key: String, minShared: Long): DataFrame = {
     import spark.implicits._
     Tables.lineitem(spark, sfDir)
       .groupBy($"l_orderkey")
-      .agg(sort_array(collect_set($"l_suppkey")).as("ss"))
-      .select(explode(call_function("graft_pairs", $"ss", lit(false))).as("e"))
-      .groupBy($"e.x", $"e.y").agg(count(lit(1)).as("w"))
-      .where($"w" >= 20)
+      .agg(sort_array(collect_set(col(key))).as("ks"))
+      .select(explode(call_function("graft_pairs", $"ks", lit(false))).as("e"))
+      .groupBy($"e.x".as("x"), $"e.y".as("y"))
+      .agg(count(lit(1)).as("c"))
+      .where($"c" >= minShared)
       .select($"x", $"y")
   }
+
+  /** Both directions of each undirected (x, y) edge, as (src, dst) rows
+    * from one explode — no self-union, one pass over `half`. */
+  private def directed(half: DataFrame): DataFrame =
+    half
+      .select(explode(array(
+        struct(col("x").as("src"), col("y").as("dst")),
+        struct(col("y").as("src"), col("x").as("dst")))).as("p"))
+      .select(col("p.src"), col("p.dst"))
+
+  /** The one edge ceiling of the graph driver arms (PageRank, triangle
+    * closure, label propagation, k-core): 2M edge tuples × 16 B/row ≈
+    * 32 MB, comfortably inside a default driver/broadcast budget and far
+    * below where a collect or a hard broadcast hint would OOM. Each site
+    * keeps its own measure: PageRank and label propagation count directed
+    * edges, the triangle closure and k-core undirected ones. Under it the
+    * iterative sites run their whole loop on the collected edge array and
+    * the triangle closure broadcasts its edge set; above it every site
+    * degrades to shuffles. */
+  private val GraphDriverMaxEdges = 2000000L
+
+  /** The ≥20-shared-orders supplier affinity graph — shared by
+    * [[qDegreeDistribution]], [[qAssortativity]] and [[qLinkPredict]]. */
+  private def affinityEdges(spark: SparkSession, sfDir: String): DataFrame =
+    coPurchaseEdges(spark, sfDir, "l_suppkey", 20)
 
   private val affinityEdgesSql: String =
     """SELECT a.l_suppkey AS x, b.l_suppkey AS y
@@ -1822,37 +1860,16 @@ object Analytics {
       .orderBy($"rank_ppm".desc, $"suppkey")
   }
 
-  /** [[qPagerank]]'s undirected half-edge build: the DISTINCT (x < y)
-    * supplier co-purchase pairs. Round 21 (guide §2.4): the dispatch
-    * relation is now THIS half set — the former pipeline mirrored both
-    * directions and ran a src-partitioned outdeg window BEFORE the
-    * size-dispatch checkpoint, so the checkpoint materialized (and the
-    * driver arm collected) 2|E| windowed rows; the mirror and the degree
-    * are recomputed from the half set by whichever arm needs them (the
-    * driver arm derives degrees in one local pass, the distributed arm
-    * via [[pagerankHalf]]'s post-checkpoint mirror — same exchange count as
-    * before, half the materialized/collected bytes, one full-relation
-    * window+sort removed from the driver path). */
+  /** [[qPagerank]]'s undirected half-edge set: the DISTINCT (x < y)
+    * supplier co-purchase pairs (`minShared = 1`). The dispatch relation
+    * is this half set, not the mirrored one: the mirror and the degrees
+    * are recomputed by whichever arm needs them (the driver arm in one
+    * local pass, the distributed arm via [[pagerankHalf]]'s
+    * post-checkpoint mirror), so the checkpoint materializes and the
+    * driver arm collects |E| rows, not 2|E| windowed ones. */
   private[graft] def qPagerankHalfEdges(spark: SparkSession,
-      sfDir: String): DataFrame = {
-    import spark.implicits._
-    // per-order supplier sets → compiled pair kernel (no self-join): one
-    // orderkey shuffle, bounded per-order fan-out, then the simple-graph
-    // distinct
-    Tables.lineitem(spark, sfDir)
-      .groupBy($"l_orderkey")
-      .agg(sort_array(collect_set($"l_suppkey")).as("ss"))
-      .select(explode(call_function("graft_pairs", $"ss", lit(false))).as("e"))
-      .select($"e.x", $"e.y").distinct()
-  }
-
-  /** Edge ceiling for the driver arm: 2M (src, dst, od) tuples — the
-    * triangle-count broadcast budget. The three synchronous iterations
-    * are each a BROADCAST round trip (collect ranks to the driver, ship
-    * to executors, aggregate back), so under the ceiling the whole loop
-    * runs directly on the collected edge array instead — same integer
-    * algebra, no per-iteration exchange. */
-  private val PagerankDriverMaxEdges = 2000000L
+      sfDir: String): DataFrame =
+    coPurchaseEdges(spark, sfDir, "l_suppkey", 1)
 
   /** Three synchronous ppm-integer PageRank iterations over a node table
     * ("node") and an undirected (x, y) HALF-edge relation — the algorithm
@@ -1876,7 +1893,7 @@ object Analytics {
       halfIn: DataFrame): DataFrame = {
     val spark = nodes.sparkSession
     import spark.implicits._
-    Dist.sizeDispatch(halfIn, PagerankDriverMaxEdges,
+    Dist.sizeDispatch(halfIn, GraphDriverMaxEdges,
         measure = (_, n) => n * 2) { (half, _) =>
       val hs = half.select($"x", $"y").as[(Long, Long)].collect()
       val ns = nodes.select($"node".cast("long")).as[Long].collect()
@@ -1919,11 +1936,7 @@ object Analytics {
       // Checkpointing restores the old distributed shape; the half
       // checkpoint the dispatch already paid is the cheap, window-free
       // side.
-      val edges = half
-        .select(explode(array(
-          struct($"x".as("src"), $"y".as("dst")),
-          struct($"y".as("src"), $"x".as("dst")))).as("p"))
-        .select($"p.src", $"p.dst")
+      val edges = directed(half)
         .withColumn("od", count(lit(1)).over(Window.partitionBy($"src")))
         .localCheckpoint(true)
       var ranks = nodes.select($"node", lit(1000000L).as("r"))
@@ -1977,10 +1990,9 @@ object Analytics {
     * *undirected* pair set (each triangle counted exactly once at its
     * lowest vertex, whatever the orientation of the far edge). Degrees are
     * node-cardinality (broadcast); the thresholded edge set is
-    * data-derived, so the closure join is SIZE-DISPATCHED: the edge count
-    * is read off the already-materialized checkpoint (a cheap local job),
-    * and the broadcast hint is applied only under
-    * [[TriangleBroadcastMaxEdges]] — above it the closure runs as a plain
+    * data-derived, so the closure join is SIZE-DISPATCHED (see
+    * [[trianglesOfPairs]]): the broadcast hint is applied only under
+    * [[GraphDriverMaxEdges]] — above it the closure runs as a plain
     * shuffle equi-join on (x, y), so a dense graph degrades to a shuffle
     * instead of OOMing the driver. The oriented wedge relation is
     * checkpointed once (deg, wedges and closure all read it) but NOT
@@ -1989,47 +2001,25 @@ object Analytics {
     * repartition never reaches the join and is a wasted exchange.
     * All arithmetic is integer-exact. */
   def qTriangleCount(spark: SparkSession, sfDir: String): DataFrame =
-    triangleCount(spark, sfDir, TriangleBroadcastMaxEdges)
-
-  /** Edge-count ceiling for broadcasting the closure side of the triangle
-    * join: 2M edges × 16 B/row ≈ 32 MB — comfortably inside a default
-    * driver/broadcast budget, far below where a hard hint would OOM. */
-  private val TriangleBroadcastMaxEdges = 2000000L
-
-  /** [[qTriangleCount]] with the broadcast dispatch threshold exposed so
-    * tests can force the shuffle path (threshold 0) and assert both plans
-    * agree and neither carries an unconditional broadcast hint. */
-  private[graft] def triangleCount(spark: SparkSession, sfDir: String,
-      broadcastMaxEdges: Long): DataFrame = {
-    import spark.implicits._
-    // one orderkey shuffle → compiled pair kernel → co-occurrence counts;
-    // x < y by construction (sorted set), one row per unordered pair
-    val pairs = Tables.lineitem(spark, sfDir)
-      .groupBy($"l_orderkey")
-      .agg(sort_array(collect_set($"l_suppkey")).as("ss"))
-      .select(explode(call_function("graft_pairs", $"ss", lit(false))).as("e"))
-      .groupBy($"e.x".as("x"), $"e.y".as("y"))
-      .agg(count(lit(1)).as("c"))
-      .where($"c" >= 6).select($"x", $"y")
-    trianglesOfPairs(pairs, broadcastMaxEdges)
-  }
+    trianglesOfPairs(coPurchaseEdges(spark, sfDir, "l_suppkey", 6))
 
   /** Degree-oriented triangle count over a prepared undirected pair set
     * (x, y with x < y, one row per edge) — the algorithm core of
     * [[qTriangleCount]], extracted so the ScalingSpec slope canary can
     * drive it with a fixed-density synthetic graph. Returns per-apex
-    * triangle counts ordered by node id. */
-  private[graft] def trianglesOfPairs(pairsIn: DataFrame,
-      broadcastMaxEdges: Long): DataFrame = {
-    val spark = pairsIn.sparkSession
+    * triangle counts ordered by node id. The pair set is the dispatch
+    * relation (checkpointed once: deg, ori and the closure all read it);
+    * the driver arm broadcasts it into the closure join, the distributed
+    * arm shuffles it there. */
+  private[graft] def trianglesOfPairs(pairsIn: DataFrame): DataFrame =
+    Dist.sizeDispatch(pairsIn, GraphDriverMaxEdges)(
+      (pairs, _) => closeTriangles(pairs, broadcast(pairs)))(
+      (pairs, _) => closeTriangles(pairs, pairs))
+
+  private def closeTriangles(pairs: DataFrame,
+      closure: DataFrame): DataFrame = {
+    val spark = pairs.sparkSession
     import spark.implicits._
-    val pairs = pairsIn
-      .localCheckpoint(true) // one diamond: deg, ori, closure all read it
-    // the checkpoint is already materialized, so this count is a cheap
-    // local job — it drives the closure join's broadcast-vs-shuffle
-    // dispatch (a hard broadcast hint on a data-derived edge set would
-    // override Spark's size checks and OOM the driver at real scale)
-    val nEdges = pairs.count()
     val deg = pairs.select($"x".as("n")).unionAll(pairs.select($"y".as("n")))
       .groupBy($"n").agg(count(lit(1)).as("d"))
     // checkpoint the oriented edges: deg/wedge/closure all read them.
@@ -2055,7 +2045,6 @@ object Analytics {
     val wedges = ori.alias("e1")
       .join(ori.alias("e2"), $"e1.u" === $"e2.u" && $"e1.v" < $"e2.v")
       .select($"e1.u".as("apex"), $"e1.v".as("b"), $"e2.v".as("cc"))
-    val closure = if (nEdges <= broadcastMaxEdges) broadcast(pairs) else pairs
     wedges
       .join(closure, $"b" === $"x" && $"cc" === $"y")
       .groupBy($"apex".as("suppkey"))
@@ -2102,18 +2091,7 @@ object Analytics {
     * singleton community. */
   def qLabelProp(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val pairs0 = Tables.lineitem(spark, sfDir)
-      .groupBy($"l_orderkey")
-      .agg(sort_array(collect_set($"l_suppkey")).as("ss"))
-      .select(explode(call_function("graft_pairs", $"ss", lit(false))).as("e"))
-      .groupBy($"e.x".as("x"), $"e.y".as("y"))
-      .agg(count(lit(1)).as("c"))
-      .where($"c" >= 6)
-    val edges0 = pairs0
-      .select(explode(array(
-        struct($"x".as("src"), $"y".as("dst")),
-        struct($"y".as("src"), $"x".as("dst")))).as("p"))
-      .select($"p.src", $"p.dst")
+    val edges0 = directed(coPurchaseEdges(spark, sfDir, "l_suppkey", 6))
     val nodes = Tables.supplier(spark, sfDir).select($"s_suppkey".as("node"))
     Dist.sizeDispatch(edges0, GraphDriverMaxEdges) { (edges, _) =>
       val es = edges.as[(Long, Long)].collect()
@@ -2202,14 +2180,6 @@ object Analytics {
     * The spec asserts true convergence on a synthetic pendant graph. */
   private val KcorePeelRounds = 12
 
-  /** Shared edge ceiling for the iterative-graph driver arms (k-core
-    * peel, label propagation): 2M edge tuples — the triangle-count
-    * broadcast budget. Each distributed round is checkpoint + count (or
-    * broadcast + window) driver round trips; under the ceiling the whole
-    * loop runs on the collected edge array with the identical
-    * round/convergence semantics. */
-  private val GraphDriverMaxEdges = 2000000L
-
   /** K-core decomposition (k = 3) of the part co-purchase graph: nodes
     * are parts, edges join parts co-ordered in ≥ 2 orders, and the 3-core
     * is what survives repeatedly peeling nodes of degree < 3 — the
@@ -2229,13 +2199,7 @@ object Analytics {
   def qKcore(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val k = 3
-    val edges0 = Tables.lineitem(spark, sfDir)
-      .groupBy($"l_orderkey")
-      .agg(sort_array(collect_set($"l_partkey")).as("ps"))
-      .select(explode(call_function("graft_pairs", $"ps", lit(false))).as("e"))
-      .groupBy($"e.x".as("x"), $"e.y".as("y"))
-      .agg(count(lit(1)).as("c"))
-      .where($"c" >= 2).select($"x", $"y")
+    val edges0 = coPurchaseEdges(spark, sfDir, "l_partkey", 2)
     Dist.sizeDispatch(edges0, GraphDriverMaxEdges) { (edges, _) =>
       var alive = edges.as[(Long, Long)].collect()
       var n = alive.length
@@ -2336,18 +2300,7 @@ object Analytics {
     * strategy at real scale. */
   def qKhopReach(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val pairs = Tables.lineitem(spark, sfDir)
-      .groupBy($"l_orderkey")
-      .agg(sort_array(collect_set($"l_suppkey")).as("ss"))
-      .select(explode(call_function("graft_pairs", $"ss", lit(false))).as("e"))
-      .groupBy($"e.x".as("x"), $"e.y".as("y"))
-      .agg(count(lit(1)).as("c"))
-      .where($"c" >= 6)
-    val edges = pairs
-      .select(explode(array(
-        struct($"x".as("src"), $"y".as("dst")),
-        struct($"y".as("src"), $"x".as("dst")))).as("p"))
-      .select($"p.src", $"p.dst")
+    val edges = directed(coPurchaseEdges(spark, sfDir, "l_suppkey", 6))
       .localCheckpoint(true)
     val hop2 = edges.as("e1")
       .join(edges.as("e2"), $"e1.dst" === $"e2.src")
@@ -2394,50 +2347,36 @@ object Analytics {
     * recursive walks of length ≤ 4. Pure integer distances, node-id
     * tie-breaks nowhere needed (min is total).
     *
-    * Scale shape: the edge relation is localCheckpointed ONCE and reused
-    * by all rounds (same discipline as [[qPagerank]]), then SIZE
-    * DISPATCHED like Dedup's connectedComponents — |E| ≤ 1M: exact
-    * driver BFS (hops rounds of micro-shuffles cost more than the whole
-    * answer); above: distributed min-relaxation, one equi-join frontier
-    * expansion + min aggregation per round over node-cardinality
-    * fixed-width rows, the 1-row source anchor the only broadcast, and a
-    * per-round localCheckpoint so lineage never compounds. */
+    * Scale shape: the undirected pair set is localCheckpointed ONCE and
+    * reused by all rounds (same discipline as [[qPagerank]]), then SIZE
+    * DISPATCHED like Dedup's connectedComponents — 2|E| ≤ 1M directed
+    * edges: exact driver BFS (hops rounds of micro-shuffles cost more
+    * than the whole answer); above: distributed min-relaxation, one
+    * equi-join frontier expansion + min aggregation per round over
+    * node-cardinality fixed-width rows, the 1-row source anchor the only
+    * broadcast, and a per-round localCheckpoint so lineage never
+    * compounds. */
   def qShortestPath(spark: SparkSession, sfDir: String): DataFrame =
-    shortestPathImpl(spark, sfDir, driverMaxEdges = 1000000L)
+    shortestPathOfPairs(coPurchaseEdges(spark, sfDir, "l_suppkey", 6))
 
-  /** [[qShortestPath]] with the dispatch threshold exposed: the test
-    * suite forces `driverMaxEdges = 0` to exercise the distributed
-    * relaxation arm at test scale. */
-  private[graft] def shortestPathImpl(spark: SparkSession, sfDir: String,
-      driverMaxEdges: Long): DataFrame = {
+  /** Edge ceiling for [[shortestPathOfPairs]]' driver BFS, in directed
+    * edges: 1M (src, dst) tuples. */
+  private val ShortestPathDriverMaxEdges = 1000000L
+
+  /** 4-hop BFS distances from the smallest node of an undirected pair set
+    * (x, y with x < y, one row per edge) — the algorithm core of
+    * [[qShortestPath]], the same shape as [[trianglesOfPairs]] and
+    * [[pagerankHalf]]. Returns (suppkey, dist) for every reached node,
+    * ordered by node id. */
+  private[graft] def shortestPathOfPairs(pairs: DataFrame): DataFrame = {
+    val spark = pairs.sparkSession
     import spark.implicits._
     val hops = 4
-    val pairs = Tables.lineitem(spark, sfDir)
-      .groupBy($"l_orderkey")
-      .agg(sort_array(collect_set($"l_suppkey")).as("ss"))
-      .select(explode(call_function("graft_pairs", $"ss", lit(false))).as("e"))
-      .groupBy($"e.x".as("x"), $"e.y".as("y"))
-      .agg(count(lit(1)).as("c"))
-      .where($"c" >= 6)
-    val edges = pairs
-      .select(explode(array(
-        struct($"x".as("src"), $"y".as("dst")),
-        struct($"y".as("src"), $"x".as("dst")))).as("p"))
-      .select($"p.src", $"p.dst")
-      .localCheckpoint(true)
-    // Size-aware dispatch, the SAME discipline as Dedup's
-    // connectedComponents: a single-source BFS's working state is the
-    // edge set — under the threshold a driver BFS is exact, O(|E|·hops),
-    // and avoids `hops` rounds of micro-shuffles; above it, distributed
-    // iterative min-relaxation with a per-round localCheckpoint.
-    if (edges.count() <= driverMaxEdges) {
-      val adj = edges.collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
+    Dist.sizeDispatch(pairs, ShortestPathDriverMaxEdges,
+        measure = (_, n) => n * 2) { (half, _) =>
+      val adj = half.as[(Long, Long)].collect()
+        .flatMap { case (x, y) => Seq(x -> y, y -> x) }
         .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2) }
-      // empty graph (degenerate corpus): no source exists, the BFS
-      // result is the empty relation — not an empty.min throw
-      if (adj.isEmpty)
-        return Seq.empty[(Long, Long)].toDF("suppkey", "dist")
       val src = adj.keysIterator.min
       var dist = Map(src -> 0L)
       var frontier = Seq(src)
@@ -2446,7 +2385,8 @@ object Analytics {
         dist ++= frontier.iterator.map(_ -> d)
       }
       dist.toSeq.sorted.toDF("suppkey", "dist").orderBy($"suppkey")
-    } else {
+    } { (half, _) =>
+      val edges = directed(half)
       val source = edges.agg(min($"src").as("s"))
       var dist = edges.select($"src".as("node"))
         .union(edges.select($"dst".as("node")))

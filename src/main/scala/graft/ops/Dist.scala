@@ -58,7 +58,9 @@ object Dist {
     * CARDINALITY-BOUNDED BY CONSTRUCTION (value-count grids, calendar
     * pairs, thresholded edge sets) — never corpus-sized — so the
     * driver arm's collect is a bounded model-state pull, not a corpus
-    * collect. `measure` maps the row count into ceiling space when the
+    * collect. A driver arm may also broadcast the bounded relation
+    * instead of collecting it (the triangle closure's does): the ceiling
+    * then bounds what ships to every executor. `measure` maps the row count into ceiling space when the
     * driver arm's footprint is super-linear in rows (Theil–Sen tests
     * pairs = n(n−1)/2), or reads the driver arm's real work off the
     * checkpoint when the row count does not bound it (Cramér's V walks

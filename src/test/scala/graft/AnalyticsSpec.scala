@@ -339,6 +339,50 @@ class AnalyticsSpec extends GraftSuite {
       "production half-edge ranks drifted from the scalar replay")
   }
 
+  test("graph dispatch arms agree on adversarial edge shapes") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    // every graph size dispatch — the triangle closure, the shortest-path
+    // BFS, PageRank and Dedup's connected components — runs as is and
+    // under the kill switch on four undirected (x < y) edge sets; the rows
+    // must be equal, and every non-empty shape must take the driver arm
+    // by default (an empty edge set routes distributed either way)
+    def edges(ps: Seq[(Long, Long)]) = ps.toDF("x", "y")
+    val shapes = Seq(
+      "empty" -> edges(Seq.empty),
+      "one edge" -> edges(Seq((3L, 7L))),
+      "star" -> edges((1L to 50L).map(0L -> _)),
+      "two components" -> edges(Seq((0L, 1L), (0L, 2L), (1L, 2L), (2L, 3L),
+        (10L, 11L), (11L, 12L), (10L, 12L))))
+    val nodes = spark.range(60).select($"id".as("node"))
+    def plan(df: DataFrame) = df.queryExecution.optimizedPlan.toString
+    // the triangle closure reads the checkpointed pair set on both arms:
+    // its driver arm is the closure's one extra broadcast hint. The other
+    // driver arms build their result on the driver, so only their
+    // distributed arms read the checkpoint (a LogicalRDD)
+    def hints(df: DataFrame) = plan(df).sliding(9).count(_ == "broadcast")
+    def checkpointOnlyForced(d: DataFrame, f: DataFrame) =
+      !plan(d).contains("LogicalRDD") && plan(f).contains("LogicalRDD")
+    val sites = Seq[(String, DataFrame => DataFrame,
+        (DataFrame, DataFrame) => Boolean)](
+      ("trianglesOfPairs", Analytics.trianglesOfPairs(_),
+        (d, f) => hints(d) == hints(f) + 1),
+      ("shortestPathOfPairs", Analytics.shortestPathOfPairs(_),
+        checkpointOnlyForced),
+      ("pagerankHalf", Analytics.pagerankHalf(nodes, _), checkpointOnlyForced),
+      ("connectedComponents",
+        graft.ml.Dedup.connectedComponents(_, "x", "y"), checkpointOnlyForced))
+    for ((shape, e) <- shapes; (site, f, armsDiffer) <- sites) {
+      val byDefault = f(e)
+      val forced = forcedDistributed(f(e))
+      assert(armsDiffer(byDefault, forced) == (shape != "empty"),
+        s"$site on the $shape edge set: wrong arm taken by default")
+      val (d, x) = (rows(byDefault).map(_.toString).sorted,
+        rows(forced).map(_.toString).sorted)
+      assert(d == x, s"$site arms disagree on the $shape edge set: $d vs $x")
+    }
+  }
+
   test("brandPairCounts pins the posexplode/slice pair expansion on literal baskets") {
     import spark.implicits._
     // advisor (round 20): the in-order pair expansion relies on
@@ -538,10 +582,10 @@ class AnalyticsSpec extends GraftSuite {
 
   test("q_shortest_path matches a driver-side BFS truncated at 4 hops") {
     import spark.implicits._
-    // force the DISTRIBUTED relaxation arm (threshold 0) — the public
-    // query's driver-BFS arm is the same algorithm as this test's
-    // reference, so testing it against itself would be vacuous
-    val r = Analytics.shortestPathImpl(spark, sf, driverMaxEdges = 0L)
+    // force the DISTRIBUTED relaxation arm — the public query's
+    // driver-BFS arm is the same algorithm as this test's reference, so
+    // testing it against itself would be vacuous
+    val r = forcedDistributed(Analytics.qShortestPath(spark, sf))
       .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
     assert(r.nonEmpty, "the thresholded graph has edges at this sf")
     val li = spark.read.parquet(s"$sf/lineitem.parquet")

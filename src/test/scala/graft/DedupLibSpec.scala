@@ -144,20 +144,20 @@ class DedupLibSpec extends GraftSuite {
     assert(Seq(10L, 11L, 12L).forall(comp(_) == 10L))
     assert(comp(20L) == 20L && comp(21L) == 20L)
     assert(comp.size == 9)
-    // a long path stresses the diameter bound: 0-1-2-...-9 — and
-    // localThreshold = 0 forces the DISTRIBUTED label-propagation path,
-    // which must agree with the driver union-find exactly
+    // a long path stresses the diameter bound: 0-1-2-...-9 — and the
+    // kill switch forces the DISTRIBUTED label-propagation path, which
+    // must agree with the driver union-find exactly
     val path = (0L until 9L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val pcLocal = Dedup.connectedComponents(path, "doc_a", "doc_b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val pcDist = Dedup.connectedComponents(path, "doc_a", "doc_b",
-      localThreshold = 0L)
+    val pcDist = forcedDistributed(
+      Dedup.connectedComponents(path, "doc_a", "doc_b"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert((0L to 9L).forall(pcLocal(_) == 0L), s"path must collapse: $pcLocal")
     assert(pcLocal == pcDist, "both dispatch paths must produce one labeling")
-    val distChain = Dedup.connectedComponents(
+    val distChain = forcedDistributed(Dedup.connectedComponents(
       Seq((2L, 1L), (2L, 3L), (3L, 4L), (20L, 21L)).toDF("doc_a", "doc_b"),
-      "doc_a", "doc_b", localThreshold = 0L)
+      "doc_a", "doc_b"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(Seq(1L, 2L, 3L, 4L).forall(distChain(_) == 1L) &&
       distChain(20L) == 20L && distChain(21L) == 20L)

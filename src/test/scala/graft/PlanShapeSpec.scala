@@ -370,7 +370,7 @@ class PlanShapeSpec extends GraftSuite {
     // closure join broadcasts here
     assert(plan.contains("BroadcastHashJoin"),
       s"under-threshold edge set should broadcast into the closure:\n$plan")
-    // force the over-threshold branch (threshold 0): the closure must
+    // force the over-threshold branch (the kill switch): the closure must
     // drop its broadcast hint — only the two node-cardinality degree
     // joins keep one — and the shuffle plan must agree exactly with the
     // broadcast plan's results. No hard broadcast of a data-derived edge
@@ -379,7 +379,8 @@ class PlanShapeSpec extends GraftSuite {
       val s = df.queryExecution.optimizedPlan.toString
       s.sliding("broadcast".length).count(_ == "broadcast")
     }
-    val shuffled = graft.ops.Analytics.triangleCount(spark, sf, 0L)
+    val shuffled =
+      forcedDistributed(SparkEntry.queries("q_triangle_count")(spark, sf))
     assert(hintCount(shuffled) < hintCount(dflt),
       "the over-threshold plan must carry strictly fewer broadcast hints")
     assert(!shuffled.queryExecution.executedPlan.toString.contains("CartesianProduct"))

@@ -91,9 +91,10 @@ class ScalingSpec extends GraftSuite {
     val d = 4
     def run(n: Long): Double = {
       val t0 = System.nanoTime()
-      // threshold 0 forces the shuffle closure path — the branch that runs
-      // at real scale is the one whose slope matters
-      val out = graft.ops.Analytics.trianglesOfPairs(ringPairs(n, d), 0L)
+      // force the shuffle closure path — the branch that runs at real
+      // scale is the one whose slope matters
+      val out = forcedDistributed(
+        graft.ops.Analytics.trianglesOfPairs(ringPairs(n, d)))
       // circulant triangle count: d(d-1)/2 per apex × n (wrap-exact for
       // n > 3d) — asserts the algorithm, not just the slope
       val total = out.agg(sum(col("triangles"))).head().getLong(0)

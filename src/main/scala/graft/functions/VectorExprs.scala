@@ -323,11 +323,13 @@ trait RowModel extends Serializable {
   def apply(in: ArrayData): ArrayData
 }
 
-/** y_j = Σ_i x_i·W_j,i + b_j over i < min(|x|, width of W), summed left
-  * to right exactly like `graft_dot`; with `amp`, y_j = cos(Σ + b_j)·amp,
-  * as in `cos(graft_dot(x, W_j) + b_j) * amp`. With a centre μ the sum
-  * runs over (x_i − μ_i)·W_j,i, as in `graft_dot(zip_with(x, μ, _ − _),
-  * W_j)`, and a row whose width is not |μ| raises. W is rectangular.
+/** y_j = Σ_i x_i·W_j,i + b_j, summed left to right exactly like
+  * `graft_dot`; with `amp`, y_j = cos(Σ + b_j)·amp, as in
+  * `cos(graft_dot(x, W_j) + b_j) * amp`. With a centre μ the sum runs
+  * over (x_i − μ_i)·W_j,i, as in `graft_dot(zip_with(x, μ, _ − _), W_j)`.
+  * W is rectangular, and a row whose width is not the width of W (|μ|
+  * with a centre) raises rather than being truncated or zero-padded; a
+  * W without rows reads no x.
   *
   * Four outputs share each pass over x: every output keeps its own
   * accumulator, still summed left to right over i, so the unroll breaks
@@ -337,23 +339,23 @@ final class AffineModel(w: Array[Array[Double]], b: Array[Double],
   private val hasAmp = amp.isDefined
   private val a = amp.getOrElse(1.0)
   private val width = if (w.isEmpty) 0 else w(0).length
+  private val expected = mu.fold(width)(_.length)
+  private val name = if (mu.isDefined) "graft_centered_affine" else "graft_affine"
 
   private def finish(s: Double, j: Int): Double =
     if (hasAmp) math.cos(s + b(j)) * a else s + b(j)
 
   def apply(x: ArrayData): ArrayData = {
     val n = x.numElements()
+    if (n != expected && (mu.isDefined || w.nonEmpty))
+      throw new IllegalArgumentException(
+        s"$name expects x to have $expected entries, got $n")
     val xs = new Array[Double](n)
     var i = 0
     mu match {
-      case Some(c) =>
-        if (n != c.length) throw new IllegalArgumentException(
-          s"graft_centered_affine expects x to have ${c.length} entries, got $n")
-        while (i < n) { xs(i) = x.getDouble(i) - c(i); i += 1 }
-      case None =>
-        while (i < n) { xs(i) = x.getDouble(i); i += 1 }
+      case Some(c) => while (i < n) { xs(i) = x.getDouble(i) - c(i); i += 1 }
+      case None => while (i < n) { xs(i) = x.getDouble(i); i += 1 }
     }
-    val m = math.min(n, width)
     val out = new Array[Double](w.length)
     var j = 0
     while (j + 4 <= w.length) {
@@ -363,7 +365,7 @@ final class AffineModel(w: Array[Array[Double]], b: Array[Double],
       val w3 = w(j + 3)
       var s0, s1, s2, s3 = 0.0
       i = 0
-      while (i < m) {
+      while (i < n) {
         val xi = xs(i)
         s0 += xi * w0(i)
         s1 += xi * w1(i)
@@ -381,7 +383,7 @@ final class AffineModel(w: Array[Array[Double]], b: Array[Double],
       val wj = w(j)
       var s = 0.0
       i = 0
-      while (i < m) { s += xs(i) * wj(i); i += 1 }
+      while (i < n) { s += xs(i) * wj(i); i += 1 }
       out(j) = finish(s, j)
       j += 1
     }

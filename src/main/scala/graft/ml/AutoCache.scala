@@ -59,17 +59,15 @@ object AutoCache {
     try body(h.df) finally h.release()
   }
 
-  /** A frame competing for cache budget in [[selectCacheSet]]: the frame,
-    * how many times the consuming scope will read it, and a label for
-    * diagnostics/tests. */
-  final case class Candidate(df: DataFrame, uses: Int, label: String = "")
+  /** A frame competing for cache budget in [[selectCacheSet]]: the frame
+    * and how many times the consuming scope will read it. */
+  final case class Candidate(df: DataFrame, uses: Int)
 
-  /** [[selectCacheSet]]'s full decision record — handles aligned with the
-    * input order plus the evidence behind the knapsack: per-candidate
-    * sizes and benefit-seconds (keyed by label, or the candidate index
-    * when unlabeled). */
+  /** [[selectCacheSet]]'s decision: handles plus the evidence behind the
+    * knapsack, all indexed like the input candidates. A candidate with
+    * uses <= 1 is never profiled, so its size and benefit are None. */
   final case class CacheSelection(handles: Seq[CacheHandle],
-      sizes: Map[String, BigInt], benefitSeconds: Map[String, Double])
+      sizes: Seq[Option[BigInt]], benefitSeconds: Seq[Option[Double]])
 
   /** Set-selection under ONE shared budget — the reference AutoCacheRule's
     * actual shape (it picks a cache SET across the whole pipeline DAG
@@ -92,72 +90,32 @@ object AutoCache {
     * ([[profiledSize]]), whose measured wall time IS its sampled
     * recompute cost.
     *
-    * Returns handles ALIGNED WITH THE INPUT ORDER; only selected frames
-    * are persisted, and every handle's `release()` is unconditionally
-    * safe (no-op for declined frames). */
+    * Returns a [[CacheSelection]] ALIGNED WITH THE INPUT ORDER; only
+    * selected frames are persisted, and every handle's `release()` is
+    * unconditionally safe (no-op for declined frames). `profiler`
+    * (default: [[estimatedSizeAndCost]]) gives each frame's (size,
+    * recompute seconds). */
   def selectCacheSet(candidates: Seq[Candidate],
       memBudgetBytes: Long = 2L << 30,
       profiler: DataFrame => (BigInt, Double) = estimatedSizeAndCost)
-      : Seq[CacheHandle] =
-    selectCore(candidates, memBudgetBytes, profiler)._1
-
-  /** [[selectCacheSet]] with the full [[CacheSelection]] decision record.
-    * `profiler` is injectable (default: [[estimatedSizeAndCost]]) so the
-    * knapsack ordering is testable with deterministic (size, seconds)
-    * pairs instead of wall-clock sleeps. */
-  def selectCacheSetReported(candidates: Seq[Candidate],
-      memBudgetBytes: Long = 2L << 30,
-      profiler: DataFrame => (BigInt, Double) = estimatedSizeAndCost)
       : CacheSelection = {
-    val (handles, profiles) = selectCore(candidates, memBudgetBytes, profiler)
-    // collision-proof report keys: labels verbatim while globally unique
-    // against every OTHER key (generated or not); unlabeled candidates
-    // get "#<index>"; any clash — repeated labels, or a literal label
-    // that equals another candidate's generated key — appends "@<index>"
-    // until free ("@i" is unique per candidate, so this terminates)
-    val keys: Map[Int, String] = {
-      val bases = candidates.indices.map { i =>
-        if (candidates(i).label.nonEmpty) candidates(i).label else s"#$i"
-      }
-      val used = scala.collection.mutable.Set.empty[String]
-      candidates.indices.map { i =>
-        var k = bases(i)
-        // a base repeated later would steal this one's verbatim claim —
-        // only the FIRST holder of a base keeps it bare
-        if (bases.indexOf(k) != i) k = s"$k@$i"
-        while (!used.add(k)) k = s"$k@$i"
-        i -> k
-      }.toMap
-    }
-    CacheSelection(handles,
-      sizes = profiles.map { case (i, (s, _)) => keys(i) -> s },
-      benefitSeconds = profiles.map { case (i, (_, sec)) =>
-        keys(i) -> (candidates(i).uses - 1).toDouble * sec
-      })
-  }
-
-  private def selectCore(candidates: Seq[Candidate], memBudgetBytes: Long,
-      profiler: DataFrame => (BigInt, Double))
-      : (Seq[CacheHandle], Map[Int, (BigInt, Double)]) = {
     // profile ONLY the uses > 1 candidates: the rest are filtered out of
     // the greedy order and can never be selected, and profiling a
     // stat-less frame is a full distributed pass — paid for nothing on a
     // never-cacheable candidate
-    val profiles: Map[Int, (BigInt, Double)] = candidates.indices
-      .filter(i => candidates(i).uses > 1)
-      .map(i => i -> profiler(candidates(i).df)).toMap
-    val order = candidates.indices
-      .filter(i => candidates(i).uses > 1)
-      .sortBy { i =>
-        val (size, seconds) = profiles(i)
-        val benefit = (candidates(i).uses - 1).toDouble * seconds
-        val density = benefit / size.toDouble.max(1.0)
-        (-density, -benefit)
-      }
+    val profiles = candidates.map(c =>
+      if (c.uses > 1) Some(profiler(c.df)) else None).toIndexedSeq
+    val sizes = profiles.map(_.map(_._1))
+    val benefits = candidates.indices.map(i =>
+      profiles(i).map { case (_, sec) => (candidates(i).uses - 1).toDouble * sec })
+    val order = candidates.indices.filter(profiles(_).isDefined).sortBy { i =>
+      val benefit = benefits(i).get
+      (-benefit / sizes(i).get.toDouble.max(1.0), -benefit)
+    }
     var remaining = BigInt(memBudgetBytes)
     val chosen = scala.collection.mutable.BitSet.empty
     order.foreach { i =>
-      if (profiles(i)._1 <= remaining) { chosen += i; remaining -= profiles(i)._1 }
+      if (sizes(i).get <= remaining) { chosen += i; remaining -= sizes(i).get }
     }
     val handles = candidates.indices.map { i =>
       if (chosen(i))
@@ -165,7 +123,7 @@ object AutoCache {
           cached = true)
       else CacheHandle(candidates(i).df, cached = false)
     }
-    (handles, profiles)
+    CacheSelection(handles, sizes, benefits)
   }
 
   /** Bracketed form of [[selectCacheSet]]: select under the shared budget,
@@ -173,7 +131,7 @@ object AutoCache {
     * always release all handles. */
   def withCachedSet[T](candidates: Seq[Candidate],
       memBudgetBytes: Long = 2L << 30)(body: Seq[DataFrame] => T): T = {
-    val hs = selectCacheSet(candidates, memBudgetBytes)
+    val hs = selectCacheSet(candidates, memBudgetBytes).handles
     try body(hs.map(_.df)) finally hs.foreach(_.release())
   }
 

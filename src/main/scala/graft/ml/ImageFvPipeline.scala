@@ -72,9 +72,8 @@ object ImageFvPipeline {
       descCol: String, pcaK: Int, gmmK: Int, seed: Long = 42L,
       memBudgetBytes: Long = 2L << 30): Seq[Transformer] =
     AutoCache.withCachedSet(
-      branches.map { case (df, outCol) =>
-        AutoCache.Candidate(df, uses = 2, label = outCol)
-      }, memBudgetBytes) { cached =>
+      branches.map { case (df, _) => AutoCache.Candidate(df, uses = 2) },
+      memBudgetBytes) { cached =>
       cached.zip(branches).map { case (train, (_, outCol)) =>
         fitOn(train, groupCol, descCol, outCol, pcaK, gmmK, seed)
       }

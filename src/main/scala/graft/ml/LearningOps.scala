@@ -57,11 +57,10 @@ object LearningOps extends Serializable {
     def apply(df: DataFrame): DataFrame = {
       graft.functions.GraftExtensions.ensureRegistered(df.sparkSession)
       val raw = col(in).cast("array<double>")
-      // In-plan dim guard (the Epoch.day pattern): graft_affine silently
-      // truncates to min(length) on mismatch, so a mis-sized input —
-      // e.g. an upstream FFT pad change shifting the bin count — must
-      // raise, not yield silently wrong random features. One O(1) size
-      // comparison per row ahead of the D dots.
+      // In-plan dim guard (the Epoch.day pattern): a mis-sized input —
+      // e.g. an upstream FFT pad change shifting the bin count — raises
+      // with this node's name before graft_affine's own width check.
+      // One O(1) size comparison per row ahead of the D dots.
       val v = when(size(raw) === dim, raw).otherwise(raise_error(concat(
         lit(s"graft: CosineRandomFeaturesNode($in) expects dim=$dim, got "),
         size(raw).cast("string"))))
@@ -324,8 +323,8 @@ object LearningOps extends Serializable {
     * transform: Y = (X−μ)·W as one `graft_centered_affine` kernel column
     * ([[zcaExprTransformer]]) — a pure Project of constant generated-code
     * size, so it whole-stage-fuses at any width d and a fitted ZCA
-    * collapses under `applyLocal`/LocalServer (zero-job serving) like
-    * every other Transformer. */
+    * compiles under [[LocalServer]] (zero-job serving) like every other
+    * Transformer. */
   case class ZCAWhitenerEst(in: String, out: String, eps: Double = 1e-5)
       extends Estimator {
     def fit(train: DataFrame): Transformer = {
@@ -595,8 +594,9 @@ object LearningOps extends Serializable {
   /** ref: nodes.learning.LinearDiscriminantAnalysis — project onto the
     * top-k generalized eigenvectors of (S_within⁻¹ S_between). fit is two
     * distributed passes of d²-bounded statistics (per-class mean/count,
-    * then within-class scatter) and a d×d driver eig; transform is a
-    * per-row matrix product with the broadcast projection. */
+    * then within-class scatter) and a d×d driver eig; transform applies
+    * the d×k projection as one `graft_affine` kernel
+    * ([[scoresTransformer]]). */
   case class LDAEst(featuresCol: String, labelCol: String, out: String, k: Int)
       extends Estimator {
     def fit(train: DataFrame): Transformer = {
@@ -649,21 +649,10 @@ object LearningOps extends Serializable {
         val proj = DenseMatrix.horzcat(order.map(i =>
           es.eigenvectors(::, i).toDenseMatrix.t): _*) // d × k
         val projArr = proj.toArray // column-major d*k
-        val dd = d
-        val kk = k
-        val projectUdf = udf { (xs: Seq[Double]) =>
-          val res = new Array[Double](kk)
-          var j = 0
-          while (j < kk) {
-            var s = 0.0
-            var i = 0
-            while (i < dd) { s += xs(i) * projArr(j * dd + i); i += 1 }
-            res(j) = s
-            j += 1
-          }
-          res
-        }
-        Transformer { df => df.withColumn(out, projectUdf(col(featuresCol))) }
+        // output j sums x_i * proj(i, j) left to right from +0.0: one
+        // graft_affine row per output, a zero offset adding +0.0
+        scoresTransformer(featuresCol, out,
+          Array.tabulate(k, d)((j, i) => projArr(j * d + i)))
       } finally rows.unpersist()
     }
   }
@@ -829,6 +818,10 @@ object LearningOps extends Serializable {
         var i = 0
         while (i < m) {
           val (x, ys, w0) = buf(i)
+          if (x.length != dd) throw new IllegalArgumentException(
+            s"blockCdSolve: a row has ${x.length} features, expected $dd")
+          if (ys.length != kk) throw new IllegalArgumentException(
+            s"blockCdSolve: a row has ${ys.length} targets, expected $kk")
           if (w0 < 0.0) throw new IllegalArgumentException(
             s"blockCdSolve: negative row weight $w0 (weights scale the " +
               "gram as sqrt factors and must be >= 0)")
@@ -843,9 +836,10 @@ object LearningOps extends Serializable {
         }
         Iterator.single((cm, yk, sw))
       }.persist(level)
-    var resid = cols.map { case (_, yk, _) => yk.clone() }.persist(level)
+    // the first sweep reads the cached targets as its residual: every
+    // update below clones before it writes
+    var resid = cols.map(_._2)
     try {
-      resid.count() // materialize before the cached sweeps begin
       val weights = Array.fill(k)(new Array[Double](d))
       for (epoch <- 0 until numIter; block <- blocks) {
         val bIdx = block.toArray

@@ -11,13 +11,13 @@ import graft.ml.workflow.Transformer
 
 /** Compiled single-datum serving (ref: workflow/Transformer.apply(in: A)
   * — the reference serves one datum through the fitted function at
-  * sub-millisecond cost). [[workflow.Transformer.applyLocal]] already
-  * serves with zero Spark jobs, but pays per-CALL Catalyst analysis
-  * (~200 ms on a wide featurize chain); this binds the chain to a fixed
-  * input schema ONCE and compiles it to a single codegen'd
-  * [[UnsafeProjection]], so each subsequent datum costs only the
-  * projection evaluation — the reference's per-datum envelope, built
-  * from Catalyst's own pieces rather than a second interpreter:
+  * sub-millisecond cost), and graft's only per-datum path. Analyzing a
+  * chain per call costs ~200 ms on a wide featurize chain; this binds
+  * the chain to a fixed input schema ONCE and compiles it to a single
+  * codegen'd [[UnsafeProjection]], so each datum costs only the
+  * projection evaluation and launches zero Spark jobs — the reference's
+  * per-datum envelope, built from Catalyst's own pieces rather than a
+  * second interpreter:
   *
   *  1. analyze the chain against an EMPTY LocalRelation of the schema
   *     (full resolution, function registry, timezone binding — the same
@@ -32,8 +32,8 @@ import graft.ml.workflow.Transformer
   *     encoders for external Row ↔ InternalRow conversion.
   *
   * Chains that are not pure column programs (an RDD seam, an aggregate,
-  * a join) fail at `compile` time with the offending node named — the
-  * same fail-fast contract as `applyLocal(requireLocal = true)`. A
+  * a join) fail at `compile` time with the offending node named; such a
+  * chain serves a datum only as a distributed frame, `t(oneRowFrame)`. A
   * `Cacher`/persist stage compiles fine: persistence is an execution
   * hint invisible to the analyzed logical program, and per-datum serving
   * correctly ignores it. */
@@ -66,8 +66,8 @@ object LocalServer {
           (substituted, leaf)
         case other => throw new IllegalArgumentException(
           "LocalServer: the chain is not a pure column program — " +
-            s"${other.nodeName} defeats compiled local serving (use " +
-            "applyLocal(requireLocal = false) for a distributed fallback)")
+            s"${other.nodeName} defeats compiled local serving (apply " +
+            "the chain to a one-row DataFrame to serve it distributed)")
       }
 
     val (exprs, leaf) = fold(analyzed)

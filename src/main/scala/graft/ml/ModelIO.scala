@@ -16,7 +16,8 @@ import graft.ml.workflow.Transformer
   * the AutoCache/withCached fitting scopes before the fitted transformer
   * is returned. One Java-serialization round trip therefore persists the
   * whole chain, and the loaded chain serves both ways: distributed
-  * `apply(df)` on a cluster, or per-datum `applyLocal` with zero jobs.
+  * `apply(df)` on a cluster, or per-datum through [[LocalServer]] with
+  * zero jobs.
   *
   * `load` deserializes behind an [[java.io.ObjectInputFilter]] allowlist
   * (graft/scala/java.lang/java.util/breeze/org.apache.spark classes only)

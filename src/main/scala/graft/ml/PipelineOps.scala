@@ -1,9 +1,8 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
-import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
+import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.storage.StorageLevel
 
 /** Keystone-shaped pipeline façade, re-expressed Spark-first.
@@ -39,40 +38,6 @@ object workflow {
       * transformer onto the chain. */
     def andThen(est: Estimator, trainData: DataFrame): Transformer =
       self.andThen(est.fit(self(trainData)))
-
-    /** EP3 single-item serving (ref: workflow/Transformer.apply(in: A) —
-      * the reference applies a fitted pipeline to ONE datum driver-only,
-      * without launching a cluster job). Spark-first spelling: the datum
-      * becomes a `LocalRelation`, and Catalyst's `ConvertToLocalRelation`
-      * rule evaluates a chain of deterministic column expressions AT
-      * OPTIMIZATION TIME, collapsing the plan back to a `LocalRelation` —
-      * the physical plan is one `LocalTableScan` whose `executeCollect`
-      * hands rows straight back, launching ZERO jobs/tasks/shuffles.
-      * Fitted nodes keep model state as plain Scala (weight arrays, vocab
-      * maps) and rebuild literal Columns per apply, so serving chains
-      * collapse fully; no second interpreter exists to drift from the
-      * distributed semantics — Catalyst's own expression evaluator runs
-      * both paths.
-      *
-      * `requireLocal=true` (default) fails fast when a stage defeats the
-      * collapse (an RDD seam, a persist, MLlib `transform`) instead of
-      * silently paying per-datum job-launch latency; pass `false` to
-      * accept a distributed fallback for such chains. */
-    def applyLocal(spark: SparkSession, schema: StructType, rows: Seq[Row],
-        requireLocal: Boolean = true): Seq[Row] = {
-      import scala.jdk.CollectionConverters._
-      val out = self(spark.createDataFrame(rows.asJava, schema))
-      if (requireLocal) {
-        val opt = out.queryExecution.optimizedPlan
-        require(
-          opt.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
-          "applyLocal: the chain did not collapse to a LocalRelation " +
-            s"(optimized plan root is ${opt.getClass.getSimpleName}); " +
-            "some stage defeats driver-local evaluation — pass " +
-            "requireLocal=false to accept per-datum Spark jobs")
-      }
-      out.collect().toSeq
-    }
   }
 
   object Transformer {
@@ -396,34 +361,20 @@ object workflow {
     }
   }
 
-  /** ref: nodes.learning.PCAEstimator / DistributedPCAEstimator — MLlib PCA
-    * (covariance + local SVD under the hood; fine to d ~ 10^4 like the
-    * reference's local path). */
+  /** ref: nodes.learning.PCAEstimator / DistributedPCAEstimator — the
+    * exact distributed TSQR axes ([[LearningOps.tsqrPca]]: sign-canonical
+    * and independent of partitioning), applied UNCENTRED as one
+    * `graft_centered_affine` kernel at a zero centre, y = x·Aᵀ — the
+    * meaning of MLlib's `PCAModel.transform`, which does not centre
+    * either. */
   case class PCAEst(featuresCol: String, out: String, k: Int) extends Estimator {
-    def fit(train: DataFrame): Transformer =
-      try {
-        val model = new org.apache.spark.ml.feature.PCA()
-          .setK(k).setInputCol("__features").setOutputCol("__pca")
-          .fit(LearningOps.withVec(train, featuresCol))
-        Transformer { df =>
-          model.transform(LearningOps.withVec(df, featuresCol))
-            .withColumn(out, vector_to_array(col("__pca")))
-            .drop("__features", "__pca")
-        }
-      } catch {
-        // MLlib's covariance-SVD path rides LAPACK dgesdd, which can
-        // report NotConverged on valid inputs (observed mid-suite).
-        // Recover with the exact TSQR axes (eigSym-backed fallback
-        // inside) and project WITHOUT centering — MLlib PCA.transform
-        // does not center either, so the semantics match.
-        case _: breeze.linalg.NotConvergedException =>
-          val (mu, axes, _) =
-            graft.ml.LearningOps.tsqrPca(train, featuresCol, k)
-          val zero = Array.fill(mu.length)(0.0)
-          Transformer { df =>
-            graft.ml.ImageFvPipeline.pcaProject(df, featuresCol, out, zero, axes)
-          }
+    def fit(train: DataFrame): Transformer = {
+      val (mu, axes, _) = LearningOps.tsqrPca(train, featuresCol, k)
+      val zero = new Array[Double](mu.length)
+      Transformer { df =>
+        ImageFvPipeline.pcaProject(df, featuresCol, out, zero, axes)
       }
+    }
   }
 
   /** One-pass feature/label means (treeAggregate of d+k doubles) for

@@ -61,6 +61,44 @@ class ImageFvPipelineSpec extends GraftSuite {
     assert(msgs.contains("graft_centered_affine expects x to have 6 entries, got 5"), msgs)
   }
 
+  test("fitBranches' candidates share one budget: all, none, or the denser one") {
+    import spark.implicits._
+    import graft.ml.AutoCache
+    // the two descriptor tables fitBranches hands withCachedSet, at its
+    // uses = 2 (TSQR-PCA + the projected GMM fit)
+    val imgs = images(30)
+    val lcs = ImageFvPipeline.cellDescriptors(ImageOps.lcs(imgs, cell = 2).toDF(),
+      descDim = 6)
+    val gray = ImageOps.grayScale(imgs.toDF())
+      .select($"id", $"x_dim", $"y_dim", $"n_channels", $"image")
+      .as[ImageOps.Img]
+    val sift = ImageFvPipeline.cellDescriptors(ImageOps.sift(gray, patch = 4,
+      step = 4, cells = 2, bins = 4).toDF(), descDim = 16)
+    val branches = Seq(lcs, sift).map(AutoCache.Candidate(_, uses = 2))
+    def picks(budget: Long) = {
+      val sel = AutoCache.selectCacheSet(branches, budget)
+      sel.handles.foreach(_.release())
+      (sel.handles.map(_.cached), sel)
+    }
+    val (all, rec) = picks(2L << 30)
+    assert(all == Seq(true, true), "both branches fit the default budget")
+    // the record is indexed like the branches: one size and benefit each
+    assert(rec.sizes.forall(_.exists(_ > 0)) &&
+      rec.benefitSeconds.forall(_.exists(_ >= 0.0)), rec)
+    assert(picks(0L)._1 == Seq(false, false), "nothing fits a zero budget")
+    // a budget that holds either branch but not both keeps the one with
+    // the higher benefit per byte (read off the same call's record:
+    // profiled seconds are measured, so they move from call to call)
+    val (one, oneRec) = picks(rec.sizes.map(_.get).max.toLong)
+    assert(one.count(identity) == 1, one)
+    val density = oneRec.benefitSeconds.zip(oneRec.sizes).map {
+      case (sec, size) => sec.get / size.get.toDouble
+    }
+    if (density(0) != density(1))
+      assert(one(density.indexOf(density.max)),
+        s"the denser branch must take the only slot: $density")
+  }
+
   test("ImageNetSiftLcsFV shape: SIFT+LCS -> TSQR-PCA -> GMM -> batched FV -> gather -> solve -> argmax") {
     import spark.implicits._
 

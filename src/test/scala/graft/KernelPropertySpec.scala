@@ -234,10 +234,10 @@ class KernelPropertySpec extends GraftSuite {
   test("ZCA expr spelling equals the dense (x-mu)'W product over random shapes, zero-job") {
     // fuzz the graft_centered_affine Project (the serving spelling)
     // against a driver-side dense replay over random widths/means/matrices —
-    // evaluated via applyLocal with requireLocal on, so every sampled
-    // width ALSO pins the LocalRelation collapse (an index slip in the
-    // column-major wj slice or a collapse-defeating expression would
-    // fail here before any fixture could)
+    // served through LocalServer, so every sampled width ALSO pins the
+    // compile to one pure projection (an index slip in the column-major
+    // wj slice or a stage that is not a column program would fail here
+    // before any fixture could)
     import org.apache.spark.sql.{Row => SRow}
     import org.apache.spark.sql.types._
     checkProp(Prop.forAll(genZca) { case (d, n, mu, w, xs) =>
@@ -249,7 +249,7 @@ class KernelPropertySpec extends GraftSuite {
           nullable = false)))
       val rows = (0 until n).map(i =>
         SRow(i.toLong, xs.slice(i * d, (i + 1) * d)))
-      val out = t.applyLocal(spark, schema, rows)
+      val out = graft.ml.LocalServer.compile(t, spark, schema)(rows)
       out.indices.forall { i =>
         val x = xs.slice(i * d, (i + 1) * d)
         val got = out(i).getSeq[Double](out(i).fieldIndex("y"))

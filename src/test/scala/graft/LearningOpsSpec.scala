@@ -426,6 +426,85 @@ class LearningOpsSpec extends GraftSuite {
     assert(within > 0)
   }
 
+  test("LDAEst applies through graft_affine: the old UDF's bits, served zero-job") {
+    val labeled = spark.read.parquet(s"$sf/embeddings.parquet")
+      .select($"vec_id", transform($"embedding", x => x.cast("double")).as("v"),
+        ($"label" % 3).cast("long").as("y"))
+    val lda = LDAEst("v", "y", "p", k = 2).fit(labeled)
+    // the fitted projection, read back through the transformer: at the
+    // basis vector e_i, output j is exactly proj(i, j)
+    val d = 64
+    val basis = (0 until d).map(i =>
+      (i, Array.tabulate(d)(c => if (c == i) 1.0 else 0.0))).toDF("i", "v")
+    val projArr = new Array[Double](d * 2) // column-major d×k
+    lda(basis).select($"i", $"p").collect().foreach { r =>
+      val p = r.getSeq[Double](1)
+      projArr(r.getInt(0)) = p(0)
+      projArr(d + r.getInt(0)) = p(1)
+    }
+    // a driver-side replay of the per-row UDF this kernel replaced
+    def oldUdf(xs: Seq[Double]): Seq[Double] = (0 until 2).map { j =>
+      var s = 0.0
+      var i = 0
+      while (i < d) { s += xs(i) * projArr(j * d + i); i += 1 }
+      s
+    }
+    def bits(xs: Seq[Double]) = xs.map(java.lang.Double.doubleToRawLongBits)
+    val batch = lda(labeled).select($"vec_id", $"v", $"p").collect()
+    assert(batch.nonEmpty)
+    batch.foreach { r =>
+      assert(bits(r.getSeq[Double](2)) == bits(oldUdf(r.getSeq[Double](1))),
+        s"LDA projection != the old UDF on vec_id=${r.getLong(0)}")
+    }
+    // the fitted chain is a pure column program: it compiles and serves
+    // per datum with zero Spark jobs, bit for bit like the batch plan
+    val want = batch.map(r => r.getLong(0) -> bits(r.getSeq[Double](2))).toMap
+    val input = labeled.select($"vec_id", $"v")
+    val rows = input.orderBy($"vec_id").collect().take(20)
+    val jobs = jobsDuring {
+      val server = graft.ml.LocalServer.compile(lda, spark, input.schema)
+      rows.foreach { r =>
+        assert(bits(dArr(server(r), "p")) == want(r.getLong(0)),
+          s"served LDA != batch on vec_id=${r.getLong(0)}")
+      }
+    }
+    assert(jobs == 0, s"LDA serving launched $jobs Spark job(s)")
+  }
+
+  test("a mis-sized feature row raises, when scoring and when training") {
+    def message(e: Throwable) = Iterator.iterate(e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).mkString(" ")
+    val train = vecs.where($"vec_id" < 200)
+      .withColumn("ind", array(element_at($"v", 1), element_at($"v", 2)))
+    val scorer = graft.ml.workflow.LeastSquaresMultiEst("v", "ind", "s",
+      regParam = 1e-3).fit(train)
+    assert(scorer(train).select(size($"s")).head().getInt(0) == 2)
+    // a fitted scorer: a narrower or wider row is not truncated or padded
+    for ((x, n) <- Seq(slice($"v", 1, 32) -> 32, concat($"v", $"v") -> 128)) {
+      val e = intercept[Exception](
+        scorer(train.withColumn("v", x)).select($"s").collect())
+      assert(message(e).contains(s"graft_affine expects x to have 64 entries, got $n"),
+        message(e))
+    }
+    // the training cache: a ragged frame is refused by name, both ways,
+    // and so is a target array whose width is not k
+    val d = 8
+    val ragged = (w: Int) => vecs.where($"vec_id" < 50).select(
+      when($"vec_id" === 7, slice($"v", 1, w)).otherwise(slice($"v", 1, d)).as("v"),
+      array(element_at($"v", 1)).as("ys"))
+    def solve(df: org.apache.spark.sql.DataFrame, k: Int) =
+      graft.ml.LearningOps.blockCdSolve(df, "v", $"ys", k = k, d = d,
+        blocks = Array(0 until d), numIter = 1, lambda = 1e-6, wc = lit(1.0))
+    for (w <- Seq(6, 10)) {
+      val e = intercept[org.apache.spark.SparkException](solve(ragged(w), 1))
+      assert(message(e).contains(s"blockCdSolve: a row has $w features, expected $d"),
+        message(e))
+    }
+    val e = intercept[org.apache.spark.SparkException](solve(ragged(d), 2))
+    assert(message(e).contains("blockCdSolve: a row has 1 targets, expected 2"),
+      message(e))
+  }
+
   test("weighted block solver biases the fit toward upweighted rows") {
     // two conflicting populations: y = +dot for even ids, y = -dot for odd
     val signed = vecs.withColumn("s",

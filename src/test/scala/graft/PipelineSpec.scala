@@ -54,27 +54,21 @@ class PipelineSpec extends GraftSuite {
     val served = fitted(one).select("doc_id", "pred").collect()
     assert(served.length == 1)
     assert(served.head.getDouble(1) >= 0.0 && served.head.getDouble(1) <= 4.0)
-    // EP3 proper (round 13): the same fitted chain serves one datum
-    // driver-only via applyLocal — MLlib's NaiveBayesModel.transform is
-    // deterministic ScalaUDF projections, so even the MLlib-wrapped
-    // Amazon chain collapses to a LocalRelation (requireLocal=true
-    // would raise otherwise), covering the second flagship family after
-    // ServingSpec's TIMIT chain
+    // EP3 proper: the same fitted chain COMPILES through LocalServer and
+    // serves one datum driver-only — tokenizer regex, the vocab-count
+    // kernel, and MLlib NaiveBayesModel.transform's scoring UDFs all
+    // fold into one codegen'd projection, so both flagship serving
+    // families (TIMIT array-math in ServingSpec, Amazon MLlib-wrapped
+    // text here) sit inside the compiled per-datum envelope
     val input = docs.select(col("doc_id"), col("text"))
     val row = input.orderBy(col("doc_id")).head()
-    val local = fitted.applyLocal(spark, input.schema, Seq(row))
+    val server = graft.ml.LocalServer.compile(fitted, spark, input.schema)
+    val local = server(Seq(row))
     assert(local.size == 1)
     val dfPred = fitted(input.orderBy(col("doc_id")).limit(1))
       .select(col("pred")).head().getDouble(0)
     assert(local.head.getAs[Double]("pred") == dfPred,
       "local NB serving must agree with the distributed path")
-    // round 14 breadth envelope: the SAME fitted chain also COMPILES
-    // through LocalServer — tokenizer regex, the vocab-count kernel, and
-    // MLlib NaiveBayesModel.transform's scoring UDFs all fold into one
-    // codegen'd projection, so both flagship serving families (TIMIT
-    // array-math in ServingSpec, Amazon MLlib-wrapped text here) sit
-    // inside the compiled per-datum envelope, not just applyLocal's
-    val server = graft.ml.LocalServer.compile(fitted, spark, input.schema)
     assert(server(row).getAs[Double]("pred") == dfPred,
       "compiled serving must agree with the distributed path")
   }
@@ -372,6 +366,51 @@ class PipelineSpec extends GraftSuite {
     assert(out.select(size(col("pc"))).distinct().head().getInt(0) == 8)
   }
 
+  test("PCAEst fits the TSQR axes and projects uncentred at any partitioning") {
+    import spark.implicits._
+    val vecs = spark.read.parquet(s"$sf/embeddings.parquet")
+      .select(col("vec_id"),
+        transform(col("embedding"), x => x.cast("double")).as("v"))
+    def bits(xs: Seq[Double]) = xs.map(java.lang.Double.doubleToRawLongBits)
+    val d = 64
+    val basis = (0 until d).map(i =>
+      (i, Array.tabulate(d)(c => if (c == i) 1.0 else 0.0))).toDF("i", "v")
+    val byPartitioning = Seq(1, 4).map { parts =>
+      val train = vecs.repartition(parts)
+      val pca = PCAEst("v", "pc", k = 8).fit(train)
+      // the fitted axes, read back through the transformer: uncentred,
+      // output j at the basis vector e_i is exactly axis j's entry i
+      val axes = Array.ofDim[Double](8, d)
+      pca(basis).select(col("i"), col("pc")).collect().foreach { r =>
+        r.getSeq[Double](1).zipWithIndex.foreach { case (a, j) => axes(j)(r.getInt(0)) = a }
+      }
+      // they are tsqrPca's axes on the same frame (its driver-side merge
+      // of partition results follows task completion, so the last bits
+      // may move between two fits of a multi-partition frame)
+      val (_, tsqr, _) = graft.ml.LearningOps.tsqrPca(train, "v", 8)
+      val axisDiff = axes.indices.iterator.flatMap(j =>
+        (0 until d).map(i => math.abs(axes(j)(i) - tsqr(j)(i)))).max
+      assert(axisDiff < 1e-12, s"PCAEst axes != tsqrPca's at $parts partitions: $axisDiff")
+      // the output is x·Aᵀ summed left to right and NOT centred (MLlib
+      // PCAModel.transform's meaning)
+      val got = pca(train).select(col("vec_id"), col("v"), col("pc")).collect()
+      assert(got.nonEmpty)
+      got.foreach { r =>
+        val x = r.getSeq[Double](1)
+        val replay = axes.toSeq.map(a => x.indices.foldLeft(0.0)((s, i) => s + x(i) * a(i)))
+        assert(bits(r.getSeq[Double](2)) == bits(replay),
+          s"PCAEst != uncentred x·Aᵀ replay on vec_id=${r.getLong(0)}")
+      }
+      got.map(r => r.getLong(0) -> r.getSeq[Double](2)).toMap
+    }
+    // sign-canonical axes: one and four partitions give the same output
+    val Seq(one, four) = byPartitioning
+    assert(one.keySet == four.keySet)
+    val worst = one.keys.iterator.flatMap(id =>
+      one(id).zip(four(id)).map { case (p, q) => math.abs(p - q) }).max
+    assert(worst < 1e-9, s"PCAEst output moved with the partitioning: $worst")
+  }
+
   test("AugmentedVoter averages patch scores per origin and argmaxes") {
     import spark.implicits._
     val patches = Seq(
@@ -479,9 +518,9 @@ class PipelineSpec extends GraftSuite {
     // expensive-small beats cheap-large for the only slot (benefit is
     // runtime, not the old size proxy)
     val hs = AutoCache.selectCacheSet(Seq(
-      AutoCache.Candidate(b, uses = 2, label = "cheap-large"),
-      AutoCache.Candidate(a, uses = 2, label = "expensive-small")),
-      memBudgetBytes = 10000L, profiler = profiler)
+      AutoCache.Candidate(b, uses = 2),
+      AutoCache.Candidate(a, uses = 2)),
+      memBudgetBytes = 10000L, profiler = profiler).handles
     assert(hs.map(_.cached) == Seq(false, true),
       "the higher-benefit (bigger-recompute-time-savings) frame wins")
     assert(a.storageLevel.useMemory && !b.storageLevel.useMemory)
@@ -491,7 +530,7 @@ class PipelineSpec extends GraftSuite {
     // both fit -> both cached (density order must not starve the second)
     val hs2 = AutoCache.selectCacheSet(Seq(
       AutoCache.Candidate(a, uses = 2), AutoCache.Candidate(b, uses = 2)),
-      memBudgetBytes = 11000L, profiler = profiler)
+      memBudgetBytes = 11000L, profiler = profiler).handles
     assert(hs2.map(_.cached) == Seq(true, true))
     hs2.foreach(_.release())
 
@@ -501,7 +540,7 @@ class PipelineSpec extends GraftSuite {
       if (df eq a) (BigInt(1000), 2.0) else (BigInt(10000), 1e6)
     val hs3 = AutoCache.selectCacheSet(Seq(
       AutoCache.Candidate(b, uses = 5), AutoCache.Candidate(a, uses = 2)),
-      memBudgetBytes = 1000L, profiler = profiler3)
+      memBudgetBytes = 1000L, profiler = profiler3).handles
     assert(hs3.map(_.cached) == Seq(false, true),
       "over-budget high-density frame must not starve the fitting one")
     hs3.foreach(_.release())
@@ -509,16 +548,18 @@ class PipelineSpec extends GraftSuite {
     // single-use frames never cache regardless of budget headroom
     val hs4 = AutoCache.selectCacheSet(
       Seq(AutoCache.Candidate(a, uses = 1)), Long.MaxValue, profiler)
-    assert(hs4.map(_.cached) == Seq(false))
+    assert(hs4.handles.map(_.cached) == Seq(false))
+    assert(hs4.sizes == Seq(None) && hs4.benefitSeconds == Seq(None),
+      "a single-use frame is never profiled")
 
-    // the decision record: per-candidate evidence keyed by label
-    val sel = AutoCache.selectCacheSetReported(Seq(
-      AutoCache.Candidate(a, uses = 3, label = "a"),
-      AutoCache.Candidate(b, uses = 2, label = "b")),
+    // the decision record: per-candidate evidence indexed like the input
+    val sel = AutoCache.selectCacheSet(Seq(
+      AutoCache.Candidate(a, uses = 3),
+      AutoCache.Candidate(b, uses = 2)),
       memBudgetBytes = 11000L, profiler = profiler)
     sel.handles.foreach(_.release())
-    assert(sel.sizes == Map("a" -> BigInt(1000), "b" -> BigInt(10000)))
-    assert(sel.benefitSeconds == Map("a" -> 4.0, "b" -> 0.5))
+    assert(sel.sizes == Seq(Some(BigInt(1000)), Some(BigInt(10000))))
+    assert(sel.benefitSeconds == Seq(Some(4.0), Some(0.5)))
   }
 
   test("AutoCache default scan pricing reaches the report") {
@@ -531,13 +572,13 @@ class PipelineSpec extends GraftSuite {
       spark.range(500).selectExpr("id", "id * 2 AS y")
         .coalesce(1).write.mode("overwrite").parquet(path)
       val base = spark.read.parquet(path)
-      val sel = AutoCache.selectCacheSetReported(
-        Seq(AutoCache.Candidate(base, uses = 2, label = "s")),
+      val sel = AutoCache.selectCacheSet(
+        Seq(AutoCache.Candidate(base, uses = 2)),
         memBudgetBytes = Long.MaxValue)
       sel.handles.foreach(_.release())
-      assert(sel.sizes("s") == AutoCache.estimatedSize(base))
-      assert(sel.benefitSeconds("s") ==
-        sel.sizes("s").toDouble / AutoCache.ScanBwBytesPerSec,
+      assert(sel.sizes == Seq(Some(AutoCache.estimatedSize(base))))
+      assert(sel.benefitSeconds == Seq(Some(
+        AutoCache.estimatedSize(base).toDouble / AutoCache.ScanBwBytesPerSec)),
         s"benefit must be the declared rescan price: ${sel.benefitSeconds}")
     } finally {
       val walk = java.nio.file.Files.walk(dir)
@@ -545,32 +586,6 @@ class PipelineSpec extends GraftSuite {
         .iterator().asScala.foreach(p => java.nio.file.Files.deleteIfExists(p))
       finally walk.close()
     }
-  }
-
-  test("AutoCache report keys never collide, even against generated keys") {
-    import spark.implicits._
-    // the adversarial shape: two candidates share a label AND a third's
-    // literal label equals the disambiguated key the second would get;
-    // a fourth is unlabeled. Every candidate must keep its own row in
-    // the report maps.
-    val frames = (0 until 4).map(i =>
-      spark.sparkContext.parallelize(Seq(i), 1).toDF("x"))
-    def fixed(df: org.apache.spark.sql.DataFrame): (BigInt, Double) =
-      (BigInt(10), 1.0)
-    val sel = AutoCache.selectCacheSetReported(Seq(
-      AutoCache.Candidate(frames(0), uses = 2, label = "a"),
-      AutoCache.Candidate(frames(1), uses = 3, label = "a"),
-      AutoCache.Candidate(frames(2), uses = 4, label = "a@1"),
-      AutoCache.Candidate(frames(3), uses = 5)),
-      memBudgetBytes = Long.MaxValue, profiler = fixed)
-    sel.handles.foreach(_.release())
-    assert(sel.sizes.size == 4 && sel.benefitSeconds.size == 4,
-      s"4 candidates -> 4 report rows, got keys ${sel.sizes.keySet}")
-    // first holder of a base keeps it verbatim; uses disambiguate which
-    // row is whose (benefit = (uses-1) * 1.0s)
-    assert(sel.benefitSeconds("a") == 1.0)
-    assert(sel.benefitSeconds.values.toSeq.sorted == Seq(1.0, 2.0, 3.0, 4.0))
-    assert(sel.benefitSeconds("#3") == 4.0, "unlabeled keeps #<index>")
   }
 
   test("AutoCache profiles opaque compute above a trusted scan (no rescan pricing)") {
@@ -617,9 +632,9 @@ class PipelineSpec extends GraftSuite {
     // greedy order decides which survives
     val budget = sizeL.toLong
     val hs = AutoCache.selectCacheSet(Seq(
-      AutoCache.Candidate(cheapLarge, uses = 2, label = "cheap-large"),
-      AutoCache.Candidate(expensiveSmall, uses = 2, label = "expensive-small")),
-      budget)
+      AutoCache.Candidate(cheapLarge, uses = 2),
+      AutoCache.Candidate(expensiveSmall, uses = 2)),
+      budget).handles
     assert(hs.map(_.cached) == Seq(false, true),
       "runtime benefit must rank the expensive small frame first")
     hs.foreach(_.release())

@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.ml.LearningOps.{BlockLeastSquaresEst, CosineRandomFeaturesNode, PaddedFFTNode}
-import graft.ml.ModelIO
+import graft.ml.{LocalServer, ModelIO}
 import graft.ml.workflow.{ClassLabelIndicators, MaxClassifier, StandardScalerEst, Transformer}
 
 /** The last two reference-lifecycle behaviors (verdict r12 "what's
@@ -74,54 +73,36 @@ class ServingSpec extends GraftSuite {
     java.nio.file.Files.delete(java.nio.file.Paths.get(path))
   }
 
-  test("EP3: applyLocal serves single datums with zero Spark jobs") {
+  test("EP3: LocalServer serves single datums with zero Spark jobs") {
     val (chain, frames) = fitted
     val input = frames.select($"id", $"label", $"wave")
     val schema = input.schema
     // distributed ground truth + the serving rows, collected BEFORE the
-    // job listener arms
+    // job count starts
     val want = chain(frames).select($"id", $"cls")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val servingRows = input.orderBy($"id").collect().take(40)
 
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val jobs = jobsDuring {
+      val server = LocalServer.compile(chain, spark, schema)
       val t0 = System.nanoTime()
       servingRows.foreach { row =>
-        val served = chain.applyLocal(spark, schema, Seq(row))
+        val served = server(Seq(row))
         assert(served.size == 1)
         val id = row.getLong(0)
         assert(served.head.getAs[Long]("cls") == want(id),
           s"local serving diverged from the distributed path on id=$id")
       }
       val perDatumMs = (System.nanoTime() - t0) / 1e6 / servingRows.length
-      info(f"per-datum serving latency: $perDatumMs%.1f ms " +
-        f"(analysis+optimize+LocalTableScan collect, no job launch)")
-      // the cost is per-CALL plan compilation, not per-row evaluation:
-      // a micro-batch through ONE applyLocal call amortizes it away
-      val tb = System.nanoTime()
-      val batched = chain.applyLocal(spark, schema, servingRows.toSeq)
-      val batchedMs = (System.nanoTime() - tb) / 1e6 / servingRows.length
-      info(f"micro-batched serving latency: $batchedMs%.1f ms/datum " +
-        f"(${servingRows.length} rows in one local call)")
+      info(f"per-datum serving latency: $perDatumMs%.3f ms " +
+        f"(one compiled projection, no job launch)")
+      // a micro-batch through ONE call serves every row the same way
+      val batched = server(servingRows.toSeq)
       assert(batched.map(r => r.getLong(0) -> r.getAs[Long]("cls")).toMap
         == want.view.filterKeys(batched.map(_.getLong(0)).toSet).toMap,
         "batched local serving must agree with the distributed path")
-      // flush: listener events are delivered in order, so once the marker
-      // job's start is observed, any job a serving call had launched
-      // would already be counted. The marker is a raw RDD action — always
-      // exactly ONE job (an SQL count under AQE submits two)
-      spark.sparkContext.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (jobs.get() < 1 && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(jobs.get() == 1,
-        s"serving launched ${jobs.get() - 1} Spark job(s); EP3 requires zero")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs == 0, s"serving launched $jobs Spark job(s); EP3 requires zero")
   }
 
   test("fitted ZCA serves zero-job at d = 8 and 256 and replays (x-mu)'W") {
@@ -163,27 +144,23 @@ class ServingSpec extends GraftSuite {
     val (muW, wW, _) = LearningOps.fitZcaModel(wide, "v", 1e-5)
     val wideT = LearningOps.zcaExprTransformer("v", "w", muW, wW, wideD)
 
-    // zero-job serving: both chains collapse under ConvertToLocalRelation
+    // zero-job serving: both chains compile to one projection
     val input = small.select($"id", $"v")
     val servingRows = input.orderBy($"id").collect().take(10)
     val wideRows = wide.orderBy($"id").collect().take(5)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val jobs = jobsDuring {
+      val server = LocalServer.compile(chain, spark, input.schema)
       servingRows.foreach { row =>
-        val served = chain.applyLocal(spark, input.schema, Seq(row))
+        val served = server(Seq(row))
         assert(served.size == 1)
         val diff = maxDiff(served.head.getAs[scala.collection.Seq[Double]]("rf"),
           replayed(row.getLong(0)))
         assert(diff < 1e-9,
           s"served ZCA chain diverged from the replay on id=${row.getLong(0)}: $diff")
       }
+      val wideServer = LocalServer.compile(wideT, spark, wide.schema)
       wideRows.foreach { row =>
-        val served = wideT.applyLocal(spark, wide.schema, Seq(row))
+        val served = wideServer(Seq(row))
         assert(served.size == 1)
         val x = row.getSeq[Double](1).toArray
         val diff = maxDiff(served.head.getAs[scala.collection.Seq[Double]]("w"),
@@ -191,12 +168,8 @@ class ServingSpec extends GraftSuite {
         assert(diff < 1e-9,
           s"served d = 256 whitener diverged from the replay on id=${row.getLong(0)}: $diff")
       }
-      spark.sparkContext.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (jobs.get() < 1 && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(jobs.get() == 1,
-        s"ZCA serving launched ${jobs.get() - 1} Spark job(s); EP3 requires zero")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs == 0, s"ZCA serving launched $jobs Spark job(s); EP3 requires zero")
   }
 
   test("LocalServer compiles the chain once and serves per-datum with zero jobs") {
@@ -206,14 +179,8 @@ class ServingSpec extends GraftSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val servingRows = input.orderBy(col("id")).collect()
 
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val server = graft.ml.LocalServer.compile(chain, spark, input.schema)
+    val jobs = jobsDuring {
+      val server = LocalServer.compile(chain, spark, input.schema)
       // warm the codegen'd projection, then time the steady state — the
       // envelope the reference's per-datum Transformer.apply lives in
       server(servingRows.head)
@@ -231,18 +198,14 @@ class ServingSpec extends GraftSuite {
       // stage is an execution hint invisible to the analyzed program and
       // compiles fine
       val thrown = intercept[IllegalArgumentException] {
-        graft.ml.LocalServer.compile(
+        LocalServer.compile(
           chain.andThen(Transformer { df =>
             df.groupBy(col("cls")).agg(count(lit(1)).as("n"))
           }), spark, input.schema)
       }
       assert(thrown.getMessage.contains("pure column program"))
-      spark.sparkContext.parallelize(Seq(1), 1).count() // marker flush
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (jobs.get() < 1 && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(jobs.get() == 1,
-        s"compile+serve launched ${jobs.get() - 1} Spark job(s); must be zero")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs == 0, s"compile+serve launched $jobs Spark job(s); must be zero")
   }
 
   test("LocalServer serves a 1024-feature CRF scorer as batch does") {
@@ -263,7 +226,7 @@ class ServingSpec extends GraftSuite {
     def bits(xs: Seq[Double]) = xs.map(java.lang.Double.doubleToRawLongBits)
     val batch = chain(data).select(col("id"), col("scores"), col("cls")).collect()
       .map(r => r.getLong(0) -> (bits(r.getSeq[Double](1)), r.getLong(2))).toMap
-    val server = graft.ml.LocalServer.compile(chain, spark, data.schema)
+    val server = LocalServer.compile(chain, spark, data.schema)
     val rows = data.orderBy(col("id")).collect()
     rows.foreach { row =>
       val served = server(row)
@@ -273,7 +236,7 @@ class ServingSpec extends GraftSuite {
     assert(rows.length == 120 && batch.size == 120)
   }
 
-  test("applyLocal round-trips through ModelIO and fails fast on non-local chains") {
+  test("LocalServer round-trips through ModelIO and ignores a persist stage") {
     val (chain, frames) = fitted
     val input = frames.select($"id", $"label", $"wave")
     val row = input.orderBy($"id").head()
@@ -281,30 +244,19 @@ class ServingSpec extends GraftSuite {
       .toString
     ModelIO.save(chain, path)
     val loaded = ModelIO.load(path)
-    val a = chain.applyLocal(spark, input.schema, Seq(row)).head
-    val b = loaded.applyLocal(spark, input.schema, Seq(row)).head
+    // the full lifecycle loop: train -> save -> load -> COMPILE -> serve
+    // (a serving process deserializes the model and binds it once)
+    val a = LocalServer.compile(chain, spark, input.schema)(row)
+    val b = LocalServer.compile(loaded, spark, input.schema)(row)
     assert(a.getAs[Long]("cls") == b.getAs[Long]("cls"))
     assert(a.getSeq[Double](a.fieldIndex("scores")) ==
       b.getSeq[Double](b.fieldIndex("scores")))
-    // the full lifecycle loop: train -> save -> load -> COMPILE -> serve
-    // (a serving process deserializes the model and binds it once)
-    val server = graft.ml.LocalServer.compile(loaded, spark, input.schema)
-    val served = server(row)
-    assert(served.getAs[Long]("cls") == a.getAs[Long]("cls"))
-    assert(served.getSeq[Double](served.fieldIndex("scores")) ==
-      a.getSeq[Double](a.fieldIndex("scores")))
     java.nio.file.Files.delete(java.nio.file.Paths.get(path))
-    // a chain with an RDD/persist seam cannot collapse: requireLocal
-    // must raise rather than silently launching per-datum jobs
+    // a persist stage is an execution hint, not part of the column
+    // program: the chain still compiles and serves the same datum
     val cachingChain = chain.andThen(graft.ml.workflow.Cacher())
-    val thrown = intercept[IllegalArgumentException] {
-      cachingChain.applyLocal(spark, input.schema, Seq(row))
-    }
-    assert(thrown.getMessage.contains("did not collapse"))
-    // the explicit opt-out still serves correctly (paying a job)
-    val fallback = cachingChain
-      .applyLocal(spark, input.schema, Seq(row), requireLocal = false)
-    assert(fallback.head.getAs[Long]("cls") == a.getAs[Long]("cls"))
+    val cached = LocalServer.compile(cachingChain, spark, input.schema)(row)
+    assert(cached.getAs[Long]("cls") == a.getAs[Long]("cls"))
     Harness.cleanup(spark)
   }
 
@@ -322,9 +274,9 @@ class ServingSpec extends GraftSuite {
     ModelIO.save(withInline, path)
     intercept[java.io.InvalidClassException] { ModelIO.load(path) }
     val loaded = ModelIO.load(path, extraAllowedPrefixes = Seq("org.scalatest."))
-    val row = frames.select($"id", $"label", $"wave").orderBy($"id").head()
-    val served = loaded.applyLocal(spark,
-      frames.select($"id", $"label", $"wave").schema, Seq(row)).head
+    val input = frames.select($"id", $"label", $"wave")
+    val served = LocalServer.compile(loaded, spark, input.schema)(
+      input.orderBy($"id").head())
     assert(served.getAs[Int]("one") == 1)
     java.nio.file.Files.delete(java.nio.file.Paths.get(path))
   }

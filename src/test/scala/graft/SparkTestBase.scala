@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Prop, Test => ScTest}
@@ -32,6 +33,33 @@ abstract class GraftSuite extends AnyFunSuite {
       case Some(v) => sys.props("graft.force.distributed") = v
       case None => sys.props.remove("graft.force.distributed")
     }
+  }
+
+  /** Spark jobs launched while `body` runs. A one-job marker action
+    * tagged with a local property follows `body`; listener events arrive
+    * in order, so once the marker's start is seen, every job `body`
+    * launched has been counted. */
+  def jobsDuring(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (js.properties != null &&
+            js.properties.getProperty("graft.test.marker") != null)
+          markerSeen.countDown()
+        else jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setLocalProperty("graft.test.marker", "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.test.marker", null)
+      assert(markerSeen.await(10, java.util.concurrent.TimeUnit.SECONDS),
+        "the marker job's start was never observed")
+      jobs.get()
+    } finally sc.removeSparkListener(listener)
   }
 
   /** Array-column accessor (Spark hands back mutable.ArraySeq). */

@@ -234,6 +234,28 @@ class VectorExprsSpec extends GraftSuite {
     assert(line.trim.startsWith("*("), s"expected codegen'd Project in:\n$plan")
   }
 
+  test("graft_affine raises on a row whose width is not W's, codegen or not") {
+    val w = typedlit(Array(Array(1.0, 0.0, 0.0), Array(0.0, 1.0, 1.0)))
+    val b = typedlit(Array(0.5, -1.0))
+    def message(e: Throwable) = Iterator.iterate(e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).mkString(" ")
+    for (x <- Seq(Array(1.0, 2.0), Array(1.0, 2.0, 3.0, 4.0))) {
+      // an RDD-backed frame, so the projection runs as generated code
+      // rather than being folded into a local relation by the optimizer;
+      // each mode plans its own frame
+      def bad = spark.sparkContext.parallelize(Seq(Tuple1(x)), 1).toDF("x")
+        .select(call_function("graft_affine", $"x", w, b))
+      val plan = bad.queryExecution.executedPlan.toString
+      assert(plan.linesIterator.exists(l =>
+        l.contains("graft_affine") && l.trim.startsWith("*(")), plan)
+      val want = s"graft_affine expects x to have 3 entries, got ${x.length}"
+      val codegen = message(intercept[Exception](bad.collect()))
+      assert(codegen.contains(want), codegen)
+      val noCodegen = message(intercept[Exception](interpreted(bad.collect())))
+      assert(noCodegen.contains(want), noCodegen)
+    }
+  }
+
   test("graft_centered_affine is bit-identical to the zip_with + graft_dot spelling") {
     // the ZCA/PCA projection kernel vs the per-output spelling it
     // replaced, whose zip_with centering was CodegenFallback re-run per

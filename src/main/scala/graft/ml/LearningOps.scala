@@ -130,6 +130,13 @@ object LearningOps extends Serializable {
     }
   }
 
+  /** Raises a named error when a row's width is not the width the fit
+    * read off another row (a ragged training frame). */
+  private[ml] def requireWidth(fit: String, what: String, want: Int,
+      got: Int): Unit =
+    if (got != want) throw new IllegalArgumentException(
+      s"$fit: ragged training frame, a row has $got $what where another has $want")
+
   /** Chunked per-partition gram accumulator — the reference's
     * rows→local-matrix + level-3 BLAS pattern (`[K] utils/MatrixUtils`)
     * shared by every fit that needs Σ x xᵀ statistics (ZCA covariance,
@@ -339,22 +346,31 @@ object LearningOps extends Serializable {
     {
       val data = train.select(transform(col(in), _.cast("double")).as("v"))
         .rdd.map(r => r.getSeq[Double](0).toArray)
-      val d = data.first().length
-      val dd = d
-      val (n, sumArr, gUpper) = data.mapPartitions { it =>
-        val s = new Array[Double](dd)
-        val (cnt, g) = syrkPartition[Array[Double]](it, dd, identity, x => {
-          var j = 0
-          while (j < dd) { s(j) += x(j); j += 1 }
-        })
-        Iterator.single((cnt, s, g))
-      }.treeReduce { case ((c1, s1, g1), (c2, s2, g2)) =>
+      // each partition sizes d off its first row (no first() job); an
+      // empty partition contributes nothing
+      val parts = data.mapPartitions { rows =>
+        val it = rows.buffered
+        if (!it.hasNext) Iterator.empty
+        else {
+          val dd = it.head.length
+          val s = new Array[Double](dd)
+          val (cnt, g) = syrkPartition[Array[Double]](it, dd, identity, x => {
+            requireWidth("ZCAWhitener", "entries", dd, x.length)
+            var j = 0
+            while (j < dd) { s(j) += x(j); j += 1 }
+          })
+          Iterator.single((cnt, s, g))
+        }
+      }
+      val (n, sumArr, gUpper) = parts.treeReduce { case ((c1, s1, g1), (c2, s2, g2)) =>
+        requireWidth("ZCAWhitener", "entries", s1.length, s2.length)
         var i = 0
         while (i < s1.length) { s1(i) += s2(i); i += 1 }
         i = 0
         while (i < g1.length) { g1(i) += g2(i); i += 1 }
         (c1 + c2, s1, g1)
       }
+      val d = sumArr.length
       val outer = mirrorUpper(gUpper, d)
       val mu = DenseVector(sumArr) / n.toDouble
       val cov = (outer / n.toDouble) - mu * mu.t
@@ -447,12 +463,29 @@ object LearningOps extends Serializable {
       k: Int): (Array[Double], Array[Array[Double]], Array[Double]) = {
     val data = df.select(transform(col(in), _.cast("double")).as("v"))
       .rdd.map(r => r.getSeq[Double](0).toArray)
-    val d = data.first().length
+    // the mean pass sizes d off the rows themselves (no first() job)
+    val (n, sum) = data.treeAggregate((0L, null: Array[Double]))(
+      seqOp = { case ((c, s), x) =>
+        val acc = if (s == null) new Array[Double](x.length) else s
+        requireWidth("tsqrPca", "entries", acc.length, x.length)
+        var j = 0
+        while (j < acc.length) { acc(j) += x(j); j += 1 }
+        (c + 1, acc)
+      },
+      combOp = { case ((c1, s1), (c2, s2)) =>
+        if (s2 == null) (c1, s1)
+        else if (s1 == null) (c2, s2)
+        else {
+          requireWidth("tsqrPca", "entries", s1.length, s2.length)
+          var j = 0
+          while (j < s1.length) { s1(j) += s2(j); j += 1 }
+          (c1 + c2, s1)
+        }
+      })
+    require(n > 0, "tsqrPca: empty frame")
+    val d = sum.length
     require(k <= d, s"k=$k exceeds dim $d")
-    val (n, sum) = data.treeAggregate((0L, DenseVector.zeros[Double](d)))(
-      seqOp = { case ((c, s), x) => (c + 1, s + DenseVector(x)) },
-      combOp = { case ((c1, s1), (c2, s2)) => (c1 + c2, s1 + s2) })
-    val mu = sum / n.toDouble
+    val mu = DenseVector(sum) / n.toDouble
     val bMu = data.sparkContext.broadcast(mu.toArray)
     def rOf(m: DenseMatrix[Double]): DenseMatrix[Double] = lapackQrR(m)
     val rFinal = data.mapPartitions { it =>
@@ -708,12 +741,12 @@ object LearningOps extends Serializable {
       extends Estimator {
 
     def fit(train: DataFrame): Transformer = {
-      val d = train.select(size(col(featuresCol))).head().getInt(0)
-      val k = train.select(size(col(labelsCol))).head().getInt(0)
+      val sizes = train.select(size(col(featuresCol)), size(col(labelsCol))).head()
+      val (d, k) = (sizes.getInt(0), sizes.getInt(1))
       val blocks = (0 until d).grouped(blockSize).toArray
       val wc = weightCol.map(col(_).cast("double")).getOrElse(lit(1.0))
       val w = blockCdSolve(train, featuresCol,
-        transform(col(labelsCol), _.cast("double")), k = k, d = d,
+        col(labelsCol).cast("array<double>"), k = k, d = d,
         blocks = blocks, numIter = numIter, lambda = lambda, wc = wc)
       scoresTransformer(featuresCol, out, w)
     }
@@ -773,9 +806,13 @@ object LearningOps extends Serializable {
     val kk = k
     val widest = math.max(dd, kk).toLong.max(1L)
     val safeRowsPerPart = math.max(1L, maxPartElems / (2L * widest))
+    // the frame is planned once: this one RDD gives the partition count
+    // the nHint guard reads and feeds the cache build
+    val rows = train.select(col(featuresCol).cast("array<double>").as("x"),
+      labels.as("ys"), wc.as("w")).rdd
     val source =
       if (nHint > 0) {
-        val parts = math.max(train.rdd.getNumPartitions, 1)
+        val parts = math.max(rows.getNumPartitions, 1)
         // Trigger on the AVERAGE reaching HALF the safe rows/partition,
         // not the safe value itself: the incoming partitioning can be
         // skewed (the cap error fires on the worst partition, not the
@@ -787,55 +824,52 @@ object LearningOps extends Serializable {
         // guards the build.
         if (nHint / parts > safeRowsPerPart / 2) {
           val want = math.ceil(2.0 * nHint.toDouble / safeRowsPerPart)
-          train.repartition(math.min(want, 1e7).toInt.max(parts))
-        } else train
-      } else train
+          rows.repartition(math.min(want, 1e7).toInt.max(parts))
+        } else rows
+      } else rows
     val capMsg = maxPartElems
     // one pass builds the column-major cache: per partition a d×m
     // column-major design (cm), a k×m column-major target matrix (yk),
     // and √(row weight) scales
-    val cols = source.select(
-      transform(col(featuresCol), _.cast("double")).as("x"),
-      labels.as("ys"), wc.as("w"))
-      .rdd.mapPartitions { it =>
-        val buf = it.map(r =>
-          (r.getSeq[Double](0).toArray, r.getSeq[Double](1).toArray,
-            r.getDouble(2))).toArray
-        val m = buf.length
-        if (m.toLong * dd > capMsg || m.toLong * kk > capMsg)
-          throw new IllegalArgumentException(
-            s"blockCdSolve: a partition with $m rows x max($dd features, " +
-              s"$kk targets) overflows the flat column-major cache " +
-              s"(limit $capMsg elements); repartition the training frame " +
-              s"to <= ${capMsg / math.max(math.max(dd, kk), 1)} rows per " +
-              "partition (the automatic nHint guard levels on the MEAN " +
-              "rows/partition, so a layout skewed enough to overflow one " +
-              "partition while the mean stays under half the safe cap " +
-              "reaches here — pass a repartitioned frame)")
-        val cm = new Array[Double](m * dd)
-        val yk = new Array[Double](m * kk)
-        val sw = new Array[Double](m)
-        var i = 0
-        while (i < m) {
-          val (x, ys, w0) = buf(i)
-          if (x.length != dd) throw new IllegalArgumentException(
-            s"blockCdSolve: a row has ${x.length} features, expected $dd")
-          if (ys.length != kk) throw new IllegalArgumentException(
-            s"blockCdSolve: a row has ${ys.length} targets, expected $kk")
-          if (w0 < 0.0) throw new IllegalArgumentException(
-            s"blockCdSolve: negative row weight $w0 (weights scale the " +
-              "gram as sqrt factors and must be >= 0)")
-          sw(i) = math.sqrt(w0)
-          var c = 0
-          while (c < kk) { yk(c * m + i) = ys(c); c += 1 }
-          var j = 0
-          while (j < dd) { cm(j * m + i) = x(j); j += 1 }
-          buf(i) = null // release the row copy as it is transposed, so the
-          // build's peak heap stays ~1× the cached footprint, not 2×
-          i += 1
-        }
-        Iterator.single((cm, yk, sw))
-      }.persist(level)
+    val cols = source.mapPartitions { it =>
+      val buf = it.map(r =>
+        (r.getSeq[Double](0).toArray, r.getSeq[Double](1).toArray,
+          r.getDouble(2))).toArray
+      val m = buf.length
+      if (m.toLong * dd > capMsg || m.toLong * kk > capMsg)
+        throw new IllegalArgumentException(
+          s"blockCdSolve: a partition with $m rows x max($dd features, " +
+            s"$kk targets) overflows the flat column-major cache " +
+            s"(limit $capMsg elements); repartition the training frame " +
+            s"to <= ${capMsg / math.max(math.max(dd, kk), 1)} rows per " +
+            "partition (the automatic nHint guard levels on the MEAN " +
+            "rows/partition, so a layout skewed enough to overflow one " +
+            "partition while the mean stays under half the safe cap " +
+            "reaches here — pass a repartitioned frame)")
+      val cm = new Array[Double](m * dd)
+      val yk = new Array[Double](m * kk)
+      val sw = new Array[Double](m)
+      var i = 0
+      while (i < m) {
+        val (x, ys, w0) = buf(i)
+        if (x.length != dd) throw new IllegalArgumentException(
+          s"blockCdSolve: a row has ${x.length} features, expected $dd")
+        if (ys.length != kk) throw new IllegalArgumentException(
+          s"blockCdSolve: a row has ${ys.length} targets, expected $kk")
+        if (w0 < 0.0) throw new IllegalArgumentException(
+          s"blockCdSolve: negative row weight $w0 (weights scale the " +
+            "gram as sqrt factors and must be >= 0)")
+        sw(i) = math.sqrt(w0)
+        var c = 0
+        while (c < kk) { yk(c * m + i) = ys(c); c += 1 }
+        var j = 0
+        while (j < dd) { cm(j * m + i) = x(j); j += 1 }
+        buf(i) = null // release the row copy as it is transposed, so the
+        // build's peak heap stays ~1× the cached footprint, not 2×
+        i += 1
+      }
+      Iterator.single((cm, yk, sw))
+    }.persist(level)
     // the first sweep reads the cached targets as its residual: every
     // update below clones before it writes
     var resid = cols.map(_._2)

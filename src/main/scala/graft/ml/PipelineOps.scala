@@ -2,7 +2,6 @@ package graft.ml
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.storage.StorageLevel
 
 /** Keystone-shaped pipeline façade, re-expressed Spark-first.
@@ -293,41 +292,181 @@ object workflow {
     else df.withColumn("__features",
       toSparseVec(transform(col(in), _.cast("double"))))
 
-  /** Fit-time problem probe shared by the solver dispatchers: exact n
-    * (a columnar count), and the zero-fraction of a ~4k-row sample —
-    * SAMPLED FIRST so the per-row nnz projection runs over the sample,
-    * not the corpus. */
-  private def probeProblem(train: DataFrame, featuresCol: String,
-      d: Int): (Long, Double) = {
-    val n = train.count()
-    val frac = math.min(1.0, 4096.0 / math.max(n, 1L).toDouble)
-    val probe = train
-      .sample(withReplacement = false, frac, seed = 7L)
-      .select((size(filter(col(featuresCol), x => x =!= 0.0)).cast("double")
-        / d).as("rowDensity"))
-      .agg(avg(col("rowDensity"))).head()
-    val density =
-      if (probe.isNullAt(0)) 1.0 else math.max(probe.getDouble(0), 1e-6)
-    (n, density)
+  /** Fit-time problem statistics for the solver dispatchers, from ONE
+    * treeAggregate over the training frame: n, the feature width d, the
+    * target width k, the exact nonzero count of the design (density =
+    * nnz ÷ n·d) and, when `sums` is set, the feature and label sums the
+    * intercept centering needs. d and k are read off the rows themselves,
+    * so a ragged frame (a row whose feature or target width differs from
+    * another's) and an empty frame raise named errors here, before any
+    * solver runs. */
+  private final class LsqProbe(sums: Boolean) extends Serializable {
+    var n = 0L
+    var d = -1
+    var k = -1
+    var nnz = 0L
+    var sx: Array[Double] = _
+    var sy: Array[Double] = _
+
+    private def width(seen: Int, got: Int, what: String): Int = {
+      if (seen >= 0) LearningOps.requireWidth("least squares", what, seen, got)
+      got
+    }
+
+    def add(r: org.apache.spark.sql.Row): LsqProbe = {
+      if (r.isNullAt(0) || r.isNullAt(1)) throw new IllegalArgumentException(
+        "least squares: a training row has a null feature or label array")
+      val x = r.getSeq[Double](0)
+      val ys = r.getSeq[Double](1)
+      d = width(d, x.length, "features")
+      k = width(k, ys.length, "targets")
+      if (sums && sx == null) { sx = new Array[Double](d); sy = new Array[Double](k) }
+      var j = 0
+      while (j < d) {
+        val v = x(j)
+        if (v != 0.0) nnz += 1
+        if (sums) sx(j) += v
+        j += 1
+      }
+      if (sums) { var c = 0; while (c < k) { sy(c) += ys(c); c += 1 } }
+      n += 1
+      this
+    }
+
+    def merge(o: LsqProbe): LsqProbe =
+      if (o.n == 0) this
+      else if (n == 0) o
+      else {
+        d = width(d, o.d, "features")
+        k = width(k, o.k, "targets")
+        if (sums) {
+          var j = 0
+          while (j < d) { sx(j) += o.sx(j); j += 1 }
+          var c = 0
+          while (c < k) { sy(c) += o.sy(c); c += 1 }
+        }
+        n += o.n
+        nnz += o.nnz
+        this
+      }
+
+    /** Exact nonzero fraction of the n×d design (1.0 for a width-0 one). */
+    def density: Double =
+      if (d == 0) 1.0 else math.max(nnz.toDouble / (n.toDouble * d), 1e-6)
   }
 
-  /** ref: nodes.learning.NaiveBayesEstimator (wraps MLlib multinomial NB).
-    * Label column must be numeric 0..k-1; emits predicted class + the raw
-    * score array. */
+  private def probeLeastSquares(train: DataFrame, featuresCol: String,
+      labels: Column, sums: Boolean): LsqProbe = {
+    val p = train.select(col(featuresCol).cast("array<double>"), labels)
+      .rdd.treeAggregate(new LsqProbe(sums))(_ add _, _ merge _)
+    if (p.n == 0) throw new IllegalArgumentException(
+      "least squares: empty training frame")
+    p
+  }
+
+  /** ref: nodes.learning.NaiveBayesEstimator — multinomial Naive Bayes,
+    * fitted natively in ONE pass: a treeAggregate of per-class (row
+    * count, feature sums), then MLlib's own formulas on the driver,
+    * π_c = ln(n_c + λ) − ln(N + C·λ) and
+    * θ_cj = ln(s_cj + λ) − ln(Σ_j s_cj + d·λ), over the distinct labels
+    * in ascending order (MLlib's class set), with MLlib's checks as named
+    * errors: every feature ≥ 0, every label an integer in [0, 2³¹−1).
+    *
+    * The fitted model is one constant-size `graft_affine(x, θ, π)` kernel
+    * into `${out}_scores` (MLlib's raw prediction π + θx), and `out` is
+    * the index of the first highest score, as a double — MLlib's
+    * prediction, which is the label when the labels are 0..C−1. Scoring
+    * keeps MLlib's non-negative-feature check, and the chain stays a pure
+    * column program, so [[LocalServer]] serves it without a job. */
   case class NaiveBayesEst(featuresCol: String, labelCol: String, out: String,
       smoothing: Double = 1.0) extends Estimator {
+    require(smoothing >= 0.0, s"NaiveBayesEst needs smoothing >= 0, got $smoothing")
+
     def fit(train: DataFrame): Transformer = {
-      val model = new org.apache.spark.ml.classification.NaiveBayes()
-        .setModelType("multinomial").setSmoothing(smoothing)
-        .setFeaturesCol("__features").setLabelCol(labelCol)
-        .setPredictionCol(out).setRawPredictionCol("__raw")
-        .setProbabilityCol("__prob")
-        .fit(LearningOps.withVec(train, featuresCol))
+      val (pi, theta) = fitModel(train)
+      val fc = featuresCol
+      val scores = s"${out}_scores"
+      val oc = out
       Transformer { df =>
-        model.transform(LearningOps.withVec(df, featuresCol))
-          .withColumn(s"${out}_scores", vector_to_array(col("__raw")))
-          .drop("__features", "__raw", "__prob")
+        val x = col(fc).cast("array<double>")
+        val lowest = array_min(x)
+        val checked = when(!(lowest >= 0.0), raise_error(concat(
+          lit(s"NaiveBayesEst($fc): features must be >= 0, got "),
+          lowest.cast("string")))).otherwise(LearningOps.affine(df, fc, theta, pi))
+        df.withColumn(scores, checked)
+          .withColumn(oc,
+            (array_position(col(scores), array_max(col(scores))) - 1).cast("double"))
       }
+    }
+
+    /** (π, θ as one row per class), classes in ascending label order. */
+    private[graft] def fitModel(train: DataFrame)
+        : (Array[Double], Array[Array[Double]]) = {
+      val fc = featuresCol
+      val counts = train
+        .select(col(featuresCol).cast("array<double>"), col(labelCol).cast("double"))
+        .rdd.treeAggregate(new NbCounts(fc))(_ add _, _ merge _)
+      if (counts.byClass.isEmpty) throw new IllegalArgumentException(
+        s"NaiveBayesEst($fc): empty training frame")
+      val classes = counts.byClass.keys.toArray.sorted
+      val d = counts.d
+      val lambda = smoothing
+      val stats = classes.map(counts.byClass)
+      val piLogDenom =
+        math.log(stats.map(_(0)).sum + classes.length * lambda)
+      val pi = stats.map(s => math.log(s(0) + lambda) - piLogDenom)
+      val theta = stats.map { s =>
+        val thetaLogDenom = math.log(s.iterator.drop(1).sum + d * lambda)
+        Array.tabulate(d)(j => math.log(s(j + 1) + lambda) - thetaLogDenom)
+      }
+      (pi, theta)
+    }
+  }
+
+  /** [[NaiveBayesEst]]'s one-pass statistics: per class label, an array
+    * holding the row count then the d feature sums. */
+  private final class NbCounts(fc: String) extends Serializable {
+    var d = -1
+    val byClass = scala.collection.mutable.HashMap.empty[Int, Array[Double]]
+
+    private def width(got: Int): Unit = {
+      if (d >= 0) LearningOps.requireWidth(s"NaiveBayesEst($fc)", "features", d, got)
+      d = got
+    }
+
+    def add(r: org.apache.spark.sql.Row): NbCounts = {
+      if (r.isNullAt(1)) throw new IllegalArgumentException(
+        s"NaiveBayesEst($fc): class labels must not be null")
+      val y = r.getDouble(1)
+      if (!(y >= 0.0 && y < Int.MaxValue && y == y.toInt))
+        throw new IllegalArgumentException(
+          s"NaiveBayesEst($fc): class labels must be integers in [0, ${Int.MaxValue}), got $y")
+      if (r.isNullAt(0)) throw new IllegalArgumentException(
+        s"NaiveBayesEst($fc): a training row has a null feature array")
+      val x = r.getSeq[Double](0)
+      width(x.length)
+      val s = byClass.getOrElseUpdate(y.toInt, new Array[Double](d + 1))
+      s(0) += 1.0
+      var j = 0
+      while (j < d) {
+        val v = x(j)
+        if (!(v >= 0.0)) throw new IllegalArgumentException(
+          s"NaiveBayesEst($fc): features must be >= 0, got $v")
+        s(j + 1) += v
+        j += 1
+      }
+      this
+    }
+
+    def merge(o: NbCounts): NbCounts = {
+      if (o.d >= 0) width(o.d)
+      o.byClass.foreach { case (y, t) =>
+        byClass.get(y) match {
+          case Some(s) => var j = 0; while (j < s.length) { s(j) += t(j); j += 1 }
+          case None => byClass(y) = t
+        }
+      }
+      this
     }
   }
 
@@ -377,34 +516,6 @@ object workflow {
     }
   }
 
-  /** One-pass feature/label means (treeAggregate of d+k doubles) for
-    * intercept centering — shared by the solver dispatchers. */
-  private def probeMeans(df: DataFrame, featuresCol: String,
-      labels: org.apache.spark.sql.Column, d: Int, k: Int,
-      n: Long): (Array[Double], Array[Double]) = {
-    val (sx, sy) = df.select(
-      transform(col(featuresCol), _.cast("double")).as("x"), labels.as("ys"))
-      .rdd.treeAggregate((new Array[Double](d), new Array[Double](k)))(
-        seqOp = { case ((ax, ay), r) =>
-          val x = r.getSeq[Double](0)
-          val ys = r.getSeq[Double](1)
-          var j = 0
-          while (j < d) { ax(j) += x(j); j += 1 }
-          var c = 0
-          while (c < k) { ay(c) += ys(c); c += 1 }
-          (ax, ay)
-        },
-        combOp = { case ((ax, ay), (bx, by)) =>
-          var j = 0
-          while (j < d) { ax(j) += bx(j); j += 1 }
-          var c = 0
-          while (c < k) { ay(c) += by(c); c += 1 }
-          (ax, ay)
-        })
-    val nn = math.max(n, 1L).toDouble
-    (sx.map(_ / nn), sy.map(_ / nn))
-  }
-
   /** Center an array column by a plain mean array (fit-time only; serve
     * time folds the means into the intercept instead). */
   private def centered(in: org.apache.spark.sql.Column,
@@ -441,11 +552,12 @@ object workflow {
 
   /** Shared fit core for the two solver dispatchers (ref:
     * nodes.learning.LeastSquaresEstimator — SURVEY §4, the paper's
-    * headline operator-level optimization): probe the PROBLEM — n
-    * (count), d (width), k (targets), sparsity (sampled zero-fraction),
-    * cluster parallelism — let [[graft.ml.SolverCostModel]] price the
-    * three physical solvers, solve on the winner, and return the k×d
-    * weights plus per-target intercepts.
+    * headline operator-level optimization): probe the PROBLEM in one
+    * pass ([[LsqProbe]]: n, d (width), k (targets), exact density) and
+    * read the cluster parallelism, let [[graft.ml.SolverCostModel]]
+    * price the three physical solvers, solve on the winner, and return
+    * the k×d weights plus per-target intercepts. A dense `normal` fit
+    * is two jobs: the probe and the gram.
     *
     * Routes: `normal` = ONE gram pass through the shared block-CD core
     * with a single full-width block (any d the cost model's
@@ -471,18 +583,18 @@ object workflow {
     * must fit the bias weight on every route.
     *
     * With `fitIntercept` the core mean-centers features and labels
-    * (one treeAggregate pass), solves WITHOUT an intercept on
+    * (the probe pass also sums them), solves WITHOUT an intercept on
     * whichever route won — preserving solver-choice invariance — and
     * reconstitutes b_c = ȳ_c − x̄ᵀw_c (the reference LinearMapper's
     * `bOpt`). Centering densifies, so the sparse-vector gate requires
     * `!fitIntercept`; on a genuinely sparse design prefer the
     * reference convention (append a bias feature) over centering. */
   private def dispatchLeastSquares(train: DataFrame, featuresCol: String,
-      rawLabels: Column, k: Int, regParam: Double, fitIntercept: Boolean,
+      rawLabels: Column, regParam: Double, fitIntercept: Boolean,
       normalEqMaxDim: Int, blockSize: Int, numIter: Int,
       solverOverride: Option[String]): DispatchResult = {
-    val d = train.select(size(col(featuresCol))).head().getInt(0)
-    val (n, density) = probeProblem(train, featuresCol, d)
+    val probe = probeLeastSquares(train, featuresCol, rawLabels, fitIntercept)
+    val (n, d, k, density) = (probe.n, probe.d, probe.k, probe.density)
     val workers = train.sparkSession.sparkContext.defaultParallelism
     val (modelPick, costs) = graft.ml.SolverCostModel.choose(
       graft.ml.SolverCostModel.Problem(n, d, k, density, workers,
@@ -493,7 +605,7 @@ object workflow {
       s"unknown solver override '$solver' (valid: " +
         s"${graft.ml.SolverCostModel.ExactnessOrder.mkString(", ")})")
     val (xMu, yMu) =
-      if (fitIntercept) probeMeans(train, featuresCol, rawLabels, d, k, n)
+      if (fitIntercept) (probe.sx.map(_ / n), probe.sy.map(_ / n))
       else (new Array[Double](d), new Array[Double](k))
     val fitFrame =
       if (fitIntercept)
@@ -567,7 +679,7 @@ object workflow {
 
     def fit(train: DataFrame): Transformer = {
       val r = dispatchLeastSquares(train, featuresCol,
-        array(col(labelCol).cast("double")), k = 1, regParam,
+        array(col(labelCol).cast("double")), regParam,
         fitIntercept, normalEqMaxDim, blockSize, numIter, solverOverride)
       chosenSolver = r.solver
       costReport = r.costs
@@ -604,9 +716,8 @@ object workflow {
     @volatile var fittedIntercepts: Array[Double] = _
 
     def fit(train: DataFrame): Transformer = {
-      val k = train.select(size(col(labelsCol))).head().getInt(0)
       val r = dispatchLeastSquares(train, featuresCol,
-        transform(col(labelsCol), _.cast("double")), k = k, regParam,
+        col(labelsCol).cast("array<double>"), regParam,
         fitIntercept, normalEqMaxDim, blockSize, numIter, solverOverride)
       chosenSolver = r.solver
       costReport = r.costs

@@ -156,32 +156,26 @@ class LearningOpsSpec extends GraftSuite {
     val nullElem = small.select($"vec_id",
       transform($"v", (x, i) =>
         when($"vec_id" === 7L && i === 2, lit(null)).otherwise(x)).as("v"))
-    def messageChain(t: Throwable): String = {
-      val sb = new StringBuilder
-      var e = t
-      while (e != null) { sb ++= String.valueOf(e.getMessage); e = e.getCause }
-      sb.toString
-    }
     val path = zcaExprTransformer("v", "w", muF, wF, d)
     // collect the output column: a bare count() would let Catalyst
     // prune the projection away and never hit the guard
     val e1 = intercept[Exception] { path(nullArray).select("w").collect() }
-    assert(messageChain(e1).contains(
+    assert(causeChain(e1).contains(
       "graft: ZCAWhitener(v) got a null array"),
-      s"wanted the named null-array error, got: ${messageChain(e1)}")
+      s"wanted the named null-array error, got: ${causeChain(e1)}")
     val e2 = intercept[Exception] { path(nullElem).select("w").collect() }
-    assert(messageChain(e2).contains(
+    assert(causeChain(e2).contains(
       "graft: ZCAWhitener(v) got a null element at index 2"),
-      s"wanted the named null-element error, got: ${messageChain(e2)}")
+      s"wanted the named null-element error, got: ${causeChain(e2)}")
     // a wrong-width row is named too, rather than computing garbage
     val shortRow = small.select($"vec_id",
       when($"vec_id" === 7L, slice($"v", 1, 3)).otherwise($"v").as("v"))
     val e3 = intercept[Exception] {
       path(shortRow).select("w").collect()
     }
-    assert(messageChain(e3).contains(
+    assert(causeChain(e3).contains(
       "graft: ZCAWhitener(v) expects width 6, got 3"),
-      s"wanted the named width error, got: ${messageChain(e3)}")
+      s"wanted the named width error, got: ${causeChain(e3)}")
   }
 
   test("tsqrPca: k past the row rank takes the gram-eigen route (orthonormal, zero tail)") {
@@ -263,6 +257,28 @@ class LearningOpsSpec extends GraftSuite {
       .select(max(abs($"m1" - $"s1"))).head().getDouble(0)
     assert(joinDiff < 1e-9,
       s"multi target 1 must match the single solve: max diff $joinDiff")
+  }
+
+  test("block least squares, PCA and ZCA fits read the widths without a probe job") {
+    val target = vecs.withColumn("ys", array(element_at($"v", 1), element_at($"v", 2)))
+    // one head() reads d and k; then 2 blocks x 2 epochs of gram passes,
+    // with a residual sweep after every one but the last
+    val blsq = jobsDuring(BlockLeastSquaresMultiEst("v", "ys", "s",
+      blockSize = 32, numIter = 2).fit(target))
+    assert(blsq == 1 + 4 + 3, s"BlockLeastSquaresMultiEst fit ran $blsq jobs")
+    // the mean pass sizes d: PCA is the mean pass and the QR tree, ZCA
+    // its one moment pass
+    val pca = jobsDuring(tsqrPca(vecs, "v", 4))
+    assert(pca == 2, s"tsqrPca ran $pca jobs")
+    val zca = jobsDuring(ZCAWhitenerEst("v", "w").fit(vecs))
+    assert(zca == 1, s"a ZCA fit ran $zca jobs")
+    // a ragged frame is refused by name, not read out of bounds
+    val ragged = vecs.withColumn("v",
+      when($"vec_id" === 7, slice($"v", 1, 6)).otherwise($"v"))
+    val e1 = intercept[Exception](tsqrPca(ragged, "v", 4))
+    assert(causeChain(e1).contains("tsqrPca: ragged training frame"), causeChain(e1))
+    val e2 = intercept[Exception](fitZcaModel(ragged, "v", 1e-5))
+    assert(causeChain(e2).contains("ZCAWhitener: ragged training frame"), causeChain(e2))
   }
 
   test("BLAS block-CD agrees with a scalar driver-side replay to 1e-9") {
@@ -472,8 +488,6 @@ class LearningOpsSpec extends GraftSuite {
   }
 
   test("a mis-sized feature row raises, when scoring and when training") {
-    def message(e: Throwable) = Iterator.iterate(e)(_.getCause)
-      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).mkString(" ")
     val train = vecs.where($"vec_id" < 200)
       .withColumn("ind", array(element_at($"v", 1), element_at($"v", 2)))
     val scorer = graft.ml.workflow.LeastSquaresMultiEst("v", "ind", "s",
@@ -483,8 +497,8 @@ class LearningOpsSpec extends GraftSuite {
     for ((x, n) <- Seq(slice($"v", 1, 32) -> 32, concat($"v", $"v") -> 128)) {
       val e = intercept[Exception](
         scorer(train.withColumn("v", x)).select($"s").collect())
-      assert(message(e).contains(s"graft_affine expects x to have 64 entries, got $n"),
-        message(e))
+      assert(causeChain(e).contains(s"graft_affine expects x to have 64 entries, got $n"),
+        causeChain(e))
     }
     // the training cache: a ragged frame is refused by name, both ways,
     // and so is a target array whose width is not k
@@ -497,12 +511,12 @@ class LearningOpsSpec extends GraftSuite {
         blocks = Array(0 until d), numIter = 1, lambda = 1e-6, wc = lit(1.0))
     for (w <- Seq(6, 10)) {
       val e = intercept[org.apache.spark.SparkException](solve(ragged(w), 1))
-      assert(message(e).contains(s"blockCdSolve: a row has $w features, expected $d"),
-        message(e))
+      assert(causeChain(e).contains(s"blockCdSolve: a row has $w features, expected $d"),
+        causeChain(e))
     }
     val e = intercept[org.apache.spark.SparkException](solve(ragged(d), 2))
-    assert(message(e).contains("blockCdSolve: a row has 1 targets, expected 2"),
-      message(e))
+    assert(causeChain(e).contains("blockCdSolve: a row has 1 targets, expected 2"),
+      causeChain(e))
   }
 
   test("weighted block solver biases the fit toward upweighted rows") {

@@ -55,22 +55,75 @@ class PipelineSpec extends GraftSuite {
     assert(served.length == 1)
     assert(served.head.getDouble(1) >= 0.0 && served.head.getDouble(1) <= 4.0)
     // EP3 proper: the same fitted chain COMPILES through LocalServer and
-    // serves one datum driver-only — tokenizer regex, the vocab-count
-    // kernel, and MLlib NaiveBayesModel.transform's scoring UDFs all
-    // fold into one codegen'd projection, so both flagship serving
-    // families (TIMIT array-math in ServingSpec, Amazon MLlib-wrapped
-    // text here) sit inside the compiled per-datum envelope
+    // serves one datum driver-only with zero Spark jobs — the tokenizer
+    // regex, the vocab-count kernel and the NB scores' graft_affine
+    // kernel with its argmax all fold into one codegen'd projection, so
+    // both flagship serving families (TIMIT array-math in ServingSpec,
+    // Amazon text here) sit inside the compiled per-datum envelope
     val input = docs.select(col("doc_id"), col("text"))
     val row = input.orderBy(col("doc_id")).head()
-    val server = graft.ml.LocalServer.compile(fitted, spark, input.schema)
-    val local = server(Seq(row))
-    assert(local.size == 1)
     val dfPred = fitted(input.orderBy(col("doc_id")).limit(1))
       .select(col("pred")).head().getDouble(0)
-    assert(local.head.getAs[Double]("pred") == dfPred,
-      "local NB serving must agree with the distributed path")
-    assert(server(row).getAs[Double]("pred") == dfPred,
-      "compiled serving must agree with the distributed path")
+    val jobs = jobsDuring {
+      val server = graft.ml.LocalServer.compile(fitted, spark, input.schema)
+      val local = server(Seq(row))
+      assert(local.size == 1)
+      assert(local.head.getAs[Double]("pred") == dfPred,
+        "local NB serving must agree with the distributed path")
+      assert(server(row).getAs[Double]("pred") == dfPred,
+        "compiled serving must agree with the distributed path")
+    }
+    assert(jobs == 0, s"NB serving launched $jobs Spark job(s)")
+  }
+
+  test("NaiveBayesEst: one count pass with MLlib's model and predictions") {
+    import org.apache.spark.ml.functions.array_to_vector
+    val tokens = Tokenize("text", "tokens")(docs)
+    val feats = CommonSparseFeatures("tokens", "features", 200).fit(tokens)(tokens)
+      .select(col("doc_id"), col("features"), col("label_id"))
+    val est = NaiveBayesEst("features", "label_id", "pred")
+    var fitted: Transformer = null
+    val jobs = jobsDuring { fitted = est.fit(feats) }
+    assert(jobs == 1, s"a NaiveBayesEst fit ran $jobs jobs, not one count pass")
+    val (pi, theta) = est.fitModel(feats)
+
+    // MLlib's multinomial NB on the same frame: the same class set, π and θ
+    val mllib = new org.apache.spark.ml.classification.NaiveBayes()
+      .setModelType("multinomial").setSmoothing(1.0)
+      .setFeaturesCol("__v").setLabelCol("label_id").setPredictionCol("mllib_pred")
+      .fit(feats.withColumn("__v", array_to_vector(col("features"))))
+    assert(pi.length == mllib.numClasses && theta.length == mllib.numClasses)
+    val d = theta.head.length
+    assert(mllib.numFeatures == d)
+    val worst = pi.indices.iterator.flatMap { c =>
+      Iterator(math.abs(pi(c) - mllib.pi(c))) ++
+        (0 until d).iterator.map(j => math.abs(theta(c)(j) - mllib.theta(c, j)))
+    }.max
+    assert(worst <= 1e-12, s"π/θ differ from MLlib's by $worst")
+    // and the same prediction on every row
+    val both = mllib.transform(fitted(feats).withColumn("__v", array_to_vector(col("features"))))
+      .select(col("doc_id"), col("pred"), col("mllib_pred")).collect()
+    assert(both.nonEmpty)
+    both.foreach(r => assert(r.getDouble(1) == r.getDouble(2),
+      s"NB prediction differs from MLlib's on doc_id=${r.get(0)}"))
+
+    // MLlib's checks, as named errors: features >= 0, at fit and at scoring
+    val negative = feats.withColumn("features",
+      when(col("doc_id") === feats.select(min(col("doc_id"))).head().get(0),
+        transform(col("features"), x => x - 1.0)).otherwise(col("features")))
+    val e1 = intercept[Exception](est.fit(negative))
+    assert(causeChain(e1).contains("NaiveBayesEst(features): features must be >= 0, got -1.0"),
+      causeChain(e1))
+    val e2 = intercept[Exception](fitted(negative).select(col("pred")).collect())
+    assert(causeChain(e2).contains("NaiveBayesEst(features): features must be >= 0, got -1.0"),
+      causeChain(e2))
+    // and integer class labels
+    val fractional = feats.withColumn("label_id",
+      when(col("label_id") === 1.0, lit(1.5)).otherwise(col("label_id")))
+    val e3 = intercept[Exception](est.fit(fractional))
+    assert(causeChain(e3).contains("NaiveBayesEst(features): class labels must be integers"),
+      causeChain(e3))
+    assert(causeChain(e3).contains("got 1.5"), causeChain(e3))
   }
 
   test("andThen composition preserves laziness until an action") {
@@ -189,16 +242,43 @@ class PipelineSpec extends GraftSuite {
       .head().getDouble(0))
     assert(rmse < 1e-3, s"dispatched block CD must fit the linear target: $rmse")
 
-    // the sampled zero-fraction probe: a design with 4 of 64 dims live
-    // must report ~6% density to the model (this is what routes
+    // the exact zero-fraction probe: a design with 4 of 64 dims live
+    // reports 4/64 density to the model (this is what routes
     // cluster-scale sparse-wide problems to l-bfgs above)
     val sparseVecs = vecs.select(
       transform(col("v"), (x, i) => when(i < 4, x).otherwise(lit(0.0))).as("v"),
       col("y"))
     val sp = LeastSquaresEst("v", "y", "pred")
     sp.fit(sparseVecs)
-    assert(math.abs(sp.probedDensity - 4.0 / 64.0) < 0.01,
-      s"sampled density probe off: ${sp.probedDensity}")
+    assert(sp.probedDensity == 4.0 / 64.0,
+      s"exact density probe off: ${sp.probedDensity}")
+  }
+
+  test("least squares: a normal-route fit is two jobs, and bad frames raise by name") {
+    val vecs = spark.read.parquet(s"$sf/embeddings.parquet")
+      .select(col("vec_id"),
+        transform(col("embedding"), x => x.cast("double")).as("v"))
+      .withColumn("ys", array(element_at(col("v"), 1), element_at(col("v"), 2)))
+    // one probe pass (n, d, k, nnz), then the gram
+    val est = LeastSquaresMultiEst("v", "ys", "scores", regParam = 1e-3)
+    val jobs = jobsDuring(est.fit(vecs))
+    assert(est.chosenSolver == "normal", s"${est.costReport}")
+    assert(jobs == 2, s"a dense normal-route fit ran $jobs jobs, not probe + gram")
+    // the probe reads the widths off the rows: a ragged feature or target
+    // array is refused before any solver runs, and so is an empty frame
+    val raggedX = vecs.withColumn("v",
+      when(col("vec_id") === 7, slice(col("v"), 1, 6)).otherwise(col("v")))
+    val e1 = intercept[Exception](LeastSquaresMultiEst("v", "ys", "s").fit(raggedX))
+    assert(causeChain(e1).contains("least squares: ragged training frame") &&
+      causeChain(e1).contains(" features where another has "), causeChain(e1))
+    val raggedY = vecs.withColumn("ys",
+      when(col("vec_id") === 7, array(lit(1.0))).otherwise(col("ys")))
+    val e2 = intercept[Exception](LeastSquaresMultiEst("v", "ys", "s").fit(raggedY))
+    assert(causeChain(e2).contains("least squares: ragged training frame") &&
+      causeChain(e2).contains(" targets where another has "), causeChain(e2))
+    val e3 = intercept[IllegalArgumentException](
+      LeastSquaresMultiEst("v", "ys", "s").fit(vecs.where(lit(false))))
+    assert(e3.getMessage == "least squares: empty training frame")
   }
 
   test("LeastSquaresMultiEst: k is a cost-model input; multi-class solves dispatch exact") {

@@ -62,6 +62,11 @@ abstract class GraftSuite extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** Every message along an exception's cause chain, space-joined: a
+    * named error raised inside a task reaches the driver wrapped. */
+  def causeChain(e: Throwable): String = Iterator.iterate(e)(_.getCause)
+    .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).mkString(" ")
+
   /** Array-column accessor (Spark hands back mutable.ArraySeq). */
   def dArr(row: Row, name: String): IndexedSeq[Double] =
     row.getSeq[Double](row.fieldIndex(name)).toIndexedSeq

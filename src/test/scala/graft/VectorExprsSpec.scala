@@ -237,8 +237,6 @@ class VectorExprsSpec extends GraftSuite {
   test("graft_affine raises on a row whose width is not W's, codegen or not") {
     val w = typedlit(Array(Array(1.0, 0.0, 0.0), Array(0.0, 1.0, 1.0)))
     val b = typedlit(Array(0.5, -1.0))
-    def message(e: Throwable) = Iterator.iterate(e)(_.getCause)
-      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).mkString(" ")
     for (x <- Seq(Array(1.0, 2.0), Array(1.0, 2.0, 3.0, 4.0))) {
       // an RDD-backed frame, so the projection runs as generated code
       // rather than being folded into a local relation by the optimizer;
@@ -249,9 +247,9 @@ class VectorExprsSpec extends GraftSuite {
       assert(plan.linesIterator.exists(l =>
         l.contains("graft_affine") && l.trim.startsWith("*(")), plan)
       val want = s"graft_affine expects x to have 3 entries, got ${x.length}"
-      val codegen = message(intercept[Exception](bad.collect()))
+      val codegen = causeChain(intercept[Exception](bad.collect()))
       assert(codegen.contains(want), codegen)
-      val noCodegen = message(intercept[Exception](interpreted(bad.collect())))
+      val noCodegen = causeChain(intercept[Exception](interpreted(bad.collect())))
       assert(noCodegen.contains(want), noCodegen)
     }
   }

@@ -2,6 +2,7 @@ package graft.ml
 
 import breeze.linalg.{DenseMatrix, DenseVector, eigSym}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
 
@@ -136,6 +137,92 @@ object LearningOps extends Serializable {
       got: Int): Unit =
     if (got != want) throw new IllegalArgumentException(
       s"$fit: ragged training frame, a row has $got $what where another has $want")
+
+  /** The one fit-row reader: `vectors` cast to array<double> at the array
+    * level (a codegen'd Cast, not a transform lambda), then `scalars`,
+    * read as the plan's own InternalRows, so no array is boxed into an
+    * external Row. Spark reuses the rows it hands out: read each through
+    * [[fitVector]] or [[nonNull]] before anything keeps it (a persist, a
+    * shuffle, a buffering toArray). */
+  private[ml] def fitRows(df: DataFrame, vectors: Seq[Column], scalars: Column*) =
+    df.select(vectors.map(_.cast("array<double>")) ++ scalars: _*)
+      .queryExecution.toRdd
+
+  /** `r`, once column `i` is known to be set; a null raises
+    * `<fit>: a training row has a null <what>`. */
+  private[ml] def nonNull(r: InternalRow, i: Int, fit: String,
+      what: String): InternalRow = {
+    if (r.isNullAt(i)) throw new IllegalArgumentException(
+      s"$fit: a training row has a null $what")
+    r
+  }
+
+  /** Vector `i` of a [[fitRows]] row, copied out of the reused row. */
+  private[ml] def fitVector(r: InternalRow, i: Int, fit: String,
+      what: String): Array[Double] =
+    nonNull(r, i, fit, s"$what array").getArray(i).toDoubleArray()
+
+  /** `a += b` element-wise, returning `a`: the one merge loop of the fit
+    * passes' sums and grams. */
+  private[ml] def addInto(a: Array[Double], b: Array[Double]): Array[Double] = {
+    var i = 0
+    while (i < a.length) { a(i) += b(i); i += 1 }
+    a
+  }
+
+  /** The one running-sum accumulator of the fit passes: the row count n,
+    * the width read off the first row, and Σ of the rows. `add` and
+    * `merge` raise [[requireWidth]]'s ragged-frame error. */
+  private[ml] final class RunningSum(fit: String, what: String)
+      extends Serializable {
+    var n = 0L
+    var sum: Array[Double] = _
+
+    /** The rows' width, -1 before the first row. */
+    def width: Int = if (sum == null) -1 else sum.length
+
+    def add(x: Array[Double]): RunningSum = {
+      if (sum == null) sum = new Array[Double](x.length)
+      else requireWidth(fit, what, sum.length, x.length)
+      addInto(sum, x)
+      n += 1
+      this
+    }
+
+    def merge(o: RunningSum): RunningSum = {
+      if (o.sum != null) {
+        if (sum == null) sum = o.sum
+        else { requireWidth(fit, what, sum.length, o.sum.length); addInto(sum, o.sum) }
+        n += o.n
+      }
+      this
+    }
+  }
+
+  /** A [[RunningSum]] per class label (Naive Bayes' counts, LDA's class
+    * means); `width` checks that every class has the same one. */
+  private[ml] final class ClassSums[K](fit: String, what: String)
+      extends Serializable {
+    val byClass = scala.collection.mutable.HashMap.empty[K, RunningSum]
+
+    def add(y: K, x: Array[Double]): ClassSums[K] = {
+      byClass.getOrElseUpdate(y, new RunningSum(fit, what)).add(x)
+      this
+    }
+
+    def merge(o: ClassSums[K]): ClassSums[K] = {
+      o.byClass.foreach { case (y, s) =>
+        byClass(y) = byClass.get(y).fold(s)(_.merge(s))
+      }
+      this
+    }
+
+    def width: Int = {
+      val d = byClass.valuesIterator.next().width
+      byClass.valuesIterator.foreach(s => requireWidth(fit, what, d, s.width))
+      d
+    }
+  }
 
   /** Chunked per-partition gram accumulator — the reference's
     * rows→local-matrix + level-3 BLAS pattern (`[K] utils/MatrixUtils`)
@@ -344,35 +431,28 @@ object LearningOps extends Serializable {
   private[graft] def fitZcaModel(train: DataFrame, in: String, eps: Double)
       : (Array[Double], Array[Double], Int) = {
     {
-      val data = train.select(transform(col(in), _.cast("double")).as("v"))
-        .rdd.map(r => r.getSeq[Double](0).toArray)
+      val data = fitRows(train, Seq(col(in)))
+        .map(fitVector(_, 0, "ZCAWhitener", "feature"))
       // each partition sizes d off its first row (no first() job); an
       // empty partition contributes nothing
       val parts = data.mapPartitions { rows =>
         val it = rows.buffered
         if (!it.hasNext) Iterator.empty
         else {
-          val dd = it.head.length
-          val s = new Array[Double](dd)
-          val (cnt, g) = syrkPartition[Array[Double]](it, dd, identity, x => {
-            requireWidth("ZCAWhitener", "entries", dd, x.length)
-            var j = 0
-            while (j < dd) { s(j) += x(j); j += 1 }
-          })
-          Iterator.single((cnt, s, g))
+          val s = new RunningSum("ZCAWhitener", "entries")
+          val (_, g) = syrkPartition[Array[Double]](it, it.head.length,
+            identity, s.add(_))
+          Iterator.single((s, g))
         }
       }
-      val (n, sumArr, gUpper) = parts.treeReduce { case ((c1, s1, g1), (c2, s2, g2)) =>
-        requireWidth("ZCAWhitener", "entries", s1.length, s2.length)
-        var i = 0
-        while (i < s1.length) { s1(i) += s2(i); i += 1 }
-        i = 0
-        while (i < g1.length) { g1(i) += g2(i); i += 1 }
-        (c1 + c2, s1, g1)
+      // the sums merge first: they raise on a ragged frame before the
+      // grams of two widths meet
+      val (sums, gUpper) = parts.treeReduce { case ((s1, g1), (s2, g2)) =>
+        (s1.merge(s2), addInto(g1, g2))
       }
-      val d = sumArr.length
+      val (n, d) = (sums.n, sums.width)
       val outer = mirrorUpper(gUpper, d)
-      val mu = DenseVector(sumArr) / n.toDouble
+      val mu = DenseVector(sums.sum) / n.toDouble
       val cov = (outer / n.toDouble) - mu * mu.t
       val es = eigSym(cov)
       val scale = es.eigenvalues.map(l => 1.0 / math.sqrt(math.max(l, 0.0) + eps))
@@ -461,31 +541,15 @@ object LearningOps extends Serializable {
     * centered matrix — sqrt((n−1)·variance) along each axis). */
   def tsqrPca(df: DataFrame, in: String,
       k: Int): (Array[Double], Array[Array[Double]], Array[Double]) = {
-    val data = df.select(transform(col(in), _.cast("double")).as("v"))
-      .rdd.map(r => r.getSeq[Double](0).toArray)
+    val data = fitRows(df, Seq(col(in))).map(fitVector(_, 0, "tsqrPca", "feature"))
     // the mean pass sizes d off the rows themselves (no first() job)
-    val (n, sum) = data.treeAggregate((0L, null: Array[Double]))(
-      seqOp = { case ((c, s), x) =>
-        val acc = if (s == null) new Array[Double](x.length) else s
-        requireWidth("tsqrPca", "entries", acc.length, x.length)
-        var j = 0
-        while (j < acc.length) { acc(j) += x(j); j += 1 }
-        (c + 1, acc)
-      },
-      combOp = { case ((c1, s1), (c2, s2)) =>
-        if (s2 == null) (c1, s1)
-        else if (s1 == null) (c2, s2)
-        else {
-          requireWidth("tsqrPca", "entries", s1.length, s2.length)
-          var j = 0
-          while (j < s1.length) { s1(j) += s2(j); j += 1 }
-          (c1 + c2, s1)
-        }
-      })
+    val sums = data.treeAggregate(new RunningSum("tsqrPca", "entries"))(
+      _ add _, _ merge _)
+    val n = sums.n
     require(n > 0, "tsqrPca: empty frame")
-    val d = sum.length
+    val d = sums.width
     require(k <= d, s"k=$k exceeds dim $d")
-    val mu = DenseVector(sum) / n.toDouble
+    val mu = DenseVector(sums.sum) / n.toDouble
     val bMu = data.sparkContext.broadcast(mu.toArray)
     def rOf(m: DenseMatrix[Double]): DenseMatrix[Double] = lapackQrR(m)
     val rFinal = data.mapPartitions { it =>
@@ -575,7 +639,9 @@ object LearningOps extends Serializable {
       // collapse onto the first partitions of sorted/clustered input,
       // which would put every landmark in one data region and gut the
       // Nyström approximation.
-      val landmarks = train.select(transform(col(featuresCol), _.cast("double")))
+      // (a null feature array is never drawn: the K-map pass names it)
+      val landmarks = train.where(col(featuresCol).isNotNull)
+        .select(transform(col(featuresCol), _.cast("double")))
         .orderBy(rand(seed)).limit(m).collect().map(_.getSeq[Double](0).toArray)
       require(landmarks.length > 0, "empty training set")
       val mm = landmarks.length
@@ -589,9 +655,13 @@ object LearningOps extends Serializable {
         math.exp(-gamma * s)
       }
       val mapK = featureMap(landmarks)
-      val rows = mapK(train)
-        .select(col("__k"), col(labelCol).cast("double").as("__y"))
-        .rdd.map(r => (r.getSeq[Double](0).toArray, r.getDouble(1)))
+      // the K row of a null feature array is read as null, not as the
+      // array of null distances the map gives it
+      val rows = fitRows(mapK(train),
+        Seq(when(col(featuresCol).isNotNull, col("__k"))),
+        col(labelCol).cast("double"))
+        .map(r => (fitVector(r, 0, "KernelRidgeEst", "feature"),
+          nonNull(r, 1, "KernelRidgeEst", "label").getDouble(1)))
       val mmLocal = mm
       val (ktkUpper, ktyArr) = rows.mapPartitions { it =>
         // chunked dsyrk for KᵀK (a per-row mm×mm outer product would
@@ -604,13 +674,7 @@ object LearningOps extends Serializable {
             while (j < mmLocal) { kty(j) += k(j) * y; j += 1 }
           })
         Iterator.single((g, kty))
-      }.treeReduce { case ((g1, b1), (g2, b2)) =>
-        var i = 0
-        while (i < g1.length) { g1(i) += g2(i); i += 1 }
-        i = 0
-        while (i < b1.length) { b1(i) += b2(i); i += 1 }
-        (g1, b1)
-      }
+      }.treeReduce { case ((g1, b1), (g2, b2)) => (addInto(g1, g2), addInto(b1, b2)) }
       val ktk = mirrorUpper(ktkUpper, mm)
       val kty = DenseVector(ktyArr)
       val alpha = (ktk + kmm * lambda +
@@ -633,21 +697,23 @@ object LearningOps extends Serializable {
   case class LDAEst(featuresCol: String, labelCol: String, out: String, k: Int)
       extends Estimator {
     def fit(train: DataFrame): Transformer = {
-      val rows = train.select(
-        transform(col(featuresCol), _.cast("double")).as("v"),
-        col(labelCol).cast("long").as("y"))
-        .rdd.map(r => (r.getLong(1), r.getSeq[Double](0).toArray))
+      // decoded (copied) before the persist keeps them
+      val rows = fitRows(train, Seq(col(featuresCol)), col(labelCol).cast("long"))
+        .map(r => (nonNull(r, 1, "LDAEst", "label").getLong(1),
+          fitVector(r, 0, "LDAEst", "feature")))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        val d = rows.first()._2.length
-        // pass 1: per-class sums/counts + global mean (class-count-bounded)
-        val classStats = rows.map { case (y, x) => (y, (1L, DenseVector(x))) }
-          .reduceByKey((a: (Long, DenseVector[Double]), b: (Long, DenseVector[Double])) =>
-            (a._1 + b._1, a._2 + b._2))
-          .collectAsMap()
-        val total = classStats.values.map(_._1).sum.toDouble
-        val globalMean = classStats.values.map(_._2).reduce(_ + _) / total
-        val classMeans = classStats.map { case (y, (c, s)) => y -> (s / c.toDouble, c) }
+        // pass 1: per-class sums/counts (class-count-bounded), which also
+        // size d, + global mean
+        val classStats = rows.treeAggregate(
+          new ClassSums[Long]("LDAEst", "features"))(
+          (acc, yx) => acc.add(yx._1, yx._2), _ merge _)
+        val d = classStats.width
+        val total = classStats.byClass.values.map(_.n).sum.toDouble
+        val globalMean =
+          classStats.byClass.values.map(s => DenseVector(s.sum)).reduce(_ + _) / total
+        val classMeans = classStats.byClass.map { case (y, s) =>
+          y -> (DenseVector(s.sum) / s.n.toDouble, s.n) }
         // pass 2: within-class scatter (one pass aggregating one d×d
         // matrix per partition — chunked dsyrk over class-centered rows)
         val bcMeans = rows.context.broadcast(classMeans.map { case (y, (m, _)) =>
@@ -663,11 +729,7 @@ object LearningOps extends Serializable {
             while (j < dLocal) { c(j) = x(j) - mu(j); j += 1 }
             c
           }, dLocal, identity, _ => ())._2)
-        }.treeReduce { (g1, g2) =>
-          var i = 0
-          while (i < g1.length) { g1(i) += g2(i); i += 1 }
-          g1
-        }
+        }.treeReduce(addInto)
         val sw = mirrorUpper(swUpper, d)
         bcMeans.destroy()
         val sb = classMeans.values.map { case (m, c) =>
@@ -807,9 +869,12 @@ object LearningOps extends Serializable {
     val widest = math.max(dd, kk).toLong.max(1L)
     val safeRowsPerPart = math.max(1L, maxPartElems / (2L * widest))
     // the frame is planned once: this one RDD gives the partition count
-    // the nHint guard reads and feeds the cache build
-    val rows = train.select(col(featuresCol).cast("array<double>").as("x"),
-      labels.as("ys"), wc.as("w")).rdd
+    // the nHint guard reads and feeds the cache build. Rows are decoded
+    // (copied) first: the repartition and the build's toArray keep them
+    val rows = fitRows(train, Seq(col(featuresCol), labels), wc)
+      .map(r => (fitVector(r, 0, "blockCdSolve", "feature"),
+        fitVector(r, 1, "blockCdSolve", "target"),
+        nonNull(r, 2, "blockCdSolve", "weight").getDouble(2)))
     val source =
       if (nHint > 0) {
         val parts = math.max(rows.getNumPartitions, 1)
@@ -832,9 +897,7 @@ object LearningOps extends Serializable {
     // column-major design (cm), a k×m column-major target matrix (yk),
     // and √(row weight) scales
     val cols = source.mapPartitions { it =>
-      val buf = it.map(r =>
-        (r.getSeq[Double](0).toArray, r.getSeq[Double](1).toArray,
-          r.getDouble(2))).toArray
+      val buf = it.toArray
       val m = buf.length
       if (m.toLong * dd > capMsg || m.toLong * kk > capMsg)
         throw new IllegalArgumentException(
@@ -916,13 +979,7 @@ object LearningOps extends Serializable {
             }
           }
           Iterator.single((g, v))
-        }.treeReduce { case ((g1, v1), (g2, v2)) =>
-          var i = 0
-          while (i < g1.length) { g1(i) += g2(i); i += 1 }
-          i = 0
-          while (i < v1.length) { v1(i) += v2(i); i += 1 }
-          (g1, v1)
-        }
+        }.treeReduce { case ((g1, v1), (g2, v2)) => (addInto(g1, g2), addInto(v1, v2)) }
         val gram = mirrorUpper(gArr, bLen)
         val xtwr = new DenseMatrix(bLen, kk, vArr)
         // with r = y − Xw (ALL blocks applied), the block target is

@@ -1,6 +1,7 @@
 package graft.ml
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -295,60 +296,34 @@ object workflow {
   /** Fit-time problem statistics for the solver dispatchers, from ONE
     * treeAggregate over the training frame: n, the feature width d, the
     * target width k, the exact nonzero count of the design (density =
-    * nnz ÷ n·d) and, when `sums` is set, the feature and label sums the
-    * intercept centering needs. d and k are read off the rows themselves,
-    * so a ragged frame (a row whose feature or target width differs from
-    * another's) and an empty frame raise named errors here, before any
-    * solver runs. */
-  private final class LsqProbe(sums: Boolean) extends Serializable {
-    var n = 0L
-    var d = -1
-    var k = -1
+    * nnz ÷ n·d) and the feature and label sums the intercept centering
+    * needs. d and k are read off the rows themselves, so a ragged frame
+    * (a row whose feature or target width differs from another's) and an
+    * empty frame raise named errors here, before any solver runs. */
+  private final class LsqProbe extends Serializable {
+    val x = new LearningOps.RunningSum("least squares", "features")
+    val y = new LearningOps.RunningSum("least squares", "targets")
     var nnz = 0L
-    var sx: Array[Double] = _
-    var sy: Array[Double] = _
 
-    private def width(seen: Int, got: Int, what: String): Int = {
-      if (seen >= 0) LearningOps.requireWidth("least squares", what, seen, got)
-      got
-    }
+    def n: Long = x.n
+    def d: Int = x.width
+    def k: Int = y.width
 
-    def add(r: org.apache.spark.sql.Row): LsqProbe = {
-      if (r.isNullAt(0) || r.isNullAt(1)) throw new IllegalArgumentException(
-        "least squares: a training row has a null feature or label array")
-      val x = r.getSeq[Double](0)
-      val ys = r.getSeq[Double](1)
-      d = width(d, x.length, "features")
-      k = width(k, ys.length, "targets")
-      if (sums && sx == null) { sx = new Array[Double](d); sy = new Array[Double](k) }
-      var j = 0
-      while (j < d) {
-        val v = x(j)
-        if (v != 0.0) nnz += 1
-        if (sums) sx(j) += v
-        j += 1
-      }
-      if (sums) { var c = 0; while (c < k) { sy(c) += ys(c); c += 1 } }
-      n += 1
+    def add(r: InternalRow): LsqProbe = {
+      val xs = LearningOps.fitVector(r, 0, "least squares", "feature")
+      val ys = LearningOps.fitVector(r, 1, "least squares", "target")
+      x.add(xs)
+      y.add(ys)
+      nnz += xs.count(_ != 0.0)
       this
     }
 
-    def merge(o: LsqProbe): LsqProbe =
-      if (o.n == 0) this
-      else if (n == 0) o
-      else {
-        d = width(d, o.d, "features")
-        k = width(k, o.k, "targets")
-        if (sums) {
-          var j = 0
-          while (j < d) { sx(j) += o.sx(j); j += 1 }
-          var c = 0
-          while (c < k) { sy(c) += o.sy(c); c += 1 }
-        }
-        n += o.n
-        nnz += o.nnz
-        this
-      }
+    def merge(o: LsqProbe): LsqProbe = {
+      x.merge(o.x)
+      y.merge(o.y)
+      nnz += o.nnz
+      this
+    }
 
     /** Exact nonzero fraction of the n×d design (1.0 for a width-0 one). */
     def density: Double =
@@ -356,9 +331,9 @@ object workflow {
   }
 
   private def probeLeastSquares(train: DataFrame, featuresCol: String,
-      labels: Column, sums: Boolean): LsqProbe = {
-    val p = train.select(col(featuresCol).cast("array<double>"), labels)
-      .rdd.treeAggregate(new LsqProbe(sums))(_ add _, _ merge _)
+      labels: Column): LsqProbe = {
+    val p = LearningOps.fitRows(train, Seq(col(featuresCol), labels))
+      .treeAggregate(new LsqProbe)(_ add _, _ merge _)
     if (p.n == 0) throw new IllegalArgumentException(
       "least squares: empty training frame")
     p
@@ -402,71 +377,36 @@ object workflow {
     /** (π, θ as one row per class), classes in ascending label order. */
     private[graft] def fitModel(train: DataFrame)
         : (Array[Double], Array[Array[Double]]) = {
-      val fc = featuresCol
-      val counts = train
-        .select(col(featuresCol).cast("array<double>"), col(labelCol).cast("double"))
-        .rdd.treeAggregate(new NbCounts(fc))(_ add _, _ merge _)
+      val fit = s"NaiveBayesEst($featuresCol)"
+      val counts = LearningOps.fitRows(train, Seq(col(featuresCol)),
+        col(labelCol).cast("double"))
+        .treeAggregate(new LearningOps.ClassSums[Int](fit, "features"))(
+          (acc, r) => {
+            if (r.isNullAt(1)) throw new IllegalArgumentException(
+              s"$fit: class labels must not be null")
+            val y = r.getDouble(1)
+            if (!(y >= 0.0 && y < Int.MaxValue && y == y.toInt))
+              throw new IllegalArgumentException(
+                s"$fit: class labels must be integers in [0, ${Int.MaxValue}), got $y")
+            val x = LearningOps.fitVector(r, 0, fit, "feature")
+            x.find(v => !(v >= 0.0)).foreach(v => throw new IllegalArgumentException(
+              s"$fit: features must be >= 0, got $v"))
+            acc.add(y.toInt, x)
+          }, _ merge _)
       if (counts.byClass.isEmpty) throw new IllegalArgumentException(
-        s"NaiveBayesEst($fc): empty training frame")
+        s"$fit: empty training frame")
       val classes = counts.byClass.keys.toArray.sorted
-      val d = counts.d
+      val d = counts.width
       val lambda = smoothing
       val stats = classes.map(counts.byClass)
       val piLogDenom =
-        math.log(stats.map(_(0)).sum + classes.length * lambda)
-      val pi = stats.map(s => math.log(s(0) + lambda) - piLogDenom)
+        math.log(stats.map(_.n.toDouble).sum + classes.length * lambda)
+      val pi = stats.map(s => math.log(s.n + lambda) - piLogDenom)
       val theta = stats.map { s =>
-        val thetaLogDenom = math.log(s.iterator.drop(1).sum + d * lambda)
-        Array.tabulate(d)(j => math.log(s(j + 1) + lambda) - thetaLogDenom)
+        val thetaLogDenom = math.log(s.sum.sum + d * lambda)
+        Array.tabulate(d)(j => math.log(s.sum(j) + lambda) - thetaLogDenom)
       }
       (pi, theta)
-    }
-  }
-
-  /** [[NaiveBayesEst]]'s one-pass statistics: per class label, an array
-    * holding the row count then the d feature sums. */
-  private final class NbCounts(fc: String) extends Serializable {
-    var d = -1
-    val byClass = scala.collection.mutable.HashMap.empty[Int, Array[Double]]
-
-    private def width(got: Int): Unit = {
-      if (d >= 0) LearningOps.requireWidth(s"NaiveBayesEst($fc)", "features", d, got)
-      d = got
-    }
-
-    def add(r: org.apache.spark.sql.Row): NbCounts = {
-      if (r.isNullAt(1)) throw new IllegalArgumentException(
-        s"NaiveBayesEst($fc): class labels must not be null")
-      val y = r.getDouble(1)
-      if (!(y >= 0.0 && y < Int.MaxValue && y == y.toInt))
-        throw new IllegalArgumentException(
-          s"NaiveBayesEst($fc): class labels must be integers in [0, ${Int.MaxValue}), got $y")
-      if (r.isNullAt(0)) throw new IllegalArgumentException(
-        s"NaiveBayesEst($fc): a training row has a null feature array")
-      val x = r.getSeq[Double](0)
-      width(x.length)
-      val s = byClass.getOrElseUpdate(y.toInt, new Array[Double](d + 1))
-      s(0) += 1.0
-      var j = 0
-      while (j < d) {
-        val v = x(j)
-        if (!(v >= 0.0)) throw new IllegalArgumentException(
-          s"NaiveBayesEst($fc): features must be >= 0, got $v")
-        s(j + 1) += v
-        j += 1
-      }
-      this
-    }
-
-    def merge(o: NbCounts): NbCounts = {
-      if (o.d >= 0) width(o.d)
-      o.byClass.foreach { case (y, t) =>
-        byClass.get(y) match {
-          case Some(s) => var j = 0; while (j < s.length) { s(j) += t(j); j += 1 }
-          case None => byClass(y) = t
-        }
-      }
-      this
     }
   }
 
@@ -593,7 +533,7 @@ object workflow {
       rawLabels: Column, regParam: Double, fitIntercept: Boolean,
       normalEqMaxDim: Int, blockSize: Int, numIter: Int,
       solverOverride: Option[String]): DispatchResult = {
-    val probe = probeLeastSquares(train, featuresCol, rawLabels, fitIntercept)
+    val probe = probeLeastSquares(train, featuresCol, rawLabels)
     val (n, d, k, density) = (probe.n, probe.d, probe.k, probe.density)
     val workers = train.sparkSession.sparkContext.defaultParallelism
     val (modelPick, costs) = graft.ml.SolverCostModel.choose(
@@ -605,7 +545,7 @@ object workflow {
       s"unknown solver override '$solver' (valid: " +
         s"${graft.ml.SolverCostModel.ExactnessOrder.mkString(", ")})")
     val (xMu, yMu) =
-      if (fitIntercept) (probe.sx.map(_ / n), probe.sy.map(_ / n))
+      if (fitIntercept) (probe.x.sum.map(_ / n), probe.y.sum.map(_ / n))
       else (new Array[Double](d), new Array[Double](k))
     val fitFrame =
       if (fitIntercept)

@@ -279,6 +279,36 @@ class LearningOpsSpec extends GraftSuite {
     assert(causeChain(e1).contains("tsqrPca: ragged training frame"), causeChain(e1))
     val e2 = intercept[Exception](fitZcaModel(ragged, "v", 1e-5))
     assert(causeChain(e2).contains("ZCAWhitener: ragged training frame"), causeChain(e2))
+    // LDA sizes d in its class-sum pass (no first() job): that pass and
+    // the within-class scatter
+    val labeled = vecs.withColumn("y", ($"vec_id" % 3).cast("long"))
+    val lda = jobsDuring(LDAEst("v", "y", "p", k = 2).fit(labeled))
+    assert(lda == 2, s"an LDA fit ran $lda jobs")
+    val e3 = intercept[Exception](
+      LDAEst("v", "y", "p", k = 2).fit(ragged.withColumn("y", ($"vec_id" % 3).cast("long"))))
+    assert(causeChain(e3).contains("LDAEst: ragged training frame"), causeChain(e3))
+  }
+
+  test("every fit names a null feature array instead of a bare NullPointerException") {
+    val frame = vecs.where($"vec_id" < 200).select($"vec_id",
+      when($"vec_id" === 7L, lit(null)).otherwise($"v").as("v"),
+      ($"vec_id" % 3).cast("double").as("y"))
+      .withColumn("ys", array($"y"))
+    def named(fit: String)(body: => Any): Unit = {
+      val e = intercept[Exception](body)
+      assert(causeChain(e).contains(s"$fit: a training row has a null feature array"),
+        causeChain(e))
+    }
+    named("least squares")(graft.ml.workflow.LeastSquaresMultiEst("v", "ys", "s").fit(frame))
+    named("NaiveBayesEst(v)")(graft.ml.workflow.NaiveBayesEst("v", "y", "p")
+      .fit(frame.withColumn("v", transform($"v", x => abs(x)))))
+    named("blockCdSolve")(blockCdSolve(frame, "v", $"ys", k = 1, d = 64,
+      blocks = Array(0 until 64), numIter = 1, lambda = 1e-6, wc = lit(1.0)))
+    named("tsqrPca")(tsqrPca(frame, "v", 4))
+    named("ZCAWhitener")(fitZcaModel(frame, "v", 1e-5))
+    named("KernelRidgeEst")(KernelRidgeEst("v", "y", "p", gamma = 0.5,
+      numLandmarks = 16).fit(frame))
+    named("LDAEst")(LDAEst("v", "y", "p", k = 2).fit(frame))
   }
 
   test("BLAS block-CD agrees with a scalar driver-side replay to 1e-9") {
@@ -370,6 +400,23 @@ class LearningOpsSpec extends GraftSuite {
     val sdiff = (0 until d).map(j => math.abs(free32(0)(j) - skewed(0)(j))).max
     assert(sdiff < 1e-9,
       s"skew-leveled solve must match the unconstrained one: $sdiff")
+    // past 200 reduce partitions (spark.shuffle.sort.bypassMergeThreshold)
+    // the sort-shuffle writer buffers record references instead of
+    // writing each record out at once, so only rows copied out of Spark's
+    // reused row before the repartition survive it intact: 500 rows at 4
+    // per partition ask for 250 partitions
+    val all = vecs.select(slice($"v", 1, d).as("v"))
+      .withColumn("y", element_at($"v", 1))
+    val freeAll = graft.ml.LearningOps.blockCdSolve(all, "v",
+      array($"y".cast("double")), k = 1, d = d,
+      blocks = Array(0 until d), numIter = 1, lambda = 1e-6, wc = lit(1.0))
+    val wide = graft.ml.LearningOps.blockCdSolve(all, "v",
+      array($"y".cast("double")), k = 1, d = d,
+      blocks = Array(0 until d), numIter = 1, lambda = 1e-6, wc = lit(1.0),
+      nHint = all.count(), maxPartElems = 64L)
+    val wdiff = (0 until d).map(j => math.abs(freeAll(0)(j) - wide(0)(j))).max
+    assert(wdiff < 1e-9,
+      s"a solve repartitioned past 200 partitions must match the free one: $wdiff")
   }
 
   test("blockCdSolve rejects negative row weights by name") {

@@ -1,6 +1,7 @@
 package graft.ml
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
 import org.apache.spark.storage.StorageLevel
 
 /** Cost-based persist insertion — the reference's headline optimizer idea
@@ -25,39 +26,15 @@ object AutoCache {
     def release(): Unit = if (cached) df.unpersist()
   }
 
-  /** Decide-and-persist: cache `df` iff it will be consumed `uses` times
-    * and its estimated size fits `memBudgetBytes`. Returns a
-    * [[CacheHandle]] — the caller releases it when the consuming scope
-    * ends (eager `fit()` bodies bracket with [[withCached]]; lazily
-    * returned query frames must NOT persist at all and should rely on
-    * exchange reuse instead, which is why the declared dedup query no
-    * longer calls this).
-    *
-    * Plans with trustworthy Catalyst stats decide for free. Plans whose
-    * stats are sentinel-derived (see [[planStats]]) are profiled WITHOUT
-    * persisting (one distributed pass — [[profiledSize]]); the persist
-    * happens only after an accept. Join-product estimates over honest
-    * leaves routinely land in sentinel territory too (size-visitors
-    * multiply child sizes when row counts are absent), so the profiling
-    * path must never be allowed to write a genuinely over-budget frame
-    * to storage just to learn it does not fit — declining is free now,
-    * and the accept path pays one extra pass over a frame it is about
-    * to cache anyway. */
-  def cacheIfWorthIt(df: DataFrame, uses: Int,
-      memBudgetBytes: Long = 2L << 30): CacheHandle = {
-    if (uses <= 1) return CacheHandle(df, cached = false)
-    if (estimatedSize(df) <= BigInt(memBudgetBytes))
-      CacheHandle(df.persist(StorageLevel.MEMORY_AND_DISK), cached = true)
-    else CacheHandle(df, cached = false)
-  }
-
-  /** Bracketed form for eager multi-pass consumers: persist if worthwhile,
-    * run `body` against the (possibly cached) frame, always release. */
+  /** Bracketed one-candidate form of [[withCachedSet]] for eager
+    * multi-pass consumers: cache `df` iff it will be consumed `uses` times
+    * and its estimated size fits `memBudgetBytes`, run `body` against the
+    * (possibly cached) frame, always release. Lazily returned query frames
+    * must NOT persist at all and should rely on exchange reuse instead,
+    * which is why the declared dedup query does not call this. */
   def withCached[T](df: DataFrame, uses: Int,
-      memBudgetBytes: Long = 2L << 30)(body: DataFrame => T): T = {
-    val h = cacheIfWorthIt(df, uses, memBudgetBytes)
-    try body(h.df) finally h.release()
-  }
+      memBudgetBytes: Long = 2L << 30)(body: DataFrame => T): T =
+    withCachedSet(Seq(Candidate(df, uses)), memBudgetBytes)(cached => body(cached.head))
 
   /** A frame competing for cache budget in [[selectCacheSet]]: the frame
     * and how many times the consuming scope will read it. */
@@ -65,7 +42,9 @@ object AutoCache {
 
   /** [[selectCacheSet]]'s decision: handles plus the evidence behind the
     * knapsack, all indexed like the input candidates. A candidate with
-    * uses <= 1 is never profiled, so its size and benefit are None. */
+    * uses <= 1 is never profiled, so its size and benefit are None; a
+    * lone multi-use candidate over opaque compute has a size but no
+    * benefit (its recompute cost would take a pass of its own). */
   final case class CacheSelection(handles: Seq[CacheHandle],
       sizes: Seq[Option[BigInt]], benefitSeconds: Seq[Option[Double]])
 
@@ -88,13 +67,21 @@ object AutoCache {
     * scan-shaped recompute, priced at size / a scan-bandwidth constant;
     * a stat-less frame already pays the one-pass profiling sweep
     * ([[profiledSize]]), whose measured wall time IS its sampled
-    * recompute cost.
+    * recompute cost. Profiling persists nothing: a frame is written to
+    * storage only after it is selected, so learning that a frame does not
+    * fit never costs a spill.
+    *
+    * Recompute cost only orders two or more competing candidates. A LONE
+    * multi-use candidate (the [[withCached]] form) is decided by size
+    * alone, off [[sizeAndKnownCost]]: plan stats, or the one profiling
+    * pass when they are sentinel-derived; it is never profiled only to
+    * price its recompute.
     *
     * Returns a [[CacheSelection]] ALIGNED WITH THE INPUT ORDER; only
     * selected frames are persisted, and every handle's `release()` is
     * unconditionally safe (no-op for declined frames). `profiler`
-    * (default: [[estimatedSizeAndCost]]) gives each frame's (size,
-    * recompute seconds). */
+    * (default: [[estimatedSizeAndCost]]) gives each competing frame's
+    * (size, recompute seconds). */
   def selectCacheSet(candidates: Seq[Candidate],
       memBudgetBytes: Long = 2L << 30,
       profiler: DataFrame => (BigInt, Double) = estimatedSizeAndCost)
@@ -103,13 +90,17 @@ object AutoCache {
     // the greedy order and can never be selected, and profiling a
     // stat-less frame is a full distributed pass — paid for nothing on a
     // never-cacheable candidate
-    val profiles = candidates.map(c =>
-      if (c.uses > 1) Some(profiler(c.df)) else None).toIndexedSeq
+    val competing = candidates.count(_.uses > 1) > 1
+    val profiles = candidates.map { c =>
+      if (c.uses <= 1) None
+      else if (!competing) Some(sizeAndKnownCost(c.df))
+      else Some(profiler(c.df) match { case (size, sec) => (size, Some(sec)) })
+    }.toIndexedSeq
     val sizes = profiles.map(_.map(_._1))
     val benefits = candidates.indices.map(i =>
-      profiles(i).map { case (_, sec) => (candidates(i).uses - 1).toDouble * sec })
+      profiles(i).flatMap(_._2).map((candidates(i).uses - 1).toDouble * _))
     val order = candidates.indices.filter(profiles(_).isDefined).sortBy { i =>
-      val benefit = benefits(i).get
+      val benefit = benefits(i).getOrElse(0.0)
       (-benefit / sizes(i).get.toDouble.max(1.0), -benefit)
     }
     var remaining = BigInt(memBudgetBytes)
@@ -191,24 +182,37 @@ object AutoCache {
     }
   }
 
+  /** (size bytes, recompute seconds when known without a pass of their
+    * own): stats-backed frames price a re-scan at [[ScanBwBytesPerSec]],
+    * unless they carry opaque compute ([[hasOpaqueCompute]]), whose
+    * recompute cost a scan model cannot see (None); stat-less frames pay
+    * the profiling pass, whose measured wall time is the cost. */
+  private def sizeAndKnownCost(df: DataFrame): (BigInt, Option[Double]) =
+    planStats(df) match {
+      case Some(size) =>
+        (size, Option.when(!hasOpaqueCompute(df))(size.toDouble / ScanBwBytesPerSec))
+      case None =>
+        val (size, sec) = profiledSizeAndTime(df)
+        (size, Some(sec))
+    }
+
   /** (size bytes, estimated recompute seconds) — the knapsack's two
-    * inputs off ONE sizing decision: stats-backed frames price a
-    * re-scan at [[ScanBwBytesPerSec]]; stat-less frames — AND
-    * stats-backed frames carrying opaque compute ([[hasOpaqueCompute]]),
-    * whose recompute cost a scan model cannot see — return the measured
+    * inputs off ONE sizing decision: [[sizeAndKnownCost]], with the
+    * stats-backed opaque-compute frames profiled too, for the measured
     * wall time of the profiling pass (the reference's sampled per-node
     * compute profile), which no bandwidth constant touches. */
   private[graft] def estimatedSizeAndCost(df: DataFrame): (BigInt, Double) =
-    planStats(df) match {
-      case Some(size) if !hasOpaqueCompute(df) =>
-        (size, size.toDouble / ScanBwBytesPerSec)
+    sizeAndKnownCost(df) match {
+      case (size, Some(sec)) => (size, sec)
       case _ => profiledSizeAndTime(df)
     }
 
   private val SamplePerPartition = 8
 
   /** Profile a frame's size in ONE distributed pass, persisting nothing:
-    * exact row count plus the first few row widths of EVERY partition.
+    * exact row count plus the first few row widths of EVERY partition,
+    * each the binary `UnsafeRow` size of a row of the plan's own output
+    * (no external `Row` is decoded).
     * Sampling every partition matters — a width-skewed layout (data
     * sorted by document/array length) makes a driver-side `head(100)`
     * sample, which only ever sees the first partition, lie badly in
@@ -225,12 +229,17 @@ object AutoCache {
   }
 
   private def profiledSize(df: DataFrame): BigInt = {
-    val (n, widthSum, widthCnt) = df.rdd
+    val schema = df.schema
+    val (n, widthSum, widthCnt) = df.queryExecution.toRdd
       .mapPartitions { it =>
+        lazy val toUnsafe = UnsafeProjection.create(schema)
         var rows = 0L; var ws = 0.0; var wc = 0L
         it.foreach { r =>
           rows += 1L
-          if (wc < SamplePerPartition) { ws += rowBytes(r).toDouble; wc += 1L }
+          if (wc < SamplePerPartition) {
+            val u = r match { case u: UnsafeRow => u; case _ => toUnsafe(r) }
+            ws += u.getSizeInBytes.toDouble; wc += 1L
+          }
         }
         Iterator.single((rows, ws, wc))
       }
@@ -240,22 +249,4 @@ object AutoCache {
     if (n == 0L || widthCnt == 0L) BigInt(0)
     else BigDecimal(widthSum / widthCnt * n.toDouble).toBigInt
   }
-
-  /** Crude per-row heap footprint — a cost-model input, not an exact
-    * accounting. */
-  private def rowBytes(r: org.apache.spark.sql.Row): Long =
-    16L + r.toSeq.iterator.map {
-      case null => 1L
-      case _: Boolean | _: Byte => 1L
-      case _: Short => 2L
-      case _: Int | _: Float => 4L
-      case _: Long | _: Double => 8L
-      case s: String => 8L + s.length
-      case a: Array[Byte] => 8L + a.length
-      case xs: scala.collection.Seq[_] => 8L + xs.length * 8L
-      case m: scala.collection.Map[_, _] => 8L + m.size * 16L
-      case nested: org.apache.spark.sql.Row => rowBytes(nested)
-      case d: java.math.BigDecimal => 16L + d.precision()
-      case _ => 16L
-    }.sum
 }

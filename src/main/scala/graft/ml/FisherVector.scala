@@ -151,11 +151,14 @@ object FisherVector {
     * (quantized) where bit-reproducibility gates; use this where
     * throughput does. FisherVectorSpec asserts the two agree to 1e-8.
     *
-    * `groupCol` must be castable to long (group ids). */
+    * `groupCol` must be castable to long (group ids). A null group or
+    * descriptor, or a descriptor whose width is not the model's D, raises
+    * a named error. */
   def fromParamsBatched(groupCol: String, descCol: String, out: String,
       weights: Array[Double], means: Array[Array[Double]],
       sigmas: Array[Array[Double]]): Transformer = Transformer { df =>
     import breeze.linalg.{DenseMatrix, DenseVector}
+    import LearningOps.{addInto, fitRows, fitVector, nonNull, requireWidth}
     val spark = df.sparkSession
     import spark.implicits._
     val k = weights.length
@@ -172,15 +175,18 @@ object FisherVector {
       (0 until d).map(j => means(c)(j) * means(c)(j) * invS2(c, j)).sum)
     val bc = spark.sparkContext.broadcast(
       (logW, logNorm, muM, sgM, invS2, muOverS2, cst))
-    val partials = df
-      .select(col(groupCol).cast("long").as("g"),
-        transform(col(descCol), _.cast("double")).as("v"))
-      .as[(Long, Array[Double])]
-      .rdd.mapPartitions { it =>
+    val enc = "FisherVector.fromParamsBatched"
+    val partials = fitRows(df, Seq(col(descCol)), col(groupCol).cast("long"))
+      .mapPartitions { it =>
         val (lw, ln, mu, sg, a, ms2, c0) = bc.value
         val kk = lw.length
         val dd = mu.cols
-        it.toArray.groupBy(_._1).iterator.map { case (g, rows) =>
+        // copied out of Spark's reused rows before the groupBy keeps them
+        it.map { r =>
+          val x = fitVector(r, 0, enc, "descriptor", rows = "descriptor")
+          requireWidth(enc, "entries", dd, x.length, rows = "descriptor")
+          (nonNull(r, 1, enc, "group", rows = "descriptor").getLong(1), x)
+        }.toArray.groupBy(_._1).iterator.map { case (g, rows) =>
           val b = rows.length
           val x = DenseMatrix.tabulate(b, dd)((r, j) => rows(r)._2(j))
           val x2 = x *:* x
@@ -237,12 +243,8 @@ object FisherVector {
           (g, (sums, b.toLong))
         }
       }
-      .reduceByKey { (p1: (Array[Double], Long), p2: (Array[Double], Long)) =>
-        val s = new Array[Double](p1._1.length)
-        var i = 0
-        while (i < s.length) { s(i) = p1._1(i) + p2._1(i); i += 1 }
-        (s, p1._2 + p2._2)
-      }
+      .reduceByKey((p1: (Array[Double], Long), p2: (Array[Double], Long)) =>
+        (addInto(p1._1, p2._1), p1._2 + p2._2))
     partials.map { case (g, (sums, n)) =>
       val t = n.toDouble
       val fv = new Array[Double](2 * k * d)

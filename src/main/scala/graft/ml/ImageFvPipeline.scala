@@ -49,16 +49,10 @@ object ImageFvPipeline {
     * descriptors (diagonal sigmas from the fitted covariances), then the
     * gemm-batched Fisher encoding. The returned transformer maps any
     * descriptor table with the same columns to one 2·gmmK·pcaK Fisher
-    * vector per group. */
+    * vector per group. It is the one-branch [[fitBranches]]. */
   def fit(train: DataFrame, groupCol: String, descCol: String, out: String,
       pcaK: Int, gmmK: Int, seed: Long = 42L): Transformer =
-    // eager multi-pass fit: TSQR-PCA and the projected GMM fit both
-    // re-read the descriptor table, so the AutoCache planner owns the
-    // persist for the fitting scope (released before the transformer is
-    // returned — the fitted transformer closes over literals only)
-    AutoCache.withCached(train, uses = 2) { cached =>
-      fitOn(cached, groupCol, descCol, out, pcaK, gmmK, seed)
-    }
+    fitBranches(Seq(train -> out), groupCol, descCol, pcaK, gmmK, seed).head
 
   /** Multi-branch fit under ONE shared cache budget (ref:
     * AutoCacheRule's set selection — the ImageNet pipeline's SIFT and

@@ -132,13 +132,15 @@ object LearningOps extends Serializable {
   }
 
   /** Raises a named error when a row's width is not the width the fit
-    * read off another row (a ragged training frame). */
+    * read off another row (a ragged training frame). `rows` names the
+    * frame in the message; an apply path passes its own noun. */
   private[ml] def requireWidth(fit: String, what: String, want: Int,
-      got: Int): Unit =
+      got: Int, rows: String = "training"): Unit =
     if (got != want) throw new IllegalArgumentException(
-      s"$fit: ragged training frame, a row has $got $what where another has $want")
+      s"$fit: ragged $rows frame, a row has $got $what where another has $want")
 
-  /** The one fit-row reader: `vectors` cast to array<double> at the array
+  /** The one row reader of `ml/` (every fit pass, and the batched Fisher
+    * encoder): `vectors` cast to array<double> at the array
     * level (a codegen'd Cast, not a transform lambda), then `scalars`,
     * read as the plan's own InternalRows, so no array is boxed into an
     * external Row. Spark reuses the rows it hands out: read each through
@@ -149,21 +151,21 @@ object LearningOps extends Serializable {
       .queryExecution.toRdd
 
   /** `r`, once column `i` is known to be set; a null raises
-    * `<fit>: a training row has a null <what>`. */
+    * `<fit>: a <rows> row has a null <what>`. */
   private[ml] def nonNull(r: InternalRow, i: Int, fit: String,
-      what: String): InternalRow = {
+      what: String, rows: String = "training"): InternalRow = {
     if (r.isNullAt(i)) throw new IllegalArgumentException(
-      s"$fit: a training row has a null $what")
+      s"$fit: a $rows row has a null $what")
     r
   }
 
   /** Vector `i` of a [[fitRows]] row, copied out of the reused row. */
   private[ml] def fitVector(r: InternalRow, i: Int, fit: String,
-      what: String): Array[Double] =
-    nonNull(r, i, fit, s"$what array").getArray(i).toDoubleArray()
+      what: String, rows: String = "training"): Array[Double] =
+    nonNull(r, i, fit, s"$what array", rows).getArray(i).toDoubleArray()
 
-  /** `a += b` element-wise, returning `a`: the one merge loop of the fit
-    * passes' sums and grams. */
+  /** `a += b` element-wise, returning `a`: the one merge loop of `ml/`
+    * (the fit passes' sums and grams, the Fisher encoder's partials). */
   private[ml] def addInto(a: Array[Double], b: Array[Double]): Array[Double] = {
     var i = 0
     while (i < a.length) { a(i) += b(i); i += 1 }

@@ -77,7 +77,8 @@ class CifarPipelineSpec extends GraftSuite {
     def fitInputPlan(): String = train
       .withColumn("y0", element_at($"ind", 1))
       .queryExecution.optimizedPlan.toString
-    val declined = AutoCache.cacheIfWorthIt(train, uses = 3, memBudgetBytes = 1L)
+    val declined = AutoCache.selectCacheSet(
+      Seq(AutoCache.Candidate(train, uses = 3)), memBudgetBytes = 1L).handles.head
     assert(!declined.cached, "zero budget must decline the cache")
     assert(!fitInputPlan().contains("InMemoryRelation"),
       "declined decision must leave the fit-input plan uncached")

@@ -72,6 +72,20 @@ class FisherVectorSpec extends GraftSuite {
         assert(math.abs(b - x) < 1e-8, s"group $g fv[$i]: gemm $b vs expr $x")
       }
     }
+    // a null descriptor, and one wider or narrower than the model's D,
+    // raise a named error (not a bare NullPointerException, a silent
+    // truncation or an ArrayIndexOutOfBoundsException)
+    def raised(bad: Array[Double]): String = causeChain(intercept[Exception](
+      FisherVector.fromParamsBatched("img", "desc", "fv", weights, means, sigmas)(
+        (descs :+ (4L -> bad)).toDF("img", "desc").repartition(4)).collect()))
+    val enc = "FisherVector.fromParamsBatched"
+    val nul = raised(null)
+    assert(nul.contains(s"$enc: a descriptor row has a null descriptor array"), nul)
+    Seq(Array(1.0, 2.0, 3.0), Array(1.0)).foreach { bad =>
+      val msg = raised(bad)
+      assert(msg.contains(s"$enc: ragged descriptor frame, a row has " +
+        s"${bad.length} entries where another has 2"), msg)
+    }
   }
 
   test("FisherVectorEst fits a GMM and encodes 2KD-dim vectors end to end") {

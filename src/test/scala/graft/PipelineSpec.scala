@@ -16,6 +16,12 @@ class PipelineSpec extends GraftSuite {
       array_position(array(lit("de"), lit("en"), lit("es"), lit("fr"), lit("zh")),
         col("lang")).cast("double") - 1)
 
+  /** AutoCache's decision for `df` alone: the one-candidate selection. */
+  private def cacheAlone(df: org.apache.spark.sql.DataFrame, uses: Int,
+      memBudgetBytes: Long = 2L << 30) =
+    AutoCache.selectCacheSet(Seq(AutoCache.Candidate(df, uses)), memBudgetBytes)
+      .handles.head
+
   test("text classification pipeline: clean -> tokenize -> topK features -> NB") {
     val featurize = Trim("text", "text")
       .andThen(LowerCase("text", "text"))
@@ -504,16 +510,16 @@ class PipelineSpec extends GraftSuite {
 
   test("AutoCache persists multi-use frames within budget, skips single-use") {
     val df = spark.read.parquet(s"$sf/lineitem.parquet").select("l_orderkey")
-    val h = AutoCache.cacheIfWorthIt(df, uses = 2)
+    val h = cacheAlone(df, uses = 2)
     assert(h.cached, "small multi-use frame should cache")
     assert(h.df.storageLevel.useMemory)
     h.release()
     assert(h.df.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
       "release() must unpersist what the planner cached")
-    val single = AutoCache.cacheIfWorthIt(df, uses = 1)
+    val single = cacheAlone(df, uses = 1)
     assert(!single.cached, "single-use frame must not cache")
     single.release() // no-op on a declined handle
-    val huge = AutoCache.cacheIfWorthIt(df, uses = 2, memBudgetBytes = 1L)
+    val huge = cacheAlone(df, uses = 2, memBudgetBytes = 1L)
     assert(!huge.cached, "over-budget frame must not cache")
   }
 
@@ -526,10 +532,10 @@ class PipelineSpec extends GraftSuite {
     val est = AutoCache.estimatedSize(rddDf)
     assert(est > 0 && est < BigInt(1L << 20),
       s"profiled estimate $est should be a few KB, not the unknown sentinel")
-    val h = AutoCache.cacheIfWorthIt(rddDf, uses = 2)
+    val h = cacheAlone(rddDf, uses = 2)
     assert(h.cached, "small multi-use RDD-backed frame should cache")
     h.release()
-    val tiny = AutoCache.cacheIfWorthIt(rddDf, uses = 2, memBudgetBytes = 16L)
+    val tiny = cacheAlone(rddDf, uses = 2, memBudgetBytes = 16L)
     assert(!tiny.cached, "profiled estimate must still respect the budget")
     assert(rddDf.storageLevel ==
       org.apache.spark.storage.StorageLevel.NONE,
@@ -541,7 +547,7 @@ class PipelineSpec extends GraftSuite {
       .map(i => (i, i.toString * 8)).toDF("a", "b").select("a")
     assert(AutoCache.planStats(narrowed).isEmpty,
       "scaled sentinel stats must be treated as unknown")
-    val h2 = AutoCache.cacheIfWorthIt(narrowed, uses = 2)
+    val h2 = cacheAlone(narrowed, uses = 2)
     assert(h2.cached, "profiled narrow projection should cache")
     h2.release()
   }
@@ -569,16 +575,30 @@ class PipelineSpec extends GraftSuite {
     assert(AutoCache.planStats(skewed).isEmpty,
       "RDD-backed frame must route to profiling")
     val est = AutoCache.estimatedSize(skewed).toDouble
-    // exact footprint per rowBytes: 300·(16+4+8+8) + 100·(16+4+8+4096)
-    val truth = 300.0 * 36 + 100.0 * 4124
+    // exact footprint in UnsafeRow bytes: an 8-byte null bitset, two
+    // 8-byte slots and the string's bytes, 300·(8+16+8) + 100·(8+16+4096)
+    val truth = 300.0 * 32 + 100.0 * 4120
     assert(est > truth * 0.5 && est < truth * 2.0,
       s"per-partition sampling should land near $truth, got $est")
+    // the fit-frame shape: an RDD-backed array<double> column, sized by
+    // its UnsafeRow bytes, not by the boxed doubles of an external Row
+    val fitFrame = spark.sparkContext.parallelize(0 until 400, 4)
+      .map(i => (i.toLong, Array.fill(16)(i.toDouble))).toDF("id", "features")
+    assert(AutoCache.planStats(fitFrame).isEmpty)
+    val rowSize = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+      .create(fitFrame.schema)(org.apache.spark.sql.catalyst.InternalRow(0L,
+        org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(Array.fill(16)(0.0))))
+      .getSizeInBytes
+    val arrTruth = 400.0 * rowSize
+    val arrEst = AutoCache.estimatedSize(fitFrame).toDouble
+    assert(arrEst > arrTruth * 0.5 && arrEst < arrTruth * 2.0,
+      s"an array frame should land near $arrTruth ($rowSize bytes a row), got $arrEst")
   }
 
   test("AutoCache declines an over-budget unknown-stats frame without persisting") {
     import spark.implicits._
     val rddDf = spark.sparkContext.parallelize(1 to 5000, 4).toDF("x")
-    val h = AutoCache.cacheIfWorthIt(rddDf, uses = 2, memBudgetBytes = 16L)
+    val h = cacheAlone(rddDf, uses = 2, memBudgetBytes = 16L)
     assert(!h.cached)
     assert(rddDf.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
       "profiling an over-budget frame must not write it to storage at all")
@@ -689,6 +709,10 @@ class PipelineSpec extends GraftSuite {
     val (_, costUdf) = AutoCache.estimatedSizeAndCost(expensive)
     assert(costUdf > 0.01,
       s"UDF-bearing plan must carry measured profile seconds: $costUdf")
+    // a LONE candidate competes with nothing: its recompute cost orders
+    // nothing, so its trusted stats decide and no profiling pass runs
+    assert(jobsDuring(AutoCache.withCached(expensive, uses = 2)(_ => ())) == 0,
+      "a lone candidate must not be profiled to price its recompute")
   }
 
   test("AutoCache benefit is estimated RUNTIME: expensive-small beats cheap-large") {

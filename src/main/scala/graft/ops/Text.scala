@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.ml.StupidBackoff
 import graft.tables.Tables
 
 /** Text / NLP operator surface over `documents`.
@@ -54,19 +55,12 @@ object Text {
        |GROUP BY token ORDER BY cnt DESC, token""".stripMargin
 
   /** Bigram extraction + count (ref: NGramsFeaturizer n=2 + NGramsCounts).
-    * Bigrams are built positionally inside the array (no self-join); the
-    * token array is materialized in a projection first so element_at
-    * indexes an array column instead of re-splitting the text per element
-    * (which would be O(n²) per doc). */
+    * Bigrams are built positionally inside one compiled `graft_shingles`
+    * call per doc (no self-join). */
   def qBigramCounts(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val bigrams = when(size($"t") >= 2,
-      transform(sequence(lit(1), size($"t") - 1),
-        i => concat_ws(" ", element_at($"t", i), element_at($"t", i + 1))))
-      .otherwise(array().cast("array<string>"))
     Tables.documents(spark, sfDir)
-      .select(toks($"text").as("t"))
-      .select(explode(bigrams).as("bigram"))
+      .select(explode(call_function("graft_shingles", $"text", lit(2))).as("bigram"))
       .groupBy($"bigram")
       .agg(count(lit(1)).as("cnt"))
       .orderBy($"cnt".desc, $"bigram")
@@ -95,10 +89,7 @@ object Text {
     * string surgery on the merged pair; the corpus is never re-read. */
   def qBpeMerges(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val words = Tables.documents(spark, sfDir)
-      .select(explode(toks(lower($"text"))).as("w"))
-      .where($"w".rlike("^[a-z]+$"))
-      .groupBy($"w").agg(count(lit(1)).as("freq"))
+    val words = wordFreqs(spark, sfDir)
     words.where(length($"w") >= 2)
       .select($"freq", explode(transform(sequence(lit(1), length($"w") - 1),
         i => $"w".substr(i, lit(2)))).as("pair"))
@@ -106,6 +97,14 @@ object Text {
       .orderBy($"cnt".desc, $"pair")
       .limit(30)
   }
+
+  /** The corpus word-frequency table both BPE queries start from: lowered
+    * [a-z]+ tokens and their counts (w, freq). */
+  private def wordFreqs(spark: SparkSession, sfDir: String): DataFrame =
+    Tables.documents(spark, sfDir)
+      .select(explode(toks(lower(col("text")))).as("w"))
+      .where(col("w").rlike("^[a-z]+$"))
+      .groupBy(col("w")).agg(count(lit(1)).as("freq"))
 
   val bpeMergesSql: String =
     """WITH t AS (
@@ -191,10 +190,7 @@ object Text {
     * order-attribution, no action. */
   def qBpeApply(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val words = Tables.documents(spark, sfDir)
-      .select(explode(toks(lower($"text"))).as("w"))
-      .where($"w".rlike("^[a-z]+$"))
-      .groupBy($"w").agg(count(lit(1)).as("freq"))
+    val words = wordFreqs(spark, sfDir)
     words
       .select($"freq",
         explode(call_function("graft_bpe", $"w", bpeRulesLit)).as("token"))
@@ -348,47 +344,24 @@ object Text {
 
   // --------------------------------------------------- language modelling
 
+  /** Stupid-Backoff scores of every n-tuple of the `top` most frequent
+    * tokens: [[graft.ml.StupidBackoff.topGrid]] plus the query's own column
+    * names. `seen` names the seen_n..seen_2 flags in output order. */
+  private def stupidBackoff(spark: SparkSession, sfDir: String, n: Int, top: Int,
+      seen: String*): DataFrame = {
+    val ws = (1 to n).map(j => col(s"w$j"))
+    StupidBackoff.topGrid(
+        Tables.documents(spark, sfDir).select(toks(col("text")).as("t")), "t", n, top)
+      .select(ws ++ (round(col("score"), 6).as("score") +: (n to 2 by -1).zip(seen)
+        .map { case (k, name) => col(s"seen_$k").as(name) }): _*)
+      .orderBy(ws: _*)
+  }
+
   /** Stupid-Backoff bigram LM scores (ref: StupidBackoffEstimator/Model):
     * scores all pairs from the top-10 unigrams; unseen pairs take the 0.4 *
     * unigram-relative-frequency backoff branch. Pure count arithmetic. */
-  def qStupidBackoffBigram(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    // token array materialized once per row (see qBigramCounts note)
-    val docsT = Tables.documents(spark, sfDir).select(toks($"text").as("t"))
-    val uni = docsT.select(explode($"t").as("token"))
-      .groupBy($"token").agg(count(lit(1)).as("uc"))
-    val bigrams = when(size($"t") >= 2,
-      transform(sequence(lit(1), size($"t") - 1),
-        i => struct(element_at($"t", i).as("w1"), element_at($"t", i + 1).as("w2"))))
-      .otherwise(array().cast("array<struct<w1:string,w2:string>>"))
-    // top-10 unigram cut via orderBy.limit (TakeOrderedAndProject) — no
-    // unpartitioned window over the vocabulary.
-    val top = uni.orderBy($"uc".desc, $"token").limit(10)
-      .select($"token", $"uc")
-    // Round 20 (optimization round, guide §3.2): the scoring grid LEFT-
-    // joins the bigram table, and a left join cannot broadcast its tiny
-    // left side — unfiltered, the FULL vocab²-scale bigram table
-    // shuffles to answer 100 probes. Two broadcast semi-joins against
-    // the top-10 tokens BEFORE the count aggregation drop every
-    // non-probeable bigram ahead of the shuffle; surviving counts are
-    // untouched (a count per key never depends on other keys).
-    val topT = broadcast(top.select($"token"))
-    val bi = docsT.select(explode(bigrams).as("b"))
-      .select($"b.w1", $"b.w2")
-      .join(topT.withColumnRenamed("token", "w1"), Seq("w1"), "left_semi")
-      .join(topT.withColumnRenamed("token", "w2"), Seq("w2"), "left_semi")
-      .groupBy($"w1", $"w2").agg(count(lit(1)).as("bc"))
-    val total = uni.agg(sum($"uc").as("total_tokens"))
-    top.select($"token".as("w1"), $"uc".as("uc1"))
-      .crossJoin(broadcast(top.select($"token".as("w2"), $"uc".as("uc2"))))
-      .join(bi, Seq("w1", "w2"), "left")
-      .crossJoin(broadcast(total))
-      .select($"w1", $"w2",
-        round(when($"bc".isNotNull, $"bc".cast("double") / $"uc1")
-          .otherwise(lit(0.4) * $"uc2".cast("double") / $"total_tokens"), 6).as("score"),
-        $"bc".isNotNull.as("observed"))
-      .orderBy($"w1", $"w2")
-  }
+  def qStupidBackoffBigram(spark: SparkSession, sfDir: String): DataFrame =
+    stupidBackoff(spark, sfDir, 2, 10, "observed")
 
   val stupidBackoffBigramSql: String =
     s"""WITH t AS (SELECT doc_id, $duckToks AS toks FROM documents),
@@ -412,65 +385,15 @@ object Text {
        |ORDER BY w1, w2""".stripMargin
 
   /** Trigram Stupid-Backoff scores (ref: StupidBackoffEstimator's general
-    * n-gram recursion, here unrolled two levels):
+    * n-gram recursion at n = 3):
     *   S(w3|w1w2) = c(w1w2w3)/c(w1w2)                   if trigram seen
     *              = 0.4 · c(w2w3)/c(w2)                 else if bigram seen
     *              = 0.4 · 0.4 · c(w3)/total             otherwise.
     * Scores every (w1,w2,w3) from the top-5 unigrams (125 rows). Pure
     * count arithmetic — n-gram count tables joined on their prefixes; all
     * shuffles key on token tuples. */
-  def qStupidBackoffTrigram(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val docsT = Tables.documents(spark, sfDir).select(toks($"text").as("t"))
-    val uni = docsT.select(explode($"t").as("token"))
-      .groupBy($"token").agg(count(lit(1)).as("uc"))
-    val bigrams = when(size($"t") >= 2,
-      transform(sequence(lit(1), size($"t") - 1),
-        i => struct(element_at($"t", i).as("w1"), element_at($"t", i + 1).as("w2"))))
-      .otherwise(array().cast("array<struct<w1:string,w2:string>>"))
-    val top = uni.orderBy($"uc".desc, $"token").limit(5).select($"token", $"uc")
-    // same §3.2 pre-shuffle semi-join filter as qStupidBackoffBigram:
-    // both bi probes (w1w2 and w2w3 contexts) and the tri probe only
-    // ever carry top-5 tokens in every position, so the corpus-scale
-    // gram tables are cut to ≤25/≤125 rows BEFORE their count shuffles
-    val topT = broadcast(top.select($"token"))
-    val bi = docsT.select(explode(bigrams).as("b")).select($"b.w1", $"b.w2")
-      .join(topT.withColumnRenamed("token", "w1"), Seq("w1"), "left_semi")
-      .join(topT.withColumnRenamed("token", "w2"), Seq("w2"), "left_semi")
-      .groupBy($"w1", $"w2").agg(count(lit(1)).as("bc"))
-    val trigrams = when(size($"t") >= 3,
-      transform(sequence(lit(1), size($"t") - 2),
-        i => struct(element_at($"t", i).as("w1"), element_at($"t", i + 1).as("w2"),
-          element_at($"t", i + 2).as("w3"))))
-      .otherwise(array().cast("array<struct<w1:string,w2:string,w3:string>>"))
-    val tri = docsT.select(explode(trigrams).as("g"))
-      .select($"g.w1", $"g.w2", $"g.w3")
-      .join(topT.withColumnRenamed("token", "w1"), Seq("w1"), "left_semi")
-      .join(topT.withColumnRenamed("token", "w2"), Seq("w2"), "left_semi")
-      .join(topT.withColumnRenamed("token", "w3"), Seq("w3"), "left_semi")
-      .groupBy($"w1", $"w2", $"w3").agg(count(lit(1)).as("tc"))
-    val total = uni.agg(sum($"uc").as("total_tokens"))
-    val grid = top.select($"token".as("w1"))
-      .crossJoin(broadcast(top.select($"token".as("w2"), $"uc".as("uc2"))))
-      .crossJoin(broadcast(top.select($"token".as("w3"), $"uc".as("uc3"))))
-    grid
-      .join(tri, Seq("w1", "w2", "w3"), "left")
-      .join(bi.select($"w1", $"w2", $"bc".as("bc12")), Seq("w1", "w2"), "left")
-      .join(bi.select($"w1".as("w2"), $"w2".as("w3"), $"bc".as("bc23")),
-        Seq("w2", "w3"), "left")
-      .crossJoin(broadcast(total))
-      .select($"w1", $"w2", $"w3",
-        round(
-          when($"tc".isNotNull && $"bc12".isNotNull,
-            $"tc".cast("double") / $"bc12")
-            .otherwise(when($"bc23".isNotNull,
-              lit(0.4) * $"bc23".cast("double") / $"uc2")
-              .otherwise(lit(0.16) * $"uc3".cast("double") / $"total_tokens")),
-          6).as("score"),
-        ($"tc".isNotNull).as("seen_trigram"),
-        ($"bc23".isNotNull).as("seen_bigram"))
-      .orderBy($"w1", $"w2", $"w3")
-  }
+  def qStupidBackoffTrigram(spark: SparkSession, sfDir: String): DataFrame =
+    stupidBackoff(spark, sfDir, 3, 5, "seen_trigram", "seen_bigram")
 
   val stupidBackoffTrigramSql: String =
     s"""WITH t AS (SELECT $duckToks AS toks FROM documents),
@@ -504,93 +427,18 @@ object Text {
        |CROSS JOIN total
        |ORDER BY w1, w2, w3""".stripMargin
 
-  /** 4-gram Stupid-Backoff scores via the PARAMETERIZED-n builder
-    * ([[graft.ml.StupidBackoff]], ref: StupidBackoffEstimator's general
-    * recursion — the bigram/trigram queries above are its hand-unrolled
-    * ancestors). The corpus is re-encoded to dense frequency-ordered word
-    * ids (the q_word_id_encode two-phase ranking), every n-gram count
-    * table keys on ONE packed long in the 4-slot layout
-    * ([[graft.functions.NGramIndexer.packN]]), and each backoff step is a
-    * shift/mask on the candidate's key. Scores every (w1..w4) from the
-    * top-4 unigrams (256 rows). */
-  def qStupidBackoff4gram(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    import graft.functions.NGramIndexer
-    import graft.ml.StupidBackoff
-    val docsT = Tables.documents(spark, sfDir).select($"doc_id", toks($"text").as("t"))
-    val tokens = docsT.select($"doc_id", posexplode($"t").as(Seq("pos", "token")))
-    // dense frequency-ordered vocab via the two-phase zipWithIndex ranking
-    // (id == frequency rank, so "top-4 unigrams" is just id < 4)
-    val sortedVocab = tokens.groupBy($"token").agg(count(lit(1)).as("uc"))
-      .orderBy($"uc".desc, $"token").select($"token")
-    val vocab = spark.createDataFrame(
-      sortedVocab.rdd.zipWithIndex.map { case (r, i) => (r.getString(0), i) })
-      .toDF("token", "id")
-    // re-encode each doc as its dense-id array (order-preserving re-collect)
-    val docIds = tokens.join(vocab, "token")
-      .groupBy($"doc_id")
-      .agg(transform(array_sort(collect_list(struct($"pos", $"id"))),
-        s => s.getField("id")).as("ids"))
-    val (tables0, total) = StupidBackoff.countTables(docIds, "ids", 4)
-    // Round 20 (optimization round, guide §3.2 / §2.3): the scoring
-    // cascade LEFT-joins the 256-row candidate grid against every count
-    // table — a left join cannot broadcast its tiny LEFT side, so each
-    // backoff level shuffled a full vocab-scale table to answer ≤256
-    // probes. Every key the grid can probe (n-grams, their backoff
-    // suffixes, their denominator prefixes) has ALL ids < 4 by
-    // construction (ids are frequency ranks; the grid is the top-4
-    // crossed), so each order-k table is pre-filtered to the 4^k packed
-    // keys the grid can reach — a static predicate that Catalyst pushes
-    // BELOW the count aggregation, shrinking each table's shuffle from
-    // the corpus's k-gram vocabulary to ≤256 rows. Counts of surviving
-    // keys are untouched (a count per key never depends on other keys);
-    // `total` still aggregates the UNfiltered unigram table.
-    // "all ids < 4" as ONE subtract-AND-compare on the packed key (an
-    // InSet over the explicit 4^k key lists was measured ~10% slower at
-    // fixture scale — a hash probe per corpus n-gram vs this register
-    // op): a valid order-k key has its k occupied 15-bit slots holding
-    // id+1 ∈ 1..4 and the rest 0, so (g − base_k) leaves only the two
-    // low id bits of each occupied slot, and masking everything else
-    // must give 0 (an id ≥ 4 sets a higher slot bit; an absent occupied
-    // slot borrows and floods the mask; a non-zero trailing slot
-    // survives the mask directly).
-    // The grid bound and the bitmask are COUPLED (advisor, round 20): the
-    // subtract-AND test is sound only when grid ids 0..GridTop−1 fill a
-    // slot's low bits EXACTLY, i.e. GridTop is a power of two (a non-power
-    // bound would admit packed keys the grid cannot reach — silently
-    // filtering probeable keys and flipping backoff branches with no
-    // error). Everything below derives from this one constant; the
-    // require trips at construction, not as a wrong answer.
-    val GridTop = 4L
-    require(GridTop > 0 && (GridTop & (GridTop - 1)) == 0,
-      s"stupid-backoff 4gram grid bound $GridTop must be a power of two " +
-        "for the packed-key bitmask pre-filter to be exact")
-    require(GridTop - 1 <= graft.functions.NGramIndexer.maxIdFor(4),
-      s"grid bound $GridTop exceeds the 4-slot packed-id capacity")
-    val tables = tables0.zipWithIndex.map { case (t, i) =>
-      val k = i + 1
-      val bits = graft.functions.NGramIndexer.bitsFor(4)
-      val base = (0 until k).map(j => 1L << (bits * (3 - j))).sum
-      val mask = ~((0 until k).map(j => (GridTop - 1) << (bits * (3 - j))).sum)
-      t.where((col("g") - base).bitwiseAND(mask) === 0L)
-    }
-    val top = vocab.where($"id" < GridTop)
-    val grid = top.select($"token".as("w1"), $"id".as("i1"))
-      .crossJoin(broadcast(top.select($"token".as("w2"), $"id".as("i2"))))
-      .crossJoin(broadcast(top.select($"token".as("w3"), $"id".as("i3"))))
-      .crossJoin(broadcast(top.select($"token".as("w4"), $"id".as("i4"))))
-      .withColumn("g", NGramIndexer.packN(Seq($"i1", $"i2", $"i3", $"i4"), 4))
-    StupidBackoff.score(grid, "g", tables, total, "score0")
-      .select($"w1", $"w2", $"w3", $"w4", round($"score0", 6).as("score"),
-        $"seen_4".as("seen_4gram"), $"seen_3".as("seen_trigram"),
-        $"seen_2".as("seen_bigram"))
-      .orderBy($"w1", $"w2", $"w3", $"w4")
-  }
+  /** 4-gram Stupid-Backoff scores (ref: StupidBackoffEstimator's general
+    * recursion at n = 4): every (w1..w4) from the top-4 unigrams (256
+    * rows). */
+  def qStupidBackoff4gram(spark: SparkSession, sfDir: String): DataFrame =
+    stupidBackoff(spark, sfDir, 4, 4, "seen_4gram", "seen_trigram", "seen_bigram")
 
-  /** Oracle: the same cascade over string n-gram keys. Alpha powers are
-    * spelled as left-associated 0.4 products, and each branch keeps the
-    * (count/denominator) division FIRST then the multiplier, matching the
-    * builder's IEEE evaluation order exactly. */
+  /** Oracle: the same cascade over string n-gram keys. Each branch keeps
+    * the (count/denominator) division FIRST, then the multiplier, in the
+    * builder's order. The alpha powers are not the builder's bits: DuckDB
+    * types `0.4 * 0.4` as DECIMAL(4,2), the exact 0.16, where
+    * [[graft.ml.StupidBackoff.alphaMult]] gives 0.16000000000000003. The
+    * engines agree because both round the score to 6 decimals. */
   val stupidBackoff4gramSql: String =
     s"""WITH t AS (SELECT $duckToks AS toks FROM documents),
        |uni AS (SELECT token, count(*) AS uc
@@ -773,20 +621,24 @@ object Text {
     "fr" -> Seq("le", "la", "et", "les", "des"),
     "zh" -> Seq("de", "shi", "le", "zai", "wo"))
 
+  /** One (−stopword hits, lang) struct per candidate language of token
+    * array `t`; its min is the argmax language with alphabetical tie-break. */
+  private def langCandidates(t: Column): Column =
+    array(langWords.map { case (lang, words) =>
+      struct(
+        (-size(filter(t, tok => tok.isin(words.map(lit): _*)))).cast("long").as("neg"),
+        lit(lang).as("lang"))
+    }: _*)
+
   /** Heuristic language ID (north-star): stopword-hit scoring per language,
     * argmax with alphabetical tie-break. Expressed as an array-of-structs min
     * over (-score, lang) — single pass, no shuffle, no UDF. */
   def qLangId(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     // token array + best-candidate struct each materialized once per row
-    val scored = langWords.map { case (lang, words) =>
-      struct(
-        (-size(filter($"t", tok => tok.isin(words.map(lit): _*)))).cast("long").as("neg"),
-        lit(lang).as("lang"))
-    }
     Tables.documents(spark, sfDir)
       .select($"doc_id", $"lang", toks($"text").as("t"))
-      .withColumn("best", array_min(array(scored: _*)))
+      .withColumn("best", array_min(langCandidates(col("t"))))
       .select($"doc_id", $"lang",
         $"best.lang".as("pred_lang"),
         (-$"best.neg").cast("long").as("hits"))
@@ -1015,11 +867,7 @@ object Text {
     import spark.implicits._
     val docsT = Tables.documents(spark, sfDir)
       .select($"doc_id", toks($"text").as("t"))
-    val bigrams = when(size($"t") >= 2,
-      transform(sequence(lit(1), size($"t") - 1),
-        i => struct(element_at($"t", i).as("w1"), element_at($"t", i + 1).as("w2"))))
-      .otherwise(array().cast("array<struct<w1:string,w2:string>>"))
-    val docBi = docsT.select($"doc_id", explode(bigrams).as("b"))
+    val docBi = docsT.select($"doc_id", explode(StupidBackoff.grams($"t", 2)).as("b"))
       .select($"doc_id", $"b.w1", $"b.w2")
     val uni = docsT.select(explode($"t").as("w1"))
       .groupBy($"w1").agg(count(lit(1)).as("uc"))
@@ -1614,15 +1462,10 @@ object Text {
     * data. */
   def qVocabGrowth(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val bigrams = when(size($"t") >= 2,
-      transform(sequence(lit(1), size($"t") - 1),
-        i => concat_ws(" ", element_at($"t", i), element_at($"t", i + 1))))
-      .otherwise(array().cast("array<string>"))
     val n = Tables.documents(spark, sfDir)
       .agg((max($"doc_id") + 1).as("n_docs"))
     val curve = Tables.documents(spark, sfDir)
-      .select($"doc_id", toks($"text").as("t"))
-      .select($"doc_id", explode(bigrams).as("bg"))
+      .select($"doc_id", explode(call_function("graft_shingles", $"text", lit(2))).as("bg"))
       .groupBy($"bg").agg(min($"doc_id").as("first_doc"))
       .crossJoin(broadcast(n))
       .groupBy((expr("first_doc * 100 DIV n_docs") + 1).as("prefix_pct"))
@@ -1898,13 +1741,8 @@ object Text {
     * aggregation. Docs with < 2 tokens have no bigrams and no row. */
   def qNgramNovelty(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val bigrams = when(size($"t") >= 2,
-      transform(sequence(lit(1), size($"t") - 1),
-        i => concat_ws(" ", element_at($"t", i), element_at($"t", i + 1))))
-      .otherwise(array().cast("array<string>"))
     val docBg = Tables.documents(spark, sfDir)
-      .select($"doc_id", toks($"text").as("t"))
-      .select($"doc_id", explode(bigrams).as("bg"))
+      .select($"doc_id", explode(call_function("graft_shingles", $"text", lit(2))).as("bg"))
       .distinct()
     val first = docBg.groupBy($"bg").agg(min($"doc_id").as("first_doc"))
     docBg.join(first, "bg")
@@ -2434,14 +2272,9 @@ object Text {
     * keep decision can never flip on a ulp. */
   def qLangConfidence(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val scored = langWords.map { case (lang, words) =>
-      struct(
-        (-size(filter($"t", tok => tok.isin(words.map(lit): _*)))).cast("long").as("neg"),
-        lit(lang).as("lang"))
-    }
     Tables.documents(spark, sfDir)
       .select($"doc_id", $"lang", toks($"text").as("t"))
-      .withColumn("ranked", array_sort(array(scored: _*)))
+      .withColumn("ranked", array_sort(langCandidates(col("t"))))
       .select($"doc_id", $"lang",
         $"ranked"(0).getField("lang").as("pred_lang"),
         (-$"ranked"(0).getField("neg")).cast("long").as("hits_top1"),
@@ -2696,16 +2529,10 @@ object Text {
     val uni = train.select(explode($"t").as("w"))
       .groupBy($"w").agg(count(lit(1)).as("cw"))
     val total = uni.agg(sum($"cw").as("n_tok"))
-    val bi = train.where(size($"t") >= 2)
-      .select(explode(transform(sequence(lit(1), size($"t") - 1),
-        i => struct(element_at($"t", i).as("w1"),
-          element_at($"t", i + 1).as("w2")))).as("b"))
+    val bi = train.select(explode(StupidBackoff.grams($"t", 2)).as("b"))
       .groupBy($"b.w1".as("w1"), $"b.w2".as("w2"))
       .agg(count(lit(1)).as("c2"))
-    val cand = held.where(size($"t") >= 2)
-      .select($"doc_id", explode(transform(sequence(lit(1), size($"t") - 1),
-        i => struct(element_at($"t", i).as("w1"),
-          element_at($"t", i + 1).as("w2")))).as("b"))
+    val cand = held.select($"doc_id", explode(StupidBackoff.grams($"t", 2)).as("b"))
       .select($"doc_id", $"b.w1", $"b.w2")
     val s = cand
       .join(bi, Seq("w1", "w2"), "left")
@@ -2716,7 +2543,7 @@ object Text {
       .withColumn("p",
         when($"c2".isNotNull && $"cw1".isNotNull,
           $"c2".cast("double") / $"cw1")
-          .otherwise(lit(graft.ml.StupidBackoff.Alpha) *
+          .otherwise(lit(StupidBackoff.Alpha) *
             (coalesce($"cw2", lit(0L)) + 1).cast("double") / ($"n_tok" + 1)))
       .withColumn("lp_micro", round(log($"p") * 1e6).cast("long"))
     val scored = s.groupBy($"doc_id")

@@ -79,27 +79,11 @@ class DataPipelineSpec extends GraftSuite {
       aggregate($"features", lit(0.0), (a, x) => a + x) === 0.0).count()
     assert(empty == 0, "top-50 vocab must cover every curated doc")
 
-    // stage 6: n-gram LM over the curated corpus (parameterized
-    // Stupid-Backoff) — every scored trigram of in-corpus tokens must get
-    // a positive probability-like score
-    val tokens = curated.select($"doc_id", posexplode(toks).as(Seq("pos", "token")))
-    val vocab = spark.createDataFrame(
-      tokens.groupBy($"token").agg(count(lit(1)).as("c"))
-        .orderBy($"c".desc, $"token").select($"token")
-        .rdd.zipWithIndex.map { case (r, i) => (r.getString(0), i) })
-      .toDF("token", "id")
-    val docIds = tokens.join(vocab, "token")
-      .groupBy($"doc_id")
-      .agg(transform(array_sort(collect_list(struct($"pos", $"id"))),
-        s => s.getField("id")).as("ids"))
-    val (tables, total) = graft.ml.StupidBackoff.countTables(docIds, "ids", 3)
-    val cands = vocab.where($"id" < 3).select($"id".as("i1"))
-      .crossJoin(vocab.where($"id" < 3).select($"id".as("i2")))
-      .crossJoin(vocab.where($"id" < 3).select($"id".as("i3")))
-      .withColumn("g", graft.functions.NGramIndexer.packN(
-        Seq($"i1", $"i2", $"i3"), 3))
-    val scoredLm = graft.ml.StupidBackoff.score(cands, "g", tables, total, "s")
-    assert(scoredLm.where($"s" <= 0 || $"s".isNull).count() == 0,
+    // stage 6: n-gram LM over the curated corpus (Stupid-Backoff at
+    // order 3) — every scored trigram of the top-3 tokens must get a
+    // positive probability-like score
+    val scoredLm = graft.ml.StupidBackoff.topGrid(curated.select(toks.as("t")), "t", 3, 3)
+    assert(scoredLm.where($"score" <= 0 || $"score".isNull).count() == 0,
       "every candidate trigram must score positive")
     assert(scoredLm.count() == 27)
   }

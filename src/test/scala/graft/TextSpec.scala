@@ -97,101 +97,39 @@ class TextSpec extends GraftSuite {
       "top-5 tokens must produce at least one observed trigram")
   }
 
-  test("NGramIndexer packs/unpacks trigram ids losslessly with sort order") {
-    import graft.functions.NGramIndexer._
-    import spark.implicits._
-    val ids = Seq((0L, 0L, 0L), (1L, 2L, 3L), (MaxId, MaxId, MaxId),
-      (5L, 0L, MaxId)).toDF("a", "b", "c")
-    val packed = ids.select(col("a"), col("b"), col("c"),
-      pack(col("a"), col("b"), col("c")).as("p"))
-    val bad = packed.where(
-      unpack(col("p"), 0) =!= col("a") ||
-        unpack(col("p"), 1) =!= col("b") ||
-        unpack(col("p"), 2) =!= col("c")).count()
-    assert(bad == 0, "pack/unpack must round-trip")
-    // bigram pack leaves slot 2 absent
-    val bi = ids.select(unpack(pack(col("a"), col("b")), 2).as("absent"))
-    assert(bi.where(col("absent") =!= -1L).count() == 0)
-    // prefix of a packed trigram equals the packed (w1, w2) bigram
-    val pre = ids.select(
-      (prefix(pack(col("a"), col("b"), col("c"))) ===
-        pack(col("a"), col("b"))).as("ok"))
-    assert(pre.where(!col("ok")).count() == 0)
-    // suffix of a packed trigram equals the packed (w2, w3) bigram
-    val suf = ids.select(
-      (suffix(pack(col("a"), col("b"), col("c"))) ===
-        pack(col("b"), col("c"))).as("ok"))
-    assert(suf.where(!col("ok")).count() == 0)
-    // packed ordering == lexicographic (w1, w2, w3) ordering
-    val seq = packed.orderBy(col("p")).collect().map(r =>
-      (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(seq == seq.sorted)
-  }
-
   test("StupidBackoff recursion matches hand-computed scores at n=4") {
-    import graft.functions.NGramIndexer
     import graft.ml.StupidBackoff
     import spark.implicits._
-    // corpus "a b c d a b c e a b" with ids a=0 b=1 c=2 d=3 e=4:
+    // corpus "a b c d a b c e a b":
     // uni a:3 b:3 c:2 d:1 e:1 (total 10); bi ab:3 bc:2 cd:1 da:1 ce:1 ea:1;
-    // tri abc:2 bcd:1 cda:1 dab:1 bce:1 cea:1 eab:1; every 4-gram count 1
-    val docIds = Seq(Tuple1(Seq(0L, 1L, 2L, 3L, 0L, 1L, 2L, 4L, 0L, 1L)))
-      .toDF("ids")
-    val (tables, total) = StupidBackoff.countTables(docIds, "ids", 4)
+    // tri abc:2 bcd:1 cda:1 dab:1 bce:1 cea:1 eab:1; every 4-gram count 1.
+    // top = 5 keeps every token, so the 625-row grid holds every case
+    val docs = Seq(Tuple1("a b c d a b c e a b".split(" ").toSeq)).toDF("toks")
+    val grid = StupidBackoff.topGrid(docs, "toks", 4, 5)
+    assert(grid.count() == 625)
     val cases = Seq(
       // (w1 w2 w3 w4, expected, why)
-      (Seq(0L, 1L, 2L, 3L), 0.5, "abcd seen once / abc seen twice"),
-      (Seq(1L, 2L, 3L, 0L), 1.0, "bcda once / bcd once"),
-      (Seq(1L, 1L, 2L, 3L), 0.4 * (1.0 / 2.0), "4gram unseen -> bcd/bc"),
-      (Seq(0L, 0L, 2L, 3L), 0.4 * 0.4 * (1.0 / 2.0), "tri acd unseen -> cd/c"),
-      (Seq(0L, 0L, 0L, 3L), 0.4 * 0.4 * 0.4 * (1.0 / 10.0), "unigram base d/total"))
-    val cands = cases.zipWithIndex
-      .map { case ((ws, _, _), i) => (i, ws) }.toDF("case_id", "ws")
-      .withColumn("g", NGramIndexer.packN(
-        (1 to 4).map(j => element_at(col("ws"), j)), 4))
-    val scored = StupidBackoff.score(cands, "g", tables, total, "s")
-      .select("case_id", "s").collect()
-      .map(r => r.getInt(0) -> r.getDouble(1)).toMap
-    cases.zipWithIndex.foreach { case ((_, expected, why), i) =>
-      assert(math.abs(scored(i) - expected) < 1e-12, s"case $i ($why): ${scored(i)}")
+      ("abcd", 0.5, "abcd seen once / abc seen twice"),
+      ("bcda", 1.0, "bcda once / bcd once"),
+      ("bbcd", 0.4 * (1.0 / 2.0), "4gram unseen -> bcd/bc"),
+      ("aacd", 0.4 * 0.4 * (1.0 / 2.0), "tri acd unseen -> cd/c"),
+      ("aaad", 0.4 * 0.4 * 0.4 * (1.0 / 10.0), "unigram base d/total"))
+    val scored = grid.collect().map(r =>
+      (1 to 4).map(j => r.getAs[String](s"w$j")).mkString -> r.getAs[Double]("score")).toMap
+    cases.foreach { case (ws, expected, why) =>
+      assert(math.abs(scored(ws) - expected) < 1e-12, s"$ws ($why): ${scored(ws)}")
     }
   }
 
-  test("NGramIndexer lastN/prefixDropLast navigate the 4-slot layout") {
-    import graft.functions.NGramIndexer._
-    import spark.implicits._
-    val df = Seq((10L, 20L, 30L, 40L)).toDF("a", "b", "c", "d")
-      .withColumn("g", packN(Seq(col("a"), col("b"), col("c"), col("d")), 4))
-    def one(c: org.apache.spark.sql.Column): Long = df.select(c).head().getLong(0)
-    // last-3 re-anchors (b,c,d) at slot 0 == packing them directly
-    assert(one(lastN(col("g"), 4, 3, 4)) ==
-      one(packN(Seq(col("b"), col("c"), col("d")), 4)))
-    // prefix of the full 4-gram drops d
-    assert(one(prefixDropLast(col("g"), 4, 4)) ==
-      one(packN(Seq(col("a"), col("b"), col("c")), 4)))
-    // composing: context of the last-2 gram is the unigram c
-    assert(one(prefixDropLast(lastN(col("g"), 4, 2, 4), 2, 4)) ==
-      one(packN(Seq(col("c")), 4)))
-    // unpackN round-trips every slot
-    assert((0 to 3).map(p => one(unpackN(col("g"), p, 4))) == Seq(10L, 20L, 30L, 40L))
-  }
-
-  test("NGramIndexer.pack raises on ids past the 21-bit slot width") {
-    import graft.functions.NGramIndexer._
-    import spark.implicits._
-    // silent wraparound would corrupt the neighboring slot's word id and
-    // produce wrong LM counts with no error — it must raise instead
-    val oob = Seq((MaxId + 1, 0L)).toDF("a", "b")
-    val e = intercept[Exception] {
-      oob.select(pack(col("a"), col("b"))).collect()
-    }
-    def messages(t: Throwable): Seq[String] =
-      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
-    assert(messages(e).exists(_.contains("out of range")), e.toString)
-    // MaxId itself is still fine
-    val ok = Seq((MaxId, 0L)).toDF("a", "b")
-      .select(unpack(pack(col("a"), col("b")), 0).as("r")).head().getAs[Long]("r")
-    assert(ok == MaxId)
+  test("q_stupid_backoff_4gram scores every top-4 tuple and backs off consistently") {
+    val r = rows(Text.qStupidBackoff4gram(spark, sf))
+    assert(r.size == 256)
+    assert(r.forall(_.getAs[Double]("score") > 0.0))
+    // a seen 4-gram implies its suffix trigram, which implies its suffix bigram
+    val broken = r.filter(x =>
+      (x.getAs[Boolean]("seen_4gram") && !x.getAs[Boolean]("seen_trigram")) ||
+        (x.getAs[Boolean]("seen_trigram") && !x.getAs[Boolean]("seen_bigram")))
+    assert(broken.isEmpty, "an observed gram's suffix gram must be observed")
   }
 
   test("q_stupid_backoff_bigram scores are positive and observed pairs dominate") {
